@@ -50,10 +50,15 @@ object Bench {
     // the steady-state run is the throughput number. Cold totals are still
     // reported as "cold_total" for transparency.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // a broken query must surface, not get timed as a fast success
+      // a broken query must surface, not get timed as a fast success;
+      // its first failure is kept so the summary can name the cause
+      var cause: Option[Throwable] = None
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+          if (cause.isEmpty) cause = Some(e)
+          false
+        }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       val (cold, okCold) = once()
@@ -107,22 +112,22 @@ object Bench {
         (if (warmReps.size == 5) s" (median of 5; pin=${pin.get})"
          else if (pinDiverge) s" (median of 3; pin=${pin.get})"
          else if (warmReps.size > 1) " (min of 2 warm reps)" else ""))
-      (name, cold, warm, warmReps, okCold && okWarm, stillDiverged)
+      (name, cold, warm, warmReps, okCold && okWarm, stillDiverged, cause)
     }
     // Locale.ROOT: the default-locale formatter writes a comma
     // decimal separator under e.g. de_DE, corrupting the JSON
     def s3(x: Double): String = String.format(java.util.Locale.ROOT, "%.3f", x)
-    val qs = results.map { case (k, _, w, _, _, _) => s"\"" + k + "\":" + s3(w) }
+    val qs = results.map { case (k, _, w, _, _, _, _) => s"\"" + k + "\":" + s3(w) }
       .mkString("{", ",", "}")
-    val reps = results.map { case (k, c, _, ws, _, _) =>
+    val reps = results.map { case (k, c, _, ws, _, _, _) =>
       s"\"" + k + "\":[" + (c +: ws).map(s3).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, _, false, _) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, _, _, false, _, _) => "\"" + k + "\"" }
     // queries whose final recorded median STILL exceeds 3× the committed
     // pin after the median-of-5 escalation — named so a reader of the
     // artifact can separate "persistently contended window" from "real"
     // without re-deriving anything
-    val diverged = results.collect { case (k, _, _, _, _, true) => "\"" + k + "\"" }
+    val diverged = results.collect { case (k, _, _, _, _, true, _) => "\"" + k + "\"" }
     val total = results.map(_._3).sum
     val coldTotal = results.map(_._2).sum
     // The recorded warm values are per-query medians/mins (above); the
@@ -149,7 +154,7 @@ object Bench {
     val head = s"""{"metric":"total",$summary,"queries_full":"bench.json","queries":{"""
     val tail = s"""},"sf":"$sfDir"}"""
     val slowest = results.sortBy(-_._3).iterator
-      .map { case (k, _, w, _, _, _) => s"\"" + k + "\":" + s3(w) }
+      .map { case (k, _, w, _, _, _, _) => s"\"" + k + "\":" + s3(w) }
     val picked = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = head.length + tail.length
     slowest.foreach { e =>
@@ -159,22 +164,25 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), json + "\n")
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write bench.json: $e") }
-    if (failed.nonEmpty) {
-      System.err.println(line)
-      println(line)
-      System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
-      sys.exit(1)
+    results.foreach { case (k, _, _, _, _, _, c) =>
+      c.foreach(e => System.err.println(
+        s"[bench] $k failed: ${e.getClass.getName}: ${e.getMessage}"))
     }
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
     // Round 15 (the r14 verdict's #2): the summary line is the LAST thing
     // on stdout — printed after spark.stop() so no shutdown logging can
     // land below it, mirrored to stderr FIRST so that whichever stream
     // the capture window ends on, its final line is this valid JSON
     // (build.sbt suppresses sbt's own "[success] ..." trailer and strips
-    // the "[info] " run-output prefix for the same reason). The timing
-    // methodology, per-query escalation, and recorded values above are
-    // byte-identical to rounds 2-14 — only the output plumbing moved.
-    spark.stop()
+    // the "[info] " run-output prefix for the same reason). A throwing
+    // stop() must not cost the summary line. The timing methodology,
+    // per-query escalation, and recorded values above are byte-identical
+    // to rounds 2-14 — only the output plumbing moved.
+    try spark.stop() catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     System.err.println(line)
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

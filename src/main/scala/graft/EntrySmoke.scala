@@ -6,9 +6,7 @@ package graft
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.builder("local[4]", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.count()

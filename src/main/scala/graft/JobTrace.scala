@@ -13,8 +13,7 @@ object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val spark = Sessions.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     case class J(id: Int, var start: Long = 0L, var end: Long = 0L,
       var desc: String = "")

@@ -45,8 +45,7 @@ object Main {
     sys.exit(1)
   }
 
-  private def session(): SparkSession =
-    Sessions.builder("local[*]", 32).appName("graft-cli").getOrCreate()
+  private def session(): SparkSession = Sessions.local()
 
   def main(args: Array[String]): Unit = args.toList match {
     case "build" :: config :: data :: outDir :: Nil => build(config, data, outDir)

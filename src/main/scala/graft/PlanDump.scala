@@ -14,8 +14,7 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val spark = Sessions.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- args.drop(3)) {

@@ -11,8 +11,7 @@ object QBench {
     val sfDir = args(0)
     // canonical graft session (same config Bench runs — repeat timings
     // must measure the deployment plan, not an ad-hoc session's)
-    val spark = Sessions.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     for (name <- args.drop(1); rep <- 1 to 3) {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts.gated
+
 /** 10× scale-stress probe — the "would this survive 100 TB" evidence run.
   *
   * Correctness is graded at sf0.01 and throughput at sf0.1; every heavy
@@ -32,17 +34,10 @@ import org.apache.spark.sql.functions._
   * corpus legitimately outgrows.
   *
   * Usage: `sbt "runMain graft.ScaleStress [baseDir] [replicas]"`.
-  * Artifacts land under target/scale-stress/ (SUCCESS-gated, reused);
+  * Artifacts land under target/scale-stress/ (commit-gated, reused);
   * results print as one JSON line + a markdown table for BASELINE.md.
   */
 object ScaleStress {
-
-  private def gated(s: SparkSession, out: String)(write: => Unit): String = {
-    val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) write
-    out
-  }
 
   /** Expand the three extension tables ×R into `outDir` (same layout as a
     * testdata dir, so dir-parameterized query fns run on it unchanged).
@@ -304,7 +299,7 @@ object ScaleStress {
         val st = new java.io.File(
           s"target/scale-stress/idx/${new java.io.File(d).getName}-phashbase-v1")
           .getAbsolutePath
-        gated(s, s"$st/pairs") {
+        gated(s, st, "pairs") {
           val baseHashes = Multimodal.averageHashes(
             s.read.parquet(media).filter(col("media_id") % 101 =!= 3),
             "media_id", "bytes").localCheckpoint()

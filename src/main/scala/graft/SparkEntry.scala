@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Artifacts.{gated, registryKey}
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
 import graft.expressions.{CountMinEstimates, DtwDistance}
@@ -157,12 +158,6 @@ object SparkEntry {
       }.map(n -> _)
     }.toMap
 
-  /** md5-hex artifact key (the DiskRegistry key scheme). */
-  private def registryKey(config: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(config.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
   /** Content fingerprint of a table directory (names, sizes, mtimes) —
     * persisted-model keys include it so a REGENERATED fixture can never
     * be served a stale artifact fitted on the old data.
@@ -280,17 +275,15 @@ object SparkEntry {
   private def compactMaterialized(s: SparkSession, dir: String): String =
     fittedModel(s"compact|$dir") {
       val out = compactRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val srcBytes = fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(s"$dir/events.parquet")).getLength
+      gated(s, out) {
+        val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+        val srcBytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .getContentSummary(src).getLength
         val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
         E(s, dir).repartitionByRange(nFiles, col("ts"))
           .sortWithinPartitions("ts", "event_id")
           .write.mode("overwrite").parquet(out)
       }
-      out
     }
 
   private def q_sink_compact(s: SparkSession, dir: String): DataFrame = {
@@ -323,13 +316,11 @@ object SparkEntry {
   private def q_sink_zorder(s: SparkSession, dir: String): DataFrame = {
     val root = fittedModel(s"zorder|$dir") {
       val out = zorderRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         graft.ops.ZOrder.layout(E(s, dir),
             graft.sources.Events.epochMicros(col("ts")), col("user_id"), nFiles = 8)
           .write.mode("overwrite").parquet(out)
-      out
+      }
     }
     s.read.parquet(root)
       .groupBy("event_type")
@@ -358,12 +349,10 @@ object SparkEntry {
   private def partitionedMaterialized(s: SparkSession, dir: String): String =
     fittedModel(s"part|$dir") {
       val out = partitionedRoot(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         E(s, dir).withColumn("event_date", to_date(col("ts")))
           .write.partitionBy("event_date").mode("overwrite").parquet(out)
-      out
+      }
     }
 
   /** DATA-SKIPPING MANIFEST scan (zone maps — the Iceberg/Delta file-stats
@@ -381,9 +370,7 @@ object SparkEntry {
     fittedModel(s"manifest|$dir") {
       val out = s"$registryRoot/manifest_${registryKey(
         s"manifest-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(s"$out/manifest", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out, "manifest") {
         E(s, dir).repartitionByRange(16, col("ts"))
           .write.mode("overwrite").parquet(s"$out/data")
         s.read.parquet(s"$out/data")
@@ -392,7 +379,6 @@ object SparkEntry {
             count(lit(1)).as("n_rows"))
           .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
       }
-      out
     }
 
   private[graft] def manifestPrunedFiles(s: SparkSession, dir: String,
@@ -724,16 +710,18 @@ object SparkEntry {
         s"csv-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
       // ONE scan: the partitioned text write splits per tag on the
       // executors (a per-tag driver loop would rescan events |tags| times)
-      E(s, dir)
-        // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
-        // value would emit a separator-less line that reparses as
-        // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
-        // trip total: "ts;" reparses as (ts, null) — the value it had.
-        .select(col("event_type"), concat(
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-          lit(";"),
-          coalesce(col("value").cast("string"), lit(""))).as("value"))
-        .write.partitionBy("event_type").mode("overwrite").text(out)
+      gated(s, out) {
+        E(s, dir)
+          // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
+          // value would emit a separator-less line that reparses as
+          // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
+          // trip total: "ts;" reparses as (ts, null) — the value it had.
+          .select(col("event_type"), concat(
+            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+            lit(";"),
+            coalesce(col("value").cast("string"), lit(""))).as("value"))
+          .write.partitionBy("event_type").mode("overwrite").text(out)
+      }
       // Tag enumeration is data-sized in principle; the cap makes the
       // fixture-sized assumption explicit instead of silently collecting
       // an unbounded distinct if the fixture ever grows a high-cardinality
@@ -774,14 +762,12 @@ object SparkEntry {
     fittedModel(s"jsonl|$dir") {
       val out = s"$registryRoot/jsonl_${registryKey(
         s"jsonl-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         T(s, dir, "documents")
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
             col("source"), col("n_chars"))).as("value"))
           .write.mode("overwrite").text(out)
-      out
+      }
     }
 
   private def q_scan_jsonl(s: SparkSession, dir: String): DataFrame = {
@@ -1152,12 +1138,10 @@ object SparkEntry {
     fittedModel(s"minhashbands|$dir") {
       val out = s"$registryRoot/minhashbands_${registryKey(
         s"minhashbands-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         Dedup.bandTable(docsWithDups(s, dir), "doc_id", "text")
           .coalesce(1).write.mode("overwrite").parquet(out)
-      out
+      }
     }
 
   private def q_dedup_minhash_lsh(s: SparkSession, dir: String): DataFrame =
@@ -1323,7 +1307,7 @@ object SparkEntry {
     val stateDir = fittedModel(s"dedupstate|$dir") {
       val out = s"$registryRoot/dedupstate_${registryKey(
         s"dedupstate-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      // _SUCCESS-gated (the langid/IvfModel discipline): a fresh process
+      // commit-gated (the langid/IvfModel discipline): a fresh process
       // must LOAD the fingerprint-keyed index, not rebuild it — the
       // rebuild is the cost this registry exists to avoid. The stats
       // marker commits last, so a half-written state never gates.
@@ -1334,9 +1318,7 @@ object SparkEntry {
       // exists to avoid. Production stores yesterday's dedup output;
       // so does the state dir, and the warm run prices at
       // O(delta + affected) + one tiny pairs scan.
-      val marker = new org.apache.hadoop.fs.Path(s"$out/stats", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out, "stats") {
         val raw = Dedup.initialDedupState(base, "doc_id", "text")
         val bands = raw.bands.localCheckpoint() // feeds the write AND the pair join
         val stats = raw.stats.localCheckpoint() // feeds the write AND the hot list
@@ -1351,7 +1333,6 @@ object SparkEntry {
           .write.mode("overwrite").parquet(s"$out/pairs")
         stats.write.mode("overwrite").parquet(s"$out/stats")
       }
-      out
     }
     val st0 = Dedup.DedupState(s.read.parquet(s"$stateDir/bands"),
       s.read.parquet(s"$stateDir/stats"))
@@ -1500,12 +1481,10 @@ object SparkEntry {
       val out = s"$registryRoot/knnbase_${registryKey(
         s"knnbase-v2|k=3|sched=$schedKey|mod5|$dir|${
           tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
           .write.mode("overwrite").parquet(out)
-      out
+      }
     }
     Similarity.knnGraphMergeSched(s.read.parquet(basePath), base, delta,
         "vec_id", "embedding", 3, sched)
@@ -1513,7 +1492,7 @@ object SparkEntry {
   }
 
   /** THE kNN edge table (k = 3, density-scaled LSH) — fingerprint-keyed,
-    * `_SUCCESS`-gated, persisted ONCE per corpus and served to the whole
+    * commit-gated, persisted ONCE per corpus and served to the whole
     * graph family (`graph_cc/bfs/degree/pagerank/triangles/jaccard_nbrs`,
     * `ml_lof`, `simsearch_knn_graph`): before round 12 each of those 8
     * queries re-ran the identical LSH bucket join (~1 s apiece at sf0.1
@@ -1544,13 +1523,11 @@ object SparkEntry {
       val out = s"$registryRoot/knnedges_${registryKey(
         s"knnedges-v2|k=3|sched=$schedKey|$dir|${
           tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
             "embedding", 3, sched)
           .write.mode("overwrite").parquet(out)
-      out
+      }
     }
     s.read.parquet(path)
   }
@@ -1941,14 +1918,12 @@ object SparkEntry {
       val fp = tableFingerprint(s, s"$dir/documents.parquet")
       val key = registryKey(s"langid-v1|$dir|$fp|k=100|n=3")
       val path = s"$registryRoot/langid_$key.parquet"
-      // _SUCCESS-gated like IvfModel.save/exists: a half-written dir from
+      // commit-gated like the IVF quantizer: a half-written dir from
       // a killed job does not count as a committed profile
-      val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, path) {
         TextAnalysis.langProfiles(docs, "lang", "text", k = 100)
           .coalesce(1).write.mode("overwrite").parquet(path)
-      path
+      }
     }
     val profiles = s.read.parquet(profPath)
     TextAnalysis.classifyLang(docs, "doc_id", "text", profiles, k = 100)
@@ -3252,15 +3227,12 @@ object SparkEntry {
     val root = fittedModel(s"dedupspool|$dir") {
       val out = s"$registryRoot/dedupspool_${registryKey(
         s"dedupspool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         val base = E(s, dir).select("event_id", "ts", "event_type", "value")
         base.unionByName(base.filter(col("event_id") % 13 === 3))
           .repartition(4) // 4 spool files, one micro-batch
           .write.mode("overwrite").parquet(out)
       }
-      out
     }
     val name = s"dedup_stream_${registryKey(dir).take(8)}"
     val stream = s.readStream.schema(s.read.parquet(root).schema).parquet(root)
@@ -3733,9 +3705,7 @@ object SparkEntry {
     fittedModel(s"phashmedia|$dir") {
       val out = s"$registryRoot/phashmedia_${registryKey(
         s"phashmedia-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         val media = Multimodal.fromDigestPng(
           T(s, dir, "documents"), "doc_id", "text")
         val originals = Multimodal.resizePayload(media, "bytes", 8.0)
@@ -3745,7 +3715,6 @@ object SparkEntry {
             col("bytes"), col("meta"))
         originals.unionByName(twins).write.mode("overwrite").parquet(out)
       }
-      out
     }
 
   /** Registry path of the FULL-corpus aHash table (the published decode
@@ -3756,12 +3725,10 @@ object SparkEntry {
     fittedModel(s"phashhash|$dir") {
       val out = s"$registryRoot/phashhash_${registryKey(
         s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         Multimodal.averageHashes(s.read.parquet(mediaPath), "media_id", "bytes")
           .write.mode("overwrite").parquet(out)
-      out
+      }
     }
   }
 
@@ -3819,10 +3786,8 @@ object SparkEntry {
     val statePath = fittedModel(s"phashbase|$dir") {
       val out = s"$registryRoot/phashbase_${registryKey(
         s"phashbase-v1|mod7|$dir|${tableFingerprint(s, mediaPath)}")}"
-      // pairs' _SUCCESS commits LAST so a half-written state never gates
-      val marker = new org.apache.hadoop.fs.Path(s"$out/pairs", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      // pairs commit LAST so a half-written state never gates
+      gated(s, out, "pairs") {
         val baseHashes = Multimodal.averageHashes(
           s.read.parquet(mediaPath).filter(col("media_id") % 7 =!= 3),
           "media_id", "bytes").localCheckpoint()
@@ -3830,7 +3795,6 @@ object SparkEntry {
         Multimodal.phashPairsFromHashes(baseHashes, 3)
           .write.mode("overwrite").parquet(s"$out/pairs")
       }
-      out
     }
     publishOracle("multimodal_phash_incr",
       phashPairsOracle(phashHashesMaterialized(s, dir)))
@@ -3856,11 +3820,9 @@ object SparkEntry {
     val root = fittedModel(s"orc|$dir") {
       val out = s"$registryRoot/orc_${registryKey(
         s"orc-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         E(s, dir).write.mode("overwrite").orc(out)
-      out
+      }
     }
     s.read.orc(root)
       .groupBy("event_type")
@@ -3882,9 +3844,7 @@ object SparkEntry {
     val root = fittedModel(s"upsert|$dir") {
       val out = s"$registryRoot/upsert_${registryKey(
         s"upsert-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         val base = E(s, dir)
         val updates = base.filter(col("event_id") % 7 === 0)
           .withColumn("value", col("value") + lit(1000.0))
@@ -3894,7 +3854,6 @@ object SparkEntry {
         graft.ops.Lake.upsert(base, updates, Seq("event_id"))
           .write.mode("overwrite").parquet(out)
       }
-      out
     }
     s.read.parquet(root)
       .groupBy("event_type")
@@ -3922,9 +3881,7 @@ object SparkEntry {
     val root = fittedModel(s"timetravel|$dir") {
       val out = s"$registryRoot/timetravel_${registryKey(
         s"timetravel-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(s"$out/v2", "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out, "v2") {
         E(s, dir).select("event_id", "event_type", "value")
           .write.mode("overwrite").parquet(s"$out/v1")
         val v1 = s.read.parquet(s"$out/v1")
@@ -3936,7 +3893,6 @@ object SparkEntry {
         graft.ops.Lake.upsert(v1, cdc, Seq("event_id"))
           .write.mode("overwrite").parquet(s"$out/v2")
       }
-      out
     }
     val v1 = s.read.parquet(s"$root/v1")
       .select(col("event_id"), col("value").as("v_old"), lit(1).as("in_old"))
@@ -4036,9 +3992,7 @@ object SparkEntry {
     val root = fittedModel(s"jsonlcorrupt|$dir") {
       val out = s"$registryRoot/jsonlcorrupt_${registryKey(
         s"jsonlcorrupt-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         T(s, dir, "documents")
           .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"),
             col("lang"), col("source"), col("n_chars"))).as("j"))
@@ -4046,7 +4000,6 @@ object SparkEntry {
             .otherwise(col("j")).as("value"))
           .write.mode("overwrite").text(out)
       }
-      out
     }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       s"$jsonlSchema, _bad STRING")
@@ -4075,9 +4028,7 @@ object SparkEntry {
     val root = fittedModel(s"jsonml|$dir") {
       val out = s"$registryRoot/jsonml_${registryKey(
         s"jsonml-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         T(s, dir, "documents")
           // one JSON array file per core: derived from defaultParallelism,
           // not a local[32] literal — on a 1000-executor cluster the file
@@ -4091,7 +4042,6 @@ object SparkEntry {
           }(org.apache.spark.sql.Encoders.STRING)
           .write.mode("overwrite").text(out)
       }
-      out
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .option("multiLine", "true")
@@ -4116,9 +4066,7 @@ object SparkEntry {
     val root = fittedModel(s"jsonlgz|$dir") {
       val out = s"$registryRoot/jsonlgz_${registryKey(
         s"jsonlgz-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         T(s, dir, "documents")
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
             col("source"), col("n_chars"))).as("value"))
@@ -4128,7 +4076,6 @@ object SparkEntry {
           .write.mode("overwrite")
           .option("compression", "gzip").text(out)
       }
-      out
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .json(root)
@@ -4579,9 +4526,7 @@ object SparkEntry {
     val updatesDir = fittedModel(s"upsertcdc2|$dir") {
       val out = s"$registryRoot/upsertcdc_${registryKey(
         s"upsertcdc-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         base.filter(col("event_id") % 7 === 0)
           .withColumn("value", col("value") + lit(1000.0))
           .unionByName(base.filter(col("event_id") % 97 === 0)
@@ -4590,7 +4535,6 @@ object SparkEntry {
           .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
           .write.mode("overwrite").parquet(out)
       }
-      out
     }
     // Table lives for this invocation in a temp dir (tmpfs-preferring,
     // deleted at JVM exit); __p = event_id div width is the partition
@@ -5755,9 +5699,7 @@ object SparkEntry {
     val refRoot = fittedModel(s"driftref|$dir") {
       val out = s"$registryRoot/driftref_${registryKey(
         s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
+      gated(s, out) {
         val ref = s.read.parquet(root).filter(driftIsA)
         val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
         graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
@@ -5765,7 +5707,6 @@ object SparkEntry {
           .join(rng, Seq("event_type"))
           .coalesce(1).write.mode("overwrite").parquet(out)
       }
-      out
     }
     val frozen = s.read.parquet(refRoot)
     val ranges = frozen.select("event_type", "__mn", "__mx").distinct()
@@ -7223,14 +7164,12 @@ object SparkEntry {
     val root = fittedModel(s"fencespool|$dir") {
       val out = s"$registryRoot/fencespool_${registryKey(
         s"fencespool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      val marker = new org.apache.hadoop.fs.Path(out, "_SUCCESS")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker))
+      gated(s, out) {
         E(s, dir).filter(col("event_type") === "purchase")
           .select("event_id", "user_id")
           .repartition(4) // 4 spool files, one micro-batch
           .write.mode("overwrite").parquet(out)
-      out
+      }
     }
     val (ula, ulo) = geoE4("u", col("user_id"))
     val pts = s.readStream.schema(s.read.parquet(root).schema).parquet(root)

@@ -1,8 +1,8 @@
 package graft.ml
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.security.MessageDigest
+
+import graft.Artifacts
 
 /** Content-addressed build cache — the analogue of the reference's
   * `builder/build_model.py::provide_saved_model` +
@@ -17,10 +17,7 @@ class DiskRegistry(root: Path) {
   /** Stable cache key for a config string (the reference uses md5 of
     * model+data config + version).
     */
-  def key(config: String): String =
-    MessageDigest.getInstance("MD5")
-      .digest(config.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+  def key(config: String): String = Artifacts.registryKey(config)
 
   private def entry(k: String): Path = root.resolve(k)
 
@@ -30,12 +27,12 @@ class DiskRegistry(root: Path) {
   }
 
   /** Return the cached artifact location, or run `build` and register its
-    * result.
+    * result (the pointer file commits by atomic rename).
     */
   def getOrBuild(config: String)(build: => String): String =
     lookup(config).getOrElse {
       val artifact = build
-      Files.writeString(entry(key(config)), artifact)
+      Artifacts.writeFile(entry(key(config)), artifact)
       artifact
     }
 
@@ -47,7 +44,7 @@ class DiskRegistry(root: Path) {
     try {
       import scala.jdk.CollectionConverters._
       stream.iterator().asScala
-        .filter(Files.isRegularFile(_))
+        .filter(p => Files.isRegularFile(p) && !Artifacts.isTemp(p))
         .map(p => p.getFileName.toString -> Files.readString(p).trim)
         .toSeq.sortBy(_._1)
     } finally stream.close()

@@ -537,8 +537,9 @@ object RnnAutoEncoder {
   }
 
   /** Persist a fitted model as one small text artifact (Double.toString
-    * round-trips exactly, so load(save(m)) is bit-identical). Driver-side
-    * only — the model is O(h·(d+h)) doubles.
+    * round-trips exactly, so load(save(m)) is bit-identical), committed
+    * by atomic rename so [[fitOrLoad]]'s existence probe never sees a
+    * truncated file. Driver-side only — the model is O(h·(d+h)) doubles.
     */
   def save(m: GruAeModel, path: String): Unit = {
     val sb = new StringBuilder
@@ -547,9 +548,7 @@ object RnnAutoEncoder {
     sb.append(m.means.mkString(" ")).append('\n')
     sb.append(m.stds.mkString(" ")).append('\n')
     sb.append(m.theta.mkString(" ")).append('\n')
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, sb.toString)
+    graft.Artifacts.writeFile(java.nio.file.Paths.get(path), sb.toString)
   }
 
   def load(path: String): GruAeModel = {

@@ -997,7 +997,7 @@ object Dedup {
   }
 
   /** Persist an index (groups + pairs + docs + meta parquet; the META
-    * `_SUCCESS` marker commits last — it is the component every v3
+    * commit marker lands last — it is the component every v3
     * writer always emits, so a half-written index never gates (round
     * 15: was docs-last, changed so the build can overlap the pairs and
     * docs jobs — see [[buildAndSaveShingleIndex]]). Stats are computed
@@ -1082,22 +1082,16 @@ object Dedup {
     loadShingleIndex(spark, path)
   }
 
+  /** True iff a complete index is committed at `path`. Current writers
+    * commit meta last; earlier ones committed docs last, so an index
+    * from either ordering counts only with both parts committed.
+    */
   def shingleIndexExists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    // meta commits LAST in both writers (round 15 — previously docs;
-    // every v3 artifact has meta, verified across the live registry
-    // before the switch), so this is the never-gate-a-half-index marker
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta", "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+      path: String): Boolean =
+    graft.Artifacts.committed(spark, path, "meta", "docs")
 
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def committed(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub", "_SUCCESS")
-      p.getFileSystem(conf).exists(p)
-    }
     // meta/pairs are optional on disk (pre-v3 artifacts; indexes past
     // the pair-economics guard) — absence degrades to the per-serve
     // stats agg / recompute plans, never to an error
@@ -1105,11 +1099,13 @@ object Dedup {
     // pair-state serve never consults the stats, so loading must not
     // pay for them
     val st: () => Option[ShingleStats] = () =>
-      if (committed("meta")) {
+      if (graft.Artifacts.committed(spark, path, "meta")) {
         val r = spark.read.parquet(s"$path/meta").head()
         Some(ShingleStats(r.getAs[Long]("mentions"), r.getAs[Long]("memberships")))
       } else None
-    val ps = if (committed("pairs")) Some(spark.read.parquet(s"$path/pairs"))
+    val ps =
+      if (graft.Artifacts.committed(spark, path, "pairs"))
+        Some(spark.read.parquet(s"$path/pairs"))
       else None
     ShingleIndex(spark.read.parquet(s"$path/groups"),
       spark.read.parquet(s"$path/docs"), st, ps)

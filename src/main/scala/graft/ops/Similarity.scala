@@ -202,8 +202,8 @@ object Similarity {
       centroids.toDF("cluster", "cvec")
     }
 
-    /** Persist the quantizer as parquet at `path` (atomic via Spark's
-      * `_SUCCESS` commit marker — `load` keys off it).
+    /** Persist the quantizer as parquet at `path` (committed per
+      * [[graft.Artifacts.committed]] — `fitOrLoadIvf` keys off it).
       */
     def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
       toDF(spark).coalesce(1).write.mode("overwrite").parquet(path)
@@ -217,14 +217,6 @@ object Similarity {
 
     def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfModel =
       fromDF(spark.read.parquet(path))
-
-    /** True iff a COMMITTED save exists at `path` (`_SUCCESS` present —
-      * a half-written directory from a killed job does not count).
-      */
-    def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
   }
 
   /** Process-level cache of fitted quantizers, keyed by artifact path —
@@ -257,7 +249,7 @@ object Similarity {
     if (cached != null) return cached
     val spark = corpus.sparkSession
     val m =
-      if (IvfModel.exists(spark, path)) IvfModel.load(spark, path)
+      if (graft.Artifacts.committed(spark, path)) IvfModel.load(spark, path)
       else {
         val f = fitIvf(corpus, vecCol, nLists, seed, maxIter)
         f.save(spark, path)
@@ -395,11 +387,6 @@ object Similarity {
 
     def load(spark: org.apache.spark.sql.SparkSession, path: String): PqModel =
       fromDF(spark.read.parquet(path))
-
-    def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
   }
 
   /** Fit the PQ codebooks: m independent seeded k-means fits, one per
@@ -434,7 +421,7 @@ object Similarity {
     if (cached != null) return cached
     val spark = corpus.sparkSession
     val model =
-      if (PqModel.exists(spark, path)) PqModel.load(spark, path)
+      if (graft.Artifacts.committed(spark, path)) PqModel.load(spark, path)
       else { val f = fitPq(corpus, vecCol, m, k, seed, maxIter); f.save(spark, path); f }
     Option(pqModels.putIfAbsent(path, model)).getOrElse(model)
   }

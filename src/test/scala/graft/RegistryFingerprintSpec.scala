@@ -30,19 +30,31 @@ class RegistryFingerprintSpec extends SparkSpec {
   test("all disk-persisted registry keys embed a table fingerprint") {
     // Static tripwire: any $registryRoot/<kind>_${registryKey(...)} whose
     // key string lacks tableFingerprint can serve a stale artifact across
-    // fixture regenerations. Scan the source so a NEW persisted artifact
+    // fixture regenerations. Scan the sources so a NEW persisted artifact
     // cannot ship without one (the in-memory fittedModel memo keys are
     // process-scoped and exempt).
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // every registryKey(s"<kind>-v<N>|...") config string feeding a disk path
-    val keyConfig = """registryKey\(\s*s?"([^"]+)"""".r
-    val offenders = keyConfig.findAllMatchIn(src)
-      .map(_.group(1))
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val src = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .toSeq.sortBy(_.toString)
+      .map(p => new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8)).mkString("\n")
+      finally files.close()
+    // every registryKey(s"<kind>-v<N>|...") config string; whitespace and
+    // `//` comments may sit between the call and its string
+    val config = """registryKey\((?:\s|//[^\n]*)*s?"([^"]+)""""
+    val configs = config.r.findAllMatchIn(src).map(_.group(1)).toList
+    // the scan must see every inline registry-path site's config string
+    // — a site it cannot parse would silently escape the tripwire
+    val sites = """\$registryRoot/\w+_\$\{registryKey\(""".r.findAllMatchIn(src).size
+    val parsedSites = ("""\$registryRoot/\w+_\$\{""" + config).r.findAllMatchIn(src).size
+    assert(sites > 0 && parsedSites == sites,
+      s"$sites registry-path sites but only $parsedSites config strings parsed")
+    assert(configs.size >= 31,
+      s"scan matched only ${configs.size} registry config strings — regex drift?")
+    val offenders = configs
       .filter(cfg => !cfg.contains("tableFingerprint") && !cfg.contains("$fp")
         && !cfg.contains("bucketed")) // bucketed tables are re-laid-out per process (in-memory catalog)
-      .toList
     assert(offenders.isEmpty,
       s"disk registry keys without a table fingerprint: $offenders")
   }

@@ -96,4 +96,28 @@ class MlSpec extends SparkSpec {
     assert(a1 == "/models/a" && a2 == "/models/a" && b == "/models/b")
   }
 
+  test("a leftover temp file from an interrupted write is ignored by lookup, entries and fitOrLoad") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-registry")
+    val reg = DiskRegistry(dir.toString)
+    val cfg = """{"model": 1}"""
+    // what a writer killed mid-write leaves behind: a truncated temp
+    // sibling of the pointer file, never the pointer file itself
+    Files.writeString(dir.resolve(s".${reg.key(cfg)}.killed.tmp"), "/models/tr")
+    assert(reg.lookup(cfg).isEmpty)
+    assert(reg.entries.isEmpty)
+    assert(reg.getOrBuild(cfg)("/models/a") == "/models/a")
+    assert(reg.entries == Seq(reg.key(cfg) -> "/models/a"))
+
+    // the same for a model file: the truncated temp must not load
+    val model = dir.resolve("gruae.txt")
+    Files.writeString(dir.resolve(".gruae.txt.killed.tmp"), "v\n4 bucket")
+    val train = (0 until 40).map(i =>
+      (new Timestamp(1704067200000L + i * 3600000L), math.sin(i / 4.0)))
+      .toDF("bucket", "v")
+    val fitted = RnnAutoEncoder.fitOrLoad(model.toString, train, Seq("v"),
+      lb = 3, hidden = 2, epochs = 1)
+    assert(RnnAutoEncoder.load(model.toString).theta.sameElements(fitted.theta))
+  }
+
 }

@@ -478,6 +478,20 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("shingleIndexExists needs both meta and docs committed, for either writer ordering") {
+    val dir = java.nio.file.Files.createTempDirectory("shidx-gate").toString
+    Dedup.buildAndSaveShingleIndex(docs, "doc_id", "text", dir, 3, 20)
+    assert(Dedup.shingleIndexExists(spark, dir))
+    for (part <- Seq("docs", "meta")) {
+      val marker = java.nio.file.Paths.get(dir, part, "_SUCCESS")
+      java.nio.file.Files.delete(marker)
+      assert(!Dedup.shingleIndexExists(spark, dir),
+        s"an index whose $part/ never committed was reported as existing")
+      java.nio.file.Files.createFile(marker)
+    }
+    assert(Dedup.shingleIndexExists(spark, dir))
+  }
+
   test("mentions/prefix crossover guard flips on a hot capped shingle; plans row-identical either side") {
     // One boilerplate bigram shared by every doc, everything else df = 1.
     // With df_hot docs, the df ≥ 2 capped stats are mentions = C(df_hot, 2)

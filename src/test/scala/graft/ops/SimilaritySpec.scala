@@ -96,7 +96,7 @@ class SimilaritySpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("ivf-reg").toString
     val p1 = s"$tmp/ivf_a.parquet"
     val m1 = Similarity.fitOrLoadIvf(e, "embedding", p1, nLists = 8)
-    assert(Similarity.IvfModel.exists(spark, p1), "fit must persist a committed save")
+    assert(graft.Artifacts.committed(spark, p1), "fit must persist a committed save")
     // same path with a deliberately EMPTY corpus: a refit would throw, so a
     // successful equal result proves the process cache answered
     val m2 = Similarity.fitOrLoadIvf(e.limit(0), "embedding", p1, nLists = 8)
