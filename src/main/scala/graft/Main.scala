@@ -88,11 +88,6 @@ object Main {
     result
   }
 
-  /** Load the servable model persisted under a build artifact dir,
-    * routing on metadata.json's `model.type` — the serve-side half of the
-    * builder registry contract. Forecast artifacts are rejected with a
-    * clear message (they serve forecasts, not anomaly requests).
-    */
   /** The artifact's resolution (metadata.json), for serving /metadata —
     * absent in pre-resolution artifacts, so default-fall-back.
     */
@@ -105,6 +100,12 @@ object Main {
       .extractOpt[String].getOrElse("10 minutes")
   }
 
+  /** Load the servable model persisted under a build artifact dir with
+    * the loader of the kind metadata.json's `model.type` names — the
+    * serve-side half of the builder registry contract. Forecast artifacts
+    * are rejected with a clear message (they serve forecasts, not anomaly
+    * requests).
+    */
   def loadScorer(spark: SparkSession, machineDir: String): (TagAnomalyScorer, Seq[String]) = {
     val metaPath = java.nio.file.Paths.get(machineDir, "metadata.json")
     require(java.nio.file.Files.isReadable(metaPath),
@@ -115,20 +116,10 @@ object Main {
     implicit val fmts: org.json4s.Formats = DefaultFormats
     val tags = (meta \ "tags").extract[Seq[String]]
     val mtype = (meta \ "model" \ "type").extract[String]
-    val modelPath = java.nio.file.Paths.get(machineDir, "model").toString
-    val scorer: TagAnomalyScorer = mtype match {
-      case "pca_anomaly" =>
-        val thr = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(machineDir, "threshold.txt")).trim.toDouble
-        PcaAnomalyModel(org.apache.spark.ml.PipelineModel.load(modelPath), thr)
-      case "autoencoder" | "autoencoder_sgd" =>
-        AutoEncoder.RfaeModel.fromDF(spark.read.parquet(modelPath))
-      case "autoencoder_seq" =>
-        SequenceAE.SeqAeModel.fromDF(spark.read.parquet(modelPath))
-      case other =>
-        throw new IllegalArgumentException(
-          s"model.type '$other' is not servable on the prediction endpoint")
-    }
+    val scorer = ModelBuilder.kinds.get(mtype)
+      .flatMap(_.scorer(spark, java.nio.file.Paths.get(machineDir)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"model.type '$mtype' is not servable on the prediction endpoint"))
     (scorer, tags)
   }
 

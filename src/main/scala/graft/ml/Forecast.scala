@@ -77,7 +77,7 @@ object Forecast {
     * window pass, cached across the per-key fits); scoring is a single
     * pass with the key's coefficients selected by a CASE over key
     * literals. The per-key fit loop is driver-sequenced like
-    * `ModelBuilder.buildAll` — each fit is a distributed MLlib job.
+    * `WorkflowGenerator.buildFleet` — each fit is a distributed MLlib job.
     */
   final case class KeyedForecastModel(lb: Int, keyCol: String, valueCol: String,
       coefs: Seq[(String, Seq[Double], Double)]) {

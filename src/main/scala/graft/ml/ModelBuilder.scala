@@ -1,14 +1,14 @@
 package graft.ml
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.ops.{Filters, Timeseries}
+
+import JsonConfig.{double, int, long, obj, str, strList, Conf}
 
 /** The `gordo-components build` analogue (reference trace SURVEY.md §3.1:
   * `cli/cli.py::build` → `builder/build_model.py::build_model` →
@@ -22,507 +22,367 @@ import graft.ops.{Filters, Timeseries}
   * client loop all collapse into Spark task scheduling. The md5 build
   * cache (`provide_saved_model`) survives as DiskRegistry.
   *
+  * Every model type goes through the one lifecycle in [[build]]; a
+  * [[Kind]] in the [[kinds]] table declares only what differs (training
+  * frame, hyperparameters, fit, fold stats, persistence, metadata fields).
+  *
   * Machine config (JSON; YAML parses to the same tree):
   * {{{
   * { "name": "m1",
   *   "dataset": { "tags": ["click","view"], "resolution": "10 minutes",
   *                "row_filter": "`click` > 0" },
-  *   "model": { "k": 2, "threshold_pctl": 0.99 },
+  *   "model": { "type": "pca_anomaly", "k": 2, "threshold_pctl": 0.99 },
   *   "evaluation": { "n_splits": 3 } }
   * }}}
   */
 object ModelBuilder {
 
-  case class BuildResult(path: String, model: PcaAnomalyModel, metadata: String)
+  /** A built machine: its artifact dir, the model reloaded from it, and
+    * its metadata.json.
+    */
+  case class Built[M](path: String, model: M, metadata: String)
+
+  /** The `dataset` block of a machine config: the tags, the resolution,
+    * and the long frame's `ts_col`/`tag_col`/`value_col` (default `ts`,
+    * `tag`, `value`).
+    */
+  private[ml] case class Source(ds: Conf) {
+    val tags: Seq[String] = strList(ds, "tags")
+    val resolution: String = str(ds, "resolution", "10 minutes")
+    def column(c: String): String = str(ds, s"${c}_col", c)
+  }
 
   /** Build the wide feature matrix from a long-format frame per the
     * dataset config — the `TimeSeriesDataset.get_data` analogue.
     */
-  def dataset(longDf: DataFrame, cfg: Map[String, Any]): (DataFrame, Seq[String]) = {
-    val ds = obj(cfg, "dataset")
-    val tags = strList(ds, "tags")
-    val resolution = ds.getOrElse("resolution", "10 minutes").toString
-    val tsCol = ds.getOrElse("ts_col", "ts").toString
-    val tagCol = ds.getOrElse("tag_col", "tag").toString
-    val valueCol = ds.getOrElse("value_col", "value").toString
-    var wide = Timeseries.align(longDf, tsCol, tagCol, valueCol, tags, resolution)
-    ds.get("row_filter").foreach(f => wide = Filters.rowFilter(wide, f.toString))
-    (wide, tags)
+  def dataset(longDf: DataFrame, cfg: Conf): (DataFrame, Seq[String]) = {
+    val src = Source(obj(cfg, "dataset"))
+    (wide(longDf, src), src.tags)
   }
 
-  /** Full build: dataset → expanding-window CV (per-fold threshold +
-    * score stats on strictly-later validation data) → final fit on all
-    * data → model + metadata.json under `outDir/<name>/`, registered in
-    * the content-addressed cache (a config re-build is a registry hit and
-    * does no Spark work).
+  private def wide(longDf: DataFrame, src: Source): DataFrame = {
+    val aligned = Timeseries.align(longDf, src.column("ts"), src.column("tag"),
+      src.column("value"), src.tags, src.resolution)
+    src.ds.get("row_filter").fold(aligned)(f => Filters.rowFilter(aligned, f.toString))
+  }
+
+  /** One machine's training under its kind's hyperparameters: `fit`
+    * returns the model and its per-epoch training loss (empty for a
+    * one-pass fit), `validate` scores a strictly-later CV fold, and
+    * `fields` renders the `"model"` metadata after its `type`, one entry
+    * per metadata line.
     */
-  def build(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): BuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
-    val registry = DiskRegistry(s"$outDir/registry")
-    // the registry key carries the BUILDER kind: the same config routed
-    // through a different builder must never hit this builder's artifact
-    val regKey = s"pca_anomaly\n$configJson"
+  private[ml] case class Trainer[M](fit: DataFrame => (M, Array[Double]),
+      validate: (M, DataFrame) => DataFrame, fields: (M, Array[Double]) => Seq[String])
 
-    val path = registry.getOrBuild(regKey) {
-      val (wide, tags) = dataset(longDf, cfg)
-      val model = obj(cfg, "model")
-      val k = intOf(model, "k", 2)
-      val pctl = model.get("threshold_pctl").map(_.toString.toDouble).getOrElse(0.99)
-      val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
+  /** One `model.type`: what its build does differently. [[build]] owns
+    * everything the kinds share.
+    */
+  sealed abstract class Kind[M](val name: String) {
+    /** The training frame, built lazily: no Spark job runs here. */
+    private[ml] def frame(longDf: DataFrame, src: Source): DataFrame
+    /** Reads the kind's hyperparameters, with their defaults. */
+    private[ml] def trainer(model: Conf, src: Source): Trainer[M]
+    /** A CV fold's JSON fields after `"fold"`, from its validation scores. */
+    private[ml] def foldStats(m: M, scored: DataFrame): String
+    /** Rejects a final model before anything is written or registered. */
+    private[ml] def check(m: M): Unit = ()
+    /** Whether metadata.json records the training frame's row count. */
+    private[ml] def recordsRows: Boolean = false
+    private[ml] def save(spark: SparkSession, m: M, dir: Path): Unit
+    private[ml] def load(spark: SparkSession, dir: Path): M
+    /** The model as a prediction-endpoint scorer; None if not servable. */
+    def scorer(spark: SparkSession, dir: Path): Option[TagAnomalyScorer] = None
+  }
 
-      val folds = TimeSeriesCV.folds(wide, "bucket", nSplits)
-      val foldMeta = folds.zipWithIndex.map { case ((train, valid), i) =>
-        val m = PcaAnomaly.fit(train, tags, k, pctl)
-        val stats = m.score(valid).agg(
-          count(lit(1)).as("n"),
-          avg(col("anomaly_score")).as("mean_score"),
-          max(col("anomaly_score")).as("max_score")).head()
-        s"""{"fold": $i, "threshold": ${jnum(m.threshold)}, "val_rows": ${stats.getLong(0)},
-           | "val_mean_score": ${jnumAt(stats, "mean_score")},
-           | "val_max_score": ${jnumAt(stats, "max_score")}}""".stripMargin
-          .replaceAll("\n", "")
+  /** Anomaly kinds train on the wide [[dataset]], validate on
+    * `anomaly_score` and serve on the prediction endpoint.
+    */
+  sealed abstract class AnomalyKind[M <: TagAnomalyScorer](name: String)
+      extends Kind[M](name) {
+    private[ml] def frame(longDf: DataFrame, src: Source) = wide(longDf, src)
+    private[ml] def foldStats(m: M, scored: DataFrame) =
+      s""""threshold": ${jnum(m.threshold)}, ${valStats(scored, "anomaly_score", "score")}"""
+    override def scorer(spark: SparkSession, dir: Path) = Some(load(spark, dir))
+  }
+
+  /** Forecast kinds train on the keyed long resample `(bucket, <tag_col>,
+    * v)`, validate on the absolute error `v_anomaly`, and serve forecasts,
+    * not anomaly requests.
+    */
+  sealed abstract class ForecastKind[M](name: String) extends Kind[M](name) {
+    private[ml] def frame(longDf: DataFrame, src: Source) = longDf
+      .filter(col(src.column("tag")).isin(src.tags: _*))
+      .groupBy(Timeseries.bucket(col(src.column("ts")), src.resolution).as("bucket"),
+        col(src.column("tag")))
+      .agg(avg(col(src.column("value"))).as("v"))
+    private[ml] def foldStats(m: M, scored: DataFrame) =
+      valStats(scored, "v_anomaly", "abs_err")
+  }
+
+  // -- the kind table: one entry per model.type -----------------------------
+
+  /** `model.type: "pca_anomaly"` (the default): scaler + PCA pipeline,
+    * reconstruction-error threshold. Config: `{"k": 2, "threshold_pctl":
+    * 0.99}`.
+    */
+  val pcaAnomaly: Kind[PcaAnomalyModel] = new AnomalyKind[PcaAnomalyModel]("pca_anomaly") {
+    override private[ml] def recordsRows = true
+    private[ml] def trainer(p: Conf, src: Source) = {
+      val k = int(p, "k", 2)
+      val pctl = double(p, "threshold_pctl", 0.99)
+      Trainer[PcaAnomalyModel](f => (PcaAnomaly.fit(f, src.tags, k, pctl), NoLoss),
+        (m, valid) => m.score(valid),
+        (m, _) => Seq(s""""k": $k, "threshold": ${jnum(m.threshold)}""",
+          s""""threshold_pctl": $pctl"""))
+    }
+    private[ml] def save(spark: SparkSession, m: PcaAnomalyModel, dir: Path) = {
+      m.pipeline.write.overwrite().save(dir.resolve("model").toString)
+      Files.writeString(dir.resolve("threshold.txt"), m.threshold.toString)
+    }
+    private[ml] def load(spark: SparkSession, dir: Path) = PcaAnomalyModel(
+      PipelineModel.load(dir.resolve("model").toString),
+      Files.readString(dir.resolve("threshold.txt")).trim.toDouble)
+  }
+
+  /** `model.type: "ar_forecast"`: the trainable per-tag linear forecaster
+    * (one-shuffle fleet fit). Config: `{"lookback": 6}`.
+    */
+  val arForecast: Kind[Forecast.KeyedForecastModel] =
+    new ForecastKind[Forecast.KeyedForecastModel]("ar_forecast") {
+      private[ml] def trainer(p: Conf, src: Source) = {
+        val lb = int(p, "lookback", 6)
+        Trainer[Forecast.KeyedForecastModel](
+          f => (Forecast.fitPerKey(f, src.column("tag"), "v", lb, "bucket"), NoLoss),
+          (m, valid) => m.forecast(valid, "bucket"),
+          (_, _) => Seq(s""""lookback": $lb"""))
       }
-
-      val finalModel = PcaAnomaly.fit(wide, tags, k, pctl)
-      // artifact dir carries the config key: two configs sharing a `name`
-      // must not overwrite (and then serve) each other's artifacts
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
-      Files.createDirectories(dir)
-      finalModel.pipeline.write.overwrite().save(dir.resolve("model").toString)
-      val metadata =
-        s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "rows": ${wide.count()},
-           | "model": {"type": "pca_anomaly", "k": $k, "threshold": ${jnum(finalModel.threshold)},
-           |           "threshold_pctl": $pctl},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
-      Files.writeString(dir.resolve("metadata.json"), metadata)
-      Files.writeString(dir.resolve("threshold.txt"), finalModel.threshold.toString)
-      dir.toString
+      // an empty model (too few buckets per tag for the lookback) must
+      // not poison the cache
+      override private[ml] def check(m: Forecast.KeyedForecastModel) =
+        require(m.coefs.nonEmpty,
+          s"no tag had enough buckets for lookback=${m.lb} — nothing to fit")
+      private[ml] def save(spark: SparkSession, m: Forecast.KeyedForecastModel, dir: Path) =
+        saveFrame(m.toDF(spark), dir)
+      private[ml] def load(spark: SparkSession, dir: Path) =
+        Forecast.KeyedForecastModel.fromDF(loadFrame(spark, dir))
     }
 
-    val threshold = Files.readString(Paths.get(path, "threshold.txt")).trim.toDouble
-    val pipeline = PipelineModel.load(Paths.get(path, "model").toString)
-    BuildResult(path, PcaAnomalyModel(pipeline, threshold),
-      Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  case class ForecastBuildResult(path: String,
-      model: Forecast.KeyedForecastModel, metadata: String)
-
-  /** Config-driven FORECAST build (`model.type: "ar_forecast"`) — same
-    * lifecycle as `build` but for the trainable per-tag forecaster: keyed
-    * long resample → expanding-window CV (per-fold fleet fit + strictly
-    * later validation MAE) → final one-shuffle fleet fit → coefficient
-    * table + metadata under `outDir/<name>/`, registry-cached.
-    *
-    * Config: `{ "name": ..., "dataset": {"tags": [...], "resolution":
-    * "10 minutes"}, "model": {"type": "ar_forecast", "lookback": 6},
-    * "evaluation": {"n_splits": 3} }`
-    */
-  def buildForecast(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): ForecastBuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
-    val registry = DiskRegistry(s"$outDir/registry")
-    val ds = obj(cfg, "dataset")
-    val tags = strList(ds, "tags")
-    val resolution = ds.getOrElse("resolution", "10 minutes").toString
-    val tsCol = ds.getOrElse("ts_col", "ts").toString
-    val tagCol = ds.getOrElse("tag_col", "tag").toString
-    val valueCol = ds.getOrElse("value_col", "value").toString
-    val model = obj(cfg, "model")
-    val lb = intOf(model, "lookback", 6)
-    val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
-    val regKey = s"ar_forecast\n$configJson"
-
-    val long = longDf
-      .filter(col(tagCol).isin(tags: _*))
-      .groupBy(Timeseries.bucket(col(tsCol), resolution).as("bucket"), col(tagCol))
-      .agg(avg(col(valueCol)).as("v"))
-
-    val path = registry.getOrBuild(regKey) {
-      val foldMeta = TimeSeriesCV.folds(long, "bucket", nSplits).zipWithIndex.map {
-        case ((train, valid), i) =>
-          val m = Forecast.fitPerKey(train, tagCol, "v", lb, "bucket")
-          val stats = m.forecast(valid, "bucket").agg(
-            count(lit(1)).as("n"),
-            avg(col("v_anomaly")).as("mean_abs_err"),
-            max(col("v_anomaly")).as("max_abs_err")).head()
-          s"""{"fold": $i, "val_rows": ${stats.getLong(0)},
-             | "val_mean_abs_err": ${jnumAt(stats, "mean_abs_err")},
-             | "val_max_abs_err": ${jnumAt(stats, "max_abs_err")}}""".stripMargin
-            .replaceAll("\n", "")
-      }
-      val finalModel = Forecast.fitPerKey(long, tagCol, "v", lb, "bucket")
-      // fail BEFORE anything is written/registered: an empty model (too
-      // few buckets per tag for the lookback) must not poison the cache
-      require(finalModel.coefs.nonEmpty,
-        s"no tag had enough buckets for lookback=$lb — nothing to fit")
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
-      Files.createDirectories(dir)
-      finalModel.toDF(spark).write.mode("overwrite").parquet(dir.resolve("model").toString)
-      val metadata =
-        s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "model": {"type": "ar_forecast", "lookback": $lb},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
-      Files.writeString(dir.resolve("metadata.json"), metadata)
-      dir.toString
-    }
-
-    val reloaded = Forecast.KeyedForecastModel.fromDF(
-      spark.read.parquet(Paths.get(path, "model").toString))
-    ForecastBuildResult(path, reloaded,
-      Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  case class EsnBuildResult(path: String,
-      model: EchoState.EsnModel, metadata: String)
-
-  /** Config-driven RECURRENT forecast build (`model.type: "esn_forecast"`)
-    * — the same lifecycle as `buildForecast` with the [[EchoState]]
-    * reservoir in place of the linear per-tag AR fleet: keyed long
-    * resample → expanding-window CV (per-fold reservoir fit + strictly
-    * later validation MAE — the validation scan restarts the state from
+  /** `model.type: "esn_forecast"`: the [[EchoState]] reservoir in place of
+    * the linear AR fleet. The validation scan restarts the state from
     * zero, so the first `washout` validation steps carry the same
-    * transient the fit excludes) → final fit → persisted reservoir frame
-    * + metadata, registry-cached.
-    *
-    * Config: `{ "name": ..., "dataset": {"tags": [...], "resolution":
-    * "10 minutes"}, "model": {"type": "esn_forecast", "reservoir": 64,
+    * transient the fit excludes. Config: `{"reservoir": 64,
     * "spectral_radius": 0.9, "leak": 0.5, "washout": 10, "input_scale":
-    * 0.5, "ridge": 1e-4}, "evaluation": {"n_splits": 3} }`
+    * 0.5, "ridge": 1e-4}`.
     */
-  def buildEsn(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): EsnBuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
-    val registry = DiskRegistry(s"$outDir/registry")
-    val ds = obj(cfg, "dataset")
-    val tags = strList(ds, "tags")
-    val resolution = ds.getOrElse("resolution", "10 minutes").toString
-    val tsCol = ds.getOrElse("ts_col", "ts").toString
-    val tagCol = ds.getOrElse("tag_col", "tag").toString
-    val valueCol = ds.getOrElse("value_col", "value").toString
-    val model = obj(cfg, "model")
-    val reservoir = intOf(model, "reservoir", 64)
-    val rho = model.get("spectral_radius").map(_.toString.toDouble).getOrElse(0.9)
-    val leak = model.get("leak").map(_.toString.toDouble).getOrElse(0.5)
-    val washout = intOf(model, "washout", 10)
-    val inScale = model.get("input_scale").map(_.toString.toDouble).getOrElse(0.5)
-    val ridge = model.get("ridge").map(_.toString.toDouble).getOrElse(1e-4)
-    val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
-    val regKey = s"esn_forecast\n$configJson"
-
-    val long = longDf
-      .filter(col(tagCol).isin(tags: _*))
-      .groupBy(Timeseries.bucket(col(tsCol), resolution).as("bucket"), col(tagCol))
-      .agg(avg(col(valueCol)).as("v"))
-
-    def fitOn(frame: DataFrame) = EchoState.fit(frame, Seq("v"), "bucket",
-      Seq(tagCol), reservoir = reservoir, ridge = ridge, spectralRadius = rho,
-      leak = leak, washout = washout, inputScale = inScale)
-
-    val path = registry.getOrBuild(regKey) {
-      val foldMeta = TimeSeriesCV.folds(long, "bucket", nSplits).zipWithIndex.map {
-        case ((train, valid), i) =>
-          val m = fitOn(train)
-          val stats = m.forecast(valid, "bucket", Seq(tagCol)).agg(
-            count(lit(1)).as("n"),
-            avg(col("v_anomaly")).as("mean_abs_err"),
-            max(col("v_anomaly")).as("max_abs_err")).head()
-          s"""{"fold": $i, "val_rows": ${stats.getLong(0)},
-             | "val_mean_abs_err": ${jnumAt(stats, "mean_abs_err")},
-             | "val_max_abs_err": ${jnumAt(stats, "max_abs_err")}}""".stripMargin
-            .replaceAll("\n", "")
+  val esnForecast: Kind[EchoState.EsnModel] =
+    new ForecastKind[EchoState.EsnModel]("esn_forecast") {
+      private[ml] def trainer(p: Conf, src: Source) = {
+        val reservoir = int(p, "reservoir", 64)
+        val rho = double(p, "spectral_radius", 0.9)
+        val leak = double(p, "leak", 0.5)
+        val washout = int(p, "washout", 10)
+        val inScale = double(p, "input_scale", 0.5)
+        val ridge = double(p, "ridge", 1e-4)
+        val keys = Seq(src.column("tag"))
+        Trainer[EchoState.EsnModel](
+          f => (EchoState.fit(f, Seq("v"), "bucket", keys, reservoir = reservoir,
+            ridge = ridge, spectralRadius = rho, leak = leak, washout = washout,
+            inputScale = inScale), NoLoss),
+          (m, valid) => m.forecast(valid, "bucket", keys),
+          (_, _) => Seq(s""""reservoir": $reservoir""",
+            s""""spectral_radius": $rho, "leak": $leak""",
+            s""""washout": $washout, "input_scale": $inScale"""))
       }
-      val finalModel = fitOn(long)
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
-      Files.createDirectories(dir)
-      finalModel.toDF(spark).write.mode("overwrite")
-        .parquet(dir.resolve("model").toString)
-      val metadata =
-        s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "model": {"type": "esn_forecast", "reservoir": $reservoir,
-           |           "spectral_radius": $rho, "leak": $leak,
-           |           "washout": $washout, "input_scale": $inScale},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
-      Files.writeString(dir.resolve("metadata.json"), metadata)
-      dir.toString
+      private[ml] def save(spark: SparkSession, m: EchoState.EsnModel, dir: Path) =
+        saveFrame(m.toDF(spark), dir)
+      private[ml] def load(spark: SparkSession, dir: Path) =
+        EchoState.EsnModel.fromDF(loadFrame(spark, dir))
     }
 
-    val reloaded = EchoState.EsnModel.fromDF(
-      spark.read.parquet(Paths.get(path, "model").toString))
-    EsnBuildResult(path, reloaded,
-      Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  case class AutoEncoderBuildResult(path: String,
-      model: AutoEncoder.RfaeModel, metadata: String)
-
-  /** Config-driven NONLINEAR autoencoder build (`model.type:
-    * "autoencoder"`) — the same lifecycle as `build` with
-    * [[AutoEncoder]] in place of the PCA pipeline: dataset →
-    * expanding-window CV (per-fold fit + strictly-later validation score
-    * stats) → final one-pass ridge fit → persisted coefficient frame +
-    * metadata, registry-cached.
-    *
-    * Config: `{ "name": ..., "dataset": {...}, "model": {"type":
-    * "autoencoder", "hidden": 16, "ridge": 1e-3, "threshold_pctl":
-    * 0.99, "seed": 42}, "evaluation": {"n_splits": 3} }`
+  /** `model.type: "autoencoder"`: the NONLINEAR random-feature
+    * [[AutoEncoder]] (one-pass ridge fit). Config: `{"hidden": 16,
+    * "ridge": 1e-3, "threshold_pctl": 0.99, "seed": 42}`.
     */
-  def buildAutoEncoder(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): AutoEncoderBuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
-    val registry = DiskRegistry(s"$outDir/registry")
-    val regKey = s"autoencoder\n$configJson"
-
-    val path = registry.getOrBuild(regKey) {
-      val (wide, tags) = dataset(longDf, cfg)
-      val model = obj(cfg, "model")
-      val hidden = intOf(model, "hidden", 16)
-      val ridge = model.get("ridge").map(_.toString.toDouble).getOrElse(1e-3)
-      val pctl = model.get("threshold_pctl").map(_.toString.toDouble).getOrElse(0.99)
-      val seed = model.get("seed").map(_.toString.toLong).getOrElse(42L)
-      val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
-
-      val foldMeta = TimeSeriesCV.folds(wide, "bucket", nSplits).zipWithIndex.map {
-        case ((train, valid), i) =>
-          val m = AutoEncoder.fit(train, tags, hidden, ridge, pctl, seed)
-          val stats = m.score(valid.na.drop("any", tags)).agg(
-            count(lit(1)).as("n"),
-            avg(col("anomaly_score")).as("mean_score"),
-            max(col("anomaly_score")).as("max_score")).head()
-          s"""{"fold": $i, "threshold": ${jnum(m.threshold)}, "val_rows": ${stats.getLong(0)},
-             | "val_mean_score": ${jnumAt(stats, "mean_score")},
-             | "val_max_score": ${jnumAt(stats, "max_score")}}""".stripMargin
-            .replaceAll("\n", "")
+  val autoencoder: Kind[AutoEncoder.RfaeModel] =
+    new AnomalyKind[AutoEncoder.RfaeModel]("autoencoder") {
+      private[ml] def trainer(p: Conf, src: Source) = {
+        val hidden = int(p, "hidden", 16)
+        val ridge = double(p, "ridge", 1e-3)
+        val pctl = double(p, "threshold_pctl", 0.99)
+        val seed = long(p, "seed", 42L)
+        Trainer[AutoEncoder.RfaeModel](
+          f => (AutoEncoder.fit(f, src.tags, hidden, ridge, pctl, seed), NoLoss),
+          (m, valid) => m.score(valid.na.drop("any", src.tags)),
+          (m, _) => Seq(s""""hidden": $hidden, "ridge": $ridge""", thresholdField(m, pctl)))
       }
-
-      val finalModel = AutoEncoder.fit(wide, tags, hidden, ridge, pctl, seed)
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
-      Files.createDirectories(dir)
-      finalModel.toDF(spark).write.mode("overwrite")
-        .parquet(dir.resolve("model").toString)
-      val metadata =
-        s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "model": {"type": "autoencoder", "hidden": $hidden, "ridge": $ridge,
-           |           "threshold": ${jnum(finalModel.threshold)}, "threshold_pctl": $pctl},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
-      Files.writeString(dir.resolve("metadata.json"), metadata)
-      dir.toString
+      private[ml] def save(spark: SparkSession, m: AutoEncoder.RfaeModel, dir: Path) =
+        saveFrame(m.toDF(spark), dir)
+      private[ml] def load(spark: SparkSession, dir: Path) =
+        AutoEncoder.RfaeModel.fromDF(loadFrame(spark, dir))
     }
 
-    val reloaded = AutoEncoder.RfaeModel.fromDF(
-      spark.read.parquet(Paths.get(path, "model").toString))
-    AutoEncoderBuildResult(path, reloaded,
-      Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  /** Config-driven GRADIENT-trained autoencoder build (`model.type:
-    * "autoencoder_sgd"`) — the backprop counterpart of
-    * [[buildAutoEncoder]]: same dataset/CV/threshold/registry lifecycle,
-    * with [[AutoEncoderSGD]]'s distributed mini-batch descent in place of
-    * the one-pass ridge solve. The persisted artifact is the SAME
-    * coefficient-frame format (RfaeModel), so serving is type-agnostic.
-    *
-    * Config: `{ "name": ..., "dataset": {...}, "model": {"type":
-    * "autoencoder_sgd", "hidden": 8, "epochs": 120, "lr": 0.05,
-    * "batch_fraction": 0.5, "threshold_pctl": 0.99, "seed": 42},
-    * "evaluation": {"n_splits": 3} }`
+  /** `model.type: "autoencoder_sgd"`: the GRADIENT-trained counterpart of
+    * [[autoencoder]] ([[AutoEncoderSGD]]'s distributed mini-batch
+    * descent). It persists the same coefficient-frame format (RfaeModel),
+    * so serving is type-agnostic. Config: `{"hidden": 8, "epochs": 120,
+    * "lr": 0.05, "batch_fraction": 0.5, "threshold_pctl": 0.99, "seed":
+    * 42}`.
     */
-  def buildAutoEncoderSgd(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): AutoEncoderBuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
-    val registry = DiskRegistry(s"$outDir/registry")
-    val regKey = s"autoencoder_sgd\n$configJson"
-
-    val path = registry.getOrBuild(regKey) {
-      val (wide, tags) = dataset(longDf, cfg)
-      val model = obj(cfg, "model")
-      val hidden = intOf(model, "hidden", 8)
-      val epochs = intOf(model, "epochs", 120)
-      val lr = model.get("lr").map(_.toString.toDouble).getOrElse(0.05)
-      val batchFraction =
-        model.get("batch_fraction").map(_.toString.toDouble).getOrElse(0.5)
-      val pctl = model.get("threshold_pctl").map(_.toString.toDouble).getOrElse(0.99)
-      val seed = model.get("seed").map(_.toString.toLong).getOrElse(42L)
-      val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
-
-      val foldMeta = TimeSeriesCV.folds(wide, "bucket", nSplits).zipWithIndex.map {
-        case ((train, valid), i) =>
-          val m = AutoEncoderSGD.fit(train, tags, hidden, epochs, lr,
-            batchFraction = batchFraction, pctl = pctl, seed = seed)
-          val stats = m.score(valid.na.drop("any", tags)).agg(
-            count(lit(1)).as("n"),
-            avg(col("anomaly_score")).as("mean_score"),
-            max(col("anomaly_score")).as("max_score")).head()
-          s"""{"fold": $i, "threshold": ${jnum(m.threshold)}, "val_rows": ${stats.getLong(0)},
-             | "val_mean_score": ${jnumAt(stats, "mean_score")},
-             | "val_max_score": ${jnumAt(stats, "max_score")}}""".stripMargin
-            .replaceAll("\n", "")
+  val autoencoderSgd: Kind[AutoEncoder.RfaeModel] =
+    new AnomalyKind[AutoEncoder.RfaeModel]("autoencoder_sgd") {
+      private[ml] def trainer(p: Conf, src: Source) = {
+        val hidden = int(p, "hidden", 8)
+        val epochs = int(p, "epochs", 120)
+        val lr = double(p, "lr", 0.05)
+        val batchFraction = double(p, "batch_fraction", 0.5)
+        val pctl = double(p, "threshold_pctl", 0.99)
+        val seed = long(p, "seed", 42L)
+        Trainer[AutoEncoder.RfaeModel](
+          f => AutoEncoderSGD.fitWithHistory(f, src.tags, hidden, epochs, lr,
+            batchFraction = batchFraction, pctl = pctl, seed = seed),
+          (m, valid) => m.score(valid.na.drop("any", src.tags)),
+          (m, losses) => Seq(s""""hidden": $hidden""", s""""epochs": $epochs, "lr": $lr""",
+            thresholdField(m, pctl)) ++ lossFields(losses))
       }
-
-      val (finalModel, losses) = AutoEncoderSGD.fitWithHistory(wide, tags,
-        hidden, epochs, lr, batchFraction = batchFraction, pctl = pctl, seed = seed)
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
-      Files.createDirectories(dir)
-      finalModel.toDF(spark).write.mode("overwrite")
-        .parquet(dir.resolve("model").toString)
-      val metadata =
-        s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "model": {"type": "autoencoder_sgd", "hidden": $hidden,
-           |           "epochs": $epochs, "lr": $lr,
-           |           "threshold": ${jnum(finalModel.threshold)}, "threshold_pctl": $pctl,
-           |           "train_mse_first": ${jnum(losses.head)},
-           |           "train_mse_last": ${jnum(losses.last)}},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
-      Files.writeString(dir.resolve("metadata.json"), metadata)
-      dir.toString
+      private[ml] def save(spark: SparkSession, m: AutoEncoder.RfaeModel, dir: Path) =
+        saveFrame(m.toDF(spark), dir)
+      private[ml] def load(spark: SparkSession, dir: Path) =
+        AutoEncoder.RfaeModel.fromDF(loadFrame(spark, dir))
     }
 
-    val reloaded = AutoEncoder.RfaeModel.fromDF(
-      spark.read.parquet(Paths.get(path, "model").toString))
-    AutoEncoderBuildResult(path, reloaded,
-      Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  case class SeqAeBuildResult(path: String, model: SequenceAE.SeqAeModel,
-      metadata: String)
-
-  /** Config-driven SEQUENCE autoencoder build (`model.type:
-    * "autoencoder_seq"`) — the KerasLSTMAutoEncoder slot in the
-    * lifecycle: same dataset/CV/threshold/registry flow, with
+  /** `model.type: "autoencoder_seq"`: the KerasLSTMAutoEncoder slot —
     * [[SequenceAE]]'s lag-embedded window model. The CV folds split the
-    * WIDE frame by time exactly as the dense builds do; each fold embeds
+    * WIDE frame by time exactly as the dense kinds do; each fold embeds
     * its own slice, so no window ever straddles the train/validation cut
     * (the embed drops rows without lb in-slice predecessors — the same
     * boundary discipline the Keras generator gets from batching within a
-    * split).
-    *
-    * Config: `{ "name": ..., "dataset": {...}, "model": {"type":
-    * "autoencoder_seq", "lookback": 4, "hidden": 12, "epochs": 120,
-    * "lr": 0.02, "batch_fraction": 0.5, "threshold_pctl": 0.99,
-    * "seed": 42}, "evaluation": {"n_splits": 3} }`
+    * split). Config: `{"lookback": 4, "hidden": 12, "epochs": 120, "lr":
+    * 0.02, "batch_fraction": 0.5, "threshold_pctl": 0.99, "seed": 42}`.
     */
-  def buildAutoEncoderSeq(spark: SparkSession, configJson: String, longDf: DataFrame,
-      outDir: String): SeqAeBuildResult = {
-    val cfg = parse(configJson)
-    val name = cfg.getOrElse("name", "machine").toString
+  val autoencoderSeq: Kind[SequenceAE.SeqAeModel] =
+    new AnomalyKind[SequenceAE.SeqAeModel]("autoencoder_seq") {
+      private[ml] def trainer(p: Conf, src: Source) = {
+        val lb = int(p, "lookback", 4)
+        val hidden = int(p, "hidden", 12)
+        val epochs = int(p, "epochs", 120)
+        val lr = double(p, "lr", 0.02)
+        val batchFraction = double(p, "batch_fraction", 0.5)
+        val pctl = double(p, "threshold_pctl", 0.99)
+        val seed = long(p, "seed", 42L)
+        Trainer[SequenceAE.SeqAeModel](
+          f => SequenceAE.fitWithHistory(f.na.drop("any", src.tags), src.tags, lb, "bucket",
+            hidden = hidden, epochs = epochs, lr = lr,
+            batchFraction = batchFraction, pctl = pctl, seed = seed),
+          (m, valid) => m.score(valid.na.drop("any", src.tags)),
+          (m, losses) => Seq(s""""lookback": $lb""",
+            s""""hidden": $hidden, "epochs": $epochs, "lr": $lr""",
+            thresholdField(m, pctl)) ++ lossFields(losses))
+      }
+      private[ml] def save(spark: SparkSession, m: SequenceAE.SeqAeModel, dir: Path) =
+        saveFrame(m.toDF(spark), dir)
+      private[ml] def load(spark: SparkSession, dir: Path) =
+        SequenceAE.SeqAeModel.fromDF(loadFrame(spark, dir))
+    }
+
+  /** Every kind by its `model.type`. */
+  val kinds: Map[String, Kind[_]] =
+    Seq(pcaAnomaly, arForecast, esnForecast, autoencoder, autoencoderSgd, autoencoderSeq)
+      .map(k => k.name -> k).toMap
+
+  // -- the lifecycle --------------------------------------------------------
+
+  /** Full build of one machine as `kind`: training frame → expanding-
+    * window CV (per-fold fit + stats on strictly-later validation data) →
+    * final fit on all data → model + metadata.json under
+    * `outDir/<name>-<key8>/`, registered in the content-addressed cache (a
+    * config re-build is a registry hit and does no Spark work; it only
+    * reloads the model).
+    */
+  def build[M](spark: SparkSession, kind: Kind[M], configJson: String, longDf: DataFrame,
+      outDir: String): Built[M] = {
+    val cfg = JsonConfig.parse(configJson)
+    val name = str(cfg, "name", "machine")
     val registry = DiskRegistry(s"$outDir/registry")
-    val regKey = s"autoencoder_seq\n$configJson"
+    // the registry key carries the kind: the same config built as another
+    // kind must never hit this kind's artifact
+    val regKey = s"${kind.name}\n$configJson"
+    val key = registry.key(regKey)
+    // the artifact dir carries the config key: two configs sharing a
+    // `name` must not overwrite (and then serve) each other's artifacts;
+    // a name like "../x" would put it outside outDir, so reject it first
+    val dir = Paths.get(outDir, s"$name-${key.take(8)}")
+    require(dir.getParent == Paths.get(outDir),
+      s"machine name '$name' is not a single path segment")
 
     val path = registry.getOrBuild(regKey) {
-      val (wide, tags) = dataset(longDf, cfg)
-      val model = obj(cfg, "model")
-      val lb = intOf(model, "lookback", 4)
-      val hidden = intOf(model, "hidden", 12)
-      val epochs = intOf(model, "epochs", 120)
-      val lr = model.get("lr").map(_.toString.toDouble).getOrElse(0.02)
-      val batchFraction =
-        model.get("batch_fraction").map(_.toString.toDouble).getOrElse(0.5)
-      val pctl = model.get("threshold_pctl").map(_.toString.toDouble).getOrElse(0.99)
-      val seed = model.get("seed").map(_.toString.toLong).getOrElse(42L)
-      val nSplits = intOf(obj(cfg, "evaluation"), "n_splits", 3)
-
-      val foldMeta = TimeSeriesCV.folds(wide, "bucket", nSplits).zipWithIndex.map {
+      val src = Source(obj(cfg, "dataset"))
+      val frame = kind.frame(longDf, src)
+      val trainer = kind.trainer(obj(cfg, "model"), src)
+      val nSplits = int(obj(cfg, "evaluation"), "n_splits", 3)
+      val cv = TimeSeriesCV.folds(frame, "bucket", nSplits).zipWithIndex.map {
         case ((train, valid), i) =>
-          val m = SequenceAE.fit(train.na.drop("any", tags), tags, lb, "bucket",
-            hidden = hidden, epochs = epochs, lr = lr,
-            batchFraction = batchFraction, pctl = pctl, seed = seed)
-          val stats = m.score(valid.na.drop("any", tags)).agg(
-            count(lit(1)).as("n"),
-            avg(col("anomaly_score")).as("mean_score"),
-            max(col("anomaly_score")).as("max_score")).head()
-          s"""{"fold": $i, "threshold": ${jnum(m.threshold)}, "val_rows": ${stats.getLong(0)},
-             | "val_mean_score": ${jnumAt(stats, "mean_score")},
-             | "val_max_score": ${jnumAt(stats, "max_score")}}""".stripMargin
-            .replaceAll("\n", "")
+          val m = trainer.fit(train)._1
+          s"""{"fold": $i, ${kind.foldStats(m, trainer.validate(m, valid))}}"""
       }
-
-      val (finalModel, losses) = SequenceAE.fitWithHistory(
-        wide.na.drop("any", tags), tags, lb, "bucket",
-        hidden = hidden, epochs = epochs, lr = lr,
-        batchFraction = batchFraction, pctl = pctl, seed = seed)
-      val dir = Paths.get(outDir, s"$name-${registry.key(regKey).take(8)}")
+      val (model, losses) = trainer.fit(frame)
+      kind.check(model)
       Files.createDirectories(dir)
-      finalModel.toDF(spark).write.mode("overwrite")
-        .parquet(dir.resolve("model").toString)
+      kind.save(spark, model, dir)
+      val rows = if (kind.recordsRows) s"""\n "rows": ${frame.count()},""" else ""
+      val modelFields = trainer.fields(model, losses).mkString(",\n           ")
       val metadata =
         s"""{"name": ${jstr(name)},
-           | "tags": [${tags.map(jstr).mkString(", ")}],
-           | "resolution": ${jstr(resolutionOf(cfg))},
-           | "model": {"type": "autoencoder_seq", "lookback": $lb,
-           |           "hidden": $hidden, "epochs": $epochs, "lr": $lr,
-           |           "threshold": ${jnum(finalModel.threshold)}, "threshold_pctl": $pctl,
-           |           "train_mse_first": ${jnum(losses.head)},
-           |           "train_mse_last": ${jnum(losses.last)}},
-           | "cv": [${foldMeta.mkString(", ")}],
-           | "config_key": "${registry.key(regKey)}"}""".stripMargin
+           | "tags": [${src.tags.map(jstr).mkString(", ")}],
+           | "resolution": ${jstr(src.resolution)},$rows
+           | "model": {"type": ${jstr(kind.name)}, $modelFields},
+           | "cv": [${cv.mkString(", ")}],
+           | "config_key": "$key"}""".stripMargin
       Files.writeString(dir.resolve("metadata.json"), metadata)
       dir.toString
     }
 
-    val reloaded = SequenceAE.SeqAeModel.fromDF(
-      spark.read.parquet(Paths.get(path, "model").toString))
-    SeqAeBuildResult(path, reloaded,
+    Built(path, kind.load(spark, Paths.get(path)),
       Files.readString(Paths.get(path, "metadata.json")))
-  }
-
-  /** Fleet build — the workflow-generator analogue (SURVEY.md §3.1: one
-    * Argo pod per machine, thousands of machines). Here each machine is a
-    * sequence of Spark jobs inside ONE session; the registry dedupes
-    * already-built configs across the fleet, and failures are isolated
-    * per machine (a broken config doesn't sink the fleet — it lands in
-    * the error list, like a failed Argo step).
-    */
-  def buildAll(spark: SparkSession, configs: Seq[String], longDf: DataFrame,
-      outDir: String): (Seq[BuildResult], Seq[(String, Throwable)]) = {
-    val results = configs.map { cfg =>
-      try Right(build(spark, cfg, longDf, outDir))
-      catch { case e: Throwable => Left(cfg -> e) }
-    }
-    (results.collect { case Right(r) => r }, results.collect { case Left(f) => f })
   }
 
   /** Bulk scoring over a time range — the `client predict` analogue
     * (SURVEY.md §3.3): one lazy plan, no chunking/retry loop.
     */
-  def predict(result: BuildResult, longDf: DataFrame, cfg: String): DataFrame = {
-    val (wide, _) = dataset(longDf, parse(cfg))
+  def predict(result: Built[PcaAnomalyModel], longDf: DataFrame, cfg: String): DataFrame = {
+    val (wide, _) = dataset(longDf, JsonConfig.parse(cfg))
     result.model.anomaly(wide)
   }
 
-  // -- metadata JSON emission ---------------------------------------------
+  // -- persistence and metadata JSON ---------------------------------------
+
+  private val NoLoss = Array.empty[Double]
+
+  private def saveFrame(df: DataFrame, dir: Path): Unit =
+    df.write.mode("overwrite").parquet(dir.resolve("model").toString)
+
+  private def loadFrame(spark: SparkSession, dir: Path): DataFrame =
+    spark.read.parquet(dir.resolve("model").toString)
+
+  /** A CV fold's validation rows and the mean/max of `scoreCol`. */
+  private def valStats(scored: DataFrame, scoreCol: String, stat: String): String = {
+    val r = scored.agg(count(lit(1)).as("n"), avg(col(scoreCol)).as("mean"),
+      max(col(scoreCol)).as("max")).head()
+    s""""val_rows": ${r.getLong(0)}, "val_mean_$stat": ${jnumAt(r, "mean")}, """ +
+      s""""val_max_$stat": ${jnumAt(r, "max")}"""
+  }
+
+  private def thresholdField(m: TagAnomalyScorer, pctl: Double): String =
+    s""""threshold": ${jnum(m.threshold)}, "threshold_pctl": $pctl"""
+
+  private def lossFields(losses: Array[Double]): Seq[String] =
+    Seq(s""""train_mse_first": ${jnum(losses.head)}""",
+      s""""train_mse_last": ${jnum(losses.last)}""")
 
   /** JSON string literal with full escaping — a machine name containing a
     * quote must not produce an unparseable metadata.json AFTER the
     * artifact is already registered.
     */
-  /** The dataset resolution a config builds at — metadata.json records it
-    * so serve/client can align requests to the trained granularity.
-    */
-  private def resolutionOf(cfg: Map[String, Any]): String =
-    obj(cfg, "dataset").getOrElse("resolution", "10 minutes").toString
-
   private def jstr(s: String): String = Serve.jsonString(s)
 
   /** JSON number: NaN/Infinity (possible in degenerate CV stats) → null. */
@@ -535,32 +395,4 @@ object ModelBuilder {
     */
   private def jnumAt(r: org.apache.spark.sql.Row, field: String): String =
     if (r.isNullAt(r.fieldIndex(field))) "null" else jnum(r.getAs[Double](field))
-
-  // -- config plumbing ----------------------------------------------------
-
-  private def parse(json: String): Map[String, Any] =
-    toPlain(JsonMethods.parse(json)).asInstanceOf[Map[String, Any]]
-
-  private def toPlain(v: JValue): Any = v match {
-    case JObject(fields) => fields.map { case (k, x) => k -> toPlain(x) }.toMap
-    case JArray(items) => items.map(toPlain)
-    case JString(s) => s
-    case JInt(i) => i.toInt
-    case JLong(l) => l
-    case JDouble(d) => d
-    case JDecimal(d) => d.toDouble
-    case JBool(b) => b
-    case JNull | JNothing => null
-  }
-
-  private def obj(m: Map[String, Any], k: String): Map[String, Any] = m.get(k) match {
-    case Some(o: Map[_, _]) => o.asInstanceOf[Map[String, Any]]
-    case _ => Map.empty
-  }
-  private def strList(m: Map[String, Any], k: String): Seq[String] = m.get(k) match {
-    case Some(s: Seq[_]) => s.map(_.toString)
-    case _ => throw new IllegalArgumentException(s"dataset.$k must be a string list")
-  }
-  private def intOf(m: Map[String, Any], k: String, default: Int): Int =
-    m.get(k).map(_.toString.toInt).getOrElse(default)
 }

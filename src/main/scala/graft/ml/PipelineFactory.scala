@@ -2,8 +2,8 @@ package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineStage}
 import org.apache.spark.ml.feature.{MinMaxScaler, PCA, StandardScaler, VectorAssembler}
-import org.json4s._
-import org.json4s.jackson.JsonMethods
+
+import JsonConfig.{bool, int, str, strList}
 
 /** Config → spark.ml Pipeline — the analogue of the reference's
   * `serializer/pipeline_from_definition.py::from_definition` (public repo;
@@ -81,35 +81,5 @@ object PipelineFactory {
   }
 
   /** Build from a JSON definition string. */
-  def fromJson(json: String): Pipeline =
-    fromDefinition(toPlain(JsonMethods.parse(json)).asInstanceOf[Map[String, Any]])
-
-  private def toPlain(v: JValue): Any = v match {
-    case JObject(fields) => fields.map { case (k, x) => k -> toPlain(x) }.toMap
-    case JArray(items) => items.map(toPlain)
-    case JString(s) => s
-    case JInt(i) => i.toInt
-    case JLong(l) => l
-    case JDouble(d) => d
-    case JDecimal(d) => d.toDouble
-    case JBool(b) => b
-    case JNull | JNothing => null
-  }
-
-  private def str(m: Map[String, Any], k: String, default: String): String =
-    m.get(k).map(_.toString).getOrElse(default)
-  private def strList(m: Map[String, Any], k: String): Seq[String] = m.get(k) match {
-    case Some(s: Seq[_]) => s.map(_.toString)
-    case _ => throw new IllegalArgumentException(s"'$k' must be a string list")
-  }
-  private def int(m: Map[String, Any], k: String, default: Int): Int = m.get(k) match {
-    case Some(i: Int) => i
-    case Some(other) => other.toString.toInt
-    case None => default
-  }
-  private def bool(m: Map[String, Any], k: String, default: Boolean): Boolean = m.get(k) match {
-    case Some(b: Boolean) => b
-    case Some(other) => other.toString.toBoolean
-    case None => default
-  }
+  def fromJson(json: String): Pipeline = fromDefinition(JsonConfig.parse(json))
 }

@@ -15,16 +15,14 @@ import org.json4s.jackson.JsonMethods
   * build per machine.
   *
   * Where the reference renders an Argo pod per machine, here each machine
-  * is a sequence of Spark jobs inside ONE session, routed to the builder
-  * its `model.type` names (`pca_anomaly` | `ar_forecast` | `esn_forecast`
-  * | `autoencoder` | `autoencoder_sgd` | `autoencoder_seq` — the six
-  * [[ModelBuilder]] lifecycles). The
-  * content-addressed
-  * [[DiskRegistry]] dedupes across the fleet AND across runs: a rebuild
-  * of an unchanged machine is a cache hit that does no Spark work, and a
-  * failed machine lands in the error list without sinking the fleet (the
-  * failed-Argo-step analogue). A `fleet.json` manifest (the rendered-
-  * workflow analogue) records every machine's outcome.
+  * is a sequence of Spark jobs inside ONE session: [[ModelBuilder.build]]
+  * run as the kind its `model.type` names in [[ModelBuilder.kinds]]
+  * (`pca_anomaly` when absent). The content-addressed [[DiskRegistry]]
+  * dedupes across the fleet AND across runs: a rebuild of an unchanged
+  * machine is a cache hit that does no Spark work, and a failed machine
+  * lands in the error list without sinking the fleet (the failed-Argo-step
+  * analogue). A `fleet.json` manifest (the rendered-workflow analogue)
+  * records every machine's outcome.
   *
   * Config shape (JSON; YAML parses to the same tree):
   * {{{
@@ -70,7 +68,7 @@ object WorkflowGenerator {
         }
         val mtype = merged \ "model" \ "type" match {
           case JString(s) => s
-          case _ => "pca_anomaly"
+          case _ => ModelBuilder.pcaAnomaly.name
         }
         (name, mtype, JsonMethods.compact(JsonMethods.render(sortKeys(merged))))
       case other =>
@@ -92,29 +90,10 @@ object WorkflowGenerator {
 
     val outcomes = normalized.map { case (name, mtype, cfg) =>
       try {
-        val artifact = mtype match {
-          case "pca_anomaly" =>
-            val r = ModelBuilder.build(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case "ar_forecast" =>
-            val r = ModelBuilder.buildForecast(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case "esn_forecast" =>
-            val r = ModelBuilder.buildEsn(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case "autoencoder" =>
-            val r = ModelBuilder.buildAutoEncoder(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case "autoencoder_sgd" =>
-            val r = ModelBuilder.buildAutoEncoderSgd(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case "autoencoder_seq" =>
-            val r = ModelBuilder.buildAutoEncoderSeq(spark, cfg, longDf, outDir)
-            MachineArtifact(name, mtype, r.path, r.metadata)
-          case other =>
-            throw new IllegalArgumentException(s"unknown model.type '$other' for machine $name")
-        }
-        Right(artifact)
+        val kind = ModelBuilder.kinds.getOrElse(mtype,
+          throw new IllegalArgumentException(s"unknown model.type '$mtype' for machine $name"))
+        val r = ModelBuilder.build(spark, kind, cfg, longDf, outDir)
+        Right(MachineArtifact(name, mtype, r.path, r.metadata))
       } catch { case e: Throwable => Left(name -> e) }
     }
     val built = outcomes.collect { case Right(a) => a }

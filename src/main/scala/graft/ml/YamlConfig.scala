@@ -2,7 +2,6 @@ package graft.ml
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.yaml.snakeyaml.LoaderOptions
 import org.yaml.snakeyaml.Yaml
 import org.yaml.snakeyaml.constructor.SafeConstructor
@@ -47,9 +46,4 @@ object YamlConfig {
     */
   def normalizeFleet(fleetYaml: String): Seq[(String, String, String)] =
     WorkflowGenerator.normalize(toJson(fleetYaml))
-
-  /** Build a whole fleet straight from its YAML document. */
-  def buildFleet(spark: SparkSession, fleetYaml: String, longDf: DataFrame,
-      outDir: String): WorkflowGenerator.FleetResult =
-    WorkflowGenerator.buildFleet(spark, toJson(fleetYaml), longDf, outDir)
 }

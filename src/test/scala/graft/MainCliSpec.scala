@@ -112,5 +112,12 @@ class MainCliSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Main.loadScorer(spark, Files.createTempDirectory("graft-empty").toString)
     }
+    val forecast = ml.ModelBuilder.build(spark, ml.ModelBuilder.arForecast,
+      """{"name": "fc", "dataset": {"tags": ["t1", "t2"], "resolution": "10 minutes"},
+        | "model": {"type": "ar_forecast", "lookback": 2},
+        | "evaluation": {"n_splits": 2}}""".stripMargin,
+      spark.read.parquet(dataPath), Files.createTempDirectory("graft-cli-fc").toString)
+    val e = intercept[IllegalArgumentException](Main.loadScorer(spark, forecast.path))
+    assert(e.getMessage.contains("'ar_forecast' is not servable"), e.getMessage)
   }
 }

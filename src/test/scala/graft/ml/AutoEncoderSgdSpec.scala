@@ -137,12 +137,12 @@ class AutoEncoderSgdSpec extends SparkSpec {
         | "dataset": {"tags": ["t1", "t2", "t3"], "resolution": "10 minutes"},
         | "model": {"type": "autoencoder_sgd", "hidden": 4, "epochs": 30},
         | "evaluation": {"n_splits": 2}}""".stripMargin
-    val r1 = ModelBuilder.buildAutoEncoderSgd(spark, cfg, long, out)
+    val r1 = ModelBuilder.build(spark, ModelBuilder.autoencoderSgd, cfg, long, out)
     assert(r1.metadata.contains("\"type\": \"autoencoder_sgd\""))
     assert(r1.metadata.contains("train_mse_last"))
     assert(r1.metadata.contains("\"fold\": 1"))
     // registry hit: second build returns the same artifact path, no refit
-    val r2 = ModelBuilder.buildAutoEncoderSgd(spark, cfg, long, out)
+    val r2 = ModelBuilder.build(spark, ModelBuilder.autoencoderSgd, cfg, long, out)
     assert(r1.path == r2.path)
     // fleet routing by model.type
     val fleet =

@@ -81,7 +81,7 @@ class EchoStateSpec extends SparkSpec {
         |              "tag_col": "event_type", "value_col": "value"},
         |  "model": {"type": "esn_forecast", "reservoir": 16, "washout": 4},
         |  "evaluation": {"n_splits": 2}}""".stripMargin
-    val r = ModelBuilder.buildEsn(spark, cfg, events, out)
+    val r = ModelBuilder.build(spark, ModelBuilder.esnForecast, cfg, events, out)
     assert(r.metadata.contains("\"type\": \"esn_forecast\""))
     assert(r.metadata.contains("val_mean_abs_err"))
     assert(r.model.reservoir == 16 && r.model.featureCols == Seq("v"))
@@ -93,7 +93,8 @@ class EchoStateSpec extends SparkSpec {
     assert(reloaded.wRes.flatten.toSeq == r.model.wRes.flatten.toSeq)
 
     // rebuild against an empty frame: only a registry hit can succeed
-    val again = ModelBuilder.buildEsn(spark, cfg, events.filter(lit(false)), out)
+    val again = ModelBuilder.build(spark, ModelBuilder.esnForecast, cfg,
+      events.filter(lit(false)), out)
     assert(again.path == r.path)
   }
 

@@ -18,7 +18,7 @@ class ModelBuilderSpec extends SparkSpec {
 
   test("build produces a reloadable model, metadata, and scores new data") {
     val out = java.nio.file.Files.createTempDirectory("graft-build").toString
-    val result = ModelBuilder.build(spark, config, events, out)
+    val result = ModelBuilder.build(spark, ModelBuilder.pcaAnomaly, config, events, out)
 
     assert(result.metadata.contains("\"name\": \"events-anomaly\""))
     assert(result.metadata.contains("\"cv\":"))
@@ -40,7 +40,7 @@ class ModelBuilderSpec extends SparkSpec {
         |              "tag_col": "event_type", "value_col": "value"},
         |  "model": {"type": "ar_forecast", "lookback": 4},
         |  "evaluation": {"n_splits": 2}}""".stripMargin
-    val result = ModelBuilder.buildForecast(spark, fconfig, events, out)
+    val result = ModelBuilder.build(spark, ModelBuilder.arForecast, fconfig, events, out)
     assert(result.model.coefs.map(_._1).sorted == Seq("click", "view"))
     assert(result.model.lb == 4)
     assert(result.metadata.contains("\"type\": \"ar_forecast\""))
@@ -54,7 +54,7 @@ class ModelBuilderSpec extends SparkSpec {
       "bucket")
     assert(scored.count() > 0 && scored.columns.contains("v_hat"))
     // second build of the same config is a registry hit
-    val again = ModelBuilder.buildForecast(spark, fconfig, events, out)
+    val again = ModelBuilder.build(spark, ModelBuilder.arForecast, fconfig, events, out)
     assert(again.path == result.path)
   }
 
@@ -68,7 +68,7 @@ class ModelBuilderSpec extends SparkSpec {
         |  "model": {"type": "autoencoder", "hidden": 8, "threshold_pctl": 0.95,
         |            "seed": 7},
         |  "evaluation": {"n_splits": 2}}""".stripMargin
-    val result = ModelBuilder.buildAutoEncoder(spark, aconfig, events, out)
+    val result = ModelBuilder.build(spark, ModelBuilder.autoencoder, aconfig, events, out)
     assert(result.metadata.contains("\"type\": \"autoencoder\""))
     assert(result.metadata.contains("val_mean_score"))
     assert(result.model.threshold > 0)
@@ -81,29 +81,80 @@ class ModelBuilderSpec extends SparkSpec {
     assert(result.model.beta.flatten.toSeq == direct.beta.flatten.toSeq)
     assert(result.model.threshold == direct.threshold)
     // second build of the same config is a registry hit
-    val again = ModelBuilder.buildAutoEncoder(spark, aconfig, events, out)
+    val again = ModelBuilder.build(spark, ModelBuilder.autoencoder, aconfig, events, out)
     assert(again.path == result.path)
-  }
-
-  test("buildAll isolates per-machine failures and dedupes via the registry") {
-    val out = java.nio.file.Files.createTempDirectory("graft-fleet").toString
-    val bad = """{"name": "broken", "dataset": {"tags": "not-a-list"}}"""
-    val second = config.replace("events-anomaly", "events-anomaly-2")
-    val (ok, failed) = ModelBuilder.buildAll(
-      spark, Seq(config, bad, second, config), events, out)
-    assert(ok.length == 3) // two distinct + the duplicate (registry hit)
-    assert(ok.head.path == ok(2).path) // duplicate config -> same artifact
-    assert(failed.length == 1 && failed.head._1 == bad)
   }
 
   test("rebuilding the same config is a registry hit (no new artifact)") {
     val out = java.nio.file.Files.createTempDirectory("graft-build2").toString
-    val r1 = ModelBuilder.build(spark, config, events, out)
+    val r1 = ModelBuilder.build(spark, ModelBuilder.pcaAnomaly, config, events, out)
     val mtime = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(r1.path, "metadata.json"))
-    val r2 = ModelBuilder.build(spark, config, events, out)
+    val r2 = ModelBuilder.build(spark, ModelBuilder.pcaAnomaly, config, events, out)
     assert(r1.path == r2.path)
     assert(java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(r2.path, "metadata.json")) == mtime)
+  }
+
+  test("int config fields outside the Int range are rejected; seed reads as a full Long") {
+    def rfae(model: String) =
+      s"""{"name": "events-range",
+         |  "dataset": {"tags": ["click", "view", "purchase"], "resolution": "1 hour",
+         |              "tag_col": "event_type", "value_col": "value"},
+         |  "model": {"type": "autoencoder", $model},
+         |  "evaluation": {"n_splits": 1}}""".stripMargin
+    val out = java.nio.file.Files.createTempDirectory("graft-range").toString
+    // 2^32 + 8: keeping the low 32 bits would train hidden = 8
+    intercept[IllegalArgumentException] {
+      ModelBuilder.build(spark, ModelBuilder.autoencoder, rfae(""""hidden": 4294967304"""),
+        events, out)
+    }
+    // 2^32 + 42 is its own seed, not seed 42
+    val wide = ModelBuilder.build(spark, ModelBuilder.autoencoder,
+      rfae(""""hidden": 4, "seed": 4294967338"""), events, out)
+    val low = ModelBuilder.build(spark, ModelBuilder.autoencoder,
+      rfae(""""hidden": 4, "seed": 42"""), events, out)
+    assert(wide.model.beta.flatten.toSeq != low.model.beta.flatten.toSeq)
+  }
+
+  test("every kind's metadata.json keeps its key order") {
+    val models = Map(
+      "pca_anomaly" -> """"k": 1""",
+      "ar_forecast" -> """"lookback": 2""",
+      "esn_forecast" -> """"reservoir": 4, "washout": 2""",
+      "autoencoder" -> """"hidden": 2""",
+      "autoencoder_sgd" -> """"hidden": 2, "epochs": 2""",
+      "autoencoder_seq" -> """"lookback": 2, "hidden": 2, "epochs": 2""")
+    val anomaly = Seq("threshold", "threshold_pctl")
+    val losses = Seq("train_mse_first", "train_mse_last")
+    val modelKeys = Map(
+      "pca_anomaly" -> ("k" +: anomaly),
+      "ar_forecast" -> Seq("lookback"),
+      "esn_forecast" -> Seq("reservoir", "spectral_radius", "leak", "washout", "input_scale"),
+      "autoencoder" -> (Seq("hidden", "ridge") ++ anomaly),
+      "autoencoder_sgd" -> (Seq("hidden", "epochs", "lr") ++ anomaly ++ losses),
+      "autoencoder_seq" -> (Seq("lookback", "hidden", "epochs", "lr") ++ anomaly ++ losses))
+    assert(ModelBuilder.kinds.keySet == models.keySet)
+    val out = java.nio.file.Files.createTempDirectory("graft-format").toString
+    ModelBuilder.kinds.foreach { case (mtype, kind) =>
+      val cfg =
+        s"""{"name": "fmt-$mtype",
+           |  "dataset": {"tags": ["click", "view"], "resolution": "1 hour",
+           |              "tag_col": "event_type", "value_col": "value"},
+           |  "model": {"type": "$mtype", ${models(mtype)}},
+           |  "evaluation": {"n_splits": 2}}""".stripMargin
+      val meta = org.json4s.jackson.JsonMethods.parse(
+        ModelBuilder.build(spark, kind, cfg, events, out).metadata)
+      def keys(v: org.json4s.JValue) = v.asInstanceOf[org.json4s.JObject].obj.map(_._1)
+      val rows = if (mtype == "pca_anomaly") Seq("rows") else Nil
+      assert(keys(meta) ==
+        Seq("name", "tags", "resolution") ++ rows ++ Seq("model", "cv", "config_key"), mtype)
+      assert(keys(meta \ "model") == "type" +: modelKeys(mtype), mtype)
+      val foldKeys = "fold" +: (
+        if (mtype.endsWith("_forecast")) Seq("val_rows", "val_mean_abs_err", "val_max_abs_err")
+        else Seq("threshold", "val_rows", "val_mean_score", "val_max_score"))
+      val folds = (meta \ "cv").children
+      assert(folds.size == 2 && folds.forall(keys(_) == foldKeys), mtype)
+    }
   }
 }

@@ -143,7 +143,7 @@ class SequenceAeSpec extends SparkSpec {
         | "dataset": {"tags": ["v"], "resolution": "1 hour"},
         | "model": {"type": "autoencoder_seq", "lookback": 3, "hidden": 6, "epochs": 10},
         | "evaluation": {"n_splits": 2}}""".stripMargin
-    val built = ModelBuilder.buildAutoEncoderSeq(spark, cfg, long, out)
+    val built = ModelBuilder.build(spark, ModelBuilder.autoencoderSeq, cfg, long, out)
     val (scorer, tags) = graft.Main.loadScorer(spark, built.path)
     assert(tags == Seq("v") && scorer.isInstanceOf[SequenceAE.SeqAeModel])
     // ts-less payload: req_idx alone orders the embed
@@ -162,14 +162,14 @@ class SequenceAeSpec extends SparkSpec {
         | "dataset": {"tags": ["t1", "t2"], "resolution": "1 hour"},
         | "model": {"type": "autoencoder_seq", "lookback": 3, "hidden": 6, "epochs": 30},
         | "evaluation": {"n_splits": 2}}""".stripMargin
-    val r1 = ModelBuilder.buildAutoEncoderSeq(spark, cfg, long, out)
+    val r1 = ModelBuilder.build(spark, ModelBuilder.autoencoderSeq, cfg, long, out)
     assert(r1.metadata.contains("\"type\": \"autoencoder_seq\""))
     assert(r1.metadata.contains("\"lookback\": 3"))
     assert(r1.metadata.contains("train_mse_last"))
     assert(r1.metadata.contains("\"fold\": 1"))
     assert(r1.model.lb == 3 && r1.model.baseTags == Seq("t1", "t2"))
     // registry hit: second build returns the same artifact, no refit
-    val r2 = ModelBuilder.buildAutoEncoderSeq(spark, cfg, long, out)
+    val r2 = ModelBuilder.build(spark, ModelBuilder.autoencoderSeq, cfg, long, out)
     assert(r1.path == r2.path)
     // fleet routing by model.type
     val fleet =

@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -80,6 +82,23 @@ class WorkflowGeneratorSpec extends SparkSpec {
     val manifest = java.nio.file.Files.readString(
       java.nio.file.Paths.get(r.manifestPath))
     assert(manifest.contains("\"failed\"") && manifest.contains("no_such_builder"))
+  }
+
+  test("a machine name that is not one path segment fails alone and writes nothing outside outDir") {
+    val parent = java.nio.file.Files.createTempDirectory("graft-fleet-escape")
+    val out = parent.resolve("out").toString
+    val cfg =
+      """{"defaults": {"dataset": {"resolution": "1 hour", "tags": ["click", "view"],
+        |              "tag_col": "event_type", "value_col": "value"},
+        |              "evaluation": {"n_splits": 2}, "model": {"k": 1}},
+        | "machines": [{"name": "../escape"}, {"name": "ok"}]}""".stripMargin
+    val r = WorkflowGenerator.buildFleet(spark, cfg, events, out)
+    assert(r.built.map(_.name) == Seq("ok"))
+    assert(r.failed.map(_._1) == Seq("../escape"))
+    assert(r.failed.head._2.isInstanceOf[IllegalArgumentException])
+    val siblings = java.nio.file.Files.list(parent)
+    try assert(siblings.iterator().asScala.map(_.getFileName.toString).toSeq == Seq("out"))
+    finally siblings.close()
   }
 
   test("YAML fleet document normalizes identically to its JSON twin") {
