@@ -27,6 +27,22 @@ object Artifacts {
       .digest(config.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
+  /** Content fingerprint of a table path (names, sizes, mtimes of its
+    * top-level listing) — persisted-artifact keys include it so a
+    * REGENERATED fixture can never be served a stale artifact fitted on
+    * the old data, and [[graft.sources.Tables]] re-checks it before
+    * reusing a resolved relation. One `listStatus`, no Spark job.
+    */
+  def tableFingerprint(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val stats =
+      if (!fs.exists(p)) Array("absent")
+      else fs.listStatus(p).sortBy(_.getPath.getName)
+        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+    registryKey(stats.mkString("|"))
+  }
+
   /** True iff the directory artifact at `dir` committed: every one of
     * `parts` (its sub-directories written last; `dir` itself when none
     * are named) carries the success marker.

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Artifacts.{gated, registryKey}
+import graft.Artifacts.{gated, registryKey, tableFingerprint}
+import graft.sources.Tables
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
 import graft.expressions.{CountMinEstimates, DtwDistance}
@@ -25,7 +26,7 @@ import graft.expressions.{CountMinEstimates, DtwDistance}
 object SparkEntry {
 
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.resolve(s, s"$dir/$name.parquet")
 
   /** Process-level memo for deterministic (seeded) model fits — the
     * fit-once/score-many discipline: a query's later executions pay only
@@ -158,20 +159,6 @@ object SparkEntry {
       }.map(n -> _)
     }.toMap
 
-  /** Content fingerprint of a table directory (names, sizes, mtimes) —
-    * persisted-model keys include it so a REGENERATED fixture can never
-    * be served a stale artifact fitted on the old data.
-    */
-  private def tableFingerprint(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      if (!fs.exists(p)) Array("absent")
-      else fs.listStatus(p).sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-    registryKey(stats.mkString("|"))
-  }
-
   /** events scan with `ts` normalized to a µs timestamp regardless of the
     * fixture generation's physical parquet type (ns-long vs µs — see
     * [[graft.sources.Events]]). DuckDB's CAST(ts AS TIMESTAMP) performs
@@ -186,6 +173,12 @@ object SparkEntry {
     */
   private def Ebetween(s: SparkSession, dir: String, fromDate: String, toDate: String): DataFrame =
     graft.sources.Events.readBetween(s, s"$dir/events.parquet", fromDate, toDate)
+
+  /** Streaming file source over a committed parquet directory, with the
+    * schema of its resolved table (no inference job per query).
+    */
+  private def parquetStream(s: SparkSession, root: String): DataFrame =
+    s.readStream.schema(Tables.resolve(s, root).schema).parquet(root)
 
   /** Exact order-independent sum of a double expression: sum in
     * DECIMAL(18,6), emit DOUBLE. Mirrors CAST(SUM(CAST(x AS
@@ -288,7 +281,7 @@ object SparkEntry {
 
   private def q_sink_compact(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    s.read.parquet(root)
+    Tables.resolve(s, root)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
         min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
@@ -322,7 +315,7 @@ object SparkEntry {
           .write.mode("overwrite").parquet(out)
       }
     }
-    s.read.parquet(root)
+    Tables.resolve(s, root)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
         min(col("user_id")).as("min_uid"), max(col("user_id")).as("max_uid"),
@@ -384,7 +377,7 @@ object SparkEntry {
   private[graft] def manifestPrunedFiles(s: SparkSession, dir: String,
       lo: java.sql.Timestamp, hi: java.sql.Timestamp): (Array[String], Long) = {
     val root = manifestMaterialized(s, dir)
-    val m = s.read.parquet(s"$root/manifest")
+    val m = Tables.resolve(s, s"$root/manifest")
     val total = m.count()
     val files = m.filter(col("max_ts") >= lit(lo) && col("min_ts") < lit(hi))
       .select("file").collect().map(_.getString(0))
@@ -397,7 +390,7 @@ object SparkEntry {
     val (files, _) = manifestPrunedFiles(s, dir, lo, hi)
     val root = manifestMaterialized(s, dir)
     val src =
-      if (files.isEmpty) s.read.parquet(s"$root/data").filter(lit(false))
+      if (files.isEmpty) Tables.resolve(s, s"$root/data").filter(lit(false))
       else s.read.parquet(files.toIndexedSeq: _*)
     src.filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
       .groupBy("event_type")
@@ -407,7 +400,7 @@ object SparkEntry {
 
   private def q_sink_partitioned(s: SparkSession, dir: String): DataFrame = {
     val root = partitionedMaterialized(s, dir)
-    s.read.parquet(root)
+    Tables.resolve(s, root)
       .filter(col("event_date") >= lit(java.sql.Date.valueOf("2024-01-08")) &&
         col("event_date") < lit(java.sql.Date.valueOf("2024-01-15")))
       .groupBy("event_date", "event_type")
@@ -1146,7 +1139,7 @@ object SparkEntry {
 
   private def q_dedup_minhash_lsh(s: SparkSession, dir: String): DataFrame =
     Dedup.pairsFromBands(
-        s.read.parquet(minhashBandsMaterialized(s, dir)))
+        Tables.resolve(s, minhashBandsMaterialized(s, dir)))
       .orderBy("doc_a", "doc_b")
 
   private def q_dedup_simhash(s: SparkSession, dir: String): DataFrame =
@@ -1209,7 +1202,7 @@ object SparkEntry {
     */
   private def q_dedup_near_duplicates(s: SparkSession, dir: String): DataFrame =
     Dedup.jaccardRescore(docsWithDups(s, dir), "doc_id", "text",
-        Dedup.pairsFromBands(s.read.parquet(minhashBandsMaterialized(s, dir))),
+        Dedup.pairsFromBands(Tables.resolve(s, minhashBandsMaterialized(s, dir))),
         0.6)
       .orderBy("doc_a", "doc_b")
 
@@ -1270,7 +1263,7 @@ object SparkEntry {
     // single-phase at sf0.1. See q_graph_cc.
     Dedup.duplicateClustersTwoPhase(
         Dedup.pairsFromBands(
-          s.read.parquet(minhashBandsMaterialized(s, dir))))
+          Tables.resolve(s, minhashBandsMaterialized(s, dir))))
       .orderBy("doc_id")
 
   /** The daily-crawl incremental near-dup path, driver-checked against
@@ -1529,7 +1522,7 @@ object SparkEntry {
           .write.mode("overwrite").parquet(out)
       }
     }
-    s.read.parquet(path)
+    Tables.resolve(s, path)
   }
 
   /** PAGERANK over the kNN similarity graph — graph centrality as a
@@ -1925,7 +1918,7 @@ object SparkEntry {
           .coalesce(1).write.mode("overwrite").parquet(path)
       }
     }
-    val profiles = s.read.parquet(profPath)
+    val profiles = Tables.resolve(s, profPath)
     TextAnalysis.classifyLang(docs, "doc_id", "text", profiles, k = 100)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("lang_pred"), col("dist"))
@@ -3186,8 +3179,7 @@ object SparkEntry {
   private def q_stream_threshold(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
     val name = s"thr_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
-    val stream = s.readStream.schema(schema).parquet(root)
+    val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
       .groupBy("event_type")
       .agg(AnomalyMath.thresholdSketch(col("value"), 0.99).as("est"),
@@ -3195,7 +3187,7 @@ object SparkEntry {
     val est = graft.streaming.Streams.replayToTable(stream, name, "complete")
     val h = col("n").cast("double") * lit(0.99) - lit(0.99) // p*(n-1)
     val slack = tdigestRankSlack(col("n"), 0.99)
-    s.read.parquet(root).filter(col("value").isNotNull)
+    Tables.resolve(s, root).filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
       .join(broadcast(est), Seq("event_type"))
       .groupBy("event_type")
@@ -3235,7 +3227,7 @@ object SparkEntry {
       }
     }
     val name = s"dedup_stream_${registryKey(dir).take(8)}"
-    val stream = s.readStream.schema(s.read.parquet(root).schema).parquet(root)
+    val stream = parquetStream(s, root)
     val deduped = graft.streaming.Streams.dedup(
       stream, "ts", Seq("event_id"), "30 minutes")
     graft.streaming.Streams.replayToTable(deduped, name, "append")
@@ -3726,7 +3718,7 @@ object SparkEntry {
       val out = s"$registryRoot/phashhash_${registryKey(
         s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}")}"
       gated(s, out) {
-        Multimodal.averageHashes(s.read.parquet(mediaPath), "media_id", "bytes")
+        Multimodal.averageHashes(Tables.resolve(s, mediaPath), "media_id", "bytes")
           .write.mode("overwrite").parquet(out)
       }
     }
@@ -3761,7 +3753,7 @@ object SparkEntry {
     // the only leg plain SQL can't express).
     val hashPath = phashHashesMaterialized(s, dir)
     publishOracle("multimodal_phash_dedup", phashPairsOracle(hashPath))
-    Multimodal.phashPairsFromHashes(s.read.parquet(hashPath), 3)
+    Multimodal.phashPairsFromHashes(Tables.resolve(s, hashPath), 3)
       .orderBy("media_a", "media_b")
   }
 
@@ -3789,7 +3781,7 @@ object SparkEntry {
       // pairs commit LAST so a half-written state never gates
       gated(s, out, "pairs") {
         val baseHashes = Multimodal.averageHashes(
-          s.read.parquet(mediaPath).filter(col("media_id") % 7 =!= 3),
+          Tables.resolve(s, mediaPath).filter(col("media_id") % 7 =!= 3),
           "media_id", "bytes").localCheckpoint()
         baseHashes.write.mode("overwrite").parquet(s"$out/hashes")
         Multimodal.phashPairsFromHashes(baseHashes, 3)
@@ -3799,7 +3791,7 @@ object SparkEntry {
     publishOracle("multimodal_phash_incr",
       phashPairsOracle(phashHashesMaterialized(s, dir)))
     val deltaHashes = Multimodal.averageHashes(
-      s.read.parquet(mediaPath).filter(col("media_id") % 7 === 3),
+      Tables.resolve(s, mediaPath).filter(col("media_id") % 7 === 3),
       "media_id", "bytes")
     Multimodal.phashMergePairs(
         s.read.parquet(s"$statePath/hashes"),
@@ -3855,7 +3847,7 @@ object SparkEntry {
           .write.mode("overwrite").parquet(out)
       }
     }
-    s.read.parquet(root)
+    Tables.resolve(s, root)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
@@ -3894,9 +3886,9 @@ object SparkEntry {
           .write.mode("overwrite").parquet(s"$out/v2")
       }
     }
-    val v1 = s.read.parquet(s"$root/v1")
+    val v1 = Tables.resolve(s, s"$root/v1")
       .select(col("event_id"), col("value").as("v_old"), lit(1).as("in_old"))
-    val v2 = s.read.parquet(s"$root/v2")
+    val v2 = Tables.resolve(s, s"$root/v2")
       .select(col("event_id"), col("event_type"), col("value").as("v_new"))
     val changed = col("in_old").isNotNull && !(col("v_new") <=> col("v_old"))
     val same = col("in_old").isNotNull && (col("v_new") <=> col("v_old"))
@@ -4849,10 +4841,9 @@ object SparkEntry {
   private def q_stream_ohlc(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
     val name = s"ohlc_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
     val ord = struct(col("ts").as("t"), col("event_id").as("id"),
       col("value").as("v"))
-    val stream = s.readStream.schema(schema).parquet(root)
+    val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
       .agg(min(ord).getField("v").as("open"),
@@ -4876,8 +4867,7 @@ object SparkEntry {
   private def q_stream_sliding(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
     val name = s"slide_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
-    val stream = s.readStream.schema(schema).parquet(root)
+    val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(sum(col("value").cast("decimal(18,6)")).as("sdec"),
@@ -4901,7 +4891,7 @@ object SparkEntry {
     */
   private def q_stream_seasonal(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
-    val ref = s.read.parquet(root)
+    val ref = Tables.resolve(s, root)
       .filter(driftIsA && col("value").isNotNull)
     val profile = ref
       .groupBy(col("event_type"), hour(col("ts")).as("hod"))
@@ -4909,8 +4899,7 @@ object SparkEntry {
           .cast("long").as("sp"), count(lit(1)).as("pn"))
       .select(col("event_type"), col("hod"), expr("sp div pn").as("p6"))
     val name = s"seasonal_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
-    val liveStream = s.readStream.schema(schema).parquet(root)
+    val liveStream = parquetStream(s, root)
       .filter(!driftIsA && col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
       .agg(sum(col("value").cast("decimal(18,6)")).as("sdec"),
@@ -5353,7 +5342,7 @@ object SparkEntry {
       .agg(max(when(col("event_type") === "click", col("c"))).as("x"),
         max(when(col("event_type") === "view", col("c"))).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
-    val ref = widen(centsOf(s.read.parquet(root)
+    val ref = widen(centsOf(Tables.resolve(s, root)
       .filter(driftIsA && col("value").isNotNull &&
         col("event_type").isin(types: _*))))
     val stats = ref.agg(count(lit(1)).as("n"),
@@ -5362,8 +5351,7 @@ object SparkEntry {
       sum(col("y") * col("y")).as("syy"),
       sum(col("x") * col("y")).as("sxy"))
     val name = s"maha_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
-    val liveAgg = s.readStream.schema(schema).parquet(root)
+    val liveAgg = parquetStream(s, root)
       .filter(!driftIsA && col("value").isNotNull &&
         col("event_type").isin(types: _*))
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
@@ -5700,7 +5688,7 @@ object SparkEntry {
       val out = s"$registryRoot/driftref_${registryKey(
         s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
       gated(s, out) {
-        val ref = s.read.parquet(root).filter(driftIsA)
+        val ref = Tables.resolve(s, root).filter(driftIsA)
         val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
         graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
           .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
@@ -5708,13 +5696,12 @@ object SparkEntry {
           .coalesce(1).write.mode("overwrite").parquet(out)
       }
     }
-    val frozen = s.read.parquet(refRoot)
+    val frozen = Tables.resolve(s, refRoot)
     val ranges = frozen.select("event_type", "__mn", "__mx").distinct()
     val refHist = frozen.select("event_type", "__bin", "__na")
     val name = s"drift_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
     val liveStream = graft.ops.Drift.binAgainst(
-        s.readStream.schema(schema).parquet(root).filter(!driftIsA),
+        parquetStream(s, root).filter(!driftIsA),
         "event_type", "value", ranges)
       .groupBy("event_type", "__bin").agg(count(lit(1)).as("__nb"))
     val joint = refHist.join(
@@ -6429,8 +6416,7 @@ object SparkEntry {
   private def q_stream_tdigest(s: SparkSession, dir: String): DataFrame = {
     val root = compactMaterialized(s, dir)
     val name = s"tdig_stream_${registryKey(dir).take(8)}"
-    val schema = s.read.parquet(root).schema
-    val stream = s.readStream.schema(schema).parquet(root)
+    val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
       .agg(AnomalyMath.thresholdSketch(col("value"), 0.5).as("p50_est"),
@@ -6443,7 +6429,7 @@ object SparkEntry {
       nLe >= floor(h).cast("long") + lit(1L) - slack &&
         nLt <= ceil(h).cast("long") + slack
     }
-    s.read.parquet(root).filter(col("value").isNotNull)
+    Tables.resolve(s, root).filter(col("value").isNotNull)
       .select(col("event_type"), date_trunc("hour", col("ts")).as("bucket"),
         col("value"))
       .join(broadcast(est), Seq("event_type", "bucket"))
@@ -7172,7 +7158,7 @@ object SparkEntry {
       }
     }
     val (ula, ulo) = geoE4("u", col("user_id"))
-    val pts = s.readStream.schema(s.read.parquet(root).schema).parquet(root)
+    val pts = parquetStream(s, root)
       .select(col("event_id"), col("user_id"), ula.as("py"), ulo.as("px"),
         fenceCellOf(ulo).as("cx"), fenceCellOf(ula).as("cy"))
     val hits = pts.join(broadcast(trisCellDim(s, dir)), Seq("cx", "cy"))

@@ -1292,6 +1292,9 @@ object Dedup {
         .select(explode(pairArr).as("p"))
         .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
           col("p.w").as("w"))
+        // a doc-set array with a repeated id (or a delta id already in
+        // the base set) would pair a doc with itself
+        .filter(col("doc_a") =!= col("doc_b"))
         .groupBy("doc_a", "doc_b").agg(sum(col("w")).as("dw"))
         .filter(col("dw") =!= 0)
         .localCheckpoint(false) // O(delta pairs); joined twice below

@@ -24,6 +24,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * agrees on. All graft sessions pin `spark.sql.session.timeZone=UTC`
   * (Sessions.scala), so the NTZ→TIMESTAMP cast is value-preserving:
   * the naive wall-clock instants the generator wrote ARE UTC instants.
+  * The footer is read through [[Tables]], once per session and path.
   */
 object Events {
 
@@ -33,7 +34,7 @@ object Events {
     // only this reader touches. Harmless for µs files; required before
     // planning a ns file.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(path)
+    Tables.resolve(s, path)
   }
 
   private def isNanosLong(df: DataFrame): Boolean =

@@ -478,6 +478,23 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("ShingleIndex merge pairs no doc with itself when a delta repeats a base id") {
+    val cap = 3; val n = 2
+    val base = Seq((10L, "alpha beta gamma delta"),
+      (11L, "alpha beta gamma zeta")).toDF("doc_id", "text")
+    // doc 10 arrives again: every merged member array of its shingles
+    // holds id 10 twice, once from the base and once from the delta
+    val delta = Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val merged = Dedup.mergeShingleIndex(
+      Dedup.buildShingleIndex(base, "doc_id", "text", n, cap,
+        materialize = true, pairState = true),
+      delta, "doc_id", "text", n, cap)
+    val pairs = merged.pairs.get
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs.forall { case (a, b) => a != b }, s"self-pair in $pairs")
+    assert(pairs.contains((10L, 11L)))
+  }
+
   test("shingleIndexExists needs both meta and docs committed, for either writer ordering") {
     val dir = java.nio.file.Files.createTempDirectory("shidx-gate").toString
     Dedup.buildAndSaveShingleIndex(docs, "doc_id", "text", dir, 3, 20)
