@@ -129,8 +129,7 @@ object Main {
   def serve(machineDir: String, port: Int, block: Boolean): PredictionServer = {
     val spark = session()
     val (scorer, tags) = loadScorer(spark, machineDir)
-    val registryRoot = java.nio.file.Paths.get(machineDir).getParent
-    val registry = Option(registryRoot)
+    val registry = Option(java.nio.file.Paths.get(machineDir).getParent)
       .map(_.resolve("registry"))
       .filter(java.nio.file.Files.isDirectory(_))
       .map(p => DiskRegistry(p.toString))

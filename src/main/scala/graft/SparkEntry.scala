@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Artifacts.{gated, registryKey, tableFingerprint}
+import graft.Artifacts.{registryKey, tableFingerprint}
 import graft.sources.Tables
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
@@ -28,93 +28,10 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.resolve(s, s"$dir/$name.parquet")
 
-  /** Process-level memo for deterministic (seeded) model fits — the
-    * fit-once/score-many discipline: a query's later executions pay only
-    * the scoring scans. Sound because every memoized fit is a pure
-    * function of (data dir, fixed hyperparameters).
-    */
-  private val fittedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def fittedModel[T <: AnyRef](key: String)(fit: => T): T =
-    fittedModels.computeIfAbsent(key, _ => fit).asInstanceOf[T]
-
-  /** Temp dirs registered here are recursively deleted by one JVM-exit
-    * hook — scratch state (the stream_upsert snapshot chain) must not
-    * accumulate in /tmp across repeated bench/verify processes.
-    */
-  private lazy val tempDirsToDelete = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      q.forEach(p => try deleteRecursively(p) catch { case _: Exception => () })
-    }))
-    q
-  }
-
-  private def tempDirDeletedAtExit(prefix: String): String = {
-    // Throwaway per-run state (snapshot chains, spools) goes to tmpfs
-    // when the box has one: these files live seconds and are rewritten
-    // per micro-batch, so disk fsync on them is pure fixed cost
-    // (stream_upsert: 2.4 s → ~1.2 s warm at sf0.1 from this alone).
-    val shm = new java.io.File("/dev/shm")
-    val p =
-      if (shm.isDirectory && shm.canWrite)
-        java.nio.file.Files.createTempDirectory(shm.toPath, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    tempDirsToDelete.add(p)
-    p.toString
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(root)) {
-      val stream = Files.walk(root)
-      try stream.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally stream.close()
-    }
-  }
-
-  /** Root for cross-run persisted artifacts (fitted quantizers,
-    * materialized fixtures): the build's own target dir, NOT a shared
-    * world-writable /tmp — a predictable shared path invites cross-user
-    * collision and artifact poisoning.
-    */
-  private def registryRoot: String =
-    sys.env.getOrElse("GRAFT_REGISTRY_DIR", {
-      // Anchor to the BUILD's target dir via the loaded class's code
-      // source, NOT the process cwd: a launcher running Bench/Verify from
-      // any other cwd would otherwise resolve a fresh empty registry
-      // every run, silently re-paying every one-time fit (measured: r7
-      // driver cold_total 164.5 s vs 112.4 s with the registry warm).
-      // Code source is .../target/scala-2.13/classes for tests, but sbt
-      // `runMain` executes a packaged jar at
-      // .../target/bg-jobs/sbt_<id>/job-1/target/<hash>/<hash>/x.jar —
-      // an EPHEMERAL per-invocation dir that itself contains a `target`
-      // component. Walking up to the FIRST `target` ancestor therefore
-      // resolved a fresh empty registry on every runMain, silently
-      // re-paying every one-time fit each round (the r7→r8 cold_total
-      // mystery: artifacts landed in bg-jobs dirs and were never reused).
-      // Take the TOPMOST `target` ancestor — the build's own target dir,
-      // stable across invocations and shared with the test classpath.
-      try {
-        val loc = SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation
-        var cur = java.nio.file.Paths.get(loc.toURI)
-        var top: java.nio.file.Path = null
-        while (cur != null) {
-          if (cur.getFileName != null && cur.getFileName.toString == "target")
-            top = cur
-          cur = cur.getParent
-        }
-        if (top != null) top.resolve("graft-registry").toString
-        else new java.io.File("target/graft-registry").getAbsolutePath
-      } catch { case _: Exception =>
-        new java.io.File("target/graft-registry").getAbsolutePath }
-    })
-
   /** Oracle SQL published at query-run time (the fitted-params
     * lifecycle): set when the query executes, merged into [[oracleSql]].
-    * Each publish ALSO persists the fragment under
-    * `$registryRoot/oracle_sql/<name>.sql`, and [[publishedOracles]]
+    * Each publish ALSO persists the fragment as the registry file
+    * `oracle_sql/<name>.sql`, and [[publishedOracles]]
     * falls back to that file when the in-process value is absent — so a
     * cold process can dump a generated oracle for a query that ran in an
     * earlier process (same-fixture staleness is impossible in the driver
@@ -136,17 +53,14 @@ object SparkEntry {
   private def oracleFragmentFile(name: String): java.nio.file.Path = {
     val fixture = sys.props.get("graft.oracle.fixture")
       .map(_.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-"))
-    java.nio.file.Paths.get(registryRoot, "oracle_sql",
+    Artifacts.registryFile("oracle_sql",
       fixture.fold(s"$name.sql")(f => s"$name.$f.sql"))
   }
 
   private def publishOracle(name: String, sql: String): Unit = {
     publishedOracleSql.put(name, sql)
-    try {
-      val f = oracleFragmentFile(name)
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f, sql)
-    } catch { case _: Exception => () } // fragment persistence is best-effort
+    try Artifacts.writeFile(oracleFragmentFile(name), sql)
+    catch { case _: Exception => () } // fragment persistence is best-effort
   }
 
   private def publishedOracles(names: String*): Map[String, String] =
@@ -245,19 +159,14 @@ object SparkEntry {
     * the oracle on the ORIGINAL table — a lossy compaction (dropped or
     * duplicated rows at partition boundaries) hash-fails.
     */
-  /** Registry path of the compacted events copy — fingerprint-keyed so a
-    * regenerated fixture (or a reader-normalization change: v2 writes the
-    * normalized TimestampType ts) can never serve a stale layout. Exposed
-    * package-private so LakeSinksSpec audits the exact artifact.
-    */
-  private[graft] def compactRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/compact_${registryKey(
-      s"compact-v3|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-
-  /** Materialize-once compacted events copy (registry-gated) — shared by
-    * the compaction query and the parquet-file-source streaming queries,
-    * which need a real DIRECTORY source. File count derives from input
-    * SIZE (v3 — one range-sorted file per ~32 MB, min 2): a literal 8
+  /** Materialize-once compacted events copy (registry-gated,
+    * fingerprint-keyed so a regenerated fixture — or a reader-
+    * normalization change: v2 writes the normalized TimestampType ts —
+    * can never serve a stale layout) — shared by the compaction query and
+    * the parquet-file-source streaming queries, which need a real
+    * DIRECTORY source. Package-private so LakeSinksSpec audits the exact
+    * artifact. File count derives from input SIZE (v3 — one
+    * range-sorted file per ~32 MB, min 2): a literal 8
     * made every sf0.1 file 250 KB, and the seven streaming consumers
     * each paid 8 scan tasks' fixed cost (parquet reader init dominates
     * at that size — JobTrace: ~200 ms CPU per tiny task) per replay; a
@@ -265,22 +174,20 @@ object SparkEntry {
     * the count grows with the data and scan parallelism at 100 TB comes
     * from the data itself.
     */
-  private def compactMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"compact|$dir") {
-      val out = compactRoot(s, dir)
-      gated(s, out) {
-        val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-        val srcBytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(src).getLength
-        val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
-        E(s, dir).repartitionByRange(nFiles, col("ts"))
-          .sortWithinPartitions("ts", "event_id")
-          .write.mode("overwrite").parquet(out)
-      }
+  private[graft] def compactRoot(s: SparkSession, dir: String): String =
+    Artifacts.materialize(s, "compact",
+        s"compact-v3|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+      val srcBytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(src).getLength
+      val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
+      E(s, dir).repartitionByRange(nFiles, col("ts"))
+        .sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite").parquet(out)
     }
 
   private def q_sink_compact(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     Tables.resolve(s, root)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
@@ -288,14 +195,18 @@ object SparkEntry {
       .orderBy("event_type")
   }
 
-  /** Registry path of the Z-ORDERED events copy (see [[graft.ops.ZOrder]])
-    * — fingerprint-keyed like compactRoot; package-private so
+  /** The Z-ORDERED events copy (see [[graft.ops.ZOrder]]) —
+    * fingerprint-keyed like compactRoot; package-private so
     * LakeSinksSpec audits the per-file dual-dimension locality of the
     * exact artifact this query serves.
     */
   private[graft] def zorderRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/zorder_${registryKey(
-      s"zorder-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
+    Artifacts.materialize(s, "zorder",
+        s"zorder-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      graft.ops.ZOrder.layout(E(s, dir),
+          graft.sources.Events.epochMicros(col("ts")), col("user_id"), nFiles = 8)
+        .write.mode("overwrite").parquet(out)
+    }
 
   /** Z-order compaction — multi-dimensional lake maintenance: files tiled
     * by the Morton interleave of (ts, user_id), so parquet min/max stats
@@ -307,15 +218,7 @@ object SparkEntry {
     * row-corrupting layout pass hash-fails.
     */
   private def q_sink_zorder(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"zorder|$dir") {
-      val out = zorderRoot(s, dir)
-      gated(s, out) {
-        graft.ops.ZOrder.layout(E(s, dir),
-            graft.sources.Events.epochMicros(col("ts")), col("user_id"), nFiles = 8)
-          .write.mode("overwrite").parquet(out)
-      }
-    }
-    Tables.resolve(s, root)
+    Tables.resolve(s, zorderRoot(s, dir))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
         min(col("user_id")).as("min_uid"), max(col("user_id")).as("max_uid"),
@@ -336,16 +239,10 @@ object SparkEntry {
     * asserts the shipped query's scan carries only in-range partitions.
     */
   private[graft] def partitionedRoot(s: SparkSession, dir: String): String =
-    s"$registryRoot/part_${registryKey(
-      s"part-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-
-  private def partitionedMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"part|$dir") {
-      val out = partitionedRoot(s, dir)
-      gated(s, out) {
-        E(s, dir).withColumn("event_date", to_date(col("ts")))
-          .write.partitionBy("event_date").mode("overwrite").parquet(out)
-      }
+    Artifacts.materialize(s, "part",
+        s"part-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      E(s, dir).withColumn("event_date", to_date(col("ts")))
+        .write.partitionBy("event_date").mode("overwrite").parquet(out)
     }
 
   /** DATA-SKIPPING MANIFEST scan (zone maps — the Iceberg/Delta file-stats
@@ -360,18 +257,15 @@ object SparkEntry {
     * planning + O(matching files) IO instead of O(corpus).
     */
   private def manifestMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"manifest|$dir") {
-      val out = s"$registryRoot/manifest_${registryKey(
-        s"manifest-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out, "manifest") {
-        E(s, dir).repartitionByRange(16, col("ts"))
-          .write.mode("overwrite").parquet(s"$out/data")
-        s.read.parquet(s"$out/data")
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
-      }
+    Artifacts.materialize(s, "manifest",
+        s"manifest-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}", "manifest") { out =>
+      E(s, dir).repartitionByRange(16, col("ts"))
+        .write.mode("overwrite").parquet(s"$out/data")
+      s.read.parquet(s"$out/data")
+        .groupBy(input_file_name().as("file"))
+        .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/manifest")
     }
 
   private[graft] def manifestPrunedFiles(s: SparkSession, dir: String,
@@ -399,7 +293,7 @@ object SparkEntry {
   }
 
   private def q_sink_partitioned(s: SparkSession, dir: String): DataFrame = {
-    val root = partitionedMaterialized(s, dir)
+    val root = partitionedRoot(s, dir)
     Tables.resolve(s, root)
       .filter(col("event_date") >= lit(java.sql.Date.valueOf("2024-01-08")) &&
         col("event_date") < lit(java.sql.Date.valueOf("2024-01-15")))
@@ -698,34 +592,34 @@ object SparkEntry {
     * distinct-tag collect is a handful of strings).
     */
   private def q_scan_csv(s: SparkSession, dir: String): DataFrame = {
-    val (root, types) = fittedModel(s"csv|$dir") {
-      val out = s"$registryRoot/csv_${registryKey(
-        s"csv-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
+    val root = Artifacts.materialize(s, "csv",
+        s"csv-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
       // ONE scan: the partitioned text write splits per tag on the
       // executors (a per-tag driver loop would rescan events |tags| times)
-      gated(s, out) {
-        E(s, dir)
-          // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
-          // value would emit a separator-less line that reparses as
-          // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
-          // trip total: "ts;" reparses as (ts, null) — the value it had.
-          .select(col("event_type"), concat(
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-            lit(";"),
-            coalesce(col("value").cast("string"), lit(""))).as("value"))
-          .write.partitionBy("event_type").mode("overwrite").text(out)
-      }
-      // Tag enumeration is data-sized in principle; the cap makes the
-      // fixture-sized assumption explicit instead of silently collecting
-      // an unbounded distinct if the fixture ever grows a high-cardinality
-      // tag column. (A lake-scale reader enumerates tags from the catalog
-      // or directory listing, not a corpus distinct.)
+      E(s, dir)
+        // explicit concat, not concat_ws: concat_ws SKIPS nulls, so a null
+        // value would emit a separator-less line that reparses as
+        // (ts, null-value-of-wrong-field). coalesce-to-"" keeps the round
+        // trip total: "ts;" reparses as (ts, null) — the value it had.
+        .select(col("event_type"), concat(
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+          lit(";"),
+          coalesce(col("value").cast("string"), lit(""))).as("value"))
+        .write.partitionBy("event_type").mode("overwrite").text(out)
+    }
+    // Tag enumeration is data-sized in principle; the cap makes the
+    // fixture-sized assumption explicit instead of silently collecting
+    // an unbounded distinct if the fixture ever grows a high-cardinality
+    // tag column. (A lake-scale reader enumerates tags from the catalog
+    // or directory listing, not a corpus distinct.) Memoized with the
+    // artifact's path, so a warm call runs no job.
+    val types = Artifacts.remember(s"$root|tags") {
       val maxTags = 1000
       val ts = E(s, dir).select("event_type").distinct().limit(maxTags + 1)
         .collect().map(_.getString(0)).sorted
       require(ts.length <= maxTags,
         s"scan_csv fixture materializer expects <= $maxTags tags")
-      (out, ts)
+      ts
     }
     val long = graft.sources.TagSources.readTagCsv(s,
       types.map(t => t -> Seq(s"$root/event_type=$t")).toMap)
@@ -752,15 +646,12 @@ object SparkEntry {
     * file-source streaming queries.
     */
   private def jsonlRoot(s: SparkSession, dir: String): String =
-    fittedModel(s"jsonl|$dir") {
-      val out = s"$registryRoot/jsonl_${registryKey(
-        s"jsonl-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        T(s, dir, "documents")
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(out)
-      }
+    Artifacts.materialize(s, "jsonl",
+        s"jsonl-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      T(s, dir, "documents")
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value"))
+        .write.mode("overwrite").text(out)
     }
 
   private def q_scan_jsonl(s: SparkSession, dir: String): DataFrame = {
@@ -1095,7 +986,7 @@ object SparkEntry {
     * stats make the scalar agg a footer read.
     */
   private def assertTwinIdHeadroom(s: SparkSession, dir: String): Unit =
-    fittedModel(s"idcap|$dir") {
+    Artifacts.remember(s"idcap|$dir") {
       val mx = T(s, dir, "documents").agg(max(col("doc_id"))).head().getLong(0)
       require(mx < 100000,
         s"documents doc_id max $mx >= 100000: the twin-id offset would collide")
@@ -1128,13 +1019,10 @@ object SparkEntry {
     * removes the derivation pipeline from the bench's driver window.
     */
   private def minhashBandsMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"minhashbands|$dir") {
-      val out = s"$registryRoot/minhashbands_${registryKey(
-        s"minhashbands-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        Dedup.bandTable(docsWithDups(s, dir), "doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(out)
-      }
+    Artifacts.materialize(s, "minhashbands",
+        s"minhashbands-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      Dedup.bandTable(docsWithDups(s, dir), "doc_id", "text")
+        .coalesce(1).write.mode("overwrite").parquet(out)
     }
 
   private def q_dedup_minhash_lsh(s: SparkSession, dir: String): DataFrame =
@@ -1158,25 +1046,18 @@ object SparkEntry {
     */
   private def shingleIndexMaterialized(s: SparkSession, dir: String,
       variant: String, corpus: DataFrame, cap: Int): String =
-    // corpus is STRICT on purpose: docsWithDups memoizes its id-headroom
-    // assert through fittedModel, and evaluating it inside this closure
-    // would nest computeIfAbsent calls on the same map — a
-    // hash-bin-dependent "Recursive update" IllegalStateException
-    fittedModel(s"shidx|$variant|$dir|cap=$cap") {
-      val out = s"$registryRoot/shidx_${registryKey(
+    Artifacts.materialize(s, "shidx",
         // v3: + persisted pair state (pairs/) and strategy stats
         // (meta/) — serving scans state instead of recomputing the
         // mention agg; a v2 artifact (no pairs/meta) must never
         // shadow the new layout's registry entry
         s"shidx-v3|$variant|$dir|n=3|cap=$cap|${
-          tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      if (!Dedup.shingleIndexExists(s, out))
-        // parquet-through build: groups is born on disk and docs derives
-        // from the re-read — never a second staged copy of the state
-        // (the r12 third-decade lesson; see buildAndSaveShingleIndex)
-        Dedup.buildAndSaveShingleIndex(corpus, "doc_id", "text", out,
-          3, cap)
-      out
+          tableFingerprint(s, s"$dir/documents.parquet")}",
+        Dedup.shingleIndexParts: _*) { out =>
+      // parquet-through build: groups is born on disk and docs derives
+      // from the re-read — never a second staged copy of the state
+      // (the r12 third-decade lesson; see buildAndSaveShingleIndex)
+      Dedup.buildAndSaveShingleIndex(corpus, "doc_id", "text", out, 3, cap)
     }
 
   private def q_dedup_ngram_jaccard(s: SparkSession, dir: String): DataFrame =
@@ -1239,13 +1120,11 @@ object SparkEntry {
     val all = docsWithDups(s, dir)
     val delta = all.filter(col("doc_id") % 7 === 3)
     val base = all.filter(col("doc_id") % 7 =!= 3)
-    val basePath = fittedModel(s"shidxbase|$dir") {
-      val out = s"$registryRoot/shidxbase_${registryKey(
+    val basePath = Artifacts.materialize(s, "shidxbase",
         s"shidxbase-v1|mod7|dups|$dir|n=3|cap=20|${
-          tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      if (!Dedup.shingleIndexExists(s, out))
-        Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", out, 3, 20)
-      out
+          tableFingerprint(s, s"$dir/documents.parquet")}",
+        Dedup.shingleIndexParts: _*) { out =>
+      Dedup.buildAndSaveShingleIndex(base, "doc_id", "text", out, 3, 20)
     }
     Dedup.containmentPairsFromIndex(
         Dedup.mergeShingleIndex(Dedup.loadShingleIndex(s, basePath), delta,
@@ -1297,9 +1176,8 @@ object SparkEntry {
     // daily step rebuilds (that rebuild is exactly what incremental dedup
     // exists to avoid). Cold pass pays the one-time index build; warm
     // passes price at O(step): read bands+stats parquet, run the step.
-    val stateDir = fittedModel(s"dedupstate|$dir") {
-      val out = s"$registryRoot/dedupstate_${registryKey(
-        s"dedupstate-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
+    val stateDir = Artifacts.materialize(s, "dedupstate",
+        s"dedupstate-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}", "stats") { out =>
       // commit-gated (the langid/IvfModel discipline): a fresh process
       // must LOAD the fingerprint-keyed index, not rebuild it — the
       // rebuild is the cost this registry exists to avoid. The stats
@@ -1311,21 +1189,19 @@ object SparkEntry {
       // exists to avoid. Production stores yesterday's dedup output;
       // so does the state dir, and the warm run prices at
       // O(delta + affected) + one tiny pairs scan.
-      gated(s, out, "stats") {
-        val raw = Dedup.initialDedupState(base, "doc_id", "text")
-        val bands = raw.bands.localCheckpoint() // feeds the write AND the pair join
-        val stats = raw.stats.localCheckpoint() // feeds the write AND the hot list
-        bands.write.mode("overwrite").parquet(s"$out/bands")
-        val baseCand = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        Dedup.jaccardRescoreWithHotList(base, "doc_id", "text", baseCand,
-            0.6, 3, Dedup.hotList(stats))
-          .write.mode("overwrite").parquet(s"$out/pairs")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-      }
+      val raw = Dedup.initialDedupState(base, "doc_id", "text")
+      val bands = raw.bands.localCheckpoint() // feeds the write AND the pair join
+      val stats = raw.stats.localCheckpoint() // feeds the write AND the hot list
+      bands.write.mode("overwrite").parquet(s"$out/bands")
+      val baseCand = bands.as("a").join(bands.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+      Dedup.jaccardRescoreWithHotList(base, "doc_id", "text", baseCand,
+          0.6, 3, Dedup.hotList(stats))
+        .write.mode("overwrite").parquet(s"$out/pairs")
+      stats.write.mode("overwrite").parquet(s"$out/stats")
     }
     val st0 = Dedup.DedupState(s.read.parquet(s"$stateDir/bands"),
       s.read.parquet(s"$stateDir/stats"))
@@ -1390,7 +1266,7 @@ object SparkEntry {
     * count job (8+ graph-family call sites per pass; r11 ADVICE).
     */
   private def embCount(s: SparkSession, dir: String): Long =
-    fittedModel(s"embcount|$dir") {
+    Artifacts.remember(s"embcount|$dir") {
       java.lang.Long.valueOf(T(s, dir, "embeddings").count())
     }.longValue()
 
@@ -1406,7 +1282,7 @@ object SparkEntry {
     * byte-identical to the static era.
     */
   private def embSchedule(s: SparkSession, dir: String): Seq[Int] =
-    fittedModel(s"embsched|$dir") {
+    Artifacts.remember(s"embsched|$dir") {
       Similarity.autoPlanesSchedule(embCount(s, dir))
     }
 
@@ -1470,14 +1346,11 @@ object SparkEntry {
     val sched = embSchedule(s, dir)
     publishOracle("simsearch_knn_incr", knnGraphOracleSql(sched))
     val schedKey = sched.mkString(".") // see knnEdges' tripwire note
-    val basePath = fittedModel(s"knnbase|$dir") {
-      val out = s"$registryRoot/knnbase_${registryKey(
+    val basePath = Artifacts.materialize(s, "knnbase",
         s"knnbase-v2|k=3|sched=$schedKey|mod5|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      gated(s, out) {
-        Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
-          .write.mode("overwrite").parquet(out)
-      }
+          tableFingerprint(s, s"$dir/embeddings.parquet")}") { out =>
+      Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
+        .write.mode("overwrite").parquet(out)
     }
     Similarity.knnGraphMergeSched(s.read.parquet(basePath), base, delta,
         "vec_id", "embedding", 3, sched)
@@ -1509,18 +1382,15 @@ object SparkEntry {
     // hoisted: a quoted literal inside the key interpolation would blind
     // RegistryFingerprintSpec's static fingerprint tripwire
     val schedKey = sched.mkString(".")
-    val path = fittedModel(s"knnedges|$dir") {
-      // v2: density-SCHEDULED bucket bits (in the key — a schedule
-      // change can never serve a stale edge table); all-8s below the
-      // floor, so every oracle fixture's artifact bytes are unchanged
-      val out = s"$registryRoot/knnedges_${registryKey(
+    val path = Artifacts.materialize(s, "knnedges",
+        // v2: density-SCHEDULED bucket bits (in the key — a schedule
+        // change can never serve a stale edge table); all-8s below the
+        // floor, so every oracle fixture's artifact bytes are unchanged
         s"knnedges-v2|k=3|sched=$schedKey|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}")}"
-      gated(s, out) {
-        Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
-            "embedding", 3, sched)
-          .write.mode("overwrite").parquet(out)
-      }
+          tableFingerprint(s, s"$dir/embeddings.parquet")}") { out =>
+      Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
+          "embedding", 3, sched)
+        .write.mode("overwrite").parquet(out)
     }
     Tables.resolve(s, path)
   }
@@ -1786,8 +1656,8 @@ object SparkEntry {
     // the data fingerprint in the key invalidates the persisted quantizer
     // if the embeddings fixture is ever regenerated
     val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val key = registryKey(s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8")
-    val path = s"$registryRoot/ivf_$key.parquet"
+    val path = Artifacts.path("ivf",
+      s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8", ".parquet")
     val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
     // publish the served centroids for the oracle dump
     publishOracle("simsearch_ivf", ivfOracleSqlFor(
@@ -1820,8 +1690,8 @@ object SparkEntry {
     val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
     // every fit hyperparameter is IN the key (the IVF discipline): a
     // changed fit depth must mint a new artifact, never serve a stale one
-    val key = registryKey(s"pq-v1|$dir|$fp|embedding|m=8|k=64|seed=42|maxIter=8")
-    val path = s"$registryRoot/pq_$key.parquet"
+    val path = Artifacts.path("pq",
+      s"pq-v1|$dir|$fp|embedding|m=8|k=64|seed=42|maxIter=8", ".parquet")
     val model = Similarity.fitOrLoadPq(e, "embedding", path,
       m = 8, k = 64, seed = 42L, maxIter = 8)
     // publish the served codebooks for the oracle dump (see ivf)
@@ -1847,8 +1717,8 @@ object SparkEntry {
   private def q_simsearch_ivf_exact(s: SparkSession, dir: String): DataFrame = {
     val e = T(s, dir, "embeddings")
     val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val key = registryKey(s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8")
-    val path = s"$registryRoot/ivf_$key.parquet"
+    val path = Artifacts.path("ivf",
+      s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8", ".parquet")
     val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
     Similarity.ivfSearch(model, e.filter(col("vec_id") < 10), e,
         "vec_id", "embedding", 5, nProbe = 16)
@@ -1907,17 +1777,14 @@ object SparkEntry {
     */
   private def q_text_langid_trained(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val profPath = fittedModel(s"langid|$dir") {
-      val fp = tableFingerprint(s, s"$dir/documents.parquet")
-      val key = registryKey(s"langid-v1|$dir|$fp|k=100|n=3")
-      val path = s"$registryRoot/langid_$key.parquet"
-      // commit-gated like the IVF quantizer: a half-written dir from
-      // a killed job does not count as a committed profile
-      gated(s, path) {
-        TextAnalysis.langProfiles(docs, "lang", "text", k = 100)
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
-    }
+    val fp = tableFingerprint(s, s"$dir/documents.parquet")
+    val profPath = Artifacts.path("langid", s"langid-v1|$dir|$fp|k=100|n=3", ".parquet")
+    // commit-gated like the IVF quantizer: a half-written dir from
+    // a killed job does not count as a committed profile
+    Artifacts.remember(profPath)(Artifacts.gated(s, profPath) {
+      TextAnalysis.langProfiles(docs, "lang", "text", k = 100)
+        .coalesce(1).write.mode("overwrite").parquet(profPath)
+    })
     val profiles = Tables.resolve(s, profPath)
     TextAnalysis.classifyLang(docs, "doc_id", "text", profiles, k = 100)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -1944,7 +1811,7 @@ object SparkEntry {
     */
   private def q_text_nb_classifier(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val model = fittedModel(s"nb|$dir") {
+    val model = Artifacts.remember(s"nb|$dir") {
       TextAnalysis.fitNaiveBayes(docs, "lang", "text", buckets = 1024)
     }
     model.classify(docs, "doc_id", "text")
@@ -2002,7 +1869,7 @@ object SparkEntry {
     */
   private def q_text_perplexity(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val lm = fittedModel(s"lm-en|$dir") {
+    val lm = Artifacts.remember(s"lm-en|$dir") {
       TextAnalysis.fitNaiveBayes(
         docs.filter(col("lang") === "en").withColumn("__c", lit("ref")),
         "__c", "text", buckets = 1024)
@@ -2021,7 +1888,7 @@ object SparkEntry {
     * emit the degenerate n_bpe_tokens == n_words).
     */
   private def bpeModel(s: SparkSession, dir: String): graft.ops.Bpe.BpeModel =
-    fittedModel(s"bpe|$dir|merges=90") {
+    Artifacts.remember(s"bpe|$dir|merges=90") {
       graft.ops.Bpe.train(T(s, dir, "documents"), "text", numMerges = 90)
     }
 
@@ -3177,7 +3044,7 @@ object SparkEntry {
     * the SQL-exact percentile and count beside it.
     */
   private def q_stream_threshold(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val name = s"thr_stream_${registryKey(dir).take(8)}"
     val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
@@ -3216,15 +3083,12 @@ object SparkEntry {
     * the watermark, O(horizon), the 100 TB continuous-ingest shape.
     */
   private def q_stream_dedup(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"dedupspool|$dir") {
-      val out = s"$registryRoot/dedupspool_${registryKey(
-        s"dedupspool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        val base = E(s, dir).select("event_id", "ts", "event_type", "value")
-        base.unionByName(base.filter(col("event_id") % 13 === 3))
-          .repartition(4) // 4 spool files, one micro-batch
-          .write.mode("overwrite").parquet(out)
-      }
+    val root = Artifacts.materialize(s, "dedupspool",
+        s"dedupspool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      val base = E(s, dir).select("event_id", "ts", "event_type", "value")
+      base.unionByName(base.filter(col("event_id") % 13 === 3))
+        .repartition(4) // 4 spool files, one micro-batch
+        .write.mode("overwrite").parquet(out)
     }
     val name = s"dedup_stream_${registryKey(dir).take(8)}"
     val stream = parquetStream(s, root)
@@ -3347,7 +3211,7 @@ object SparkEntry {
           .cast("double").as("f_nospace"),
         when(col("lang") === "en", 1).otherwise(-1).as("y"))
     val fcols = Seq("f_chars", "f_words", "f_distinct", "f_stop", "f_nospace")
-    val model = fittedModel(s"adaboost/$dir") {
+    val model = Artifacts.remember(s"adaboost/$dir") {
       graft.ml.AdaBoost.fit(feats, fcols, "y", rounds = 10, bins = 32)
     }
     // publish the fitted stump literals for the oracle dump: the margin
@@ -3391,7 +3255,7 @@ object SparkEntry {
     val tags = Seq("click", "view", "purchase")
     val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
       tags, "1 hour").na.drop("any", tags)
-    val model = fittedModel(s"iforest/$dir") {
+    val model = Artifacts.remember(s"iforest/$dir") {
       graft.ml.IsolationForest.fit(wide, tags, "bucket")
     }
     publishOracle("ml_isolation_forest",
@@ -3439,7 +3303,7 @@ object SparkEntry {
     val wide = Timeseries.align(E(s, dir), "ts", "event_type", "value",
       Seq("click", "view", "purchase"), "1 hour")
       .na.drop("any", Seq("click", "view", "purchase"))
-    val model = fittedModel(s"aesgd|$dir") {
+    val model = Artifacts.remember(s"aesgd|$dir") {
       graft.ml.AutoEncoderSGD.fit(wide, Seq("click", "view", "purchase"),
         hidden = 8, epochs = 60)
     }
@@ -3475,7 +3339,7 @@ object SparkEntry {
     // epochs=40: the warm start IS the ELM optimum, so the descent only
     // refines — and each epoch is one Spark job over the small embedded
     // series, so epoch count ≈ cold seconds here
-    val model = fittedModel(s"aeseq|$dir") {
+    val model = Artifacts.remember(s"aeseq|$dir") {
       graft.ml.SequenceAE.fit(wide, tags, lb = 4, orderCol = "bucket",
         hidden = 12, epochs = 40)
     }
@@ -3515,9 +3379,9 @@ object SparkEntry {
     // Persisted via the fingerprinted registry (the simsearch_ivf
     // discipline) so a cold process pays a file read, not 25 jobs.
     val fp = tableFingerprint(s, s"$dir/events.parquet")
-    val key = registryKey(s"gruae-v1|$dir|$fp|lb=4|h=8|ep=25|seed=42")
-    val model = fittedModel(s"gruae|$dir") {
-      graft.ml.RnnAutoEncoder.fitOrLoad(s"$registryRoot/gruae_$key.txt",
+    val path = Artifacts.path("gruae", s"gruae-v1|$dir|$fp|lb=4|h=8|ep=25|seed=42", ".txt")
+    val model = Artifacts.remember(path) {
+      graft.ml.RnnAutoEncoder.fitOrLoad(path,
         wide, tags, lb = 4, orderCol = "bucket", hidden = 8, epochs = 25)
     }
     publishOracle("ml_rnn_autoencoder", gruOracleSqlFor(model))
@@ -3575,11 +3439,11 @@ object SparkEntry {
     // fit-once, forecast-many (the simsearch_ivf discipline): both fits
     // are seeded and deterministic, so the memoized model is identical to
     // a refit — later executions pay only the forecast scans
-    val esn = fittedModel(s"esn|$dir") {
+    val esn = Artifacts.remember(s"esn|$dir") {
       graft.ml.EchoState.fit(long, Seq("v"), "bucket", Seq("event_type"),
         reservoir = 32, washout = 10)
     }
-    val ar = fittedModel(s"ar3|$dir") {
+    val ar = Artifacts.remember(s"ar3|$dir") {
       graft.ml.Forecast.fitPerKey(long, "event_type", "v", lb = 3, "bucket")
     }
     publishOracle("esn_forecast", esnOracleSqlFor(esn, ar))
@@ -3694,19 +3558,16 @@ object SparkEntry {
     * phash queries; see [[q_multimodal_phash_dedup]] for why it exists.
     */
   private def phashMediaMaterialized(s: SparkSession, dir: String): String =
-    fittedModel(s"phashmedia|$dir") {
-      val out = s"$registryRoot/phashmedia_${registryKey(
-        s"phashmedia-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        val media = Multimodal.fromDigestPng(
-          T(s, dir, "documents"), "doc_id", "text")
-        val originals = Multimodal.resizePayload(media, "bytes", 8.0)
-        val twins = Multimodal.resizePayload(
-          media.filter(col("media_id") % 10 === 0), "bytes", 16.0)
-          .select((col("media_id") + 100000).as("media_id"), col("kind"),
-            col("bytes"), col("meta"))
-        originals.unionByName(twins).write.mode("overwrite").parquet(out)
-      }
+    Artifacts.materialize(s, "phashmedia",
+        s"phashmedia-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      val media = Multimodal.fromDigestPng(
+        T(s, dir, "documents"), "doc_id", "text")
+      val originals = Multimodal.resizePayload(media, "bytes", 8.0)
+      val twins = Multimodal.resizePayload(
+        media.filter(col("media_id") % 10 === 0), "bytes", 16.0)
+        .select((col("media_id") + 100000).as("media_id"), col("kind"),
+          col("bytes"), col("meta"))
+      originals.unionByName(twins).write.mode("overwrite").parquet(out)
     }
 
   /** Registry path of the FULL-corpus aHash table (the published decode
@@ -3714,13 +3575,10 @@ object SparkEntry {
     */
   private def phashHashesMaterialized(s: SparkSession, dir: String): String = {
     val mediaPath = phashMediaMaterialized(s, dir)
-    fittedModel(s"phashhash|$dir") {
-      val out = s"$registryRoot/phashhash_${registryKey(
-        s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}")}"
-      gated(s, out) {
-        Multimodal.averageHashes(Tables.resolve(s, mediaPath), "media_id", "bytes")
-          .write.mode("overwrite").parquet(out)
-      }
+    Artifacts.materialize(s, "phashhash",
+        s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}") { out =>
+      Multimodal.averageHashes(Tables.resolve(s, mediaPath), "media_id", "bytes")
+        .write.mode("overwrite").parquet(out)
     }
   }
 
@@ -3775,18 +3633,15 @@ object SparkEntry {
   private def q_multimodal_phash_incr(s: SparkSession, dir: String): DataFrame = {
     assertTwinIdHeadroom(s, dir)
     val mediaPath = phashMediaMaterialized(s, dir)
-    val statePath = fittedModel(s"phashbase|$dir") {
-      val out = s"$registryRoot/phashbase_${registryKey(
-        s"phashbase-v1|mod7|$dir|${tableFingerprint(s, mediaPath)}")}"
+    val statePath = Artifacts.materialize(s, "phashbase",
+        s"phashbase-v1|mod7|$dir|${tableFingerprint(s, mediaPath)}", "pairs") { out =>
       // pairs commit LAST so a half-written state never gates
-      gated(s, out, "pairs") {
-        val baseHashes = Multimodal.averageHashes(
-          Tables.resolve(s, mediaPath).filter(col("media_id") % 7 =!= 3),
-          "media_id", "bytes").localCheckpoint()
-        baseHashes.write.mode("overwrite").parquet(s"$out/hashes")
-        Multimodal.phashPairsFromHashes(baseHashes, 3)
-          .write.mode("overwrite").parquet(s"$out/pairs")
-      }
+      val baseHashes = Multimodal.averageHashes(
+        Tables.resolve(s, mediaPath).filter(col("media_id") % 7 =!= 3),
+        "media_id", "bytes").localCheckpoint()
+      baseHashes.write.mode("overwrite").parquet(s"$out/hashes")
+      Multimodal.phashPairsFromHashes(baseHashes, 3)
+        .write.mode("overwrite").parquet(s"$out/pairs")
     }
     publishOracle("multimodal_phash_incr",
       phashPairsOracle(phashHashesMaterialized(s, dir)))
@@ -3809,12 +3664,9 @@ object SparkEntry {
     * hash-fails the query.
     */
   private def q_scan_orc(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"orc|$dir") {
-      val out = s"$registryRoot/orc_${registryKey(
-        s"orc-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        E(s, dir).write.mode("overwrite").orc(out)
-      }
+    val root = Artifacts.materialize(s, "orc",
+        s"orc-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      E(s, dir).write.mode("overwrite").orc(out)
     }
     s.read.orc(root)
       .groupBy("event_type")
@@ -3833,19 +3685,16 @@ object SparkEntry {
     * sink boundary, since the aggregate reads the persisted files.
     */
   private def q_sink_upsert(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"upsert|$dir") {
-      val out = s"$registryRoot/upsert_${registryKey(
-        s"upsert-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        val base = E(s, dir)
-        val updates = base.filter(col("event_id") % 7 === 0)
-          .withColumn("value", col("value") + lit(1000.0))
-          .unionByName(base.filter(col("event_id") % 97 === 0)
-            .withColumn("event_id", col("event_id") + lit(1000000L))
-            .withColumn("event_type", lit("backfill")))
-        graft.ops.Lake.upsert(base, updates, Seq("event_id"))
-          .write.mode("overwrite").parquet(out)
-      }
+    val root = Artifacts.materialize(s, "upsert",
+        s"upsert-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      val base = E(s, dir)
+      val updates = base.filter(col("event_id") % 7 === 0)
+        .withColumn("value", col("value") + lit(1000.0))
+        .unionByName(base.filter(col("event_id") % 97 === 0)
+          .withColumn("event_id", col("event_id") + lit(1000000L))
+          .withColumn("event_type", lit("backfill")))
+      graft.ops.Lake.upsert(base, updates, Seq("event_id"))
+        .write.mode("overwrite").parquet(out)
     }
     Tables.resolve(s, root)
       .groupBy("event_type")
@@ -3870,21 +3719,18 @@ object SparkEntry {
     * written bucketed-by-key (sink_partitioned's layout note).
     */
   private def q_sink_time_travel(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"timetravel|$dir") {
-      val out = s"$registryRoot/timetravel_${registryKey(
-        s"timetravel-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out, "v2") {
-        E(s, dir).select("event_id", "event_type", "value")
-          .write.mode("overwrite").parquet(s"$out/v1")
-        val v1 = s.read.parquet(s"$out/v1")
-        val cdc = v1.filter(col("event_id") % 11 === 3)
-            .withColumn("value", col("value") * 2.0)
-          .unionByName(v1.filter(col("event_id") % 101 === 0)
-            .withColumn("event_id", col("event_id") + lit(2000000L))
-            .withColumn("event_type", lit("lateload")))
-        graft.ops.Lake.upsert(v1, cdc, Seq("event_id"))
-          .write.mode("overwrite").parquet(s"$out/v2")
-      }
+    val root = Artifacts.materialize(s, "timetravel",
+        s"timetravel-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}", "v2") { out =>
+      E(s, dir).select("event_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$out/v1")
+      val v1 = s.read.parquet(s"$out/v1")
+      val cdc = v1.filter(col("event_id") % 11 === 3)
+          .withColumn("value", col("value") * 2.0)
+        .unionByName(v1.filter(col("event_id") % 101 === 0)
+          .withColumn("event_id", col("event_id") + lit(2000000L))
+          .withColumn("event_type", lit("lateload")))
+      graft.ops.Lake.upsert(v1, cdc, Seq("event_id"))
+        .write.mode("overwrite").parquet(s"$out/v2")
     }
     val v1 = Tables.resolve(s, s"$root/v1")
       .select(col("event_id"), col("value").as("v_old"), lit(1).as("in_old"))
@@ -3981,17 +3827,14 @@ object SparkEntry {
     * or a half-parsed good line both break the counts.
     */
   private def q_scan_jsonl_corrupt(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonlcorrupt|$dir") {
-      val out = s"$registryRoot/jsonlcorrupt_${registryKey(
-        s"jsonlcorrupt-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        T(s, dir, "documents")
-          .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"),
-            col("lang"), col("source"), col("n_chars"))).as("j"))
-          .select(when(col("doc_id") % 17 === 3, substring(col("j"), 1, 25))
-            .otherwise(col("j")).as("value"))
-          .write.mode("overwrite").text(out)
-      }
+    val root = Artifacts.materialize(s, "jsonlcorrupt",
+        s"jsonlcorrupt-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      T(s, dir, "documents")
+        .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"),
+          col("lang"), col("source"), col("n_chars"))).as("j"))
+        .select(when(col("doc_id") % 17 === 3, substring(col("j"), 1, 25))
+          .otherwise(col("j")).as("value"))
+        .write.mode("overwrite").text(out)
     }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       s"$jsonlSchema, _bad STRING")
@@ -4017,23 +3860,20 @@ object SparkEntry {
     * edge or landed as many bounded files, exactly as materialized here.
     */
   private def q_scan_json_multiline(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonml|$dir") {
-      val out = s"$registryRoot/jsonml_${registryKey(
-        s"jsonml-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        T(s, dir, "documents")
-          // one JSON array file per core: derived from defaultParallelism,
-          // not a local[32] literal — on a 1000-executor cluster the file
-          // count (= whole-file-parse task count) scales with the cluster
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("j"))
-          .mapPartitions { rows =>
-            // one JSON ARRAY document per partition file
-            Iterator(rows.map(_.getString(0)).mkString("[\n", ",\n", "\n]"))
-          }(org.apache.spark.sql.Encoders.STRING)
-          .write.mode("overwrite").text(out)
-      }
+    val root = Artifacts.materialize(s, "jsonml",
+        s"jsonml-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      T(s, dir, "documents")
+        // one JSON array file per core: derived from defaultParallelism,
+        // not a local[32] literal — on a 1000-executor cluster the file
+        // count (= whole-file-parse task count) scales with the cluster
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("j"))
+        .mapPartitions { rows =>
+          // one JSON ARRAY document per partition file
+          Iterator(rows.map(_.getString(0)).mkString("[\n", ",\n", "\n]"))
+        }(org.apache.spark.sql.Encoders.STRING)
+        .write.mode("overwrite").text(out)
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .option("multiLine", "true")
@@ -4055,19 +3895,16 @@ object SparkEntry {
     * single multi-GB .gz serializes the whole scan).
     */
   private def q_scan_jsonl_gz(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"jsonlgz|$dir") {
-      val out = s"$registryRoot/jsonlgz_${registryKey(
-        s"jsonlgz-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}")}"
-      gated(s, out) {
-        T(s, dir, "documents")
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          // parallelism = .gz file count (non-splittable); derived from
-          // defaultParallelism so a real cluster writes cluster-wide files
-          .repartition(s.sparkContext.defaultParallelism)
-          .write.mode("overwrite")
-          .option("compression", "gzip").text(out)
-      }
+    val root = Artifacts.materialize(s, "jsonlgz",
+        s"jsonlgz-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
+      T(s, dir, "documents")
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value"))
+        // parallelism = .gz file count (non-splittable); derived from
+        // defaultParallelism so a real cluster writes cluster-wide files
+        .repartition(s.sparkContext.defaultParallelism)
+        .write.mode("overwrite")
+        .option("compression", "gzip").text(out)
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(jsonlSchema))
       .json(root)
@@ -4515,18 +4352,15 @@ object SparkEntry {
     val base = E(s, dir)
     // v2: range-ordered CDC files — each micro-batch (one file) covers a
     // contiguous id range, the locality a partition-pruned merge exploits
-    val updatesDir = fittedModel(s"upsertcdc2|$dir") {
-      val out = s"$registryRoot/upsertcdc_${registryKey(
-        s"upsertcdc-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        base.filter(col("event_id") % 7 === 0)
-          .withColumn("value", col("value") + lit(1000.0))
-          .unionByName(base.filter(col("event_id") % 97 === 0)
-            .withColumn("event_id", col("event_id") + lit(1000000L))
-            .withColumn("event_type", lit("backfill")))
-          .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
-          .write.mode("overwrite").parquet(out)
-      }
+    val updatesDir = Artifacts.materialize(s, "upsertcdc",
+        s"upsertcdc-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      base.filter(col("event_id") % 7 === 0)
+        .withColumn("value", col("value") + lit(1000.0))
+        .unionByName(base.filter(col("event_id") % 97 === 0)
+          .withColumn("event_id", col("event_id") + lit(1000000L))
+          .withColumn("event_type", lit("backfill")))
+        .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
+        .write.mode("overwrite").parquet(out)
     }
     // Table lives for this invocation in a temp dir (tmpfs-preferring,
     // deleted at JVM exit); __p = event_id div width is the partition
@@ -4541,7 +4375,7 @@ object SparkEntry {
     val nTableParts = 16
     val width = math.max(1L,
       (base.agg(max(col("event_id"))).head().getLong(0) + 1L) / nTableParts)
-    val state = tempDirDeletedAtExit("graft-stream-upsert")
+    val state = Artifacts.tempDirDeletedAtExit("graft-stream-upsert")
     val table = s"$state/t"
     base.withColumn("__p", expr(s"event_id div $width"))
       // one file per partition dir: without the pin, partitionBy fans
@@ -4725,7 +4559,7 @@ object SparkEntry {
     val pcaModel = graft.ml.PcaAnomaly.fit(wide, tags, k = 2)
     val pca = pcaModel.score(wide)
       .select(col("bucket"), col("anomaly_score").as("s_pca"))
-    val forestModel = fittedModel(s"iforest/$dir") {
+    val forestModel = Artifacts.remember(s"iforest/$dir") {
       graft.ml.IsolationForest.fit(wide, tags, "bucket")
     }
     publishOracle("ml_anomaly_ensemble",
@@ -4839,7 +4673,7 @@ object SparkEntry {
     * batch candles exactly, ties included.
     */
   private def q_stream_ohlc(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val name = s"ohlc_stream_${registryKey(dir).take(8)}"
     val ord = struct(col("ts").as("t"), col("event_id").as("id"),
       col("value").as("v"))
@@ -4865,7 +4699,7 @@ object SparkEntry {
     * agg_active_users WAU trick in time-window form).
     */
   private def q_stream_sliding(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val name = s"slide_stream_${registryKey(dir).take(8)}"
     val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
@@ -4890,7 +4724,7 @@ object SparkEntry {
     * mirror.
     */
   private def q_stream_seasonal(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val ref = Tables.resolve(s, root)
       .filter(driftIsA && col("value").isNotNull)
     val profile = ref
@@ -5329,7 +5163,7 @@ object SparkEntry {
     * discipline, so the ENTIRE stream path is hash-checked by SQL.
     */
   private def q_stream_mahalanobis(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val types = Seq("click", "view")
     def centsOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
@@ -5677,24 +5511,21 @@ object SparkEntry {
     * stream-vs-batch path is hash-checked, not just row-counted.
     */
   private def q_stream_drift(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     // The reference cohort's bin ranges + histogram are FROZEN artifacts
     // — a production monitor computes them once at train time and scores
     // every live window against them (the whole point of frozen edges:
     // comparability across days). Persist both fingerprint-keyed, so a
     // serving run pays a model-sized parquet read (|keys| + |keys|×bins
     // rows), not a rescan of the reference history.
-    val refRoot = fittedModel(s"driftref|$dir") {
-      val out = s"$registryRoot/driftref_${registryKey(
-        s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        val ref = Tables.resolve(s, root).filter(driftIsA)
-        val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
-        graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
-          .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
-          .join(rng, Seq("event_type"))
-          .coalesce(1).write.mode("overwrite").parquet(out)
-      }
+    val refRoot = Artifacts.materialize(s, "driftref",
+        s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      val ref = Tables.resolve(s, root).filter(driftIsA)
+      val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
+      graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
+        .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
+        .join(rng, Seq("event_type"))
+        .coalesce(1).write.mode("overwrite").parquet(out)
     }
     val frozen = Tables.resolve(s, refRoot)
     val ranges = frozen.select("event_type", "__mn", "__mx").distinct()
@@ -6103,7 +5934,7 @@ object SparkEntry {
     */
   private def q_ml_gmm(s: SparkSession, dir: String): DataFrame = {
     val ev = E(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-    val fit = fittedModel(s"gmm3|$dir") {
+    val fit = Artifacts.remember(s"gmm3|$dir") {
       graft.ml.GmmEm.fit(ev, "event_type", "value", k = 3, iters = 12)
     }
     val lls = fit.logLik
@@ -6414,7 +6245,7 @@ object SparkEntry {
     * verifies the streaming aggregation itself.
     */
   private def q_stream_tdigest(s: SparkSession, dir: String): DataFrame = {
-    val root = compactMaterialized(s, dir)
+    val root = compactRoot(s, dir)
     val name = s"tdig_stream_${registryKey(dir).take(8)}"
     val stream = parquetStream(s, root)
       .filter(col("value").isNotNull)
@@ -7147,15 +6978,12 @@ object SparkEntry {
     * no shuffle.
     */
   private def q_stream_geo_fence(s: SparkSession, dir: String): DataFrame = {
-    val root = fittedModel(s"fencespool|$dir") {
-      val out = s"$registryRoot/fencespool_${registryKey(
-        s"fencespool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}")}"
-      gated(s, out) {
-        E(s, dir).filter(col("event_type") === "purchase")
-          .select("event_id", "user_id")
-          .repartition(4) // 4 spool files, one micro-batch
-          .write.mode("overwrite").parquet(out)
-      }
+    val root = Artifacts.materialize(s, "fencespool",
+        s"fencespool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
+      E(s, dir).filter(col("event_type") === "purchase")
+        .select("event_id", "user_id")
+        .repartition(4) // 4 spool files, one micro-batch
+        .write.mode("overwrite").parquet(out)
     }
     val (ula, ulo) = geoE4("u", col("user_id"))
     val pts = parquetStream(s, root)

@@ -148,13 +148,7 @@ object Serve {
             new IllegalStateException("parquet response write produced no part file"))
         finally listing.close()
       java.nio.file.Files.readAllBytes(part)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally graft.Artifacts.deleteRecursively(tmp)
   }
 
   /** JSON string literal with full escaping — shared by the HTTP layer

@@ -1082,13 +1082,16 @@ object Dedup {
     loadShingleIndex(spark, path)
   }
 
-  /** True iff a complete index is committed at `path`. Current writers
-    * commit meta last; earlier ones committed docs last, so an index
-    * from either ordering counts only with both parts committed.
+  /** The parts a complete index has committed. Current writers commit
+    * meta last; earlier ones committed docs last, so an index from either
+    * ordering counts only with both parts committed.
     */
+  val shingleIndexParts: Seq[String] = Seq("meta", "docs")
+
+  /** True iff a complete index is committed at `path`. */
   def shingleIndexExists(spark: org.apache.spark.sql.SparkSession,
       path: String): Boolean =
-    graft.Artifacts.committed(spark, path, "meta", "docs")
+    graft.Artifacts.committed(spark, path, shingleIndexParts: _*)
 
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {

@@ -219,44 +219,31 @@ object Similarity {
       fromDF(spark.read.parquet(path))
   }
 
-  /** Process-level cache of fitted quantizers, keyed by artifact path —
-    * repeated searches in one JVM never re-read (let alone re-fit).
-    */
-  private val ivfModels = new java.util.concurrent.ConcurrentHashMap[String, IvfModel]()
-
   /** The "fit once, search many" production shape: load the quantizer
     * persisted at `path`, or fit it from `corpus`, persist, and return it.
     * The fit (an iterative MLlib k-means — dozens of driver-scheduled
-    * jobs) runs at most once per artifact path across the process AND
-    * across processes sharing the path; every later search is a pure
-    * centroid-literal plan with no MLlib involvement. Mirrors the
-    * reference's disk-registry build cache
-    * (`builder/build_model.py::provide_saved_model`, public repo — mount
-    * empty, SURVEY.md §0).
+    * jobs) runs at most once per artifact path across the process
+    * ([[graft.Artifacts.remember]]) AND across processes sharing the
+    * path; every later search is a pure centroid-literal plan with no
+    * MLlib involvement. Mirrors the reference's disk-registry build
+    * cache (`builder/build_model.py::provide_saved_model`, public repo —
+    * mount empty, SURVEY.md §0).
     *
     * The cache is keyed by `path` ALONE: callers must encode a data
     * fingerprint into the path (as SparkEntry's `tableFingerprint` keys
     * do) or a regenerated corpus will silently be served the stale model.
-    * The fit runs OUTSIDE the map — `computeIfAbsent` would hold the
-    * hash-bin lock across the k-means jobs, blocking concurrent lookups
-    * of unrelated paths that share the bin. Two racing callers may both
-    * fit; the seeded fit is deterministic and `save` overwrites, so
-    * whichever `putIfAbsent` loses just discards an identical model.
     */
   def fitOrLoadIvf(corpus: DataFrame, vecCol: String, path: String,
-      nLists: Int = 16, seed: Long = 42L, maxIter: Int = 8): IvfModel = {
-    val cached = ivfModels.get(path)
-    if (cached != null) return cached
-    val spark = corpus.sparkSession
-    val m =
+      nLists: Int = 16, seed: Long = 42L, maxIter: Int = 8): IvfModel =
+    graft.Artifacts.remember(path) {
+      val spark = corpus.sparkSession
       if (graft.Artifacts.committed(spark, path)) IvfModel.load(spark, path)
       else {
         val f = fitIvf(corpus, vecCol, nLists, seed, maxIter)
         f.save(spark, path)
         f
       }
-    Option(ivfModels.putIfAbsent(path, m)).getOrElse(m)
-  }
+    }
 
   /** Fit the IVF quantizer: seeded k-means over the corpus, centroids
     * collected to the driver (nLists × dim doubles — a fixed-size scalar
@@ -411,20 +398,16 @@ object Similarity {
     PqModel(m, subDim, books)
   }
 
-  /** Process-level PQ model cache + fit-once registry (the fitOrLoadIvf
-    * discipline; callers must fingerprint the path).
+  /** Fit-once PQ codebooks (the fitOrLoadIvf discipline; callers must
+    * fingerprint the path).
     */
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[String, PqModel]()
   def fitOrLoadPq(corpus: DataFrame, vecCol: String, path: String,
-      m: Int = 8, k: Int = 64, seed: Long = 42L, maxIter: Int = 8): PqModel = {
-    val cached = pqModels.get(path)
-    if (cached != null) return cached
-    val spark = corpus.sparkSession
-    val model =
+      m: Int = 8, k: Int = 64, seed: Long = 42L, maxIter: Int = 8): PqModel =
+    graft.Artifacts.remember(path) {
+      val spark = corpus.sparkSession
       if (graft.Artifacts.committed(spark, path)) PqModel.load(spark, path)
       else { val f = fitPq(corpus, vecCol, m, k, seed, maxIter); f.save(spark, path); f }
-    Option(pqModels.putIfAbsent(path, model)).getOrElse(model)
-  }
+    }
 
   /** PQ top-k: encode the corpus to codes, decode-on-scan, rank with the
     * shared brute-force machinery. Approximate by construction (no

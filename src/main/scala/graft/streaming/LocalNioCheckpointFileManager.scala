@@ -56,15 +56,8 @@ class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
 
   override def exists(path: Path): Boolean = Files.exists(nio(path))
 
-  override def delete(path: Path): Unit = {
-    val p = nio(path)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[NioPath]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-  }
+  override def delete(path: Path): Unit =
+    graft.Artifacts.deleteRecursively(nio(path))
 
   override def createCheckpointDirectory(): Path = {
     Files.createDirectories(nio(root))

@@ -188,29 +188,15 @@ object Streams {
       .start()
 
   /** Root for one-shot replay checkpoints: tmpfs when the box has one
-    * (`/dev/shm`) — the offset/commit/state-store files of a bounded
-    * replay are throwaway, so paying disk fsync for them is pure fixed
-    * cost (measured at sf0.1: ~0.1 s/query). Durable pipelines
-    * ([[sinkTo]]) keep passing an explicit durable `checkpointDir`;
-    * this root is only for [[replayToTable]]'s run-and-discard queries.
+    * ([[graft.Artifacts.tmpfsRoot]]) — the offset/commit/state-store
+    * files of a bounded replay are throwaway, so paying disk fsync for
+    * them is pure fixed cost (measured at sf0.1: ~0.1 s/query). Durable
+    * pipelines ([[sinkTo]]) keep passing an explicit durable
+    * `checkpointDir`; this root is only for [[replayToTable]]'s
+    * run-and-discard queries.
     */
-  private lazy val replayCheckpointRoot: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, "graft-replay-ck")
-      d.mkdirs()
-      if (d.isDirectory && d.canWrite) Some(d.getAbsolutePath) else None
-    } else None
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val stream = java.nio.file.Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally stream.close()
-    }
-  }
+  private lazy val replayCheckpointRoot: Option[String] =
+    graft.Artifacts.tmpfsRoot.map(_.resolve("graft-replay-ck").toString)
 
   /** Run a bounded streaming plan to completion into a memory sink and
     * return the result table — the shared harness behind every
@@ -252,7 +238,7 @@ object Streams {
       try q.processAllAvailable() finally q.stop()
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", saved)
-      ck.foreach(c => deleteRecursively(java.nio.file.Paths.get(c)))
+      ck.foreach(c => graft.Artifacts.deleteRecursively(java.nio.file.Paths.get(c)))
     }
     s.table(name)
   }

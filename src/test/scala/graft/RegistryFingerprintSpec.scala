@@ -28,28 +28,35 @@ class RegistryFingerprintSpec extends SparkSpec {
   }
 
   test("all disk-persisted registry keys embed a table fingerprint") {
-    // Static tripwire: any $registryRoot/<kind>_${registryKey(...)} whose
-    // key string lacks tableFingerprint can serve a stale artifact across
-    // fixture regenerations. Scan the sources so a NEW persisted artifact
-    // cannot ship without one (the in-memory fittedModel memo keys are
-    // process-scoped and exempt).
+    // Static tripwire: any registry config string (Artifacts.materialize /
+    // Artifacts.path, or a bare registryKey) that lacks tableFingerprint
+    // can serve a stale artifact across fixture regenerations. Scan the
+    // sources so a NEW persisted artifact cannot ship without one (the
+    // in-memory Artifacts.remember keys are process-scoped and exempt).
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val src = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
       .toSeq.sortBy(_.toString)
-      .map(p => new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)).mkString("\n")
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8))
       finally files.close()
-    // every registryKey(s"<kind>-v<N>|...") config string; whitespace and
-    // `//` comments may sit between the call and its string
-    val config = """registryKey\((?:\s|//[^\n]*)*s?"([^"]+)""""
-    val configs = config.r.findAllMatchIn(src).map(_.group(1)).toList
-    // the scan must see every inline registry-path site's config string
-    // — a site it cannot parse would silently escape the tripwire
-    val sites = """\$registryRoot/\w+_\$\{registryKey\(""".r.findAllMatchIn(src).size
-    val parsedSites = ("""\$registryRoot/\w+_\$\{""" + config).r.findAllMatchIn(src).size
-    assert(sites > 0 && parsedSites == sites,
-      s"$sites registry-path sites but only $parsedSites config strings parsed")
+    val src = sources.map(_._2).mkString("\n")
+    // a config string literal; whitespace and `//` comments may sit
+    // between it and the call
+    val literal = """(?:\s|//[^\n]*)*s?"([^"]+)""""
+    // every registryKey(s"<kind>-v<N>|...") config string...
+    val keyConfigs = ("""registryKey\(""" + literal).r.findAllMatchIn(src)
+      .map(_.group(1)).toList
+    // ...and every registry-path site's: Artifacts.materialize(s, "<kind>",
+    // s"...") and Artifacts.path("<kind>", s"...")
+    val site = """Artifacts\.(?:materialize\(\s*\w+,|path\()\s*"\w+","""
+    val siteConfigs = (site + literal).r.findAllMatchIn(src).map(_.group(1)).toList
+    // the scan must see every registry-path site's config string — a site
+    // it cannot parse would silently escape the tripwire
+    val sites = site.r.findAllMatchIn(src).size
+    assert(sites > 0 && siteConfigs.size == sites,
+      s"$sites registry-path sites but only ${siteConfigs.size} config strings parsed")
+    val configs = keyConfigs ++ siteConfigs
     assert(configs.size >= 31,
       s"scan matched only ${configs.size} registry config strings — regex drift?")
     val offenders = configs
@@ -57,5 +64,17 @@ class RegistryFingerprintSpec extends SparkSpec {
         && !cfg.contains("bucketed")) // bucketed tables are re-laid-out per process (in-memory catalog)
     assert(offenders.isEmpty,
       s"disk registry keys without a table fingerprint: $offenders")
+    // Registry paths are put together only in Artifacts: a path assembled
+    // by hand elsewhere (the registry root, or a `<kind>_${registryKey(`
+    // name) escapes the memo-by-path and the site scan above. The
+    // streaming queries' `<name>_${registryKey(dir).take(8)}` memory-sink
+    // names are not paths.
+    val handMade = """registryRoot|_\$\{registryKey\((?!dir\)\.take\(8\)\})""".r
+    val assembled = sources
+      .filterNot(_._1.getFileName.toString == "Artifacts.scala")
+      .flatMap { case (p, text) =>
+        handMade.findAllMatchIn(text).map(m => s"${p.getFileName}: ${m.matched}") }
+    assert(assembled.isEmpty,
+      s"registry paths put together outside graft.Artifacts: $assembled")
   }
 }
