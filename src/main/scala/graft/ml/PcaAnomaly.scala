@@ -106,14 +106,17 @@ object PcaAnomaly {
     val transformed = withScore(model.pipeline.transform(df))
     val x = vector_to_array(col(PipelineFactory.ScaledCol))
     val z = vector_to_array(col("pca_features"))
-    val withErr = tags.zipWithIndex.foldLeft(transformed) { case (acc, (tag, j)) =>
+    val perTag = tags.zipWithIndex.map { case (tag, j) =>
       require(j < d, s"tag index $j out of range for ${d}x$k component matrix")
       val reconstructed = (0 until k)
         .map(c => element_at(z, c + 1) * lit(pc(j, c)))
         .reduce(_ + _)
-      acc.withColumn(s"tag_anomaly_$tag", abs(element_at(x, j + 1) - reconstructed))
+      abs(element_at(x, j + 1) - reconstructed).as(s"tag_anomaly_$tag")
     }
-    withErr.drop(PipelineFactory.FeaturesCol, PipelineFactory.ScaledCol, "pca_features")
+    // one projection for every tag: a withColumn per tag re-analyzes the
+    // growing plan once per tag, on every request
+    transformed.select(col("*") +: perTag: _*)
+      .drop(PipelineFactory.FeaturesCol, PipelineFactory.ScaledCol, "pca_features")
   }
 
   /** Fit scaler+PCA on `train`, then fit the anomaly threshold as the

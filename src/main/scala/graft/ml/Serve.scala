@@ -1,16 +1,17 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Request/response prediction surface — the reference's
   * `server/views/base.py::BaseModelView.post` analogue (public repo; mount
   * empty, SURVEY.md §0): POST /prediction receives an X payload of
-  * records, returns per-row anomaly output. This environment has no HTTP
-  * framework, so the surface is (model, JSON payload) → response frame /
-  * JSON — an HTTP shim would wrap these 1:1; everything data-shaped is
-  * real.
+  * records, returns per-row anomaly output. The surface is (model, JSON
+  * payload) → response frame / JSON; [[PredictionServer]] wraps it 1:1
+  * over HTTP.
   *
   * Contract notes mirrored from the reference: records parse against an
   * EXPLICIT schema (no inference scan — a request must not cost two
@@ -42,19 +43,31 @@ object Serve {
   /** Parse a JSON-array payload ("[{...}, {...}]") into the X frame;
     * `req_idx` is the record's position in the payload, so the response
     * stays row-aligned with the request.
+    *
+    * The body is a one-row local relation and both projections over it
+    * fold into it (Catalyst's `ConvertToLocalRelation`), so the collect
+    * runs no Spark job; the records then become a LOCAL relation again,
+    * the same rule [[parseParquetRequest]] follows.
     */
   def parseRequest(spark: SparkSession, json: String, tags: Seq[String],
       tsCol: String = "ts"): DataFrame = {
     import spark.implicits._
-    val arr = spark.createDataset(Seq(json)).toDF("__body")
-      .select(col("__body"),
-        from_json(col("__body"), ArrayType(requestSchema(tags, tsCol))).as("__arr"))
+    val schema = requestSchema(tags, tsCol)
+    val Array(parsed) = spark.createDataset(Seq(json)).toDF("__body")
+      .select(col("__body"), from_json(col("__body"), ArrayType(schema)).as("__arr"))
+      .select(col("__arr"),
+        (col("__arr").isNull && length(trim(col("__body"))) > 0).as("__bad"))
+      .collect()
     // malformed JSON parses to null — that must be a request ERROR, not an
     // empty 200-style success that silently drops the whole payload
-    val bad = arr.filter(col("__arr").isNull && length(trim(col("__body"))) > 0).count() > 0
-    require(!bad, "malformed JSON request payload")
-    arr.select(posexplode(col("__arr")).as(Seq("req_idx", "r")))
-      .select(col("req_idx").cast("long").as("req_idx"), col("r.*"))
+    require(!parsed.getBoolean(1), "malformed JSON request payload")
+    val records = if (parsed.isNullAt(0)) Seq.empty else parsed.getSeq[Row](0)
+    // a `null` element is a record with every field null
+    val rows = records.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(i.toLong +: (if (r == null) Seq.fill(schema.length)(null) else r.toSeq))
+    }
+    spark.createDataFrame(rows.asJava,
+      StructType(StructField("req_idx", LongType, nullable = false) +: schema.fields))
   }
 
   /** Score a request payload: total anomaly + threshold verdict + per-tag
@@ -71,18 +84,31 @@ object Serve {
   /** The body-format-agnostic scoring core: a parsed X frame carrying
     * `req_idx` + tag columns → the aligned response frame. Shared by the
     * JSON and parquet request paths.
+    *
+    * Scorable rows are `na.drop`'s filter, unscorable rows its complement
+    * (a null or NaN in any tag), NULL-filled to the scored columns. Both
+    * sets are collected and merged by `req_idx` on the driver into a
+    * LOCAL relation. For a row-local scorer (projections only: PCA, the
+    * dense autoencoder) over a local X frame both branches fold into
+    * local relations, so a request runs no Spark job; a scorer that is
+    * not row-local (the sequence model's windowed embed) runs its jobs
+    * inside the same two collects.
     */
   def scoreFrame(model: TagAnomalyScorer, x: DataFrame,
       tags: Seq[String]): DataFrame = {
-    val complete = x.na.drop("any", tags)
-    val scored = model.scoreWithTags(complete, tags)
+    val scored = model.scoreWithTags(x.na.drop("any", tags), tags)
       .withColumn("anomalous", col("anomaly_score") > lit(model.threshold))
-    val unscorable = x.join(complete.select("req_idx"), Seq("req_idx"), "left_anti")
-      .withColumn("anomaly_score", lit(null).cast("double"))
-    val unscoredAll = tags.foldLeft(unscorable) { (d, t) =>
-      d.withColumn(s"tag_anomaly_$t", lit(null).cast("double"))
-    }.withColumn("anomalous", lit(null).cast("boolean"))
-    scored.unionByName(unscoredAll).orderBy("req_idx")
+    val have = x.columns.toSet
+    val unscorable = x.filter(tags.map(t => col(t).isNull || isnan(col(t))).reduce(_ || _))
+      .select(scored.schema.map(f =>
+        (if (have(f.name)) col(f.name) else lit(null).cast(f.dataType)).as(f.name)): _*)
+    // the union's nullability: a column is nullable if either side's is
+    val schema = StructType(scored.schema.zip(unscorable.schema).map { case (a, b) =>
+      a.copy(nullable = a.nullable || b.nullable)
+    })
+    val idx = schema.fieldIndex("req_idx")
+    val rows = (scored.collect() ++ unscorable.collect()).sortBy(_.getLong(idx))
+    x.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** Parse a PARQUET request body (`server/utils.py` accepts parquet
@@ -117,16 +143,20 @@ object Serve {
       val schema = StructType(StructField("req_idx", LongType,
         nullable = false) +: projected.schema.fields)
       val rows = projected.collect().zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(i.toLong +: r.toSeq)
+        Row.fromSeq(i.toLong +: r.toSeq)
       }
-      import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, schema)
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
-  /** Response as a JSON array string (what [[PredictionServer]] writes). */
+  /** Response as a JSON array string (what [[PredictionServer]] writes).
+    * A `to_json` projection folds into the local response frame like the
+    * rest of the request; Dataset's own JSON encoder is a `mapPartitions`
+    * and would run a job.
+    */
   def toJsonResponse(response: DataFrame): String =
-    response.toJSON.collect().mkString("[", ",", "]")
+    response.select(to_json(struct(col("*")))).collect()
+      .map(_.getString(0)).mkString("[", ",", "]")
 
   /** Response as parquet bytes (single in-order file — the parquet leg
     * of the content negotiation).

@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.net.{InetSocketAddress, URLDecoder}
+import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
 import scala.collection.mutable
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** Loopback InfluxDB 1.x API emulator on the JDK's built-in HTTP server —
   * the offline stand-in that lets [[InfluxStore]]'s REAL transport code
@@ -32,7 +32,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   */
 class InfluxEmulator(port: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = graft.ml.PredictionServer.bind(port)
   private val pool = Executors.newFixedThreadPool(4)
 
   // (db, measurement) -> points (tag, ns, value); all access synchronized
