@@ -6,12 +6,18 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Artifacts.{registryKey, tableFingerprint}
 import graft.sources.Tables
+import graft.queries.{Query, SimilarityGraph}
+import graft.queries.Common.{T, bm25Cte, dotSql, normSqSql}
+import graft.queries.Oracle.{Published, Sql, publishOracle}
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
 import graft.expressions.{CountMinEstimates, DtwDistance}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with DuckDB `oracleSql` unless non-SQL-expressible.
+/** Driver contract — `queries` and `oracleSql`, both derived from the
+  * declared [[graft.queries.Query]] tables: this file's (every query not
+  * yet moved to a family file) and each family file's
+  * ([[graft.queries.SimilarityGraph]]). Every query has a DuckDB oracle,
+  * static or published by the query when it runs.
   *
   * Hash-match discipline (SURVEY.md §2, FIXTURES.md):
   *   - deterministic ORDER BY on a unique key in both engines;
@@ -24,54 +30,6 @@ import graft.expressions.{CountMinEstimates, DtwDistance}
   *     BIGINT for both).
   */
 object SparkEntry {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.resolve(s, s"$dir/$name.parquet")
-
-  /** Oracle SQL published at query-run time (the fitted-params
-    * lifecycle): set when the query executes, merged into [[oracleSql]].
-    * Each publish ALSO persists the fragment as the registry file
-    * `oracle_sql/<name>.sql`, and [[publishedOracles]]
-    * falls back to that file when the in-process value is absent — so a
-    * cold process can dump a generated oracle for a query that ran in an
-    * earlier process (same-fixture staleness is impossible in the driver
-    * flow: Verify always runs the query, overwriting the fragment,
-    * before dumping oracle_sql.json).
-    */
-  private val publishedOracleSql =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Fragment filenames are FIXTURE-KEYED when the runner declares one
-    * (`graft.oracle.fixture`, set by Verify from its sfDir): a query
-    * that THROWS during Verify must not fall back to a fragment fitted
-    * on a different fixture — that fails safe (hash mismatch) but masks
-    * the real error behind a confusing oracle diff. With the key in the
-    * name, a missing run yields a missing fragment → the absent oracle
-    * entry points at the query failure itself. Unkeyed (tests, ad-hoc
-    * sessions): plain `<name>.sql`, same behavior as before.
-    */
-  private def oracleFragmentFile(name: String): java.nio.file.Path = {
-    val fixture = sys.props.get("graft.oracle.fixture")
-      .map(_.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-"))
-    Artifacts.registryFile("oracle_sql",
-      fixture.fold(s"$name.sql")(f => s"$name.$f.sql"))
-  }
-
-  private def publishOracle(name: String, sql: String): Unit = {
-    publishedOracleSql.put(name, sql)
-    try Artifacts.writeFile(oracleFragmentFile(name), sql)
-    catch { case _: Exception => () } // fragment persistence is best-effort
-  }
-
-  private def publishedOracles(names: String*): Map[String, String] =
-    names.flatMap { n =>
-      Option(publishedOracleSql.get(n)).orElse {
-        val f = oracleFragmentFile(n)
-        if (java.nio.file.Files.isReadable(f))
-          Some(java.nio.file.Files.readString(f))
-        else None
-      }.map(n -> _)
-    }.toMap
 
   /** events scan with `ts` normalized to a µs timestamp regardless of the
     * fixture generation's physical parquet type (ns-long vs µs — see
@@ -1218,512 +1176,6 @@ object SparkEntry {
   private def q_dedup_embed_cosine(s: SparkSession, dir: String): DataFrame =
     Similarity.cosinePairs(T(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
       .orderBy("vec_a", "vec_b")
-
-  private def q_simsearch_topk(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    Similarity.bruteForceTopK(e.filter(col("vec_id") < 10), e, "vec_id", "embedding", 5)
-      .orderBy("qid", "rnk")
-  }
-
-  /** Top-k through an int8-quantized corpus — the storage-scale ANN
-    * path (4× smaller vectors; recall vs float spec'd in SimilaritySpec).
-    * ORACLE-CHECKED since round 10: every step of the quantize →
-    * dequantize → cosine chain is IEEE-portable once spelled out —
-    * DuckDB executes FLOAT arithmetic in genuine float32 (verified), so
-    * `qscale = f32(f64(max|x|)/127)` matches Spark's float-coerced
-    * division, `round(f64(x)/f64(qscale))` rounds the identical double
-    * in both engines (HALF_UP vs half-away agree on doubles — a double
-    * whose shortest repr ends in .5 IS exactly .5), the f32 code·scale
-    * product is the correctly-rounded f32 multiply on both sides, and
-    * the downstream cosine is the repo's bit-exact sequential-fold
-    * double discipline (topkOracleSql).
-    */
-  private def q_simsearch_int8(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val dq = Similarity.quantizeInt8(e, "embedding")
-      .select(col("vec_id"),
-        Similarity.dequantizeInt8(col("codes"), col("qscale")).as("embedding"))
-    Similarity.bruteForceTopK(e.filter(col("vec_id") < 10), dq, "vec_id", "embedding", 5)
-      .orderBy("qid", "rnk")
-  }
-
-  /** LSH-bucketed approximate near-dup pairs — the 100 TB path. The
-    * hyperplanes are md5-derived plan-time constants, so the oracle
-    * inlines the IDENTICAL plane literals and reproduces the exact
-    * buckets (round 2: upgraded from spark-only to oracle-checked);
-    * recall vs the brute-force baseline is additionally unit-tested.
-    */
-  private def q_simsearch_lsh(s: SparkSession, dir: String): DataFrame = {
-    val sched = embSchedule(s, dir)
-    publishOracle("simsearch_lsh", lshOracleSql(sched))
-    Similarity.lshCosinePairsSched(T(s, dir, "embeddings"), "vec_id",
-        "embedding", 0.3, sched)
-      .orderBy("vec_a", "vec_b")
-  }
-
-  /** Memoized embeddings row count — the LSH surfaces size their bucket
-    * bits from it, and before round 12 every `*Auto` call re-ran the
-    * count job (8+ graph-family call sites per pass; r11 ADVICE).
-    */
-  private def embCount(s: SparkSession, dir: String): Long =
-    Artifacts.remember(s"embcount|$dir") {
-      java.lang.Long.valueOf(T(s, dir, "embeddings").count())
-    }.longValue()
-
-  /** The fixture's per-table bucket-bit schedule
-    * ([[graft.ops.Similarity.autoPlanesSchedule]] over the memoized
-    * count) — THE parameterization every LSH-family query runs AND
-    * publishes its oracle under (round 14, r13 verdict #6: the r12-era
-    * embAutoPlanes THREW past the 10240-vector floor because the static
-    * 8-plane oracle SQL could not describe a scheduled fixture; now each
-    * query publishes schedule-generated plane literals via
-    * [[publishOracle]], so any fixture size oracle-checks). Below the
-    * floor the schedule is all-8s: plans, oracle text, and hashes are
-    * byte-identical to the static era.
-    */
-  private def embSchedule(s: SparkSession, dir: String): Seq[Int] =
-    Artifacts.remember(s"embsched|$dir") {
-      Similarity.autoPlanesSchedule(embCount(s, dir))
-    }
-
-  /** LSH RECALL AUDIT — "measure, don't guess" as a first-class query:
-    * the candidate-generation recall of the production LSH path against
-    * the exact all-pairs ground truth at the same threshold (τ = 0.4).
-    * Because LSH candidates are re-scored EXACTLY, the approximate pair
-    * set is a subset of the exact one, so recall = count ratio — no
-    * pair join needed. At scale the exact side is the one-off audit you
-    * run on a sample; the plan shapes are the two already-shipped
-    * pipelines.
-    */
-  private def q_simsearch_recall_audit(s: SparkSession, dir: String): DataFrame = {
-    val sched = embSchedule(s, dir)
-    publishOracle("simsearch_recall_audit", recallAuditOracle(sched))
-    val e = T(s, dir, "embeddings")
-    val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.4)
-      .agg(count(lit(1)).as("n_exact"))
-    val approx = Similarity.lshCosinePairsSched(e, "vec_id", "embedding", 0.4,
-      sched)
-      .agg(count(lit(1)).as("n_lsh"))
-    exact.crossJoin(approx)
-      .select(col("n_exact"), col("n_lsh"),
-        round(col("n_lsh").cast("double") /
-          nullif(col("n_exact").cast("double"), lit(0.0)), 6).as("recall"))
-  }
-
-  /** Approximate k-NN graph ([[graft.ops.Similarity.knnGraph]]) — each
-    * vector's top-3 among its LSH candidates; the neighbor-graph step
-    * behind SemDeDup clustering and graph-based ANN. Oracle-checked via
-    * inlined plane literals (the simsearch_lsh pattern).
-    */
-  private def q_simsearch_knn_graph(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("simsearch_knn_graph", knnGraphOracleSql(embSchedule(s, dir)))
-    knnEdges(s, dir).orderBy("qid", "rnk")
-  }
-
-  /** INCREMENTAL kNN-graph maintenance as a driver-gated no-drift check
-    * (the dedup_incremental discipline, round 12): yesterday's edge
-    * table for the base corpus (vec_id % 5 ≠ 0) is registry-persisted;
-    * the query merges today's delta (every fifth vector) via
-    * [[graft.ops.Similarity.knnGraphMerge]] — delta bucket-join +
-    * affected-node re-rank over (old top-k ∪ new candidates), untouched
-    * base edges served as-is — and the ORACLE is the full-rebuild kNN
-    * SQL over the whole corpus, so any drift between the merge algebra
-    * and a rebuild (lost candidates, stale ranks, tie-break skew)
-    * hash-fails at the driver, not just in a spec. Sound because the
-    * hyperplanes are data-independent constants: delta vectors hash
-    * into the existing bucket space with no refit (a full rebuild is
-    * only forced at an autoPlanes bit threshold — see [[knnEdges]]).
-    */
-  private def q_simsearch_knn_incr(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val base = e.filter(col("vec_id") % 5 =!= 0)
-    val delta = e.filter(col("vec_id") % 5 === 0)
-    // schedule from the SAME density rule as knnEdges (r12 ADVICE: a
-    // literal 8 here diverged from the merged graph past the autoPlanes
-    // floor); in the key so a schedule change can never serve a stale
-    // base. knnGraphMergeSched's caller contract requires the merge to
-    // run at the base's schedule.
-    val sched = embSchedule(s, dir)
-    publishOracle("simsearch_knn_incr", knnGraphOracleSql(sched))
-    val schedKey = sched.mkString(".") // see knnEdges' tripwire note
-    val basePath = Artifacts.materialize(s, "knnbase",
-        s"knnbase-v2|k=3|sched=$schedKey|mod5|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}") { out =>
-      Similarity.knnGraphSched(base, "vec_id", "embedding", 3, sched)
-        .write.mode("overwrite").parquet(out)
-    }
-    Similarity.knnGraphMergeSched(s.read.parquet(basePath), base, delta,
-        "vec_id", "embedding", 3, sched)
-      .orderBy("qid", "rnk")
-  }
-
-  /** THE kNN edge table (k = 3, density-scaled LSH) — fingerprint-keyed,
-    * commit-gated, persisted ONCE per corpus and served to the whole
-    * graph family (`graph_cc/bfs/degree/pagerank/triangles/jaccard_nbrs`,
-    * `ml_lof`, `simsearch_knn_graph`): before round 12 each of those 8
-    * queries re-ran the identical LSH bucket join (~1 s apiece at sf0.1
-    * — the round-11 verdict's largest pure-waste block). The registry
-    * discipline is the same as bands/IVF/PQ/ShingleIndex.
-    *
-    * Incremental-merge contract (the ShingleIndex discipline applied to
-    * the graph): the hyperplanes are md5-derived constants — data-
-    * independent — so NEW vectors hash into the existing bucket space
-    * without refit. Delta edges = bucket-join(new, base ∪ new); affected
-    * base nodes (those gaining a candidate) re-rank over (their old
-    * top-k ∪ new candidates) — sound because an old candidate outside
-    * the old top-k can never enter the merged top-k (k better neighbors
-    * already existed). Full rebuild is only forced when the corpus
-    * crosses an [[graft.ops.Similarity.autoPlanes]] bucket-bit threshold
-    * (bits = log₂(n/40)); [[graft.ops.SimilaritySpec]] pins the
-    * no-drift property: merge(edges(base), delta) == edges(base ∪ delta).
-    */
-  private def knnEdges(s: SparkSession, dir: String): DataFrame = {
-    val sched = embSchedule(s, dir)
-    // hoisted: a quoted literal inside the key interpolation would blind
-    // RegistryFingerprintSpec's static fingerprint tripwire
-    val schedKey = sched.mkString(".")
-    val path = Artifacts.materialize(s, "knnedges",
-        // v2: density-SCHEDULED bucket bits (in the key — a schedule
-        // change can never serve a stale edge table); all-8s below the
-        // floor, so every oracle fixture's artifact bytes are unchanged
-        s"knnedges-v2|k=3|sched=$schedKey|$dir|${
-          tableFingerprint(s, s"$dir/embeddings.parquet")}") { out =>
-      Similarity.knnGraphSched(T(s, dir, "embeddings"), "vec_id",
-          "embedding", 3, sched)
-        .write.mode("overwrite").parquet(out)
-    }
-    Tables.resolve(s, path)
-  }
-
-  /** PAGERANK over the kNN similarity graph — graph centrality as a
-    * data-curation signal (representativeness of each vector in the
-    * corpus neighborhood structure; the graph-analytics flagship beside
-    * dedup_clusters' label propagation). ALL-INTEGER damped power
-    * iteration in micro-units: pr₀ = 1e6; each round contrib = pr div
-    * outdeg (non-negative ⇒ Spark div ≡ DuckDB //), inflow = exact
-    * BIGINT sum, pr' = 150000 + (850·inflow) div 1000 (d = 0.85) — ten
-    * rounds, bit-exact, no float ever. Dangling/orphan LSH nodes keep
-    * the base mass (leak accepted and mirrored — the textbook
-    * simplification, documented). Plan: edge table built once (the
-    * oracle-checked knnGraph), localCheckpoint'd and reused across
-    * rounds; each round is one keyed join + one hash-agg — the
-    * dedup_clusters iterative discipline (per-round job overhead
-    * amortizes at scale; lineage truncated every round).
-    */
-  private def q_graph_pagerank(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_pagerank", pagerankOracle(embSchedule(s, dir)))
-    val edges = knnEdges(s, dir)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-    val nodes = T(s, dir, "embeddings").select(col("vec_id").as("id"))
-    graft.ops.Graph.pagerank(edges, nodes, rounds = 10)
-      .select(col("id").as("vec_id"), col("pr"))
-      .orderBy("vec_id")
-  }
-
-  /** TRIANGLE counting + local clustering coefficient over the kNN
-    * similarity graph ([[graft.ops.Graph.triangles]]) — community
-    * tightness per node, the MapReduce triangle-enumeration classic;
-    * joins keyed and bounded by k·|V|, all-integer until the one
-    * mirrored coefficient division. Nodes the LSH left edgeless are
-    * absent by contract (degree-0 has no coefficient).
-    */
-  private def q_graph_triangles(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_triangles", trianglesOracle(embSchedule(s, dir)))
-    val edges = knnEdges(s, dir)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-    graft.ops.Graph.triangles(edges)
-      .select(col("v").as("vec_id"), col("deg"), col("triangles"),
-        col("clustering"))
-      .orderBy("vec_id")
-  }
-
-  /** CONNECTED COMPONENTS over the kNN similarity graph — the global
-    * cluster structure next to graph_pagerank's centrality and
-    * graph_triangles' local tightness. Same iterative min-label
-    * propagation as dedup_clusters ([[graft.ops.Dedup.duplicateClusters]]:
-    * per round one keyed join + one hash-agg, lineage checkpointed,
-    * convergence-checked fixpoint — maxIter raised to 64 because a kNN
-    * graph's diameter can far exceed a near-dup clique's). LSH-orphaned
-    * nodes (no candidates ⇒ no edges) are singleton components by
-    * contract — every vector gets a component id and size. At 100 TB
-    * this is the Kiveris et al. connectivity recipe: each round shuffles
-    * ids only, driver state is nil.
-    */
-  private def q_graph_cc(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_cc", graphCcOracle(embSchedule(s, dir)))
-    val e = T(s, dir, "embeddings")
-    val pairs = knnEdges(s, dir)
-      .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
-    // two-phase CC (round 14): partition-local union-find + min-label
-    // rounds on the CONTRACTED boundary graph — the ml_dbscan shape (r11),
-    // output pinned equal to duplicateClusters in DedupSpec. The kNN
-    // graph's many shallow components made per-round job launches the
-    // cost, exactly the ε-graph profile.
-    val labels = Dedup.duplicateClustersTwoPhase(pairs, maxIter = 64)
-      .select(col("doc_id").as("vec_id"), col("canonical_id").as("lbl"))
-    val all = e.select(col("vec_id"))
-      .join(labels, Seq("vec_id"), "left_outer")
-      .select(col("vec_id"), coalesce(col("lbl"), col("vec_id")).as("comp"))
-    val sz = all.groupBy("comp").agg(count(lit(1)).as("n_members"))
-    all.join(sz, "comp")
-      .select(col("vec_id"), col("comp"), col("n_members"))
-      .orderBy("vec_id")
-  }
-
-  /** Per-node DEGREE table over the kNN similarity graph: out-degree
-    * (≤ k by construction), in-degree (the "how often am I someone's
-    * neighbor" curation signal — high in-degree = hub/representative,
-    * zero = outlier), and undirected degree. Three hash-aggs of an
-    * ids-only edge list joined back to the node table — every shuffle
-    * carries two longs per edge.
-    */
-  private def q_graph_degree(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_degree", graphDegreeOracle(embSchedule(s, dir)))
-    val e = T(s, dir, "embeddings")
-    // persisted-parquet input: re-scanning it per agg is cheaper than a
-    // localCheckpoint materialization (the pre-r12 checkpoint existed to
-    // avoid re-running the LSH build, which now happens once per corpus)
-    val edges = knnEdges(s, dir)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-    val outd = edges.groupBy(col("src").as("vec_id"))
-      .agg(count(lit(1)).as("out_deg"))
-    val ind = edges.groupBy(col("dst").as("vec_id"))
-      .agg(count(lit(1)).as("in_deg"))
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val undd = und.select(col("a").as("vec_id"))
-      .unionByName(und.select(col("b").as("vec_id")))
-      .groupBy("vec_id").agg(count(lit(1)).as("und_deg"))
-    e.select(col("vec_id"))
-      .join(outd, Seq("vec_id"), "left_outer")
-      .join(ind, Seq("vec_id"), "left_outer")
-      .join(undd, Seq("vec_id"), "left_outer")
-      .select(col("vec_id"),
-        coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-        coalesce(col("in_deg"), lit(0L)).as("in_deg"),
-        coalesce(col("und_deg"), lit(0L)).as("und_deg"))
-      .orderBy("vec_id")
-  }
-
-  /** Multi-source BFS hop distance over the (symmetrized) kNN graph —
-    * "how many similarity hops from the nearest class-0 exemplar", the
-    * graph-proximity curation signal (label propagation radius, seed
-    * expansion). Frontier iteration: hop k's frontier = neighbors of
-    * hop k−1 not yet visited — each round ONE ids-only join + distinct
-    * + anti-join, localCheckpoint'd; rounds bounded at 10 (hops beyond
-    * that report unreachable = −1, a documented contract, NOT an
-    * approximation knob — the oracle applies the same bound). All
-    * integer, no tie-breaks needed (min-hop is unique).
-    */
-  private def q_graph_bfs(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_bfs", graphBfsOracle(embSchedule(s, dir)))
-    val e = T(s, dir, "embeddings")
-    val dirEdges = knnEdges(s, dir)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-    val edges = dirEdges
-      .unionByName(dirEdges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val maxHops = 10
-    // Per-round state = a LIST of per-hop checkpointed frames (round 14):
-    // the previous shape re-materialized the WHOLE growing visited set
-    // every round (O(V) rows × rounds) plus a separate isEmpty job on the
-    // frontier — 3 jobs/round. Now each round materializes only ITS hop's
-    // frontier; the dedup anti-join reads the union of the already-cached
-    // hop frames lazily, and the convergence check rides the
-    // just-checkpointed (tiny) frontier. Hop assignment unchanged
-    // (min-hop is unique), same rows, same oracle.
-    val seeds = e.filter(col("label") === 0)
-      .select(col("vec_id"), lit(0).as("hops")).localCheckpoint()
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame](seeds)
-    var frontier = seeds.select(col("vec_id"))
-    var done = frontier.isEmpty
-    var k = 1
-    while (k <= maxHops && !done) {
-      val visitedIds = parts.map(_.select(col("vec_id")))
-        .reduce(_ unionByName _)
-      val next = edges.join(frontier, edges("src") === frontier("vec_id"))
-        .select(col("dst").as("vec_id")).distinct()
-        .join(visitedIds, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), lit(k).as("hops"))
-        .localCheckpoint()
-      done = next.isEmpty
-      parts += next
-      frontier = next.select(col("vec_id"))
-      k += 1
-    }
-    val visited = parts.reduce(_ unionByName _)
-    e.select(col("vec_id")).join(visited, Seq("vec_id"), "left_outer")
-      .select(col("vec_id"),
-        coalesce(col("hops"), lit(-1)).cast("long").as("hops"))
-      .orderBy("vec_id")
-  }
-
-  /** Neighbor-set Jaccard over the undirected kNN graph — the classic
-    * link-prediction / community-overlap score. Candidate pairs come
-    * from a WEDGE JOIN (two edges sharing an endpoint), so work is
-    * Σ deg² — bounded by the kNN construction, never all-pairs; the
-    * intersection is an exact integer count and the union follows by
-    * inclusion-exclusion from exact degrees. Emits pairs with
-    * jaccard ≥ 0.4 plus whether the pair is itself an edge (predicted
-    * vs existing link).
-    */
-  private def q_graph_jaccard_nbrs(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("graph_jaccard_nbrs", graphJaccardNbrsOracle(embSchedule(s, dir)))
-    val dirEdges = knnEdges(s, dir)
-      .select(col("qid").as("src"), col("nid").as("dst"))
-    val und = dirEdges
-      .unionByName(dirEdges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-    val inter = und.as("e1").join(und.as("e2"),
-        col("e1.dst") === col("e2.dst") && col("e1.src") < col("e2.src"))
-      .groupBy(col("e1.src").as("a"), col("e2.src").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    val isEdge = und.select(col("src").as("a"), col("dst").as("b"),
-      lit(true).as("is_edge"))
-    inter
-      .join(deg.select(col("src").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("src").as("b"), col("deg").as("db")), "b")
-      .join(isEdge, Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"), col("inter"),
-        round(col("inter").cast("double")
-          / (col("da") + col("db") - col("inter")).cast("double"), 6)
-          .as("jaccard"),
-        coalesce(col("is_edge"), lit(false)).as("is_edge"))
-      .filter(col("jaccard") >= 0.4)
-      .orderBy("a", "b")
-  }
-
-  /** LOCAL OUTLIER FACTOR (Breunig et al. 2000) over the kNN similarity
-    * graph — density-relative outlier scoring (LOF ≫ 1 = the point's
-    * neighborhood is much denser than the point itself; the classic
-    * embedding-space anomaly screen beside ml_isolation_forest's
-    * partition-based one). Distances are cosine (1 − the graph's
-    * 6-dp edge similarity). The float-sum hazards are quantized away:
-    * reach-dist(p←o) = max(kdist(o), d(p,o)) is FLOORED TO PPM before
-    * the per-node sum (order-independent integer addition), and
-    * lrd = n·10¹² div Σreach_ppm is one integer division, so lof =
-    * Σ lrd(o) / (n·lrd(p)) divides exactly-known integers — bit-identical
-    * in any engine. Zero-distance cliques (exact-duplicate vectors) pin
-    * the denominator at 1 instead of ∞ (documented determinism rule).
-    * Plan shape: the edge list is built once (ids-only LSH candidate
-    * shuffles), then three keyed hash-aggs/joins of an ids+ints frame —
-    * the same 100 TB shape as graph_degree.
-    */
-  private def q_ml_lof(s: SparkSession, dir: String): DataFrame = {
-    publishOracle("ml_lof", lofOracle(embSchedule(s, dir)))
-    val edges = knnEdges(s, dir)
-      .select(col("qid"), col("nid"), (lit(1.0) - col("cos_sim")).as("dist"))
-    val kd = edges.groupBy("qid").agg(max("dist").as("kdist"))
-    val reach = edges
-      .join(kd.select(col("qid").as("nid"), col("kdist").as("kdist_o")), "nid")
-      .select(col("qid"),
-        floor(greatest(col("kdist_o"), col("dist")) * lit(1000000.0))
-          .cast("long").as("reach_ppm"))
-    val lrd = reach.groupBy("qid")
-      .agg(sum("reach_ppm").as("sr"), count(lit(1)).as("n"))
-      .select(col("qid"), col("n"),
-        expr("(n * 1000000000000) div greatest(sr, 1)").as("lrd_ppm"))
-    edges
-      .join(lrd.select(col("qid").as("nid"), col("lrd_ppm").as("lrd_o")), "nid")
-      .groupBy("qid").agg(sum("lrd_o").as("sl"))
-      .join(lrd, "qid")
-      .select(col("qid").as("vec_id"), col("n").as("n_nbr"),
-        round(col("sl").cast("double")
-          / (col("n") * col("lrd_ppm")).cast("double"), 6).as("lof"))
-      .orderBy("vec_id")
-  }
-
-  /** IVF coarse-quantizer ANN — probe-limited top-k with a PREFIT
-    * quantizer. The k-means fit runs once per corpus and is persisted
-    * under a content-keyed registry path (the disk-registry pattern,
-    * like text_langid_trained's materialized profile); every later
-    * execution — including the bench's warm rep — loads the centroid
-    * table and searches with a pure centroid-literal plan, no MLlib
-    * jobs.
-    *
-    * ORACLE-CHECKED (round 11, the dedup_semantic seed-oracle trick):
-    * the persisted centroids are published to the oracle as VALUES
-    * literals ([[ivfOracleEntry]]), and DuckDB re-derives assignment,
-    * probe ranking, and the probe-limited top-k independently — the
-    * k-means FIT stays spec'd (SimilaritySpec) and exactness-checked by
-    * simsearch_ivf_exact's nProbe=all ≡ brute-force identity.
-    */
-  private def q_simsearch_ivf(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    // the data fingerprint in the key invalidates the persisted quantizer
-    // if the embeddings fixture is ever regenerated
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val path = Artifacts.path("ivf",
-      s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8", ".parquet")
-    val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
-    // publish the served centroids for the oracle dump
-    publishOracle("simsearch_ivf", ivfOracleSqlFor(
-      model.centroids.map { case (id, v) =>
-        s"($id, ${doubleArraySql(v)})"
-      }.mkString(", ")))
-    Similarity.ivfSearch(model, e.filter(col("vec_id") < 10), e,
-        "vec_id", "embedding", 5, nProbe = 4)
-      .select(col("qid"), col("nid"), round(col("cos_sim"), 6).as("cos_sim"), col("rnk"))
-      .orderBy("qid", "rnk")
-  }
-
-  /** Product-quantization ANN — the 32×-compression storage path (m=8
-    * subspace codes per vector instead of 64 floats). Codebook fit-once
-    * under a fingerprinted registry path (the IVF discipline); search
-    * decodes-on-scan and reuses the shared top-k machinery, so the
-    * query measures the PQ serving plan: m literal lookups + native dot
-    * per corpus row. Recall vs brute force is spec'd in SimilaritySpec.
-    *
-    * ORACLE-CHECKED (round 11, the simsearch_ivf centroid-literal
-    * trick): with the persisted codebooks as VALUES literals, the WHOLE
-    * serving path — per-subspace squared-L2 encoding (ties → lowest
-    * code), decode-by-lookup, cosine top-k — is re-derived in SQL;
-    * cos_sim ships unrounded (the bruteForceTopK discipline: both
-    * engines derive bit-identical doubles from the same codebook
-    * values). The k-means codebook FIT stays spec'd.
-    */
-  private def q_simsearch_pq(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    // every fit hyperparameter is IN the key (the IVF discipline): a
-    // changed fit depth must mint a new artifact, never serve a stale one
-    val path = Artifacts.path("pq",
-      s"pq-v1|$dir|$fp|embedding|m=8|k=64|seed=42|maxIter=8", ".parquet")
-    val model = Similarity.fitOrLoadPq(e, "embedding", path,
-      m = 8, k = 64, seed = 42L, maxIter = 8)
-    // publish the served codebooks for the oracle dump (see ivf)
-    publishOracle("simsearch_pq", pqOracleSqlFor(model.subDim,
-      (for (j <- 0 until model.m; (c, i) <- model.codebooks(j).zipWithIndex)
-        yield s"($j, $i, ${doubleArraySql(c)})")
-        .mkString(", ")))
-    Similarity.pqTopK(model, e.filter(col("vec_id") < 10), e, "vec_id", "embedding", 5)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rnk"))
-      .orderBy("qid", "rnk")
-  }
-
-  /** Oracle leg for the IVF path: probing ALL lists (nProbe = nLists)
-    * makes the inverted-file search exhaustive — every corpus vector is
-    * scored for every query exactly once, so the result is identical to
-    * brute force and the query reuses simsearch_topk's oracle SQL. This
-    * hash-checks the whole IVF machinery (assignment, probe ranking, the
-    * probe-list join, final top-k) rather than leaving it spark-only;
-    * approximation quality at nProbe < nLists stays spec'd in
-    * SimilaritySpec. Same prefit registry quantizer as simsearch_ivf —
-    * no extra fit.
-    */
-  private def q_simsearch_ivf_exact(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val fp = tableFingerprint(s, s"$dir/embeddings.parquet")
-    val path = Artifacts.path("ivf",
-      s"ivf-v1|$dir|$fp|embedding|nLists=16|seed=42|maxIter=8", ".parquet")
-    val model = Similarity.fitOrLoadIvf(e, "embedding", path, nLists = 16, seed = 42L)
-    Similarity.ivfSearch(model, e.filter(col("vec_id") < 10), e,
-        "vec_id", "embedding", 5, nProbe = 16)
-      .orderBy("qid", "rnk")
-  }
 
   /** Linear interpolation of resample gaps, windowed PER TAG. */
   private def q_win_interpolate(s: SparkSession, dir: String): DataFrame = {
@@ -2941,9 +2393,10 @@ object SparkEntry {
       .orderBy("vec_id")
 
   // ---------------------------------------------------------------------
-  // Spark-only module queries (no SQL oracle — driver records rows-only):
-  // the streaming transforms run in batch replay mode (same code path the
-  // incremental plans use), ML and multimodal drive their whole pipelines.
+  // Module-driven queries: the streaming transforms run in batch replay
+  // mode (same code path the incremental plans use), ML and multimodal
+  // drive their whole pipelines. A fitted model or a decoded artifact
+  // publishes its oracle when the query runs.
   // ---------------------------------------------------------------------
 
   private def q_stream_resample(s: SparkSession, dir: String): DataFrame =
@@ -3571,12 +3024,15 @@ object SparkEntry {
     }
 
   /** Registry path of the FULL-corpus aHash table (the published decode
-    * output both phash oracles replay from).
+    * output both phash oracles replay from). Keyed on the documents table
+    * the media derive from, not on the media artifact, whose part-file
+    * names change with every write: the path both oracles embed is then
+    * the same in every fresh registry.
     */
   private def phashHashesMaterialized(s: SparkSession, dir: String): String = {
     val mediaPath = phashMediaMaterialized(s, dir)
     Artifacts.materialize(s, "phashhash",
-        s"phashhash-v1|$dir|${tableFingerprint(s, mediaPath)}") { out =>
+        s"phashhash-v1|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
       Multimodal.averageHashes(Tables.resolve(s, mediaPath), "media_id", "bytes")
         .write.mode("overwrite").parquet(out)
     }
@@ -3634,7 +3090,7 @@ object SparkEntry {
     assertTwinIdHeadroom(s, dir)
     val mediaPath = phashMediaMaterialized(s, dir)
     val statePath = Artifacts.materialize(s, "phashbase",
-        s"phashbase-v1|mod7|$dir|${tableFingerprint(s, mediaPath)}", "pairs") { out =>
+        s"phashbase-v1|mod7|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}", "pairs") { out =>
       // pairs commit LAST so a half-written state never gates
       val baseHashes = Multimodal.averageHashes(
         Tables.resolve(s, mediaPath).filter(col("media_id") % 7 =!= 3),
@@ -5542,100 +4998,6 @@ object SparkEntry {
     graft.ops.Drift.ksOfCounts(joint, "event_type").orderBy("event_type")
   }
 
-  /** HYBRID retrieval — the production search shape: a lexical BM25 leg
-    * and a dense cosine leg fused by Reciprocal Rank Fusion
-    * (rrf = Σ_leg 1/(60 + rank), the Cormack et al. constant). Each leg
-    * contributes its top-50 (selected by a TOTAL order: rounded score
-    * desc, id — cross-engine deterministic); a doc in one leg only gets
-    * that leg's term. Scale: each leg is already bounded (top-k via
-    * TakeOrdered, no global sort); the fusion is a full-outer join of two
-    * 50-row frames — driver-trivial, executor-local.
-    */
-  private def q_simsearch_hybrid(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val lexTop = graft.ops.Search.bm25(T(s, dir, "documents"), "doc_id", "text",
-        Seq("data", "model", "training"))
-      .orderBy(col("bm25").desc, col("doc_id")).limit(50)
-    val lex = lexTop.withColumn("lex_rank",
-      row_number().over(Window.orderBy(col("bm25").desc, col("doc_id")))
-        .cast("long"))
-      .select(col("doc_id").as("id"), col("lex_rank"))
-    val e = T(s, dir, "embeddings")
-    val dense = Similarity.bruteForceTopK(e.filter(col("vec_id") === 0), e,
-        "vec_id", "embedding", 50)
-      .select(col("nid").as("id"), col("rnk").as("dense_rank"))
-    lex.join(dense, Seq("id"), "full_outer")
-      .select(col("id"),
-        round(coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("dense_rank")), lit(0.0)), 6)
-          .as("rrf"),
-        col("lex_rank"), col("dense_rank"))
-      .orderBy("id")
-  }
-
-  /** MMR diversified retrieval (Carbonell & Goldstein 1998 — the RAG
-    * re-ranking staple): greedy top-10 from the query's top-50 cosine
-    * candidates maximizing λ·relevance − (1−λ)·max-sim-to-selected
-    * (λ = 0.7), so near-duplicate hits can't crowd the result list.
-    * The greedy loop is EXPRESSED RELATIONALLY over the bounded 50-row
-    * candidate frame (anti-join selected → join max-sim → TakeOrdered 1
-    * on the UNROUNDED score with id tie-break — the bruteForceTopK
-    * discipline), ten micro-steps on localCheckpoint'd 50-row frames;
-    * candidate generation is the only corpus-scale stage. Pairwise sims
-    * and scores reuse the oracle-proven cosine expression tree, so the
-    * WHOLE greedy selection is hash-checked.
-    */
-  private def q_simsearch_mmr(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val cand = Similarity.bruteForceTopK(e.filter(col("vec_id") === 0), e,
-        "vec_id", "embedding", 50)
-      .select(col("nid").as("id"), col("cos_sim").as("rel"))
-      .localCheckpoint()
-    val ce = cand.select("id")
-      .join(e, col("id") === col("vec_id"))
-      .select(col("id"), col("embedding"))
-    val half = Similarity.cosinePairs(ce, "id", "embedding", threshold = -1.0)
-    // MODEL-SIZED greedy on the driver (round 14, the agg_markov_stationary
-    // precedent): the candidate set is FIXED at 50 by construction — top-50
-    // of one query vector — so the greedy's state is 50 (id, rel) rows plus
-    // the C(50,2) pair-similarity matrix, bounded regardless of corpus
-    // scale. The previous shape ran 9 sequential join+orderBy+limit(1)+
-    // localCheckpoint Spark jobs over these ≤50-row frames (~27 jobs,
-    // ~1.9 s at sf0.1 — pure fixed job-launch cost). Arithmetic and
-    // tie-breaks are replayed verbatim: sc = 0.7·rel − 0.3·max(cos_sim over
-    // selected) in IEEE double with the same literals; argmax resolves ties
-    // on min id (the orderBy(sc desc, id) contract); round(mmr, 6) stays a
-    // Column op. Oracle SQL unchanged, hashes unchanged.
-    import s.implicits._
-    val candArr = cand.collect()
-      .map(r => (r.getLong(0), r.getDouble(1))) // ≤ 50 rows, bounded
-    val sim = new scala.collection.mutable.HashMap[(Long, Long), Double]
-    half.select(col("vec_a"), col("vec_b"), col("cos_sim")).collect()
-      .foreach { r => // ≤ C(50,2) rows, bounded
-        val a = r.getLong(0); val b = r.getLong(1); val c = r.getDouble(2)
-        sim((a, b)) = c; sim((b, a)) = c
-      }
-    val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val first = candArr.reduceLeft { (x, y) =>
-      if (y._2 > x._2 || (y._2 == x._2 && y._1 < x._1)) y else x
-    }
-    selected += ((1L, first._1, first._2))
-    for (k <- 2 to 10) {
-      val chosen = selected.map(_._2).toSet
-      var best: (Long, Double) = null
-      for ((id, rel) <- candArr if !chosen.contains(id)) {
-        val mx = chosen.iterator.map(b => sim((id, b))).max
-        val sc = 0.7 * rel - 0.3 * mx
-        if (best == null || sc > best._2 || (sc == best._2 && id < best._1))
-          best = (id, sc)
-      }
-      selected += ((k.toLong, best._1, best._2))
-    }
-    selected.toSeq.toDF("rank", "id", "mmr")
-      .select(col("rank"), col("id"), round(col("mmr"), 6).as("mmr"))
-      .orderBy("rank")
-  }
-
   /** ONLINE Kalman local-level filter in batch replay
     * ([[graft.streaming.Streams.kalmanOnline]], Q=1, R=10) over the
     * exact-integer hourly mean series: the terminal posterior per stream
@@ -5692,9 +5054,6 @@ object SparkEntry {
       .orderBy("event_type", "step")
   }
 
-  // ---------------------------------------------------------------------
-  // The contract maps
-  // ---------------------------------------------------------------------
   // ---------------------------------------------------------------------
   // Round 9: record linkage, survival analysis, runtime join pruning,
   // robust winsorization, CM-sketch frequency, isotonic calibration,
@@ -5910,14 +5269,6 @@ object SparkEntry {
       .orderBy("event_type")
   }
 
-  /** Per-stream 3-component Gaussian mixture by EM ([[graft.ml.GmmEm]])
-    * — regime separation the single-Gaussian scaler fits can't express.
-    * E-step is pure column math, M-step one map-side-combined groupBy of
-    * DECIMAL-exact sufficient statistics (bit-identical under any
-    * partitioning), driver updates the k·3 parameters per key. Fit-once
-    * per process; spark-only (iterative EM is not SQL; GmmEmSpec pins
-    * recovery of planted mixtures and EM's monotone likelihood).
-    */
   /** Per-stream 3-component GMM via EM (12 iterations of DECIMAL-exact
     * sufficient statistics — partitioning-bit-invariant, GmmEmSpec).
     *
@@ -7247,277 +6598,6 @@ object SparkEntry {
       .orderBy("cls", "bin")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ml_confusion_prf" -> (q_ml_confusion_prf _),
-    "ml_auc_roc" -> (q_ml_auc_roc _),
-    "ml_calibration" -> (q_ml_calibration _),
-    "ml_dbscan" -> (q_ml_dbscan _),
-    "ml_lof" -> (q_ml_lof _),
-    "join_geo_polygon" -> (q_join_geo_polygon _),
-    "stream_geo_fence" -> (q_stream_geo_fence _),
-    "ml_ols_multi" -> (q_ml_ols_multi _),
-    "agg_top_paths" -> (q_agg_top_paths _),
-    "agg_skyline" -> (q_agg_skyline _),
-    "search_phrase" -> (q_search_phrase _),
-    "agg_uplift" -> (q_agg_uplift _),
-    "search_boolean" -> (q_search_boolean _),
-    "agg_levene" -> (q_agg_levene _),
-    "agg_runs_test" -> (q_agg_runs_test _),
-    "agg_spearman" -> (q_agg_spearman _),
-    "join_geo_radius" -> (q_join_geo_radius _),
-    "join_geo_radius_sql" -> (q_join_geo_radius_sql _),
-    "join_geo_knn" -> (q_join_geo_knn _),
-    "agg_geo_density" -> (q_agg_geo_density _),
-    "agg_moments" -> (q_agg_moments _),
-    "ml_knn_classify" -> (q_ml_knn_classify _),
-    "ml_ecod" -> (q_ml_ecod _),
-    "agg_mutual_info" -> (q_agg_mutual_info _),
-    "join_attribution" -> (q_join_attribution _),
-    "agg_expectations" -> (q_agg_expectations _),
-    "join_er_clusters" -> (q_join_er_clusters _),
-    "stream_tdigest" -> (q_stream_tdigest _),
-    "agg_hurst" -> (q_agg_hurst _),
-    "agg_kruskal" -> (q_agg_kruskal _),
-    "agg_chisq" -> (q_agg_chisq _),
-    "agg_mannwhitney" -> (q_agg_mannwhitney _),
-    "agg_anova" -> (q_agg_anova _),
-    "agg_bootstrap_ci" -> (q_agg_bootstrap_ci _),
-    "win_macd" -> (q_win_macd _),
-    "ml_gmm" -> (q_ml_gmm _),
-    "join_entity_jw" -> (q_join_entity_jw _),
-    "agg_kaplan_meier" -> (q_agg_kaplan_meier _),
-    "join_bloom_prune" -> (q_join_bloom_prune _),
-    "win_winsorize" -> (q_win_winsorize _),
-    "agg_countmin" -> (q_agg_countmin _),
-    "ml_isotonic" -> (q_ml_isotonic _),
-    "agg_dtw_profiles" -> (q_agg_dtw_profiles _),
-    "multimodal_audio_zcr" -> (q_multimodal_audio_zcr _),
-    "scan_parquet" -> (q_scan_parquet _),
-    "scan_random" -> (q_scan_random _),
-    "sink_influx_lines" -> (q_sink_influx_lines _),
-    "scan_influx_http" -> (q_scan_influx_http _),
-    "proj_tags" -> (q_proj_tags _),
-    "filter_rowexpr" -> (q_filter_rowexpr _),
-    "filter_timerange" -> (q_filter_timerange _),
-    "filter_dropna" -> (q_filter_dropna _),
-    "filter_inf" -> (q_filter_inf _),
-    "join_align" -> (q_join_align _),
-    "join_dim_broadcast" -> (q_join_dim_broadcast _),
-    "join_multiway" -> (q_join_multiway _),
-    "join_pred_input" -> (q_join_pred_input _),
-    "join_semi" -> (q_join_semi _),
-    "join_anti" -> (q_join_anti _),
-    "join_asof" -> (q_join_asof _),
-    "join_asof_fwd" -> (q_join_asof_fwd _),
-    "join_asof_near" -> (q_join_asof_near _),
-    "join_asof_tol" -> (q_join_asof_tol _),
-    "join_interval" -> (q_join_interval _),
-    "join_salted_skew" -> (q_join_salted_skew _),
-    "join_bucketed" -> (q_join_bucketed _),
-    "agg_salted_skew" -> (q_agg_salted_skew _),
-    "win_smooth_time" -> (q_win_smooth_time _),
-    "scan_csv" -> (q_scan_csv _),
-    "scan_jsonl" -> (q_scan_jsonl _),
-    "sink_compact" -> (q_sink_compact _),
-    "sink_zorder" -> (q_sink_zorder _),
-    "agg_resample_mean" -> (q_agg_resample_mean _),
-    "agg_resample_origin" -> (q_agg_resample_origin _),
-    "agg_resample_multi" -> (q_agg_resample_multi _),
-    "agg_scaler_fit" -> (q_agg_scaler_fit _),
-    "agg_metrics" -> (q_agg_metrics _),
-    "agg_threshold_sketch" -> (q_agg_threshold_sketch _),
-    "agg_threshold_pctl" -> (q_agg_threshold_pctl _),
-    "agg_distinct" -> (q_agg_distinct _),
-    "agg_grouping_sets" -> (q_agg_grouping_sets _),
-    "win_lookback" -> (q_win_lookback _),
-    "win_shift_forecast" -> (q_win_shift_forecast _),
-    "win_smooth" -> (q_win_smooth _),
-    "win_rank_topk" -> (q_win_rank_topk _),
-    "win_ffill" -> (q_win_ffill _),
-    "sort_time" -> (q_sort_time _),
-    "limit_head" -> (q_limit_head _),
-    "setop_union_years" -> (q_setop_union_years _),
-    "setop_except_periods" -> (q_setop_except_periods _),
-    "setop_intersect" -> (q_setop_intersect _),
-    "fn_ts" -> (q_fn_ts _),
-    "fn_math_anomaly" -> (q_fn_math_anomaly _),
-    "fn_math_anomaly_scaled" -> (q_fn_math_anomaly_scaled _),
-    "fn_string_tag" -> (q_fn_string_tag _),
-    "fn_json_props" -> (q_fn_json_props _),
-    "fn_multiply_by" -> (q_fn_multiply_by _),
-    "dedup_exact" -> (q_dedup_exact _),
-    "dedup_minhash_lsh" -> (q_dedup_minhash_lsh _),
-    "dedup_simhash" -> (q_dedup_simhash _),
-    "dedup_ngram_jaccard" -> (q_dedup_ngram_jaccard _),
-    "dedup_containment" -> (q_dedup_containment _),
-    "dedup_containment_incr" -> (q_dedup_containment_incr _),
-    "dedup_near_duplicates" -> (q_dedup_near_duplicates _),
-    "dedup_incremental" -> (q_dedup_incremental _),
-    "dedup_clusters" -> (q_dedup_clusters _),
-    "dedup_embed_cosine" -> (q_dedup_embed_cosine _),
-    "simsearch_topk" -> (q_simsearch_topk _),
-    "simsearch_lsh" -> (q_simsearch_lsh _),
-    "simsearch_knn_graph" -> (q_simsearch_knn_graph _),
-    "simsearch_knn_incr" -> (q_simsearch_knn_incr _),
-    "simsearch_int8" -> (q_simsearch_int8 _),
-    "text_langid" -> (q_text_langid _),
-    "text_quality" -> (q_text_quality _),
-    "text_gopher_quality" -> (q_text_gopher_quality _),
-    "text_tokens" -> (q_text_tokens _),
-    "text_fingerprint" -> (q_text_fingerprint _),
-    "text_scrub" -> (q_text_scrub _),
-    "text_topterms" -> (q_text_topterms _),
-    "text_langid_trained" -> (q_text_langid_trained _),
-    "text_nb_classifier" -> (q_text_nb_classifier _),
-    "text_bpe_tokens" -> (q_text_bpe_tokens _),
-    "pipeline_tokenize_pack" -> (q_pipeline_tokenize_pack _),
-    "text_perplexity" -> (q_text_perplexity _),
-    "sample_stratified" -> (q_sample_stratified _),
-    "sample_importance" -> (q_sample_importance _),
-    "sample_cap_per_key" -> (q_sample_cap_per_key _),
-    "sample_target_mix" -> (q_sample_target_mix _),
-    "text_decontaminate" -> (q_text_decontaminate _),
-    "text_compressibility" -> (q_text_compressibility _),
-    "pipeline_curation" -> (q_pipeline_curation _),
-    "sample_pack" -> (q_sample_pack _),
-    "simsearch_ivf" -> (q_simsearch_ivf _),
-    "simsearch_pq" -> (q_simsearch_pq _),
-    "simsearch_ivf_exact" -> (q_simsearch_ivf_exact _),
-    "win_interpolate" -> (q_win_interpolate _),
-    "win_cusum" -> (q_win_cusum _),
-    "stream_cusum" -> (q_stream_cusum _),
-    "win_autocorr" -> (q_win_autocorr _),
-    "stream_autocorr" -> (q_stream_autocorr _),
-    "agg_robust_zscore" -> (q_agg_robust_zscore _),
-    "text_repetition" -> (q_text_repetition _),
-    "text_pmi" -> (q_text_pmi _),
-    "text_novelty" -> (q_text_novelty _),
-    "agg_growth_rate" -> (q_agg_growth_rate _),
-    "text_textrank" -> (q_text_textrank _),
-    "text_pii_mask" -> (q_text_pii_mask _),
-    "dedup_semantic" -> (q_dedup_semantic _),
-    "dedup_bloom_incremental" -> (q_dedup_bloom_incremental _),
-    "win_ewma" -> (q_win_ewma _),
-    "stream_ewma" -> (q_stream_ewma _),
-    "win_bollinger" -> (q_win_bollinger _),
-    "win_rolling_median" -> (q_win_rolling_median _),
-    "agg_funnel" -> (q_agg_funnel _),
-    "agg_funnel_time" -> (q_agg_funnel_time _),
-    "agg_new_returning" -> (q_agg_new_returning _),
-    "agg_pareto" -> (q_agg_pareto _),
-    "win_hampel" -> (q_win_hampel _),
-    "agg_retention" -> (q_agg_retention _),
-    "sample_temperature" -> (q_sample_temperature _),
-    "sink_scd2" -> (q_sink_scd2 _),
-    "join_scd2_asof" -> (q_join_scd2_asof _),
-    "sink_time_travel" -> (q_sink_time_travel _),
-    "scan_jsonl_corrupt" -> (q_scan_jsonl_corrupt _),
-    "scan_jsonl_gz" -> (q_scan_jsonl_gz _),
-    "scan_json_multiline" -> (q_scan_json_multiline _),
-    "agg_active_users" -> (q_agg_active_users _),
-    "agg_ab_ttest" -> (q_agg_ab_ttest _),
-    "agg_gap_detect" -> (q_agg_gap_detect _),
-    "agg_streaks" -> (q_agg_streaks _),
-    "agg_transitions" -> (q_agg_transitions _),
-    "agg_markov_stationary" -> (q_agg_markov_stationary _),
-    "stream_transitions" -> (q_stream_transitions _),
-    "stream_funnel" -> (q_stream_funnel _),
-    "agg_window_funnel" -> (q_agg_window_funnel _),
-    "agg_cohort_value" -> (q_agg_cohort_value _),
-    "stream_gap_detect" -> (q_stream_gap_detect _),
-    "join_fuzzy" -> (q_join_fuzzy _),
-    "agg_hll_distinct" -> (q_agg_hll_distinct _),
-    "agg_heavyhitters" -> (q_agg_heavyhitters _),
-    "proj_unpivot" -> (q_proj_unpivot _),
-    "text_chunk" -> (q_text_chunk _),
-    "agg_diversity" -> (q_agg_diversity _),
-    "stream_resample" -> (q_stream_resample _),
-    "stream_session" -> (q_stream_session _),
-    "stream_dedup" -> (q_stream_dedup _),
-    "stream_score" -> (q_stream_score _),
-    "stream_heavyhitters" -> (q_stream_heavyhitters _),
-    "stream_threshold" -> (q_stream_threshold _),
-    "ml_pca_anomaly" -> (q_ml_pca_anomaly _),
-    "ml_isolation_forest" -> (q_ml_isolation_forest _),
-    "ml_adaboost" -> (q_ml_adaboost _),
-    "ml_anomaly_ensemble" -> (q_ml_anomaly_ensemble _),
-    "ml_autoencoder" -> (q_ml_autoencoder _),
-    "ml_autoencoder_sgd" -> (q_ml_autoencoder_sgd _),
-    "ml_autoencoder_seq" -> (q_ml_autoencoder_seq _),
-    "ml_rnn_autoencoder" -> (q_ml_rnn_autoencoder _),
-    "ml_ar_forecast" -> (q_ml_ar_forecast _),
-    "esn_forecast" -> (q_esn_forecast _),
-    "multimodal_features" -> (q_multimodal_features _),
-    "multimodal_phash_dedup" -> (q_multimodal_phash_dedup _),
-    "multimodal_phash_incr" -> (q_multimodal_phash_incr _),
-    "multimodal_decode" -> (q_multimodal_decode _),
-    "multimodal_wav_decode" -> (q_multimodal_wav_decode _),
-    "scan_orc" -> (q_scan_orc _),
-    "sink_upsert" -> (q_sink_upsert _),
-    "win_seasonal_decompose" -> (q_win_seasonal_decompose _),
-    "win_seasonal_outliers" -> (q_win_seasonal_outliers _),
-    "agg_schema_drift" -> (q_agg_schema_drift _),
-    "agg_session_stats" -> (q_agg_session_stats _),
-    "agg_basket_lift" -> (q_agg_basket_lift _),
-    "sample_split" -> (q_sample_split _),
-    "agg_effect_size" -> (q_agg_effect_size _),
-    "agg_seasonal_strength" -> (q_agg_seasonal_strength _),
-    "search_bm25" -> (q_search_bm25 _),
-    "dedup_substring" -> (q_dedup_substring _),
-    "agg_ks_drift" -> (q_agg_ks_drift _),
-    "agg_psi_drift" -> (q_agg_psi_drift _),
-    "ml_holt_winters" -> (q_ml_holt_winters _),
-    "simsearch_hybrid" -> (q_simsearch_hybrid _),
-    "stream_drift" -> (q_stream_drift _),
-    "dedup_substring_fast" -> (q_dedup_substring_fast _),
-    "dedup_paragraphs" -> (q_dedup_paragraphs _),
-    "stream_upsert" -> (q_stream_upsert _),
-    "sample_soft_dedup" -> (q_sample_soft_dedup _),
-    "agg_corr_matrix" -> (q_agg_corr_matrix _),
-    "agg_mahalanobis" -> (q_agg_mahalanobis _),
-    "stream_mahalanobis" -> (q_stream_mahalanobis _),
-    "stream_kalman" -> (q_stream_kalman _),
-    "win_drawdown" -> (q_win_drawdown _),
-    "agg_gini" -> (q_agg_gini _),
-    "agg_zipf_fit" -> (q_agg_zipf_fit _),
-    "agg_burstiness" -> (q_agg_burstiness _),
-    "agg_value_histogram" -> (q_agg_value_histogram _),
-    "ml_mase_baselines" -> (q_ml_mase_baselines _),
-    "agg_interval_union" -> (q_agg_interval_union _),
-    "agg_rfm" -> (q_agg_rfm _),
-    "agg_acf" -> (q_agg_acf _),
-    "agg_user_segments" -> (q_agg_user_segments _),
-    "graph_pagerank" -> (q_graph_pagerank _),
-    "graph_triangles" -> (q_graph_triangles _),
-    "graph_cc" -> (q_graph_cc _),
-    "graph_degree" -> (q_graph_degree _),
-    "graph_bfs" -> (q_graph_bfs _),
-    "graph_jaccard_nbrs" -> (q_graph_jaccard_nbrs _),
-    "simsearch_mmr" -> (q_simsearch_mmr _),
-    "simsearch_recall_audit" -> (q_simsearch_recall_audit _),
-    "stream_sliding" -> (q_stream_sliding _),
-    "win_rsi" -> (q_win_rsi _),
-    "win_percent_rank" -> (q_win_percent_rank _),
-    "win_peaks" -> (q_win_peaks _),
-    "agg_hod_profile" -> (q_agg_hod_profile _),
-    "win_log_return" -> (q_win_log_return _),
-    "agg_benford" -> (q_agg_benford _),
-    "stream_asof" -> (q_stream_asof _),
-    "sink_partitioned" -> (q_sink_partitioned _),
-    "scan_pruned_manifest" -> (q_scan_pruned_manifest _),
-    "agg_resample_ohlc" -> (q_agg_resample_ohlc _),
-    "stream_ohlc" -> (q_stream_ohlc _),
-    "text_tfidf" -> (q_text_tfidf _),
-    "stream_seasonal" -> (q_stream_seasonal _),
-    "win_rolling_corr" -> (q_win_rolling_corr _),
-    "agg_trend_mk" -> (q_agg_trend_mk _),
-    "agg_trend_sen" -> (q_agg_trend_sen _),
-    "ml_ols_trend" -> (q_ml_ols_trend _),
-    "ml_changepoint" -> (q_ml_changepoint _),
-    "agg_entropy" -> (q_agg_entropy _),
-    "text_readability" -> (q_text_readability _)
-  )
-
   // Shared oracle fragments
 
   /** Generated oracle for agg_dtw_profiles: the Sakoe-Chiba banded DTW
@@ -7703,15 +6783,6 @@ object SparkEntry {
     (0 until 60).map(b =>
       s"(CASE WHEN sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) > 0 THEN (1::BIGINT << $b) ELSE 0 END)"
     ).mkString(" + ")
-
-  /** Sequential double-fold list dot product — DuckDB's list_sum folds
-    * left-to-right exactly like Spark's `aggregate`, so the doubles are
-    * bit-identical (see Similarity.dot).
-    */
-  private def dotSql(a: String, b: String) =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)))"
-  private def normSqSql(a: String) =
-    s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))"
 
   /** k-NN classifier prediction CTE chain (ends in
     * `predk(qid, label_true, label_pred)`) — shared verbatim by the
@@ -7920,365 +6991,6 @@ object SparkEntry {
       |    / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
       |FROM c ORDER BY 1, 2""".stripMargin
 
-  /** Brute-force cosine top-k oracle — shared by simsearch_topk and
-    * simsearch_ivf_exact (IVF with nProbe = nLists is exhaustive, so the
-    * two queries are value-identical by construction).
-    */
-  /** MMR oracle (mirrors q_simsearch_mmr): top-50 candidates, full
-    * pairwise sims, ten unrolled greedy steps each picking the argmax of
-    * the identical unrounded score with id tie-break.
-    */
-  private def mmrOracle: String = {
-    val steps = (2 to 10).map { k =>
-      s"""s$k AS (SELECT c.id, $k AS rank, 0.7 * c.rel - 0.3 * m.mx AS mmr
-         |  FROM cand c JOIN (SELECT ida, max(sim) AS mx FROM ps
-         |      WHERE idb IN (SELECT id FROM u${k - 1}) GROUP BY 1) m
-         |    ON m.ida = c.id
-         |  WHERE c.id NOT IN (SELECT id FROM u${k - 1})
-         |  ORDER BY 0.7 * c.rel - 0.3 * m.mx DESC, c.id LIMIT 1),
-         |u$k AS MATERIALIZED (SELECT * FROM u${k - 1} UNION ALL SELECT * FROM s$k)"""
-    }.mkString(",\n|")
-    s"""WITH dots AS (
-       |  SELECT c.vec_id AS id, c.embedding,
-       |    ${dotSql("q.embedding", "c.embedding")} AS dot,
-       |    ${normSqSql("q.embedding")} AS nq,
-       |    ${normSqSql("c.embedding")} AS nc
-       |  FROM embeddings q, embeddings c
-       |  WHERE q.vec_id = 0 AND c.vec_id <> 0),
-       |cand AS MATERIALIZED (SELECT id, embedding, dot / sqrt(nq * nc) AS rel
-       |  FROM dots ORDER BY dot / sqrt(nq * nc) DESC, id LIMIT 50),
-       |ps AS MATERIALIZED (SELECT a.id AS ida, b.id AS idb,
-       |    ${dotSql("a.embedding", "b.embedding")}
-       |      / sqrt(NULLIF(${normSqSql("a.embedding")}
-       |          * ${normSqSql("b.embedding")}, 0)) AS sim
-       |  FROM cand a JOIN cand b ON a.id <> b.id),
-       |s1 AS (SELECT id, 1 AS rank, rel AS mmr FROM cand
-       |  ORDER BY rel DESC, id LIMIT 1),
-       |u1 AS MATERIALIZED (SELECT * FROM s1),
-       |$steps
-       |SELECT CAST(rank AS BIGINT) AS rank, id, round(mmr, 6) AS mmr
-       |FROM u10 ORDER BY rank""".stripMargin
-  }
-
-  private def topkOracleSql: String =
-    s"""WITH dots AS (
-       | SELECT q.vec_id AS qid, c.vec_id AS nid,
-       |  ${dotSql("q.embedding", "c.embedding")} AS dot,
-       |  ${normSqSql("q.embedding")} AS nq,
-       |  ${normSqSql("c.embedding")} AS nc
-       | FROM embeddings q, embeddings c WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-       |ranked AS (
-       | SELECT qid, nid, dot/sqrt(nq*nc) AS cos_sim,
-       |  row_number() OVER (PARTITION BY qid ORDER BY dot/sqrt(nq*nc) DESC, nid) AS rnk
-       | FROM dots)
-       |SELECT qid, nid, cos_sim, rnk FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
-
-  /** The shared `v/b/bl` CTE prefix reproducing HyperplaneBuckets' exact
-    * per-table bucket longs in SQL (plane literals inlined) — used by the
-    * lsh-pairs and knn-graph oracles.
-    */
-  private def lshBucketCtes(nTables: Int, nPlanes: Int, dim: Int): String =
-    lshBucketCtes(Seq.fill(nTables)(nPlanes), dim)
-
-  /** Schedule-parameterized form (round 14, the r13 verdict's #6):
-    * table t sums exactly `schedule(t)` sign bits — the SQL twin of
-    * [[graft.ops.Similarity.autoPlanesSchedule]]'s masked expression
-    * (bit b of table t comes from plane (t, b), so summing the first
-    * p_t bits IS the masked bucket). A uniform all-8s schedule emits
-    * byte-identical text to the historical static oracles, so every
-    * below-floor fixture's oracle SQL — and hash — is untouched.
-    */
-  private def lshBucketCtes(schedule: Seq[Int], dim: Int): String = {
-    def planeLit(t: Int, p: Int): String =
-      Similarity.planeVector(t, p, dim).map(_.toString).mkString("[", ", ", "]")
-    def bucketSql(t: Int): String = (0 until schedule(t)).map { p =>
-      s"(CASE WHEN ${dotSql("vd", planeLit(t, p))} >= 0 THEN (${1L << p})::BIGINT ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = schedule.indices.map(t => s"${bucketSql(t)} AS bk$t").mkString(", ")
-    val blUnion = schedule.indices
-      .map(t => s"SELECT vec_id, $t AS tbl, bk$t AS bucket FROM b")
-      .mkString(" UNION ALL ")
-    s"""v AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd FROM embeddings),
-       |b AS (SELECT vec_id, $bucketCols FROM v),
-       |bl AS ($blUnion)""".stripMargin
-  }
-
-  /** Uniform 8×8 schedule — the historical static-oracle setting and
-    * the [[graft.ops.Similarity.autoPlanesSchedule]] floor value; every
-    * LSH-family oracle builder defaults to it so the below-floor text
-    * stays byte-identical to the pre-schedule static SQL.
-    */
-  private val u8: Seq[Int] = Seq.fill(8)(8)
-
-  private def lshOracleSql(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id < b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.vec_a, c.vec_b,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
-       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
-       |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b)
-       |SELECT vec_a, vec_b, round(dot / sqrt(naa * nbb), 6) AS cos_sim
-       |FROM sc WHERE dot / sqrt(naa * nbb) >= 0.3
-       |ORDER BY vec_a, vec_b""".stripMargin
-  }
-
-  /** Recall-audit oracle: the lsh CTEs + an exact all-pairs count at
-    * the same threshold; same subset argument, same count ratio.
-    */
-  private def recallAuditOracle(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id < b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.vec_a, c.vec_b,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
-       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
-       |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b),
-       |lp AS (SELECT count(*) AS n_lsh FROM sc
-       |       WHERE dot / sqrt(NULLIF(naa * nbb, 0)) >= 0.4),
-       |ex AS (SELECT count(*) AS n_exact
-       |       FROM embeddings a3 JOIN embeddings b3
-       |         ON a3.vec_id < b3.vec_id
-       |       WHERE ${dotSql("a3.embedding", "b3.embedding")}
-       |         / sqrt(NULLIF(${normSqSql("a3.embedding")}
-       |             * ${normSqSql("b3.embedding")}, 0)) >= 0.4)
-       |SELECT n_exact, n_lsh,
-       |  round(CAST(n_lsh AS DOUBLE) / NULLIF(CAST(n_exact AS DOUBLE), 0), 6)
-       |    AS recall
-       |FROM ex CROSS JOIN lp""".stripMargin
-  }
-
-  /** k-NN graph oracle: identical plane literals → identical buckets →
-    * identical candidate sets; the per-source rank then agrees because
-    * the cosine arithmetic is the same IEEE sequence on both sides and
-    * ties break by neighbor id.
-    */
-  /** kNN-graph edge CTE chain (ends in `e(src, dst)`) — the exact
-    * simsearch_knn_graph edge set, shared by the graph_cc /
-    * graph_degree oracles (pagerank/triangles inline the same text).
-    */
-  private def knnEdgeCtes(schedule: Seq[Int] = u8): String =
-    s"""${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc0 AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |rk0 AS (SELECT qid, nid, dot, naa, nbb,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc0),
-       |e AS (SELECT qid AS src, nid AS dst,
-       |        1.0 - round(dot / sqrt(naa * nbb), 6) AS dist
-       |      FROM rk0 WHERE rnk <= 3)""".stripMargin
-
-  private def knnGraphOracleSql(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n na ON na.vec_id = c.qid
-       |       JOIN n nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid, dot / sqrt(naa * nbb) AS cr,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc)
-       |SELECT qid, nid, round(cr, 6) AS cos_sim, rnk
-       |FROM r WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin
-  }
-
-  /** Graph-family oracles over the kNN edge CTEs — factored into
-    * schedule-parameterized builders (round 14, r13 verdict #6) so each
-    * query can PUBLISH the fixture's scheduled-bits version at run time;
-    * the static map entries call the uniform default (byte-identical to
-    * the historical text).
-    */
-  private def graphCcOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH RECURSIVE ${knnEdgeCtes(schedule)},
-       |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-       |nod AS (SELECT vec_id AS id FROM embeddings),
-       |reach(node, label) AS (
-       |  SELECT id, id FROM nod
-       |  UNION
-       |  SELECT und.dst, r2.label FROM reach r2 JOIN und ON und.src = r2.node),
-       |comp AS (SELECT node AS vec_id, min(label) AS comp
-       |  FROM reach GROUP BY 1),
-       |sz AS (SELECT comp, count(*) AS n_members FROM comp GROUP BY 1)
-       |SELECT c.vec_id, c.comp, s.n_members
-       |FROM comp c JOIN sz s USING (comp) ORDER BY vec_id""".stripMargin
-
-  private def graphBfsOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH RECURSIVE ${knnEdgeCtes(schedule)},
-       |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-       |seeds AS (SELECT vec_id FROM embeddings WHERE label = 0),
-       |walk(node, d) AS (
-       |  SELECT vec_id, 0 FROM seeds
-       |  UNION
-       |  SELECT und.dst, w.d + 1 FROM walk w JOIN und ON und.src = w.node
-       |  WHERE w.d < 10),
-       |best AS (SELECT node AS vec_id, min(d) AS hops FROM walk GROUP BY 1)
-       |SELECT em.vec_id, CAST(COALESCE(b.hops, -1) AS BIGINT) AS hops
-       |FROM embeddings em LEFT JOIN best b USING (vec_id)
-       |ORDER BY vec_id""".stripMargin
-
-  private def graphJaccardNbrsOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${knnEdgeCtes(schedule)},
-       |und AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-       |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
-       |ix AS (SELECT e1.src AS a, e2.src AS b, count(*) AS inter
-       |  FROM und e1 JOIN und e2 ON e1.dst = e2.dst AND e1.src < e2.src
-       |  GROUP BY 1, 2),
-       |j AS (SELECT ix.a, ix.b, CAST(ix.inter AS BIGINT) AS inter,
-       |    round(CAST(ix.inter AS DOUBLE)
-       |      / CAST(da.deg + db.deg - ix.inter AS DOUBLE), 6) AS jaccard,
-       |    COALESCE(ed.is_edge, FALSE) AS is_edge
-       |  FROM ix JOIN deg da ON da.src = ix.a JOIN deg db ON db.src = ix.b
-       |  LEFT JOIN (SELECT src AS a, dst AS b, TRUE AS is_edge FROM und) ed
-       |    ON ed.a = ix.a AND ed.b = ix.b)
-       |SELECT a, b, inter, jaccard, is_edge FROM j WHERE jaccard >= 0.4
-       |ORDER BY a, b""".stripMargin
-
-  private def graphDegreeOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${knnEdgeCtes(schedule)},
-       |outd AS (SELECT src AS vec_id, count(*) AS out_deg FROM e GROUP BY 1),
-       |ind AS (SELECT dst AS vec_id, count(*) AS in_deg FROM e GROUP BY 1),
-       |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |  FROM e),
-       |undd AS (SELECT v AS vec_id, count(*) AS und_deg FROM (
-       |    SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY 1)
-       |SELECT em.vec_id, COALESCE(out_deg, 0) AS out_deg,
-       |  COALESCE(in_deg, 0) AS in_deg, COALESCE(und_deg, 0) AS und_deg
-       |FROM embeddings em LEFT JOIN outd USING (vec_id)
-       |LEFT JOIN ind USING (vec_id) LEFT JOIN undd USING (vec_id)
-       |ORDER BY vec_id""".stripMargin
-
-  private def lofOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${knnEdgeCtes(schedule)},
-       |kd AS (SELECT src, max(dist) AS kdist FROM e GROUP BY 1),
-       |reach AS (SELECT e.src AS p,
-       |    CAST(floor(greatest(kd.kdist, e.dist) * 1000000.0) AS BIGINT)
-       |      AS reach_ppm
-       |  FROM e JOIN kd ON kd.src = e.dst),
-       |lrd AS (SELECT p, CAST(count(*) AS BIGINT) AS n,
-       |    (CAST(count(*) AS BIGINT) * 1000000000000)
-       |      // greatest(CAST(sum(reach_ppm) AS BIGINT), 1) AS lrd_ppm
-       |  FROM reach GROUP BY 1),
-       |sl AS (SELECT e.src AS p, CAST(sum(lo.lrd_ppm) AS BIGINT) AS sl
-       |  FROM e JOIN lrd lo ON lo.p = e.dst GROUP BY 1)
-       |SELECT l.p AS vec_id, l.n AS n_nbr,
-       |  round(CAST(sl.sl AS DOUBLE) / CAST(l.n * l.lrd_ppm AS DOUBLE), 6)
-       |    AS lof
-       |FROM lrd l JOIN sl USING (p) ORDER BY vec_id""".stripMargin
-
-  /** PageRank oracle: the knn-graph CTEs verbatim (same edges), then ten
-    * UNROLLED power-iteration CTEs (a recursive CTE cannot aggregate in
-    * its recursive member) replaying the identical integer arithmetic.
-    */
-  private def pagerankOracle(schedule: Seq[Int] = u8): String = {
-    val iters = (1 to 10).map { k =>
-      s"""p$k AS (SELECT nn.vec_id,
-         |    150000 + (850 * COALESCE(f.inflow, 0)) // 1000 AS pr
-         |  FROM (SELECT vec_id FROM embeddings) nn
-         |  LEFT JOIN (SELECT ed.dst AS vec_id,
-         |      CAST(sum(p${k - 1}.pr // ed.deg) AS BIGINT) AS inflow
-         |    FROM ed JOIN p${k - 1} ON p${k - 1}.vec_id = ed.src
-         |    GROUP BY 1) f USING (vec_id))"""
-    }.mkString(",\n|")
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
-       |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-       |ed AS (SELECT e.src, e.dst, d.deg FROM e JOIN d USING (src)),
-       |p0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS pr FROM embeddings),
-       |$iters
-       |SELECT vec_id, CAST(pr AS BIGINT) AS pr FROM p10
-       |ORDER BY vec_id""".stripMargin
-  }
-
-  /** Triangle/clustering oracle: the knn CTEs verbatim, symmetrized
-    * ordered edges, the identical a<b<c enumeration and corner credits.
-    */
-  private def trianglesOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
-       |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |        FROM e),
-       |deg AS (SELECT v, count(*) AS deg FROM (
-       |          SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-       |        GROUP BY 1),
-       |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |        FROM und e1 JOIN und e2 ON e2.a = e1.b
-       |        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-       |cr AS (SELECT v, count(*) AS triangles FROM (
-       |          SELECT x AS v FROM tri UNION ALL SELECT y FROM tri
-       |          UNION ALL SELECT z FROM tri)
-       |        GROUP BY 1)
-       |SELECT deg.v AS vec_id, deg.deg,
-       |  COALESCE(cr.triangles, 0) AS triangles,
-       |  round(2.0 * CAST(COALESCE(cr.triangles, 0) AS DOUBLE)
-       |    / NULLIF(CAST(deg.deg * (deg.deg - 1) AS DOUBLE), 0), 6)
-       |    AS clustering
-       |FROM deg LEFT JOIN cr ON cr.v = deg.v
-       |ORDER BY vec_id""".stripMargin
-
   private val bucket10m = "time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP))"
   private val bucket1h = "time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))"
   private val wide1h =
@@ -8313,31 +7025,41 @@ object SparkEntry {
       |SELECT lang, rnk, item, est FROM r WHERE rnk < 10
       |ORDER BY lang, rnk""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  // ---------------------------------------------------------------------
+  // The contract maps
+  // ---------------------------------------------------------------------
+
+  /** This file's query table: one [[graft.queries.Query]] per query not
+    * yet moved to a family file, each with its build function and its
+    * DuckDB oracle. `Published()` marks an oracle only the query itself
+    * can write (fitted parameters, a persisted artifact; see
+    * [[graft.queries.Oracle.Published]]).
+    */
+  private val entryQueries: Seq[Query] = Seq(
     // sketch-guarantee oracles (round 10): the exact side is SQL, the
     // sketch side asserts its published bounds as booleans the oracle
     // pins TRUE — deterministic on fixed data, so a sketch regression
     // hash-fails the row (see the query scaladocs).
-    "agg_countmin" ->
+    Query("agg_countmin", q_agg_countmin, Sql(
       """WITH probes AS (SELECT CAST(unnest(range(0, 20)) AS INTEGER) AS user_id),
         |ex AS (SELECT CAST(user_id AS INTEGER) AS user_id, count(*) AS exact
         |       FROM events WHERE user_id BETWEEN 0 AND 19 GROUP BY 1)
         |SELECT p.user_id, CAST(coalesce(ex.exact, 0) AS BIGINT) AS exact,
         |  TRUE AS one_sided, TRUE AS within_eps
-        |FROM probes p LEFT JOIN ex USING (user_id) ORDER BY user_id""".stripMargin,
-    "agg_hll_distinct" ->
+        |FROM probes p LEFT JOIN ex USING (user_id) ORDER BY user_id""".stripMargin)),
+    Query("agg_hll_distinct", q_agg_hll_distinct, Sql(
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS exact_parts,
         |  count(DISTINCT l_suppkey) AS exact_supps,
         |  count(*) AS n,
         |  TRUE AS parts_within_3rsd, TRUE AS supps_within_3rsd
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_heavyhitters" -> heavyHittersOracleSql,
-    "stream_heavyhitters" -> heavyHittersOracleSql,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_heavyhitters", q_agg_heavyhitters, Sql(heavyHittersOracleSql)),
+    Query("stream_heavyhitters", q_stream_heavyhitters, Sql(heavyHittersOracleSql)),
     // BPE reconstruction identity: the Spark side hashes the sorted
     // reconstructed words FROM THE EMITTED TOKEN LISTS; this side hashes
     // the raw words — equal only if the encoder round-trips every word
-    "text_bpe_tokens" ->
+    Query("text_bpe_tokens", q_text_bpe_tokens, Sql(
       """WITH w AS (SELECT doc_id,
         |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |  FROM documents),
@@ -8347,11 +7069,11 @@ object SparkEntry {
         |  FROM nz GROUP BY doc_id)
         |SELECT d.doc_id, CAST(coalesce(a.n_words, 0) AS BIGINT) AS n_words,
         |  a.recon_hash, TRUE AS bpe_in_bounds
-        |FROM documents d LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""".stripMargin,
+        |FROM documents d LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""".stripMargin)),
     // isotonic regression by its minimax characterization over the bin
     // table: fit(i) = max_{j<=i} min_{k>=i} avg(j..k), every candidate
     // one double division of exact integer sums (see q_ml_isotonic)
-    "ml_isotonic" ->
+    Query("ml_isotonic", q_ml_isotonic, Sql(
       """WITH sc AS (SELECT
         |    round(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
         |        w -> w IN ('the','a','of','to','and'))) * 1.0
@@ -8373,8 +7095,8 @@ object SparkEntry {
         |SELECT s.bin, round(s.bin * 0.05, 6) AS score_lo, s.n, s.n_pos,
         |  round(CAST(s.n_pos AS DOUBLE) / CAST(s.n AS DOUBLE), 6) AS rate,
         |  round(f.calibrated, 6) AS calibrated
-        |FROM stats s JOIN fit f USING (bin) ORDER BY s.bin""".stripMargin,
-    "join_geo_radius" -> {
+        |FROM stats s JOIN fit f USING (bin) ORDER BY s.bin""".stripMargin)),
+    Query("join_geo_radius", q_join_geo_radius, Sql {
       val (cla, clo) = geoE4Sql("c", "c_custkey")
       val (sla, slo) = geoE4Sql("s", "s_suppkey")
       s"""WITH c AS (SELECT c_custkey AS cust, $cla AS lat_e4, $clo AS lon_e4
@@ -8387,8 +7109,8 @@ object SparkEntry {
          |  FROM c, s)
          |SELECT cust, supp, round(dist_km, 6) AS dist_km
          |FROM p WHERE dist_km < 500.0 ORDER BY cust, supp""".stripMargin
-    },
-    "join_geo_radius_sql" -> {
+    }),
+    Query("join_geo_radius_sql", q_join_geo_radius_sql, Sql {
       val (cla, clo) = geoE4Sql("c", "c_custkey")
       val (sla, slo) = geoE4Sql("s", "s_suppkey")
       s"""WITH c AS (SELECT c_custkey AS cust, $cla AS lat_e4, $clo AS lon_e4
@@ -8401,8 +7123,8 @@ object SparkEntry {
          |  FROM c, s)
          |SELECT cust, supp, round(dist_km, 6) AS dist_km
          |FROM p WHERE dist_km < 800.0 ORDER BY cust, supp""".stripMargin
-    },
-    "join_geo_knn" -> {
+    }),
+    Query("join_geo_knn", q_join_geo_knn, Sql {
       val (cla, clo) = geoE4Sql("c", "c_custkey")
       val (sla, slo) = geoE4Sql("s", "s_suppkey")
       s"""WITH c AS (SELECT c_custkey AS cust, $cla AS lat_e4, $clo AS lon_e4
@@ -8418,8 +7140,8 @@ object SparkEntry {
          |  FROM d)
          |SELECT cust, supp, round(dist_km, 6) AS dist_km
          |FROM r WHERE rn = 1 ORDER BY cust""".stripMargin
-    },
-    "agg_geo_density" -> {
+    }),
+    Query("agg_geo_density", q_agg_geo_density, Sql {
       val (ula, ulo) = geoE4Sql("u", "user_id")
       s"""WITH u AS (SELECT DISTINCT user_id FROM events),
          |g AS (SELECT user_id, $ula AS lat_e4, $ulo AS lon_e4 FROM u),
@@ -8433,8 +7155,8 @@ object SparkEntry {
          |  round(CAST(sx AS DOUBLE) / CAST(n_users AS DOUBLE) / 10000.0, 6)
          |    AS ctr_lon
          |FROM cells ORDER BY n_users DESC, cell_y, cell_x LIMIT 15""".stripMargin
-    },
-    "agg_moments" ->
+    }),
+    Query("agg_moments", q_agg_moments, Sql(
       """WITH b AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 100000) AS c
@@ -8457,11 +7179,11 @@ object SparkEntry {
         |    / (CAST(ss2 AS DOUBLE) * sqrt(CAST(ss2 AS DOUBLE))), 6) AS skewness,
         |  round(CAST(ss4 AS DOUBLE)
         |    / (CAST(ss2 AS DOUBLE) * CAST(ss2 AS DOUBLE)) - 3.0, 6) AS kurtosis
-        |FROM ss ORDER BY event_type""".stripMargin,
-    "ml_knn_classify" ->
+        |FROM ss ORDER BY event_type""".stripMargin)),
+    Query("ml_knn_classify", q_ml_knn_classify, Sql(
       s"""WITH $knnPredCtes
-         |SELECT qid, label_true, label_pred FROM predk ORDER BY qid""".stripMargin,
-    "ml_confusion_prf" ->
+         |SELECT qid, label_true, label_pred FROM predk ORDER BY qid""".stripMargin)),
+    Query("ml_confusion_prf", q_ml_confusion_prf, Sql(
       s"""WITH $knnPredCtes,
          |cp AS (SELECT label_true, label_pred, count(*) AS n
          |  FROM predk GROUP BY 1, 2),
@@ -8486,8 +7208,8 @@ object SparkEntry {
          |        + coalesce(fn, 0) AS DOUBLE), 0), 6) AS f1
          |FROM cls c LEFT JOIN tpa USING (cls) LEFT JOIN fpa USING (cls)
          |LEFT JOIN fna USING (cls)
-         |ORDER BY cls""".stripMargin,
-    "ml_auc_roc" ->
+         |ORDER BY cls""".stripMargin)),
+    Query("ml_auc_roc", q_ml_auc_roc, Sql(
       s"""WITH $probeScoredCtes,
          |r AS (SELECT cls, pos,
          |    row_number() OVER (PARTITION BY cls ORDER BY score, vec_id)
@@ -8510,8 +7232,8 @@ object SparkEntry {
          |    / (CAST(np AS DOUBLE) * CAST(nn AS DOUBLE)), 6) AS auc,
          |  round(CAST(sppm AS DOUBLE) / CAST(np AS DOUBLE) / 1000000.0, 6)
          |    AS avg_prec
-         |FROM g ORDER BY cls""".stripMargin,
-    "agg_spearman" ->
+         |FROM g ORDER BY cls""".stripMargin)),
+    Query("agg_spearman", q_agg_spearman, Sql(
       """WITH b AS (SELECT event_type,
         |    CAST(CAST(value AS DECIMAL(18,6)) * 100 AS BIGINT) AS c,
         |    CAST(hour(ts) AS BIGINT) AS h
@@ -8539,8 +7261,8 @@ object SparkEntry {
         |  round(CAST(n * sxy - sx * sy AS DOUBLE)
         |    / nullif(sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
         |        * sqrt(CAST(n * syy - sy * sy AS DOUBLE)), 0), 6) AS rho
-        |FROM g ORDER BY event_type""".stripMargin,
-    "agg_levene" -> {
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Query("agg_levene", q_agg_levene, Sql {
       val term = (0 to 3).map(i =>
         s"CAST(s$i AS DOUBLE) * CAST(s$i AS DOUBLE) / nullif(CAST(n$i AS DOUBLE), 0)")
         .mkString(" + ")
@@ -8573,8 +7295,8 @@ object SparkEntry {
          |  FROM f JOIN a ON a.event_type = f.event_type)
          |SELECT event_type, nn AS n, round(w, 6) AS w_stat
          |FROM g2 ORDER BY event_type""".stripMargin
-    },
-    "agg_runs_test" ->
+    }),
+    Query("agg_runs_test", q_agg_runs_test, Sql(
       """WITH b AS (SELECT event_type, ts, event_id,
         |    CAST(CAST(value AS DECIMAL(18,6)) * 100 AS BIGINT) AS c
         |  FROM events WHERE value IS NOT NULL),
@@ -8601,8 +7323,8 @@ object SparkEntry {
         |        * (CAST(2 * n1 * n0 AS DOUBLE) - CAST(n1 + n0 AS DOUBLE))
         |        / (CAST(n1 + n0 AS DOUBLE) * CAST(n1 + n0 AS DOUBLE)
         |          * (CAST(n1 + n0 AS DOUBLE) - 1.0))), 0), 6) AS z
-        |FROM a ORDER BY event_type""".stripMargin,
-    "agg_uplift" ->
+        |FROM a ORDER BY event_type""".stripMargin)),
+    Query("agg_uplift", q_agg_uplift, Sql(
       """WITH u AS (SELECT user_id,
         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
         |  FROM events GROUP BY 1),
@@ -8621,8 +7343,8 @@ object SparkEntry {
         |  round(CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE), 6) AS rate_c,
         |  round(CAST(conv_t AS DOUBLE) / CAST(n_t AS DOUBLE)
         |    - CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE), 6) AS uplift
-        |FROM g ORDER BY segment""".stripMargin,
-    "search_boolean" ->
+        |FROM g ORDER BY segment""".stripMargin)),
+    Query("search_boolean", q_search_boolean, Sql(
       """WITH w AS (SELECT doc_id,
         |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |  FROM documents),
@@ -8637,8 +7359,8 @@ object SparkEntry {
         |  FROM f GROUP BY 1)
         |SELECT doc_id, n_hash, n_merge FROM g
         |WHERE n_hash > 0 AND n_merge > 0 AND n_slow = 0
-        |ORDER BY doc_id""".stripMargin,
-    "agg_top_paths" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("agg_top_paths", q_agg_top_paths, Sql(
       """WITH r AS (SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
         |      AS rn
@@ -8649,8 +7371,8 @@ object SparkEntry {
         |    max(CASE WHEN rn = 3 THEN event_type END) AS e3
         |  FROM r WHERE rn <= 3 GROUP BY 1)
         |SELECT concat_ws('>', e1, e2, e3) AS path, count(*) AS n_users
-        |FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-    "agg_skyline" ->
+        |FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 20""".stripMargin)),
+    Query("agg_skyline", q_agg_skyline, Sql(
       """WITH per AS (SELECT user_id,
         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 100 AS BIGINT))
         |      AS BIGINT) AS v,
@@ -8665,8 +7387,8 @@ object SparkEntry {
         |  n AS n_events
         |FROM sk
         |WHERE (mx_strict IS NULL OR mx_strict < n) AND mx_tie = n
-        |ORDER BY user_id""".stripMargin,
-    "search_phrase" ->
+        |ORDER BY user_id""".stripMargin)),
+    Query("search_phrase", q_search_phrase, Sql(
       """WITH w AS (SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws
         |  FROM documents),
@@ -8674,9 +7396,8 @@ object SparkEntry {
         |      i -> ws[i] = 'hash' AND ws[i + 1] = 'join')) AS pos
         |  FROM w WHERE len(ws) >= 2)
         |SELECT doc_id, count(*) AS n_hits, CAST(min(pos) AS BIGINT) AS first_pos
-        |FROM m GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "ml_lof" -> lofOracle(),
-    "stream_geo_fence" -> {
+        |FROM m GROUP BY 1 ORDER BY doc_id""".stripMargin)),
+    Query("stream_geo_fence", q_stream_geo_fence, Sql {
       val (ula, ulo) = geoE4Sql("u", "user_id")
       val cy = triE4Sql("tc", "s_suppkey", 1, 1000000L)
       val cx = triE4Sql("tc", "s_suppkey", 17, 3400000L)
@@ -8696,8 +7417,8 @@ object SparkEntry {
          |WHERE (d1 >= 0 AND d2 >= 0 AND d3 >= 0)
          |   OR (d1 <= 0 AND d2 <= 0 AND d3 <= 0)
          |ORDER BY event_id, tri_id""".stripMargin
-    },
-    "join_geo_polygon" -> {
+    }),
+    Query("join_geo_polygon", q_join_geo_polygon, Sql {
       val (ula, ulo) = geoE4Sql("u", "user_id")
       val cy = triE4Sql("tc", "s_suppkey", 1, 1000000L)
       val cx = triE4Sql("tc", "s_suppkey", 17, 3400000L)
@@ -8717,8 +7438,8 @@ object SparkEntry {
          |WHERE (d1 >= 0 AND d2 >= 0 AND d3 >= 0)
          |   OR (d1 <= 0 AND d2 <= 0 AND d3 <= 0)
          |ORDER BY user_id, tri_id""".stripMargin
-    },
-    "ml_ols_multi" -> {
+    }),
+    Query("ml_ols_multi", q_ml_ols_multi, Sql {
       def det3Sql(a: String*): String =
         s"${a(0)}*(${a(4)}*${a(8)} - ${a(5)}*${a(7)})" +
           s" - ${a(1)}*(${a(3)}*${a(8)} - ${a(5)}*${a(6)})" +
@@ -8749,8 +7470,8 @@ object SparkEntry {
          |  round(CAST(($det2) AS DOUBLE) / CAST(($det) AS DOUBLE) / 100.0, 6)
          |    AS beta2
          |FROM g ORDER BY event_type""".stripMargin
-    },
-    "ml_dbscan" -> {
+    }),
+    Query("ml_dbscan", q_ml_dbscan, Sql {
       val (cla, clo) = geoE4Sql("c", "c_custkey")
       s"""WITH RECURSIVE c AS (SELECT c_custkey AS cust, $cla AS lat_e4,
          |    $clo AS lon_e4 FROM customer WHERE c_custkey <= 4500),
@@ -8781,8 +7502,8 @@ object SparkEntry {
          |  FROM c WHERE cust NOT IN (SELECT cust FROM comp)
          |    AND cust NOT IN (SELECT cust FROM border)
          |ORDER BY cust""".stripMargin
-    },
-    "ml_calibration" ->
+    }),
+    Query("ml_calibration", q_ml_calibration, Sql(
       s"""WITH $probeScoredCtes,
          |b AS (SELECT cls, pos,
          |    least(CAST(floor(((score + 1.0) / 2.0) * 10.0) AS BIGINT), 9)
@@ -8794,8 +7515,8 @@ object SparkEntry {
          |    AS mean_score,
          |  round(CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS DOUBLE)
          |    / count(*), 6) AS frac_pos
-         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "join_entity_jw" ->
+         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("join_entity_jw", q_join_entity_jw, Sql(
       """WITH n AS (SELECT DISTINCT p_name AS name FROM part),
         |p AS (SELECT a.name AS name_a, b.name AS name_b,
         |    jaro_winkler_similarity(a.name, b.name) AS s
@@ -8803,8 +7524,8 @@ object SparkEntry {
         |    ON split_part(a.name, ' ', 2) = split_part(b.name, ' ', 2)
         |    AND a.name < b.name)
         |SELECT name_a, name_b, round(s, 6) AS jw FROM p
-        |WHERE s >= 0.8 ORDER BY name_a, name_b""".stripMargin,
-    "agg_kaplan_meier" ->
+        |WHERE s >= 0.8 ORDER BY name_a, name_b""".stripMargin)),
+    Query("agg_kaplan_meier", q_agg_kaplan_meier, Sql(
       """WITH u AS (SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS f,
         |    max(CAST(ts AS TIMESTAMP)) AS l FROM events GROUP BY 1),
         |mx AS (SELECT max(CAST(ts AS TIMESTAMP)) AS study_end FROM events),
@@ -8824,8 +7545,8 @@ object SparkEntry {
         |  round(sum(CAST(n_events AS DOUBLE) / n_risk)
         |    OVER (ORDER BY dur_days ASC
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS cumhaz
-        |FROM r WHERE n_events > 0 ORDER BY dur_days""".stripMargin,
-    "ml_ecod" ->
+        |FROM r WHERE n_events > 0 ORDER BY dur_days""".stripMargin)),
+    Query("ml_ecod", q_ml_ecod, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -8840,8 +7561,8 @@ object SparkEntry {
         |SELECT bucket, round(sum(o), 6) AS ecod_score,
         |  count(*) AS n_streams
         |FROM sc GROUP BY bucket
-        |ORDER BY ecod_score DESC, bucket LIMIT 20""".stripMargin,
-    "agg_mutual_info" ->
+        |ORDER BY ecod_score DESC, bucket LIMIT 20""".stripMargin)),
+    Query("agg_mutual_info", q_agg_mutual_info, Sql(
       """WITH b AS (SELECT event_type,
         |    length(CAST((CAST(CAST(value AS DECIMAL(18,6)) * 1000000
         |      AS BIGINT) // 10000) AS VARCHAR)) AS mag
@@ -8865,8 +7586,8 @@ object SparkEntry {
         |    AS nmi,
         |  CAST(count(DISTINCT event_type) AS BIGINT) AS k_streams,
         |  CAST(count(DISTINCT mag) AS BIGINT) AS k_magnitudes
-        |FROM cells""".stripMargin,
-    "join_attribution" ->
+        |FROM cells""".stripMargin)),
+    Query("join_attribution", q_join_attribution, Sql(
       """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS p_ts,
         |    event_id AS p_id,
         |    CASE WHEN value IS NOT NULL THEN
@@ -8885,8 +7606,8 @@ object SparkEntry {
         |  FROM j)
         |SELECT coalesce(touch_type, 'direct') AS touch_type,
         |  count(*) AS conversions, CAST(sum(c) AS BIGINT) AS value_cents
-        |FROM r WHERE rn = 1 GROUP BY 1 ORDER BY touch_type""".stripMargin,
-    "agg_expectations" ->
+        |FROM r WHERE rn = 1 GROUP BY 1 ORDER BY touch_type""".stripMargin)),
+    Query("agg_expectations", q_agg_expectations, Sql(
       """WITH m AS (SELECT count(*) AS n,
         |    count(value) AS n_value,
         |    count(DISTINCT event_id) AS n_ids,
@@ -8911,8 +7632,8 @@ object SparkEntry {
         |    round(CAST(n_type_ok AS DOUBLE) / n, 6), n_type_ok = n FROM m
         |  UNION ALL SELECT 'ts_in_range',
         |    round(CAST(n_ts_ok AS DOUBLE) / n, 6), n_ts_ok = n FROM m)
-        |ORDER BY check_name""".stripMargin,
-    "join_er_clusters" ->
+        |ORDER BY check_name""".stripMargin)),
+    Query("join_er_clusters", q_join_er_clusters, Sql(
       """WITH RECURSIVE nm AS (SELECT p_name AS name, min(p_partkey) AS id
         |  FROM part GROUP BY 1),
         |p AS (SELECT a.id AS ia, b.id AS ib FROM nm a JOIN nm b
@@ -8927,8 +7648,8 @@ object SparkEntry {
         |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
         |SELECT nm.name, CAST(min(r.label) AS BIGINT) AS entity_id
         |FROM nm JOIN reach r ON r.node = nm.id
-        |GROUP BY nm.name ORDER BY nm.name""".stripMargin,
-    "agg_hurst" -> {
+        |GROUP BY nm.name ORDER BY nm.name""".stripMargin)),
+    Query("agg_hurst", q_agg_hurst, Sql {
       def leg(w: Int) =
         s"""SELECT event_type, $w AS w, quantile_cont(rs, 0.5) AS med FROM (
            |  SELECT event_type, blk,
@@ -8973,8 +7694,8 @@ object SparkEntry {
          |  round((ln(rs128) - ln(rs32)) / (2.0 * 0.6931471805599453), 6)
          |    AS hurst
          |FROM p ORDER BY event_type""".stripMargin
-    },
-    "agg_kruskal" ->
+    }),
+    Query("agg_kruskal", q_agg_kruskal, Sql(
       """WITH b AS (SELECT event_type, user_id % 3 AS grp,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -9007,8 +7728,8 @@ object SparkEntry {
         |    (r0 * r0 / CAST(nn0 AS DOUBLE) + r1 * r1 / CAST(nn1 AS DOUBLE)
         |      + r2 * r2 / CAST(nn2 AS DOUBLE)) - 3.0 * (nt + 1.0))
         |    / (1.0 - CAST(ties AS DOUBLE) / (nt * nt * nt - nt)), 6) AS h_stat
-        |FROM f ORDER BY event_type""".stripMargin,
-    "agg_chisq" ->
+        |FROM f ORDER BY event_type""".stripMargin)),
+    Query("agg_chisq", q_agg_chisq, Sql(
       """WITH o AS (SELECT event_type,
         |    CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS h, count(*) AS o
         |  FROM events GROUP BY 1, 2),
@@ -9032,8 +7753,8 @@ object SparkEntry {
         |  round(sqrt(sum(term) / (CAST(max(n) AS DOUBLE) *
         |    least(count(DISTINCT event_type) - 1, count(DISTINCT h) - 1))), 6)
         |    AS cramers_v
-        |FROM cells""".stripMargin,
-    "agg_mannwhitney" ->
+        |FROM cells""".stripMargin)),
+    Query("agg_mannwhitney", q_agg_mannwhitney, Sql(
       """WITH b AS (SELECT event_type, (user_id % 2 = 0) AS isa,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -9064,8 +7785,8 @@ object SparkEntry {
         |          / ((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
         |            * (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 1.0)))), 6)
         |    AS z
-        |FROM g ORDER BY event_type""".stripMargin,
-    "agg_anova" ->
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Query("agg_anova", q_agg_anova, Sql(
       """WITH b AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -9083,8 +7804,8 @@ object SparkEntry {
         |  round((sb - CAST(t1 AS DOUBLE) * CAST(t1 AS DOUBLE) / nn)
         |    / (CAST(t2 AS DOUBLE)
         |      - CAST(t1 AS DOUBLE) * CAST(t1 AS DOUBLE) / nn), 6) AS eta_sq
-        |FROM t""".stripMargin,
-    "agg_bootstrap_ci" ->
+        |FROM t""".stripMargin)),
+    Query("agg_bootstrap_ci", q_agg_bootstrap_ci, Sql(
       """WITH b AS (SELECT event_type, event_id,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -9118,8 +7839,8 @@ object SparkEntry {
         |  round(quantile_cont(m, 0.5), 6) AS boot_median,
         |  round(quantile_cont(m, 0.025), 6) AS ci_lo,
         |  round(quantile_cont(m, 0.975), 6) AS ci_hi
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-    "win_macd" ->
+        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("win_macd", q_win_macd, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9135,15 +7856,15 @@ object SparkEntry {
         |  FROM l)
         |SELECT event_type, n, round(ef, 6) AS ema_fast, round(es, 6) AS ema_slow,
         |  round(ef - es, 6) AS macd
-        |FROM e ORDER BY event_type""".stripMargin,
-    "join_bloom_prune" ->
+        |FROM e ORDER BY event_type""".stripMargin)),
+    Query("join_bloom_prune", q_join_bloom_prune, Sql(
       """SELECT p.p_type, count(*) AS n,
         |  round(CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,6))) AS DOUBLE), 4) AS revenue
         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         |WHERE p.p_brand = 'Brand#7'
-        |GROUP BY 1 ORDER BY p.p_type""".stripMargin,
-    "win_winsorize" ->
+        |GROUP BY 1 ORDER BY p.p_type""".stripMargin)),
+    Query("win_winsorize", q_win_winsorize, Sql(
       """WITH p AS (SELECT event_type,
         |    quantile_cont(value, 0.05) AS p05,
         |    quantile_cont(value, 0.95) AS p95
@@ -9151,8 +7872,8 @@ object SparkEntry {
         |SELECT e.event_id, e.event_type, e.value,
         |  round(least(greatest(e.value, p.p05), p.p95), 6) AS value_w
         |FROM events e JOIN p USING (event_type)
-        |WHERE e.value IS NOT NULL ORDER BY e.event_id""".stripMargin,
-    "multimodal_audio_zcr" ->
+        |WHERE e.value IS NOT NULL ORDER BY e.event_id""".stripMargin)),
+    Query("multimodal_audio_zcr", q_multimodal_audio_zcr, Sql(
       """WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents
         |  WHERE text IS NOT NULL),
         |i AS (SELECT unnest(range(0, 8)) AS i),
@@ -9171,13 +7892,13 @@ object SparkEntry {
         |SELECT doc_id, count(*) AS n_samples,
         |  CAST(sum(zc) AS BIGINT) AS n_zero_cross,
         |  round(sqrt(CAST(sum(s * s) AS DOUBLE) / count(*)), 6) AS rms
-        |FROM f GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "scan_parquet" ->
+        |FROM f GROUP BY 1 ORDER BY doc_id""".stripMargin)),
+    Query("scan_parquet", q_scan_parquet, Sql(
       """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
         |  l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus,
         |  CAST(l_shipdate AS TIMESTAMP) AS l_shipdate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "scan_random" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("scan_random", q_scan_random, Sql(
       """WITH t AS (SELECT unnest(['click','view']) AS tag),
         |     i AS (SELECT range AS i FROM range(0, 1000)),
         |     g AS (SELECT tag, i FROM t CROSS JOIN i)
@@ -9185,38 +7906,38 @@ object SparkEntry {
         |  make_timestamp((1704067200 + i * 600) * 1000000) AS ts,
         |  CAST(('0x'||substr(md5(tag||'#'||CAST(i AS VARCHAR)),1,15)) AS BIGINT)
         |    / 1152921504606846976.0 AS value
-        |FROM g ORDER BY tag, i""".stripMargin,
-    "sink_influx_lines" ->
+        |FROM g ORDER BY tag, i""".stripMargin)),
+    Query("sink_influx_lines", q_sink_influx_lines, Sql(
       """SELECT CAST(ts AS TIMESTAMP) AS ts, event_type AS tag, value
         |FROM events WHERE value IS NOT NULL
-        |ORDER BY ts, tag, value""".stripMargin,
-    "scan_influx_http" ->
+        |ORDER BY ts, tag, value""".stripMargin)),
+    Query("scan_influx_http", q_scan_influx_http, Sql(
       """SELECT CAST(ts AS TIMESTAMP) AS ts, event_type AS tag, value
         |FROM events WHERE value IS NOT NULL
         |  AND event_type IN ('click', 'view', 'purchase')
         |  AND CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-05'
         |  AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20'
-        |ORDER BY ts, tag, value""".stripMargin,
-    "proj_tags" ->
+        |ORDER BY ts, tag, value""".stripMargin)),
+    Query("proj_tags", q_proj_tags, Sql(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "filter_rowexpr" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("filter_rowexpr", q_filter_rowexpr, Sql(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_discount
         |FROM lineitem WHERE l_quantity > 25 AND l_discount < 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "filter_timerange" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("filter_timerange", q_filter_timerange, Sql(
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-10'
         |  AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20'
-        |ORDER BY event_id""".stripMargin,
-    "filter_dropna" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("filter_dropna", q_filter_dropna, Sql(
       s"""WITH w AS ($wide1h)
          |SELECT bucket, round(click, 6) AS click_v, round(view, 6) AS view_v,
          |       round(purchase, 6) AS purchase_v
          |FROM w
          |WHERE click IS NOT NULL AND view IS NOT NULL AND purchase IS NOT NULL
-         |ORDER BY bucket""".stripMargin,
-    "filter_inf" ->
+         |ORDER BY bucket""".stripMargin)),
+    Query("filter_inf", q_filter_inf, Sql(
       """WITH t AS (SELECT l_orderkey, l_linenumber,
         |             CASE WHEN l_linenumber = 1 THEN 'infinity'::DOUBLE
         |                  ELSE l_extendedprice END AS v
@@ -9224,14 +7945,14 @@ object SparkEntry {
         |     b AS (SELECT max(CASE WHEN isfinite(v) THEN v END) AS mx FROM t)
         |SELECT l_orderkey, l_linenumber,
         |       round(CASE WHEN v = 'infinity'::DOUBLE THEN b.mx ELSE v END, 6) AS v_imputed
-        |FROM t, b ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "join_align" -> joinAlignSql,
-    "join_dim_broadcast" ->
+        |FROM t, b ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("join_align", q_join_align, Sql(joinAlignSql)),
+    Query("join_dim_broadcast", q_join_dim_broadcast, Sql(
       """SELECT p_brand, count(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "join_multiway" ->
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+    Query("join_multiway", q_join_multiway, Sql(
       """SELECT r_name, n_name,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
         |  count(*) AS n
@@ -9240,39 +7961,39 @@ object SparkEntry {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "join_pred_input" ->
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)),
+    Query("join_pred_input", q_join_pred_input, Sql(
       """SELECT o_orderkey, o_totalprice,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS line_rev
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_totalprice ORDER BY o_orderkey""".stripMargin,
-    "join_semi" ->
+        |GROUP BY o_orderkey, o_totalprice ORDER BY o_orderkey""".stripMargin)),
+    Query("join_semi", q_join_semi, Sql(
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
-    "join_anti" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("join_anti", q_join_anti, Sql(
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_asof" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_asof", q_join_asof, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
         |           FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         |SELECT l.event_id, l.user_id, l.value, round(r.vv, 6) AS asof_view
         |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t >= r.t
-        |ORDER BY event_id""".stripMargin,
-    "join_asof_fwd" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof_fwd", q_join_asof_fwd, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
         |           FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         |SELECT l.event_id, l.user_id, l.value, round(r.vv, 6) AS asof_view
         |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t <= r.t
-        |ORDER BY event_id""".stripMargin,
-    "join_asof_near" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof_near", q_join_asof_near, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
@@ -9287,8 +8008,8 @@ object SparkEntry {
         |        THEN bv ELSE fv END, 6) AS asof_view
         |FROM b JOIN f USING (event_id)
         |WHERE bt IS NOT NULL OR ft IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "join_asof_tol" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof_tol", q_join_asof_tol, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
@@ -9298,8 +8019,8 @@ object SparkEntry {
         |       FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t >= r.t)
         |SELECT event_id, user_id, value, round(vv, 6) AS asof_view
         |FROM a WHERE rt >= lt - INTERVAL 30 MINUTE
-        |ORDER BY event_id""".stripMargin,
-    "join_interval" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_interval", q_join_interval, Sql(
       """SELECT c.event_id AS click_id, c.user_id, v.event_id AS view_id,
         |  round(v.value, 6) AS view_value
         |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t
@@ -9308,59 +8029,59 @@ object SparkEntry {
         |      FROM events WHERE event_type = 'view') v
         |  ON c.user_id = v.user_id
         |  AND v.t >= c.t - INTERVAL 10 MINUTE AND v.t <= c.t
-        |ORDER BY click_id, view_id""".stripMargin,
-    "win_smooth_time" ->
+        |ORDER BY click_id, view_id""".stripMargin)),
+    Query("win_smooth_time", q_win_smooth_time, Sql(
       """SELECT event_id, user_id,
         |  round(avg(value) OVER (PARTITION BY user_id
         |    ORDER BY CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
         |    RANGE BETWEEN 600 PRECEDING AND CURRENT ROW), 6) AS smoothed_t
-        |FROM events ORDER BY event_id""".stripMargin,
-    "agg_resample_mean" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Query("agg_resample_mean", q_agg_resample_mean, Sql(
       s"""SELECT $bucket10m AS bucket, event_type,
          |  round(avg(value), 6) AS avg_v, count(*) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // the Spark side reads a CSV materialization of the same rows — the
     // parquet-derived oracle catches any text-parse drift
-    "scan_csv" ->
+    Query("scan_csv", q_scan_csv, Sql(
       s"""SELECT $bucket10m AS bucket, event_type,
          |  round(avg(value), 6) AS avg_v, count(*) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "scan_jsonl" ->
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("scan_jsonl", q_scan_jsonl, Sql(
       """SELECT lang, count(*) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  CAST(sum(length(text)) AS BIGINT) AS sum_text_len,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sink_compact" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("sink_compact", q_sink_compact, Sql(
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
         |  min(CAST(ts AS TIMESTAMP)) AS min_ts,
         |  max(CAST(ts AS TIMESTAMP)) AS max_ts
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sink_zorder" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("sink_zorder", q_sink_zorder, Sql(
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
         |  min(user_id) AS min_uid, max(user_id) AS max_uid,
         |  min(CAST(ts AS TIMESTAMP)) AS min_ts,
         |  max(CAST(ts AS TIMESTAMP)) AS max_ts
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_resample_origin" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_resample_origin", q_agg_resample_origin, Sql(
       """SELECT time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP),
         |    INTERVAL '5 minutes') AS bucket, event_type,
         |  round(avg(value), 6) AS avg_v, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "agg_resample_multi" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_resample_multi", q_agg_resample_multi, Sql(
       s"""SELECT $bucket10m AS bucket, event_type,
          |  round(avg(value), 6) AS avg_v, min(value) AS min_v,
          |  max(value) AS max_v, count(*) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "agg_scaler_fit" ->
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_scaler_fit", q_agg_scaler_fit, Sql(
       """WITH b AS (SELECT min(l_extendedprice) AS mn, max(l_extendedprice) AS mx
         |           FROM lineitem)
         |SELECT l_orderkey, l_linenumber,
         |       round((l_extendedprice - mn) / (mx - mn), 6) AS price_scaled
-        |FROM lineitem, b ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "agg_metrics" ->
+        |FROM lineitem, b ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("agg_metrics", q_agg_metrics, Sql(
       s"""WITH $metricsStatsCte,
          |f AS (SELECT l_returnflag, CAST(n AS DOUBLE) AS nd,
          |        CAST(s_ae AS DOUBLE) / 100.0 AS sae,
@@ -9380,25 +8101,25 @@ object SparkEntry {
          |SELECT l_returnflag, mae, sqrt(mse) AS rmse,
          |  1 - mse / nullif(vy, 0) AS r2,
          |  1 - (mse - me * me) / nullif(vy, 0) AS explained_variance
-         |FROM g ORDER BY l_returnflag""".stripMargin,
-    "agg_threshold_pctl" ->
+         |FROM g ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_threshold_pctl", q_agg_threshold_pctl, Sql(
       """SELECT l_returnflag,
         |  round(quantile_cont(l_extendedprice, 0.99), 6) AS thr_p99,
         |  round(quantile_cont(l_extendedprice, 0.95), 6) AS thr_p95
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
     // rank_ok TRUE = the t-digest estimate's order-statistic bracket
     // (see q_agg_threshold_sketch scaladoc); a sketch regression flips
     // the Spark-side flag and hash-fails the row.
-    "agg_threshold_sketch" ->
+    Query("agg_threshold_sketch", q_agg_threshold_sketch, Sql(
       """SELECT l_returnflag,
         |  round(quantile_cont(l_extendedprice, 0.99), 6) AS thr_exact,
         |  count(*) AS n, TRUE AS rank_ok
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_distinct" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_distinct", q_agg_distinct, Sql(
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_salted_skew" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_salted_skew", q_agg_salted_skew, Sql(
       """SELECT l_returnflag,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
         |  count(l_quantity) AS n,
@@ -9406,23 +8127,23 @@ object SparkEntry {
         |  CAST(MAX(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS max_qty,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
         |    / count(l_quantity) AS avg_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_salted_skew" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("join_salted_skew", q_join_salted_skew, Sql(
       """SELECT s_nationkey, count(*) AS n,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_price
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_bucketed" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("join_bucketed", q_join_bucketed, Sql(
       """SELECT o_orderpriority, count(*) AS n,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_price
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_grouping_sets" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_grouping_sets", q_agg_grouping_sets, Sql(
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "win_lookback" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)),
+    Query("win_lookback", q_win_lookback, Sql(
       """SELECT event_id, user_id,
         |  array_to_string(list_transform(seq,
         |    x -> CAST(CAST(x AS DECIMAL(18,6)) AS VARCHAR)), ',') AS seq_str
@@ -9432,39 +8153,39 @@ object SparkEntry {
         |      ORDER BY CAST(ts AS TIMESTAMP), event_id
         |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS seq
         |  FROM events)
-        |WHERE len(seq) = 3 ORDER BY event_id""".stripMargin,
-    "win_shift_forecast" ->
+        |WHERE len(seq) = 3 ORDER BY event_id""".stripMargin)),
+    Query("win_shift_forecast", q_win_shift_forecast, Sql(
       """SELECT event_id, user_id, value,
         |  LAG(value) OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_v
-        |FROM events ORDER BY event_id""".stripMargin,
-    "win_smooth" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Query("win_smooth", q_win_smooth, Sql(
       """SELECT event_id, user_id,
         |  round(avg(value) OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id
         |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS smoothed
-        |FROM events ORDER BY event_id""".stripMargin,
-    "win_rank_topk" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Query("win_rank_topk", q_win_rank_topk, Sql(
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "sort_time" ->
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
+    Query("sort_time", q_sort_time, Sql(
       """SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id, event_type, value
-        |FROM events ORDER BY ts_us, event_id""".stripMargin,
+        |FROM events ORDER BY ts_us, event_id""".stripMargin)),
     // the deduped at-least-once spool must reconstruct the base table
     // exactly (retransmissions are exact copies of event_id % 13 == 3)
-    "stream_dedup" ->
+    Query("stream_dedup", q_stream_dedup, Sql(
       """SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
         |  event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
     // the prequential z at row k IS the windowed (avg, stddev_samp) over
     // rows 1..k−1 in (ts, value) order — an exact twin of scoreOnline's
     // Welford replay (agree to ~2e-14, far inside round-6); sd is NULL
     // below 2 prior rows, so the CASE's ELSE mirrors the n>=2 gate
-    "stream_score" ->
+    Query("stream_score", q_stream_score, Sql(
       """WITH s AS (SELECT event_type AS tag,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value,
         |    count(*) OVER w AS cnt, avg(value) OVER w AS mu,
@@ -9477,13 +8198,13 @@ object SparkEntry {
         |    ELSE 0.0 END, 6) AS z,
         |  (CASE WHEN cnt >= 2 AND sd > 0 THEN abs((value - mu) / sd)
         |    ELSE 0.0 END) > 3.0 AS anomalous
-        |FROM s ORDER BY tag, ts_us, value""".stripMargin,
+        |FROM s ORDER BY tag, ts_us, value""".stripMargin)),
     // generated per-cell banded-DP chain — see dtwOracleSql's scaladoc
-    "agg_dtw_profiles" -> dtwOracleSql,
+    Query("agg_dtw_profiles", q_agg_dtw_profiles, Sql(dtwOracleSql)),
     // strided-only floor + position-universe cap, both content-exact in
     // SQL; the rolling variant's count sits between them on every doc
     // (see q_dedup_substring_fast's scaladoc for the bracket argument)
-    "dedup_substring_fast" ->
+    Query("dedup_substring_fast", q_dedup_substring_fast, Sql(
       """WITH pos AS (
         |  SELECT doc_id, text,
         |    unnest(range(1, greatest(length(text) - 63, 1) + 1, 32)) AS p
@@ -9498,10 +8219,10 @@ object SparkEntry {
         |SELECT d.doc_id, coalesce(fl.floor_spans, 0) AS floor_spans,
         |  TRUE AS ge_floor_ok, TRUE AS le_cap_ok
         |FROM documents d LEFT JOIN fl USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // bloom candidates are exact-confirmed, so the oracle is the PLAIN
     // semi-join — any bloom false positive surviving to output hash-fails
-    "dedup_bloom_incremental" ->
+    Query("dedup_bloom_incremental", q_dedup_bloom_incremental, Sql(
       """WITH delta AS (
         |  SELECT doc_id + 200000 AS doc_id, text FROM documents
         |  WHERE doc_id % 11 = 5
@@ -9510,10 +8231,10 @@ object SparkEntry {
         |  FROM documents WHERE doc_id % 11 = 7)
         |SELECT d.doc_id FROM delta d
         |WHERE EXISTS (SELECT 1 FROM documents b WHERE b.text = d.text)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // list_reduce replays the identical fold (init = first element,
     // acc + 0.2*(x - acc), bucket order) — bit-exact before the round
-    "win_ewma" ->
+    Query("win_ewma", q_win_ewma, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9525,10 +8246,10 @@ object SparkEntry {
         |  FROM h GROUP BY 1)
         |SELECT event_type, len(xs) AS n,
         |  round(list_reduce(xs, (acc, x) -> acc + 0.2 * (x - acc)), 6) AS ewma
-        |FROM l ORDER BY 1""".stripMargin,
+        |FROM l ORDER BY 1""".stripMargin)),
     // replays ewmaOnline's αx + (1−α)s association exactly — including
     // (1.0 - 0.2) in place of a 0.8 literal (a different double)
-    "stream_ewma" ->
+    Query("stream_ewma", q_stream_ewma, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9541,9 +8262,9 @@ object SparkEntry {
         |SELECT event_type, len(xs) AS n,
         |  round(list_reduce(xs, (acc, x) -> 0.2 * x + (1.0 - 0.2) * acc), 6)
         |    AS ewma
-        |FROM l ORDER BY 1""".stripMargin,
+        |FROM l ORDER BY 1""".stripMargin)),
     // the band flag is an all-integer comparison; mean/σ display-only
-    "win_bollinger" ->
+    Query("win_bollinger", q_win_bollinger, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9561,10 +8282,10 @@ object SparkEntry {
         |  round(CAST(s AS DOUBLE) / 24.0, 6) AS mean,
         |  round(sqrt(CAST(var576 AS DOUBLE)) / 24.0, 6) AS sigma,
         |  CASE WHEN dev24 * dev24 > var576 * 4 THEN 1 ELSE 0 END AS outside
-        |FROM f ORDER BY event_type, bucket""".stripMargin,
+        |FROM f ORDER BY event_type, bucket""".stripMargin)),
     // both engines define the even-count median as the midpoint of the
     // two middle INTEGER cents — exact in a double, no rounding
-    "win_rolling_median" ->
+    Query("win_rolling_median", q_win_rolling_median, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9576,10 +8297,10 @@ object SparkEntry {
         |  WINDOW pk AS (PARTITION BY event_type ORDER BY bucket
         |    ROWS BETWEEN 23 PRECEDING AND CURRENT ROW))
         |SELECT event_type, bucket, med FROM r WHERE wn = 24
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin)),
     // pure-integer Hampel: m2 = 2*median, mad4 = 4*MAD, flag
     // 2*|2c-m2| > 3*mad4 — no float until the display /2.0, /4.0
-    "win_hampel" ->
+    Query("win_hampel", q_win_hampel, Sql(
       """WITH h AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -9600,16 +8321,16 @@ object SparkEntry {
         |SELECT event_type, bucket, c, m2 / 2.0 AS med, mad4 / 4.0 AS mad,
         |  CASE WHEN abs(c * 2 - m2) * 2 > mad4 * 3 THEN 1 ELSE 0 END
         |    AS outlier
-        |FROM m ORDER BY 1, 2""".stripMargin,
-    "agg_retention" ->
+        |FROM m ORDER BY 1, 2""".stripMargin)),
+    Query("agg_retention", q_agg_retention, Sql(
       """WITH e AS (SELECT DISTINCT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d FROM events),
         |c AS (SELECT user_id, min(d) AS cohort FROM e GROUP BY 1)
         |SELECT cohort, date_diff('day', cohort, d) AS day_offset,
         |  count(DISTINCT user_id) AS active_users
         |FROM e JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "agg_gap_detect" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_gap_detect", q_agg_gap_detect, Sql(
       """WITH hb AS (SELECT DISTINCT event_type,
         |    CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))
         |      AS BIGINT) // 3600 AS hb
@@ -9621,9 +8342,9 @@ object SparkEntry {
         |SELECT event_type, count(*) AS n_buckets,
         |  CAST(coalesce(sum(gap), 0) AS BIGINT) AS missing,
         |  CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
     // one row per detected outage — the replay of gapsOnline's emission
-    "stream_gap_detect" ->
+    Query("stream_gap_detect", q_stream_gap_detect, Sql(
       """WITH hb AS (SELECT DISTINCT event_type AS tag,
         |    CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))
         |      AS BIGINT) // 3600 AS hb
@@ -9633,14 +8354,14 @@ object SparkEntry {
         |  FROM hb)
         |SELECT tag, p + 1 AS gap_start_hb, hb - p - 1 AS missing
         |FROM g WHERE p IS NOT NULL AND hb > p + 1
-        |ORDER BY tag, gap_start_hb""".stripMargin,
-    "agg_transitions" -> transitionsOracleSql,
-    "agg_markov_stationary" -> markovStationaryOracle,
-    "agg_basket_lift" -> basketLiftOracle,
-    "text_textrank" -> textrankOracle,
+        |ORDER BY tag, gap_start_hb""".stripMargin)),
+    Query("agg_transitions", q_agg_transitions, Sql(transitionsOracleSql)),
+    Query("agg_markov_stationary", q_agg_markov_stationary, Sql(markovStationaryOracle)),
+    Query("agg_basket_lift", q_agg_basket_lift, Sql(basketLiftOracle)),
+    Query("text_textrank", q_text_textrank, Sql(textrankOracle)),
     // ordered replay of the stateful feed ≡ the batch lag window
-    "stream_transitions" -> transitionsOracleSql,
-    "agg_streaks" ->
+    Query("stream_transitions", q_stream_transitions, Sql(transitionsOracleSql)),
+    Query("agg_streaks", q_agg_streaks, Sql(
       """WITH ud AS (SELECT DISTINCT user_id,
         |    date_diff('day', DATE '1970-01-01',
         |      date_trunc('day', CAST(ts AS TIMESTAMP))) AS dn
@@ -9653,8 +8374,8 @@ object SparkEntry {
         |       FROM i GROUP BY 1, 2)
         |SELECT user_id, max(len) AS longest_streak,
         |  count(*) AS n_streaks, CAST(sum(len) AS BIGINT) AS active_days
-        |FROM st GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_active_users" ->
+        |FROM st GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_active_users", q_agg_active_users, Sql(
       """WITH ud AS (SELECT DISTINCT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |dau AS (SELECT day, count(DISTINCT user_id) AS dau
@@ -9663,10 +8384,10 @@ object SparkEntry {
         |    SELECT user_id, day + i * (INTERVAL 1 DAY) AS day
         |    FROM ud, range(0, 7) t(i)) GROUP BY 1)
         |SELECT day, dau, wau FROM dau JOIN wau USING (day)
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin)),
     // integer-cents sufficient sums (exact BIGINTs << 2^53) + ONE
     // mirrored IEEE Welch combination — bit-exact before the round
-    "agg_ab_ttest" ->
+    Query("agg_ab_ttest", q_agg_ab_ttest, Sql(
       """WITH c AS (SELECT event_type,
         |    user_id % 2 = 0 AS isa,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
@@ -9689,13 +8410,13 @@ object SparkEntry {
         |      + (CAST(s2b AS DOUBLE)
         |        - CAST(s1b AS DOUBLE) * CAST(s1b AS DOUBLE) / nb) / (nb - 1) / nb),
         |    6) AS t
-        |FROM g ORDER BY 1""".stripMargin,
+        |FROM g ORDER BY 1""".stripMargin)),
     // the SCD2 contract stated directly: v1 rows (closed iff changed),
     // v2 re-opens for changed keys, v2 first-opens for new keys; the
     // no-op batch (c_custkey % 9 = 7) must contribute NOTHING
     // the v1↔v2 snapshot diff restated directly over the base table:
     // the CDC rules are deterministic, so the oracle never needs the lake
-    "sink_time_travel" ->
+    Query("sink_time_travel", q_sink_time_travel, Sql(
       """WITH t AS (SELECT event_type, count(*) AS n_rows
         |           FROM events GROUP BY 1),
         |c AS (SELECT event_type,
@@ -9716,8 +8437,8 @@ object SparkEntry {
         |           0.0 AS delta_sum
         |         FROM events WHERE event_id % 101 = 0)
         |SELECT * FROM orig UNION ALL SELECT * FROM late
-        |ORDER BY event_type""".stripMargin,
-    "join_scd2_asof" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("join_scd2_asof", q_join_scd2_asof, Sql(
       """WITH e AS (SELECT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type FROM events),
         |va AS (SELECT user_id, event_type AS seg FROM (
@@ -9740,8 +8461,8 @@ object SparkEntry {
         |  count(*) AS n_events, count(DISTINCT e.user_id) AS n_users
         |FROM e JOIN dim ON e.user_id = dim.user_id
         |  AND us >= vfrom AND us < vto
-        |GROUP BY 1, 2 ORDER BY version, seg""".stripMargin,
-    "sink_scd2" ->
+        |GROUP BY 1, 2 ORDER BY version, seg""".stripMargin)),
+    Query("sink_scd2", q_sink_scd2, Sql(
       """SELECT c_custkey, c_acctbal, c_mktsegment, 1 AS v_from,
         |  CASE WHEN c_custkey % 9 = 4 THEN 2 ELSE 0 END AS v_to
         |FROM customer
@@ -9751,34 +8472,34 @@ object SparkEntry {
         |UNION ALL
         |SELECT c_custkey + 1000000, c_acctbal, c_mktsegment, 2, 0
         |FROM customer WHERE c_custkey % 13 = 6
-        |ORDER BY c_custkey, v_from""".stripMargin,
+        |ORDER BY c_custkey, v_from""".stripMargin)),
     // ground truth of WHICH lines were corrupted lives in the parquet
     // table; the PERMISSIVE read must reconcile exactly
-    "scan_json_multiline" ->
+    Query("scan_json_multiline", q_scan_json_multiline, Sql(
       """SELECT source, count(*) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "scan_jsonl_gz" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("scan_jsonl_gz", q_scan_jsonl_gz, Sql(
       """SELECT lang, count(*) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  count(DISTINCT doc_id) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "scan_jsonl_corrupt" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("scan_jsonl_corrupt", q_scan_jsonl_corrupt, Sql(
       """SELECT lang, count(*) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents WHERE doc_id % 17 <> 3 GROUP BY 1
         |UNION ALL
         |SELECT '__corrupt', count(*), 0
         |FROM documents WHERE doc_id % 17 = 3
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
     // alpha = 0.5 via sqrt on purpose: sqrt is IEEE-correctly-rounded in
     // both engines where a general pow is not
-    "sample_temperature" ->
+    Query("sample_temperature", q_sample_temperature, Sql(
       """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
         |z AS (SELECT sum(sqrt(CAST(n AS DOUBLE))) AS z FROM c)
         |SELECT lang, n, round(sqrt(CAST(n AS DOUBLE)) / z, 6) AS w
-        |FROM c CROSS JOIN z ORDER BY 1""".stripMargin,
-    "agg_funnel_time" ->
+        |FROM c CROSS JOIN z ORDER BY 1""".stripMargin)),
+    Query("agg_funnel_time", q_agg_funnel_time, Sql(
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |c AS (SELECT user_id, min(us) AS c_us FROM e
@@ -9797,8 +8518,8 @@ object SparkEntry {
         |  round(quantile_cont(gap_us, 0.5), 6) AS median_us,
         |  round(quantile_cont(gap_us, 0.9), 6) AS p90_us,
         |  CAST(max(gap_us) AS BIGINT) AS max_us
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_new_returning" ->
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_new_returning", q_agg_new_returning, Sql(
       """WITH ud AS (SELECT DISTINCT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d FROM events),
         |c AS (SELECT user_id, min(d) AS first_d FROM ud GROUP BY 1)
@@ -9808,8 +8529,8 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN d <> first_d THEN 1 ELSE 0 END) AS BIGINT)
         |    AS returning_users
         |FROM ud JOIN c USING (user_id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_pareto" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_pareto", q_agg_pareto, Sql(
       """WITH u AS (SELECT event_type, user_id,
         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS BIGINT) AS uc
@@ -9826,11 +8547,11 @@ object SparkEntry {
         |  round(CAST(cumc AS DOUBLE) / total, 6) AS top20_value_share
         |FROM r JOIN t USING (event_type)
         |WHERE rnk = CAST(ceil(nu / 5.0) AS BIGINT)
-        |ORDER BY event_type""".stripMargin,
-    "agg_funnel" -> funnelOracleSql,
+        |ORDER BY event_type""".stripMargin)),
+    Query("agg_funnel", q_agg_funnel, Sql(funnelOracleSql)),
     // ordered stateful replay ≡ the batch min-chaining funnel
-    "stream_funnel" -> funnelOracleSql,
-    "agg_window_funnel" ->
+    Query("stream_funnel", q_stream_funnel, Sql(funnelOracleSql)),
+    Query("agg_window_funnel", q_agg_window_funnel, Sql(
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |c AS (SELECT user_id, min(us) AS c_us FROM e
@@ -9847,8 +8568,8 @@ object SparkEntry {
         |      FROM c LEFT JOIN v ON c.user_id = v.user_id
         |             LEFT JOIN p ON c.user_id = p.user_id)
         |SELECT depth, count(*) AS users FROM d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_cohort_value" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_cohort_value", q_agg_cohort_value, Sql(
       """WITH e AS (SELECT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
@@ -9858,42 +8579,42 @@ object SparkEntry {
         |SELECT cohort, date_diff('day', cohort, d) AS day_offset,
         |  count(*) AS n_events, CAST(sum(c) AS BIGINT) AS total_cents
         |FROM e JOIN coh USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "limit_head" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("limit_head", q_limit_head, Sql(
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 100""".stripMargin,
-    "setop_union_years" ->
+        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 100""".stripMargin)),
+    Query("setop_union_years", q_setop_union_years, Sql(
       """SELECT event_id, event_type, value FROM events WHERE event_type = 'click'
         |UNION ALL
         |SELECT event_id, event_type, value FROM events WHERE event_type = 'view'
-        |ORDER BY event_id""".stripMargin,
-    "setop_except_periods" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("setop_except_periods", q_setop_except_periods, Sql(
       """SELECT event_id, user_id, event_type FROM events
         |EXCEPT
         |SELECT event_id, user_id, event_type FROM events
         |WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-05'
         |  AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-12'
-        |ORDER BY event_id""".stripMargin,
-    "setop_intersect" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("setop_intersect", q_setop_intersect, Sql(
       """SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07-01'
         |INTERSECT
         |SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1995-07-01' AND o_orderdate < TIMESTAMP '1996-01-01'
-        |ORDER BY o_custkey""".stripMargin,
-    "fn_ts" ->
+        |ORDER BY o_custkey""".stripMargin)),
+    Query("fn_ts", q_fn_ts, Sql(
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS d, count(*) AS n,
         |  round(avg(value), 6) AS avg_v
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "fn_math_anomaly" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("fn_math_anomaly", q_fn_math_anomaly, Sql(
       s"""WITH w AS ($wide1h)
          |SELECT bucket, round(abs(click - view), 6) AS tag_anomaly,
          |  round(sqrt((click - view) * (click - view)
          |           + (purchase - view) * (purchase - view)), 6) AS total_anomaly
          |FROM w
          |WHERE click IS NOT NULL AND view IS NOT NULL AND purchase IS NOT NULL
-         |ORDER BY bucket""".stripMargin,
-    "fn_math_anomaly_scaled" ->
+         |ORDER BY bucket""".stripMargin)),
+    Query("fn_math_anomaly_scaled", q_fn_math_anomaly_scaled, Sql(
       s"""WITH w AS ($wide1h),
          |wd AS (SELECT * FROM w
          |       WHERE click IS NOT NULL AND view IS NOT NULL AND purchase IS NOT NULL),
@@ -9904,45 +8625,45 @@ object SparkEntry {
          |    AS click_anom_scaled,
          |  round(abs((purchase - pmn) / (pmx - pmn) - (view - pmn) / (pmx - pmn)), 6)
          |    AS purchase_anom_scaled
-         |FROM wd, p ORDER BY bucket""".stripMargin,
-    "fn_string_tag" ->
+         |FROM wd, p ORDER BY bucket""".stripMargin)),
+    Query("fn_string_tag", q_fn_string_tag, Sql(
       """SELECT p_partkey, upper(trim(p_name)) AS tag_norm,
         |  regexp_extract(p_name, '^(\w+)', 1) AS asset_prefix,
         |  length(p_name) AS name_len,
         |  regexp_replace(p_name, '\s+', '_', 'g') AS name_snake
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "fn_json_props" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("fn_json_props", q_fn_json_props, Sql(
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS prop_k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "fn_multiply_by" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Query("fn_multiply_by", q_fn_multiply_by, Sql(
       """SELECT l_orderkey, l_linenumber,
         |  round(l_quantity * 2.5, 6) AS qty_x,
         |  round(l_extendedprice * 0.5, 6) AS price_x
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "dedup_exact" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("dedup_exact", q_dedup_exact, Sql(
       s"""WITH $docsWithDupsSql
          |SELECT md5(lower(trim(text))) AS h, min(doc_id) AS canonical_id,
          |       count(*) AS n_members
-         |FROM all_docs GROUP BY 1 ORDER BY canonical_id""".stripMargin,
-    "dedup_minhash_lsh" ->
+         |FROM all_docs GROUP BY 1 ORDER BY canonical_id""".stripMargin)),
+    Query("dedup_minhash_lsh", q_dedup_minhash_lsh, Sql(
       s"""WITH $docsWithDupsSql,
          |${shingleCte("all_docs")},
          |$minhashBlCtes
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bl a JOIN bl b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup_near_duplicates" -> nearDupFullRebuildSql,
+         |ORDER BY doc_a, doc_b""".stripMargin)),
+    Query("dedup_near_duplicates", q_dedup_near_duplicates, Sql(nearDupFullRebuildSql)),
     // the incremental path must land on the SAME full-rebuild answer —
     // one oracle string, two construction routes (see q_dedup_incremental)
-    "dedup_incremental" -> nearDupFullRebuildSql,
-    "dedup_simhash" ->
+    Query("dedup_incremental", q_dedup_incremental, Sql(nearDupFullRebuildSql)),
+    Query("dedup_simhash", q_dedup_simhash, Sql(
       s"""WITH w AS (SELECT doc_id,
          |    unnest(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS t
          |  FROM documents),
          |h AS (SELECT doc_id, CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) AS h FROM w)
          |SELECT doc_id, $simhashBitsSql AS simhash
-         |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dedup_clusters" ->
+         |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("dedup_clusters", q_dedup_clusters, Sql(
       s"""WITH RECURSIVE $docsWithDupsSql,
          |${shingleCte("all_docs")},
          |$minhashBlCtes,
@@ -9957,8 +8678,8 @@ object SparkEntry {
          |  UNION
          |  SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
          |SELECT node AS doc_id, min(label) AS canonical_id
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
-    "dedup_ngram_jaccard" ->
+         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
+    Query("dedup_ngram_jaccard", q_dedup_ngram_jaccard, Sql(
       s"""WITH ${shingleCte("documents")},
          |hot AS (SELECT s FROM sh GROUP BY s HAVING count(*) > 20),
          |shc AS (SELECT sh.doc_id, sh.s FROM sh ANTI JOIN hot USING (s)),
@@ -9967,13 +8688,13 @@ object SparkEntry {
          |          FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
          |SELECT da AS doc_a, db AS doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
          |FROM inter JOIN sz sa ON da = sa.doc_id JOIN sz sb ON db = sb.doc_id
-         |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.6 ORDER BY doc_a, doc_b""".stripMargin,
+         |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.6 ORDER BY doc_a, doc_b""".stripMargin)),
     // one oracle string, two construction routes (the dedup_incremental
     // discipline): the batch serve and the incremental merge+serve must
     // land on identical containment rows
-    "dedup_containment" -> containmentFullRebuildSql,
-    "dedup_containment_incr" -> containmentFullRebuildSql,
-    "dedup_embed_cosine" ->
+    Query("dedup_containment", q_dedup_containment, Sql(containmentFullRebuildSql)),
+    Query("dedup_containment_incr", q_dedup_containment_incr, Sql(containmentFullRebuildSql)),
+    Query("dedup_embed_cosine", q_dedup_embed_cosine, Sql(
       s"""WITH dots AS (
          | SELECT a.vec_id va, b.vec_id vb,
          |  ${dotSql("a.embedding", "b.embedding")} AS dot,
@@ -9981,41 +8702,8 @@ object SparkEntry {
          |  ${normSqSql("b.embedding")} AS nbb
          | FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id)
          |SELECT va AS vec_a, vb AS vec_b, dot/sqrt(naa*nbb) AS cos_sim
-         |FROM dots WHERE dot/sqrt(naa*nbb) >= 0.4 ORDER BY vec_a, vec_b""".stripMargin,
-    "simsearch_lsh" -> lshOracleSql(),
-    "simsearch_knn_graph" -> knnGraphOracleSql(),
-    // the incremental merge must EQUAL the full rebuild — same oracle
-    "simsearch_knn_incr" -> knnGraphOracleSql(),
-    "simsearch_topk" -> topkOracleSql,
-    // nProbe = nLists makes IVF exhaustive ≡ brute force: same oracle
-    "simsearch_ivf_exact" -> topkOracleSql,
-    // int8: replay the float32 quantization exactly (DuckDB FLOAT math
-    // is native f32 — see q_simsearch_int8), then the standard topk body
-    "simsearch_int8" ->
-      """WITH mx AS (SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(x))) AS m FROM embeddings),
-        |qz AS (SELECT vec_id, embedding,
-        |    CAST(CASE WHEN m = 0 THEN 1.0
-        |              ELSE CAST(m AS DOUBLE) / 127.0 END AS FLOAT) AS qscale
-        |  FROM mx),
-        |dq AS (SELECT vec_id,
-        |    list_transform(embedding, x ->
-        |      CAST(CAST(round(CAST(x AS DOUBLE) / CAST(qscale AS DOUBLE))
-        |        AS TINYINT) AS FLOAT) * qscale) AS embedding
-        |  FROM qz),
-        |dots AS (
-        | SELECT q.vec_id AS qid, c.vec_id AS nid,
-        |  list_sum(list_transform(list_zip(q.embedding, c.embedding),
-        |    x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE))) AS dot,
-        |  list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS nq,
-        |  list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS nc
-        | FROM embeddings q, dq c WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        | SELECT qid, nid, dot/sqrt(nq*nc) AS cos_sim,
-        |  row_number() OVER (PARTITION BY qid ORDER BY dot/sqrt(nq*nc) DESC, nid) AS rnk
-        | FROM dots)
-        |SELECT qid, nid, cos_sim, rnk FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin,
-    "text_langid" ->
+         |FROM dots WHERE dot/sqrt(naa*nbb) >= 0.4 ORDER BY vec_a, vec_b""".stripMargin)),
+    Query("text_langid", q_text_langid, Sql(
       s"""WITH w AS (SELECT doc_id,
          |    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t FROM documents),
          |v AS (SELECT doc_id, CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 5 AS li,
@@ -10027,8 +8715,8 @@ object SparkEntry {
          |  CASE t.li WHEN 0 THEN 'en' WHEN 1 THEN 'de' WHEN 2 THEN 'fr'
          |            WHEN 3 THEN 'es' ELSE 'zh' END AS lang_pred
          |FROM documents d JOIN top t ON d.doc_id = t.doc_id AND t.rn = 1
-         |ORDER BY d.doc_id""".stripMargin,
-    "text_quality" ->
+         |ORDER BY d.doc_id""".stripMargin)),
+    Query("text_quality", q_text_quality, Sql(
       s"""SELECT doc_id,
          |  len(string_split_regex(lower(trim(text)), '\\s+')) AS n_words,
          |  len(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS n_distinct,
@@ -10039,8 +8727,8 @@ object SparkEntry {
          |      / len(string_split_regex(lower(trim(text)), '\\s+')), 6) AS ttr,
          |  round(length(replace(text, ' ', '')) * 1.0
          |      / len(string_split_regex(lower(trim(text)), '\\s+')), 6) AS avg_word_len
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_gopher_quality" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("text_gopher_quality", q_text_gopher_quality, Sql(
       s"""WITH g AS (SELECT doc_id,
          |    string_split_regex(lower(trim(text)), '\\s+') AS ws,
          |    string_split(text, chr(10)) AS ls,
@@ -10078,22 +8766,22 @@ object SparkEntry {
          |  (n_words BETWEEN 50 AND 100000) AND (mwl BETWEEN 3 AND 10)
          |    AND sym_ratio < 0.1 AND bullet_frac < 0.9 AND ell_frac < 0.3
          |    AND alpha_frac >= 0.8 AND n_stop >= 2 AS pass
-         |FROM m ORDER BY doc_id""".stripMargin,
-    "text_tokens" ->
+         |FROM m ORDER BY doc_id""".stripMargin)),
+    Query("text_tokens", q_text_tokens, Sql(
       s"""SELECT doc_id,
          |  len(string_split_regex(trim(text), '\\s+')) AS ws_tokens,
          |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS bpe_ish_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("text_fingerprint", q_text_fingerprint, Sql(
       s"""SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(
          |    string_split_regex(lower(trim(text)), '\\s+'))), ' ')) AS fingerprint
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "stream_resample" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("stream_resample", q_stream_resample, Sql(
       s"""SELECT $bucket10m AS bucket, event_type,
          |  round(avg(value), 6) AS avg_value, count(*) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_session" ->
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("stream_session", q_stream_session, Sql(
       """WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) t FROM events),
         |m AS (SELECT user_id, t,
         |        -- session_window merges only when the next event is
@@ -10111,8 +8799,8 @@ object SparkEntry {
         |  max(t) + INTERVAL 30 MINUTE AS session_end,
         |  user_id, count(*) AS n_events
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "text_langid_trained" ->
+        |ORDER BY user_id, session_start""".stripMargin)),
+    Query("text_langid_trained", q_text_langid_trained, Sql(
       s"""WITH $langidGramCtes,
          |-- CAST: sum(BIGINT) is HUGEINT → float64 in Python → driver hash
          |-- mismatch vs Spark's BIGINT despite equal values (round-2 FAIL)
@@ -10130,8 +8818,8 @@ object SparkEntry {
          |         FROM dist)
          |SELECT d.doc_id, d.lang, p.lang_pred, p.dist
          |FROM pred p JOIN documents d USING (doc_id) WHERE p.rn = 1
-         |ORDER BY doc_id""".stripMargin,
-    "text_topterms" ->
+         |ORDER BY doc_id""".stripMargin)),
+    Query("text_topterms", q_text_topterms, Sql(
       """WITH w AS (SELECT lang,
         |    unnest(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS term
         |  FROM documents),
@@ -10141,18 +8829,18 @@ object SparkEntry {
         |        row_number() OVER (PARTITION BY lang ORDER BY doc_freq DESC, term) AS rnk
         |      FROM f)
         |SELECT lang, term, doc_freq, rnk FROM r WHERE rnk <= 10
-        |ORDER BY lang, rnk""".stripMargin,
-    "text_scrub" ->
+        |ORDER BY lang, rnk""".stripMargin)),
+    Query("text_scrub", q_text_scrub, Sql(
       """SELECT doc_id,
         |  regexp_replace(regexp_replace(regexp_replace(text,
         |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+', '<EMAIL>', 'g'),
         |    '[0-9]+', '<NUM>', 'g'),
         |    '\s+', ' ', 'g') AS scrubbed
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // bpe_in_bounds/layout_ok TRUE = the BPE count bound and the packing
     // layout re-derivation (q_pipeline_tokenize_pack scaladoc); shard and
     // n_words are SQL-recomputed exactly.
-    "pipeline_tokenize_pack" ->
+    Query("pipeline_tokenize_pack", q_pipeline_tokenize_pack, Sql(
       """WITH w AS (SELECT doc_id,
         |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |  FROM documents),
@@ -10164,8 +8852,8 @@ object SparkEntry {
         |  CAST(COALESCE(agg.n_words, 0) AS BIGINT) AS n_words,
         |  TRUE AS bpe_in_bounds, TRUE AS layout_ok
         |FROM documents d LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "sample_pack" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("sample_pack", q_sample_pack, Sql(
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
         |    CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)
@@ -10183,8 +8871,8 @@ object SparkEntry {
         |SELECT doc_id, shard, n_tokens,
         |  strt // 512 AS bin, strt % 512 AS offset,
         |  (strt + greatest(n_tokens, 1) - 1) // 512 AS end_bin
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "pipeline_curation" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Query("pipeline_curation", q_pipeline_curation, Sql(
       """WITH s AS (SELECT doc_id, lang,
         |    regexp_replace(regexp_replace(regexp_replace(text,
         |      '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+', '<EMAIL>', 'g'),
@@ -10206,8 +8894,8 @@ object SparkEntry {
         |FROM d
         |WHERE CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT) % 1000000
         |  < CASE lang WHEN 'en' THEN 500000 WHEN 'zh' THEN 1000000 ELSE 250000 END
-        |ORDER BY doc_id""".stripMargin,
-    "sample_split" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("sample_split", q_sample_split, Sql(
       """SELECT CASE
         |    WHEN CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15))
         |      AS BIGINT) % 1000000 < 800000 THEN 'train'
@@ -10215,13 +8903,13 @@ object SparkEntry {
         |      AS BIGINT) % 1000000 < 900000 THEN 'val'
         |    ELSE 'test' END AS split,
         |  lang, count(*) AS n
-        |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sample_stratified" ->
+        |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("sample_stratified", q_sample_stratified, Sql(
       """SELECT doc_id, lang FROM documents
         |WHERE CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT) % 1000000
         |  < CASE lang WHEN 'en' THEN 500000 WHEN 'zh' THEN 1000000 ELSE 250000 END
-        |ORDER BY doc_id""".stripMargin,
-    "sample_importance" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("sample_importance", q_sample_importance, Sql(
       """WITH q AS (SELECT doc_id, lang,
         |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
         |        w -> w IN ('the','a','of','to','and'))) AS nstop,
@@ -10233,17 +8921,17 @@ object SparkEntry {
         |SELECT doc_id, lang, w FROM w
         |WHERE CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)
         |    % 1000000 < w
-        |ORDER BY doc_id""".stripMargin,
-    "sample_cap_per_key" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("sample_cap_per_key", q_sample_cap_per_key, Sql(
       """WITH r AS (SELECT doc_id, lang,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rnk
         |  FROM documents)
-        |SELECT doc_id, lang FROM r WHERE rnk <= 50 ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id, lang FROM r WHERE rnk <= 50 ORDER BY doc_id""".stripMargin)),
     // IEEE op order (p * T / n) * 1e6, floor — verbatim the Scala
     // threshold arithmetic in Sampling.targetMix, so thresholds are
     // bit-identical across engines.
-    "sample_target_mix" ->
+    Query("sample_target_mix", q_sample_target_mix, Sql(
       """WITH p AS (SELECT lang, CAST(CASE lang WHEN 'en' THEN 0.6
         |    WHEN 'zh' THEN 0.25 WHEN 'de' THEN 0.15 END AS DOUBLE) AS share,
         |    CAST(count(*) AS DOUBLE) AS n
@@ -10255,8 +8943,8 @@ object SparkEntry {
         |SELECT d.doc_id, d.lang FROM documents d JOIN r ON d.lang = r.lang
         |WHERE CAST(('0x'||substr(md5(CAST(d.doc_id AS VARCHAR)),1,15)) AS BIGINT) % 1000000
         |  < r.thr
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_decontaminate" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("text_decontaminate", q_text_decontaminate, Sql(
       s"""WITH $docsWithDupsSql,
          |bench AS (SELECT doc_id AS bench_id, text FROM documents WHERE doc_id % 50 = 0),
          |corpus AS (SELECT a.doc_id, a.text FROM all_docs a
@@ -10276,14 +8964,14 @@ object SparkEntry {
          |m AS (SELECT c.doc_id, b.bench_id, count(*) AS shared
          |      FROM cc c JOIN bs b USING (s) GROUP BY 1, 2)
          |SELECT doc_id, bench_id, CAST(shared AS BIGINT) AS shared
-         |FROM m WHERE shared >= 3 ORDER BY doc_id, bench_id""".stripMargin,
-    "win_ffill" ->
+         |FROM m WHERE shared >= 3 ORDER BY doc_id, bench_id""".stripMargin)),
+    Query("win_ffill", q_win_ffill, Sql(
       s"""WITH $denseGridCte
          |SELECT bucket, event_type,
          |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY bucket
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-         |FROM d ORDER BY bucket, event_type""".stripMargin,
-    "win_interpolate" ->
+         |FROM d ORDER BY bucket, event_type""".stripMargin)),
+    Query("win_interpolate", q_win_interpolate, Sql(
       s"""WITH $denseGridCte,
          |w AS (SELECT bucket, event_type, v,
          |        CAST(epoch_us(bucket) AS DOUBLE) AS t,
@@ -10303,12 +8991,12 @@ object SparkEntry {
          |             WHEN v_prev IS NOT NULL AND v_next IS NOT NULL
          |             THEN v_prev + (v_next - v_prev) * (t - t_prev) / (t_next - t_prev)
          |        END, 6) AS v_interp
-         |FROM w ORDER BY bucket, event_type""".stripMargin,
+         |FROM w ORDER BY bucket, event_type""".stripMargin)),
     // CUSUM: deviations quantized to DECIMAL(18,6) once, then EVERY window
     // aggregate stays decimal — running sums are exact scaled integers, so
     // segment-tree vs sequential window evaluation cannot diverge. Cast to
     // DOUBLE only at the output (exact below 2^53 scaled).
-    "win_cusum" ->
+    Query("win_cusum", q_win_cusum, Sql(
       """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
         |    CAST(value AS DECIMAL(18,6)) - CAST(55.0 AS DECIMAL(18,6)) AS dev_up,
         |    CAST(45.0 AS DECIMAL(18,6)) - CAST(value AS DECIMAL(18,6)) AS dev_dn
@@ -10329,14 +9017,14 @@ object SparkEntry {
         |  round(CAST(dn AS DOUBLE), 6) AS cusum_dn,
         |  CAST(up > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_up,
         |  CAST(dn > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_dn
-        |FROM m ORDER BY event_id""".stripMargin,
+        |FROM m ORDER BY event_id""".stripMargin)),
     // Streaming CUSUM (batch replay): the same decimal-exact closed form,
     // keyed by tag and ordered by (ts, value) — the processing order the
     // stateful operator sorts each group by. Exact (tag, ts, value)
     // duplicates yield the same output multiset under either order; BOTH
     // cusum columns join the final sort (either side alone can stay
     // clamped at 0 across a duplicate pair — not a total order).
-    "stream_cusum" ->
+    Query("stream_cusum", q_stream_cusum, Sql(
       """WITH e AS (SELECT event_type AS tag, CAST(ts AS TIMESTAMP) AS ts, value,
         |    CAST(value AS DECIMAL(18,6)) - CAST(55.0 AS DECIMAL(18,6)) AS dev_up,
         |    CAST(45.0 AS DECIMAL(18,6)) - CAST(value AS DECIMAL(18,6)) AS dev_dn
@@ -10357,12 +9045,12 @@ object SparkEntry {
         |  round(CAST(dn AS DOUBLE), 6) AS cusum_dn,
         |  CAST(up > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_up,
         |  CAST(dn > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_dn
-        |FROM m ORDER BY tag, ts, value, cusum_up, cusum_dn""".stripMargin,
+        |FROM m ORDER BY tag, ts, value, cusum_up, cusum_dn""".stripMargin)),
     // Rolling autocorrelation: integer sufficient statistics (exact window
     // sums of scale-2 units, all < 2^53) + a verbatim-mirrored IEEE
     // combination — bit-identical, no rounding. CASTs AS BIGINT keep the
     // window sums off HUGEINT (the round-2 repr-hash lesson).
-    "win_autocorr" ->
+    Query("win_autocorr", q_win_autocorr, Sql(
       """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS kx
         |  FROM events),
@@ -10389,12 +9077,12 @@ object SparkEntry {
         |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0))
         |  END AS autocorr
-        |FROM s ORDER BY event_id""".stripMargin,
+        |FROM s ORDER BY event_id""".stripMargin)),
     // Streaming autocorrelation (batch replay): same integer stats keyed
     // by tag and ordered by (ts, value) — the stateful operator's
     // processing order. autocorr joins the sort key (NULLS FIRST on both
     // engines) to pin exact-duplicate readings' outputs.
-    "stream_autocorr" ->
+    Query("stream_autocorr", q_stream_autocorr, Sql(
       """WITH e AS (SELECT event_type AS tag, CAST(ts AS TIMESTAMP) AS ts, value,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS kx
         |  FROM events),
@@ -10421,8 +9109,8 @@ object SparkEntry {
         |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0))
         |  END AS autocorr
-        |FROM s ORDER BY tag, ts, value, autocorr NULLS FIRST""".stripMargin,
-    "agg_robust_zscore" ->
+        |FROM s ORDER BY tag, ts, value, autocorr NULLS FIRST""".stripMargin)),
+    Query("agg_robust_zscore", q_agg_robust_zscore, Sql(
       """WITH o AS (SELECT event_id, event_type, value FROM events),
         |med AS (SELECT event_type, quantile_cont(value, 0.5) AS med
         |        FROM o GROUP BY 1),
@@ -10432,10 +9120,10 @@ object SparkEntry {
         |SELECT e.event_id, e.event_type,
         |  round(0.6745 * (e.value - m.med) / NULLIF(d.mad, 0), 6) AS robust_z
         |FROM o e JOIN med m USING (event_type) JOIN mad d USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
     // six ln-of-exact-integer terms combined in the identical order; the
     // top-50 is a TOTAL order (rounded pmi desc, term_a, term_b)
-    "text_novelty" ->
+    Query("text_novelty", q_text_novelty, Sql(
       """WITH w AS (SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
@@ -10450,8 +9138,8 @@ object SparkEntry {
         |  FROM sh JOIN df USING (h) GROUP BY 1)
         |SELECT doc_id, n_shingles, n_unique,
         |  round(CAST(n_unique AS DOUBLE) / n_shingles, 6) AS novelty
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "agg_growth_rate" ->
+        |FROM g ORDER BY doc_id""".stripMargin)),
+    Query("agg_growth_rate", q_agg_growth_rate, Sql(
       """WITH wk AS (SELECT event_type,
         |    date_trunc('week', CAST(ts AS TIMESTAMP)) AS week,
         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
@@ -10465,13 +9153,13 @@ object SparkEntry {
         |SELECT event_type, week, n, total_cents,
         |  round(CAST(total_cents - prev AS DOUBLE)
         |    / NULLIF(CAST(prev AS DOUBLE), 0), 6) AS wow_growth
-        |FROM l ORDER BY 1, 2""".stripMargin,
+        |FROM l ORDER BY 1, 2""".stripMargin)),
     // portable-ln conversions (round 11): the NB/LM families' every
     // transcendental input is an exact integer count over md5 buckets,
     // so DuckDB refits the model and rescores independently — ln of the
     // SAME double ratio in both engines, summed over the fixture's
     // ≤ ~31 distinct-bucket terms per doc, agrees after round(_, 6)
-    "text_perplexity" ->
+    Query("text_perplexity", q_text_perplexity, Sql(
       """WITH w AS (SELECT doc_id, lang,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |tk AS (SELECT doc_id,
@@ -10491,8 +9179,8 @@ object SparkEntry {
         |  coalesce(sc.n_tokens, 0) AS n_tokens,
         |  round(sc.avg_logprob, 6) AS avg_logprob
         |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_nb_classifier" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("text_nb_classifier", q_text_nb_classifier, Sql(
       """WITH w AS (SELECT doc_id, lang,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |tk AS (SELECT doc_id,
@@ -10528,8 +9216,8 @@ object SparkEntry {
         |FROM documents d
         |LEFT JOIN best b USING (doc_id)
         |CROSS JOIN fb
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_pmi" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("text_pmi", q_text_pmi, Sql(
       """WITH w AS (SELECT
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |uw AS (SELECT unnest(ws) AS t FROM w),
@@ -10552,8 +9240,8 @@ object SparkEntry {
         |SELECT term_a, term_b, CAST(nab AS BIGINT) AS nab,
         |  round(pmi, 6) AS pmi
         |FROM j ORDER BY round(pmi, 6) DESC, term_a, term_b
-        |LIMIT 50""".stripMargin,
-    "text_repetition" ->
+        |LIMIT 50""".stripMargin)),
+    Query("text_repetition", q_text_repetition, Sql(
       """WITH w AS (SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |g2 AS (SELECT doc_id,
@@ -10576,8 +9264,8 @@ object SparkEntry {
         |      AS dup3_frac
         |  FROM c3 GROUP BY 1)
         |SELECT m2.doc_id, top2_frac, dup2_frac, top3_frac, dup3_frac
-        |FROM m2 JOIN m3 ON m2.doc_id = m3.doc_id ORDER BY m2.doc_id""".stripMargin,
-    "proj_unpivot" ->
+        |FROM m2 JOIN m3 ON m2.doc_id = m3.doc_id ORDER BY m2.doc_id""".stripMargin)),
+    Query("proj_unpivot", q_proj_unpivot, Sql(
       """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
         |  l_quantity AS value FROM lineitem
         |UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice',
@@ -10586,8 +9274,8 @@ object SparkEntry {
         |  l_discount FROM lineitem
         |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax',
         |  l_tax FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "text_chunk" ->
+        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin)),
+    Query("text_chunk", q_text_chunk, Sql(
       """WITH w AS (SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\s+') AS ws FROM documents),
         |s AS (SELECT doc_id, ws,
@@ -10598,8 +9286,8 @@ object SparkEntry {
         |  CAST(strt AS BIGINT) AS strt,
         |  CAST(len(chunk) AS BIGINT) AS n_tokens,
         |  array_to_string(chunk, ' ') AS chunk
-        |FROM k ORDER BY doc_id, chunk_id""".stripMargin,
-    "agg_diversity" ->
+        |FROM k ORDER BY doc_id, chunk_id""".stripMargin)),
+    Query("agg_diversity", q_agg_diversity, Sql(
       """WITH g AS (SELECT source, lang, count(*) AS c
         |  FROM documents GROUP BY 1, 2),
         |a AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_docs,
@@ -10610,8 +9298,8 @@ object SparkEntry {
         |  (CAST(n_docs AS DOUBLE) * CAST(n_docs AS DOUBLE) - sc2)
         |    / (CAST(n_docs AS DOUBLE) * CAST(n_docs AS DOUBLE))
         |    AS gini_simpson
-        |FROM a ORDER BY source""".stripMargin,
-    "join_fuzzy" ->
+        |FROM a ORDER BY source""".stripMargin)),
+    Query("join_fuzzy", q_join_fuzzy, Sql(
       """WITH c AS (SELECT c_custkey, c_name,
         |    substr(c_name, 10, 7) AS blk FROM customer)
         |SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
@@ -10619,13 +9307,13 @@ object SparkEntry {
         |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
         |FROM c a JOIN c b ON a.blk = b.blk AND a.c_custkey < b.c_custkey
         |WHERE levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "text_pii_mask" ->
+        |ORDER BY id_a, id_b""".stripMargin)),
+    Query("text_pii_mask", q_text_pii_mask, Sql(
       """SELECT c_custkey, md5(c_name) AS c_name_pseud,
         |  regexp_replace(c_name, '[0-9]', '#', 'g') AS c_name_masked,
         |  floor(c_acctbal / 100.0) * 100.0 AS c_acctbal_bucket
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "dedup_semantic" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("dedup_semantic", q_dedup_semantic, Sql(
       s"""WITH s AS (SELECT vec_id AS seed_id, embedding AS sv
          |  FROM embeddings ORDER BY vec_id LIMIT 8),
          |sc AS (SELECT e.vec_id, s.seed_id,
@@ -10647,14 +9335,14 @@ object SparkEntry {
          |SELECT a.vec_id, a.cluster,
          |  CASE WHEN d.vb IS NULL THEN 1 ELSE 0 END AS keep
          |FROM asg a LEFT JOIN dr d ON a.vec_id = d.vb
-         |ORDER BY a.vec_id""".stripMargin,
+         |ORDER BY a.vec_id""".stripMargin)),
     // Real PNG decode twin: pixel (x,y) of the 4×4 digest image is md5
     // byte 4y+x, so the decoded Rec.601 luminance is re-derivable from
     // md5(text) alone. The float truncation is mirrored with CAST(... AS
     // REAL) so both engines round to the same float32 before round(_, 6).
     // 8 LE int16 samples re-derived from md5 hex; sign via the 32768
     // two's-complement fold — any codec header/endian/sign bug hash-fails
-    "multimodal_wav_decode" ->
+    Query("multimodal_wav_decode", q_multimodal_wav_decode, Sql(
       """WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents
         |  WHERE text IS NOT NULL),
         |i AS (SELECT unnest(range(0, 8)) AS i),
@@ -10670,27 +9358,27 @@ object SparkEntry {
         |  CAST(sum(s * s) AS BIGINT) AS s_sqsum,
         |  CAST(min(s) AS BIGINT) AS s_min,
         |  CAST(max(s) AS BIGINT) AS s_max
-        |FROM sv GROUP BY 1 ORDER BY doc_id""".stripMargin,
+        |FROM sv GROUP BY 1 ORDER BY doc_id""".stripMargin)),
     // EM guarantee flags (round 11): SQL-exact (stream, component) grid
     // + fit row count; the three flags assert the EM contract
-    "ml_gmm" ->
+    Query("ml_gmm", q_ml_gmm, Sql(
       """WITH g AS (SELECT event_type, count(*) AS n FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1),
         |c AS (SELECT CAST(unnest(range(0, 3)) AS INTEGER) AS component)
         |SELECT event_type, component, n,
         |  TRUE AS em_monotone, TRUE AS em_weights_ok, TRUE AS var_floor_ok
-        |FROM g CROSS JOIN c ORDER BY event_type, component""".stripMargin,
+        |FROM g CROSS JOIN c ORDER BY event_type, component""".stripMargin)),
     // deflate guarantee flags (round 11): DuckDB has no zlib; the exact
     // side is doc_id + n_chars, the flags assert the codec invariants
-    "text_compressibility" ->
+    Query("text_compressibility", q_text_compressibility, Sql(
       """SELECT doc_id, length(text) AS n_chars,
         |  TRUE AS bounded, TRUE AS dup_collapses
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // PCA variance-accounting guarantee (round 11): the SQL side is the
     // exact aligned means; the four flags assert the identities listed
     // in q_ml_pca_anomaly's scaladoc — deterministic facts on fixed
     // data, so a pipeline regression hash-fails the whole row set
-    "ml_pca_anomaly" ->
+    Query("ml_pca_anomaly", q_ml_pca_anomaly, Sql(
       s"""WITH w AS ($wide1h)
          |SELECT bucket, round(click, 6) AS click, round(view, 6) AS view,
          |  round(purchase, 6) AS purchase,
@@ -10698,12 +9386,12 @@ object SparkEntry {
          |FROM w
          |WHERE click IS NOT NULL AND view IS NOT NULL
          |  AND purchase IS NOT NULL
-         |ORDER BY bucket""".stripMargin,
+         |ORDER BY bucket""".stripMargin)),
     // fallback-decode mirror: feature i = first 4 md5 bytes of
     // (payload ++ [i]) as uint32 / 2^32, float32-truncated — chr(i) IS
     // the appended byte for i < 128, and /2^32 is exact in double (power
     // of two), so CAST(... AS REAL) reproduces the same float
-    "multimodal_features" -> {
+    Query("multimodal_features", q_multimodal_features, Sql {
       def f(i: Int) =
         s"round(CAST(CAST(CAST(('0x'||substr(md5(text || chr($i)), 1, 8)) AS BIGINT)" +
           s" / 4294967296.0 AS REAL) AS DOUBLE), 6) AS f$i"
@@ -10711,8 +9399,8 @@ object SparkEntry {
          |  CAST(16 AS INTEGER) AS dim,
          |  ${f(0)}, ${f(5)}, ${f(10)}, ${f(15)}
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "multimodal_decode" -> {
+    }),
+    Query("multimodal_decode", q_multimodal_decode, Sql {
       def f(idx: Int) =
         s"round(CAST(CAST((CAST(0.299 AS DOUBLE) * v$idx + CAST(0.587 AS DOUBLE) * v$idx" +
           s" + CAST(0.114 AS DOUBLE) * v$idx) / 255.0 AS REAL) AS DOUBLE), 6) AS f$idx"
@@ -10723,19 +9411,19 @@ object SparkEntry {
          |SELECT doc_id, CAST(4 AS BIGINT) AS w, CAST(4 AS BIGINT) AS h,
          |  ${f(0)}, ${f(5)}, ${f(10)}, ${f(15)}
          |FROM b ORDER BY doc_id""".stripMargin
-    },
+    }),
     // the Spark side reads an ORC materialization of the same rows — the
     // parquet-derived oracle catches any round-trip type drift
-    "scan_orc" ->
+    Query("scan_orc", q_scan_orc, Sql(
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
         |  min(CAST(ts AS TIMESTAMP)) AS min_ts,
         |  max(CAST(ts AS TIMESTAMP)) AS max_ts,
         |  CAST(sum(length(props)) AS BIGINT) AS sum_props_len
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the merge algebra (anti-join ∪ updates) derived independently in
     // SQL; the Spark side aggregates the PERSISTED merged files
-    "sink_upsert" ->
+    Query("sink_upsert", q_sink_upsert, Sql(
       """WITH upd AS (
         |  SELECT event_id, event_type, value + 1000 AS value
         |  FROM events WHERE event_id % 7 = 0
@@ -10749,10 +9437,10 @@ object SparkEntry {
         |SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
         |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin)),
     // fixed-point micro-unit mirror (see q_win_seasonal_decompose): every
     // output is one exact integer / the same exact small doubles
-    "agg_session_stats" ->
+    Query("agg_session_stats", q_agg_session_stats, Sql(
       """WITH o AS (SELECT user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |m AS (SELECT user_id, us,
@@ -10772,8 +9460,8 @@ object SparkEntry {
         |  round(quantile_cont(n_events, 0.9), 6) AS p90_events,
         |  round(quantile_cont(dur_us, 0.5), 6) AS median_dur_us,
         |  round(quantile_cont(dur_us, 0.9), 6) AS p90_dur_us
-        |FROM g""".stripMargin,
-    "agg_schema_drift" ->
+        |FROM g""".stripMargin)),
+    Query("agg_schema_drift", q_agg_schema_drift, Sql(
       """WITH keys AS (SELECT DISTINCT
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
         |    unnest(json_keys(props)) AS k
@@ -10789,8 +9477,8 @@ object SparkEntry {
         |SELECT pd.day, n_keys, key_set,
         |  COALESCE(nk.new_keys, 0) AS new_keys
         |FROM pd LEFT JOIN nk ON nk.day = pd.day
-        |ORDER BY pd.day""".stripMargin,
-    "win_seasonal_outliers" ->
+        |ORDER BY pd.day""".stripMargin)),
+    Query("win_seasonal_outliers", q_win_seasonal_outliers, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
@@ -10815,8 +9503,8 @@ object SparkEntry {
         |SELECT event_type, bucket, CAST(rq AS DOUBLE) / 100.0 AS resid
         |FROM q JOIN st ON event_type = et
         |WHERE n * n * rq * rq > 9 * (n * srr - sr * sr)
-        |ORDER BY 1, 2""".stripMargin,
-    "agg_effect_size" ->
+        |ORDER BY 1, 2""".stripMargin)),
+    Query("agg_effect_size", q_agg_effect_size, Sql(
       """WITH c AS (SELECT event_type,
         |    user_id % 2 = 0 AS isa,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
@@ -10836,8 +9524,8 @@ object SparkEntry {
         |        (CAST(s2a AS DOUBLE) - CAST(s1a AS DOUBLE) * CAST(s1a AS DOUBLE) / na)
         |        + (CAST(s2b AS DOUBLE) - CAST(s1b AS DOUBLE) * CAST(s1b AS DOUBLE) / nb))
         |      / CAST(na + nb - 2 AS DOUBLE)), 0), 6) AS cohens_d
-        |FROM g ORDER BY event_type""".stripMargin,
-    "win_seasonal_decompose" ->
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Query("win_seasonal_decompose", q_win_seasonal_decompose, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
@@ -10856,11 +9544,11 @@ object SparkEntry {
         |  CAST(sum25 AS DOUBLE) / 25.0 / 1000000.0 AS trend,
         |  CAST(s_sum AS DOUBLE) / (25.0 * cnt) / 1000000.0 AS seasonal,
         |  CAST(cnt * detr25 - s_sum AS DOUBLE) / (25.0 * cnt) / 1000000.0 AS resid
-        |FROM g ORDER BY event_type, bucket""".stripMargin,
+        |FROM g ORDER BY event_type, bucket""".stripMargin)),
     // the decompose CTEs verbatim, each component quantized to exact
     // centi-unit BIGINTs (DECIMAL(18,2) HALF_UP), variances from
     // n·Σq² − (Σq)² (all products ≪ 2^53), one mirrored IEEE division
-    "agg_seasonal_strength" ->
+    Query("agg_seasonal_strength", q_agg_seasonal_strength, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
@@ -10894,32 +9582,11 @@ object SparkEntry {
         |  round(greatest(0.0, 1.0 - CAST(n * srr - sr * sr AS DOUBLE)
         |    / NULLIF(CAST(n * stt - st * st AS DOUBLE), 0)), 6)
         |    AS trend_strength
-        |FROM a ORDER BY event_type""".stripMargin,
-    "search_bm25" ->
+        |FROM a ORDER BY event_type""".stripMargin)),
+    Query("search_bm25", q_search_bm25, Sql(
       s"""WITH $bm25Cte
-         |SELECT doc_id, bm25 FROM b ORDER BY 1""".stripMargin,
-    "simsearch_hybrid" ->
-      s"""WITH $bm25Cte,
-         |lex AS (SELECT id, lex_rank FROM (
-         |  SELECT doc_id AS id,
-         |    row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
-         |  FROM b) WHERE lex_rank <= 50),
-         |dots AS (SELECT c.vec_id AS id,
-         |    ${dotSql("q.embedding", "c.embedding")}
-         |      / sqrt(NULLIF(${normSqSql("q.embedding")}
-         |          * ${normSqSql("c.embedding")}, 0)) AS cos
-         |  FROM embeddings q, embeddings c
-         |  WHERE q.vec_id = 0 AND c.vec_id <> 0),
-         |dense AS (SELECT id, dense_rank FROM (
-         |  SELECT id, row_number() OVER (ORDER BY cos DESC, id) AS dense_rank
-         |  FROM dots) WHERE dense_rank <= 50)
-         |SELECT id,
-         |  round(coalesce(1.0/(60 + lex_rank), 0)
-         |    + coalesce(1.0/(60 + dense_rank), 0), 6) AS rrf,
-         |  lex_rank, dense_rank
-         |FROM lex FULL OUTER JOIN dense USING (id)
-         |ORDER BY id""".stripMargin,
-    "dedup_substring" ->
+         |SELECT doc_id, bm25 FROM b ORDER BY 1""".stripMargin)),
+    Query("dedup_substring", q_dedup_substring, Sql(
       """WITH pos AS (
         |  SELECT doc_id, text, unnest(list_distinct(
         |    range(1, greatest(length(text) - 63, 1) + 1, 32) ||
@@ -10936,18 +9603,18 @@ object SparkEntry {
         |  FROM spans JOIN shared USING (h) GROUP BY 1)
         |SELECT d.doc_id, coalesce(dup.n_dup_spans, 0) AS n_dup_spans
         |FROM documents d LEFT JOIN dup USING (doc_id)
-        |ORDER BY 1""".stripMargin,
-    "agg_ks_drift" -> driftOracle(
+        |ORDER BY 1""".stripMargin)),
+    Query("agg_ks_drift", q_agg_ks_drift, Sql(driftOracle(
       """round(max(abs(fa - fb)), 6) AS ks""",
       """CAST(sum(na) OVER pk AS DOUBLE) / sum(na) OVER pt AS fa,
         |          CAST(sum(nb) OVER pk AS DOUBLE) / sum(nb) OVER pt AS fb"""
-        .stripMargin),
-    "agg_psi_drift" -> driftOracle(
+        .stripMargin))),
+    Query("agg_psi_drift", q_agg_psi_drift, Sql(driftOracle(
       """round(sum((pa - pb) * ln(pa / pb)), 6) AS psi""",
       """(na + 0.5) / (sum(na) OVER pt + 0.5 * count(*) OVER pt) AS pa,
         |          (nb + 0.5) / (sum(nb) OVER pt + 0.5 * count(*) OVER pt) AS pb"""
-        .stripMargin),
-    "dedup_paragraphs" ->
+        .stripMargin))),
+    Query("dedup_paragraphs", q_dedup_paragraphs, Sql(
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |segs AS (
         |  SELECT doc_id, CAST(i AS BIGINT) AS seg_idx,
@@ -10964,19 +9631,11 @@ object SparkEntry {
         |  count(*) AS n_kept,
         |  any_value(n_segs) - count(*) AS n_dropped
         |FROM kept k JOIN tot USING (doc_id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_corr_matrix" -> corrMatrixOracle,
-    "agg_mahalanobis" -> mahalanobisOracle,
-    "agg_acf" -> acfOracle,
-    "graph_pagerank" -> pagerankOracle(),
-    "graph_triangles" -> trianglesOracle(),
-    "graph_cc" -> graphCcOracle(),
-    "graph_bfs" -> graphBfsOracle(),
-    "graph_jaccard_nbrs" -> graphJaccardNbrsOracle(),
-    "graph_degree" -> graphDegreeOracle(),
-    "simsearch_mmr" -> mmrOracle,
-    "simsearch_recall_audit" -> recallAuditOracle(),
-    "win_drawdown" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_corr_matrix", q_agg_corr_matrix, Sql(corrMatrixOracle)),
+    Query("agg_mahalanobis", q_agg_mahalanobis, Sql(mahalanobisOracle)),
+    Query("agg_acf", q_agg_acf, Sql(acfOracle)),
+    Query("win_drawdown", q_win_drawdown, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -10987,10 +9646,10 @@ object SparkEntry {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runmax
         |  FROM h)
         |SELECT event_type, bucket, c, runmax, runmax - c AS drawdown
-        |FROM r ORDER BY 1, 2""".stripMargin,
+        |FROM r ORDER BY 1, 2""".stripMargin)),
     // every ln over an exact integer, milli-quantized half-up (positive
     // → identical both engines); OLS sums exact BIGINTs
-    "agg_zipf_fit" ->
+    Query("agg_zipf_fit", q_agg_zipf_fit, Sql(
       """WITH w AS (SELECT lang,
         |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
         |  FROM documents),
@@ -11016,11 +9675,11 @@ object SparkEntry {
         |      * CAST(n * sqf - sq * sf AS DOUBLE))
         |    / NULLIF(CAST(n * sqq - sq * sq AS DOUBLE)
         |      * CAST(n * sff - sf * sf AS DOUBLE), 0), 6) AS r2
-        |FROM g ORDER BY lang""".stripMargin,
+        |FROM g ORDER BY lang""".stripMargin)),
     // each event contributes to its FOUR window starts — replicate-then-
     // aggregate (the WAU trick in time-window form); v6 = exact integer
     // micro mean, so the streamed sliding windows hash-match
-    "stream_sliding" ->
+    Query("stream_sliding", q_stream_sliding, Sql(
       """WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS t, value
         |  FROM events WHERE value IS NOT NULL),
         |ks AS (SELECT unnest(range(0, 4)) AS k),
@@ -11032,8 +9691,8 @@ object SparkEntry {
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
         |    // count(*) AS v6,
         |  count(*) AS n
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "win_peaks" ->
+        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("win_peaks", q_win_peaks, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11047,16 +9706,16 @@ object SparkEntry {
         |SELECT event_type, bucket, c, c - nbmin AS prominence
         |FROM l WHERE prev IS NOT NULL AND nxt IS NOT NULL
         |  AND c > prev AND c > nxt AND c - nbmin >= 500
-        |ORDER BY 1, 2""".stripMargin,
-    "agg_hod_profile" ->
+        |ORDER BY 1, 2""".stripMargin)),
+    Query("agg_hod_profile", q_agg_hod_profile, Sql(
       """SELECT event_type,
         |  dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS dow,
         |  hour(CAST(ts AS TIMESTAMP)) AS hod, count(*) AS n,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
         |    // count(*) AS DOUBLE) / 1000000.0 AS mean_v
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "win_percent_rank" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Query("win_percent_rank", q_win_percent_rank, Sql(
       """WITH e AS (SELECT event_id, event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -11064,8 +9723,8 @@ object SparkEntry {
         |SELECT event_id, event_type, c,
         |  round(percent_rank() OVER (PARTITION BY event_type ORDER BY c), 6)
         |    AS pr
-        |FROM e ORDER BY event_id""".stripMargin,
-    "win_rsi" ->
+        |FROM e ORDER BY event_id""".stripMargin)),
+    Query("win_rsi", q_win_rsi, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11084,8 +9743,8 @@ object SparkEntry {
         |SELECT event_type, bucket,
         |  round(100.0 * CAST(sg AS DOUBLE)
         |    / NULLIF(CAST(sg + sl AS DOUBLE), 0), 6) AS rsi
-        |FROM w WHERE wn = 14 ORDER BY 1, 2""".stripMargin,
-    "win_log_return" ->
+        |FROM w WHERE wn = 14 ORDER BY 1, 2""".stripMargin)),
+    Query("win_log_return", q_win_log_return, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11097,8 +9756,8 @@ object SparkEntry {
         |SELECT event_type, bucket, c,
         |  round(ln(CAST(c AS DOUBLE)) - ln(CAST(prev AS DOUBLE)), 6)
         |    AS log_return
-        |FROM p WHERE prev IS NOT NULL ORDER BY 1, 2""".stripMargin,
-    "agg_benford" ->
+        |FROM p WHERE prev IS NOT NULL ORDER BY 1, 2""".stripMargin)),
+    Query("agg_benford", q_agg_benford, Sql(
       """WITH e AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -11112,8 +9771,8 @@ object SparkEntry {
         |  round(CAST(obs AS DOUBLE) / n, 6) AS observed_p,
         |  round(ln((digit + 1.0) / digit) / ln(10.0), 6) AS benford_p
         |FROM g JOIN n USING (event_type)
-        |ORDER BY event_type, digit""".stripMargin,
-    "agg_rfm" ->
+        |ORDER BY event_type, digit""".stripMargin)),
+    Query("agg_rfm", q_agg_rfm, Sql(
       """WITH u AS (SELECT user_id,
         |    max(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |    count(*) AS freq,
@@ -11144,8 +9803,8 @@ object SparkEntry {
         |  FROM u CROSS JOIN t)
         |SELECT user_id, last_us, freq, monetary, r_score, f_score, m_score,
         |  r_score * 100 + f_score * 10 + m_score AS rfm
-        |FROM sc ORDER BY user_id""".stripMargin,
-    "ml_mase_baselines" ->
+        |FROM sc ORDER BY user_id""".stripMargin)),
+    Query("ml_mase_baselines", q_ml_mase_baselines, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11164,8 +9823,8 @@ object SparkEntry {
         |  round(CAST(se24 AS DOUBLE) / n, 6) AS mae_seasonal,
         |  round(CAST(se24 AS DOUBLE) / NULLIF(CAST(se1 AS DOUBLE), 0), 6)
         |    AS seasonal_vs_naive
-        |FROM g ORDER BY event_type""".stripMargin,
-    "agg_interval_union" ->
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Query("agg_interval_union", q_agg_interval_union, Sql(
       """WITH iv AS (SELECT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS st, event_id,
@@ -11191,8 +9850,8 @@ object SparkEntry {
         |  FROM i GROUP BY 1, 2, 3)
         |SELECT user_id, day, count(*) AS n_islands,
         |  CAST(sum(is_en - is_st) AS BIGINT) AS covered_us
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "agg_value_histogram" ->
+        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_value_histogram", q_agg_value_histogram, Sql(
       """WITH e AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -11203,8 +9862,8 @@ object SparkEntry {
         |  FROM e JOIN ext USING (event_type))
         |SELECT event_type, bin, count(*) AS cnt,
         |  round(CAST(count(*) AS DOUBLE) / min(n), 6) AS share
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "agg_burstiness" ->
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_burstiness", q_agg_burstiness, Sql(
       """WITH k AS (SELECT event_type,
         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    count(*) AS k
@@ -11223,8 +9882,8 @@ object SparkEntry {
         |    / NULLIF(sqrt(CAST(n * skk - sk * sk AS DOUBLE)
         |        / CAST(n * (n - 1) AS DOUBLE)) + CAST(sk AS DOUBLE) / n, 0), 6)
         |    AS burstiness
-        |FROM g ORDER BY event_type""".stripMargin,
-    "agg_user_segments" ->
+        |FROM g ORDER BY event_type""".stripMargin)),
+    Query("agg_user_segments", q_agg_user_segments, Sql(
       """WITH u AS (SELECT user_id,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c_click,
         |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS c_view,
@@ -11252,8 +9911,8 @@ object SparkEntry {
         |  CAST(sum(c_error) AS BIGINT) AS tot_error,
         |  CAST(sum(c_signup) AS BIGINT) AS tot_signup
         |FROM r WHERE rn = 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_gini" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_gini", q_agg_gini, Sql(
       """WITH e AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
         |      // 10000) AS c
@@ -11266,10 +9925,10 @@ object SparkEntry {
         |SELECT event_type, n,
         |  round(CAST(2 * si - (n + 1) * sx AS DOUBLE)
         |    / NULLIF(CAST(n * sx AS DOUBLE), 0), 6) AS gini
-        |FROM g ORDER BY event_type""".stripMargin,
+        |FROM g ORDER BY event_type""".stripMargin)),
     // frozen-covariance scoring of the streamed second half — the whole
     // stream path (readStream → stateful agg → align → d²) hash-checked
-    "stream_mahalanobis" ->
+    Query("stream_mahalanobis", q_stream_mahalanobis, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11305,10 +9964,10 @@ object SparkEntry {
         |  FROM m)
         |SELECT bucket, x AS c_click, y AS c_view, round(d2u, 6) AS d2,
         |  CASE WHEN d2u > 9.21 THEN 1 ELSE 0 END AS outlier
-        |FROM d ORDER BY bucket""".stripMargin,
-    "win_rolling_corr" -> rollingCorrOracle,
+        |FROM d ORDER BY bucket""".stripMargin)),
+    Query("win_rolling_corr", q_win_rolling_corr, Sql(rollingCorrOracle)),
     // all integers until the final tau division — bit-exact, unrounded
-    "agg_trend_mk" ->
+    Query("agg_trend_mk", q_agg_trend_mk, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11324,17 +9983,17 @@ object SparkEntry {
         |  CAST(sum(sg) AS DOUBLE) / (any_value(n.n) * (any_value(n.n) - 1) // 2)
         |    AS tau
         |FROM p JOIN n USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // date-bounded aggregate on the UNPARTITIONED original — a partition
     // derivation or pruning bug in the layout read-back hash-fails
-    "scan_pruned_manifest" ->
+    Query("scan_pruned_manifest", q_scan_pruned_manifest, Sql(
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM events
         |WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-08 00:00:00'
         |  AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-15 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sink_partitioned" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("sink_partitioned", q_sink_partitioned, Sql(
       """SELECT CAST(CAST(CAST(ts AS TIMESTAMP) AS DATE) AS TIMESTAMP)
         |    AS event_date, event_type,
         |  count(*) AS n,
@@ -11342,10 +10001,10 @@ object SparkEntry {
         |FROM events
         |WHERE CAST(CAST(ts AS TIMESTAMP) AS DATE) >= DATE '2024-01-08'
         |  AND CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '2024-01-15'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // frozen hour-of-day profile from cohort A; live buckets scored
     // against it — exact integer micro-units, unrounded outputs
-    "stream_seasonal" ->
+    Query("stream_seasonal", q_stream_seasonal, Sql(
       """WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS t, value
         |     FROM events WHERE value IS NOT NULL),
         |p AS (SELECT event_type, hour(t) AS hod,
@@ -11361,9 +10020,9 @@ object SparkEntry {
         |  CAST(p6 AS DOUBLE) / 1000000.0 AS expected,
         |  CAST(v6 - p6 AS DOUBLE) / 1000000.0 AS resid
         |FROM l JOIN p ON l.event_type = p.event_type AND hour(bucket) = p.hod
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin)),
     // smooth idf (sklearn form); rank over (rounded score, term) — total
-    "text_tfidf" ->
+    Query("text_tfidf", q_text_tfidf, Sql(
       """WITH toks AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
         |  FROM documents),
@@ -11376,10 +10035,10 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
         |    ORDER BY tfidf DESC, term) AS rnk FROM sc)
         |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, tfidf
-        |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin,
+        |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin)),
     // open/close picked through the total-order struct (t, id, v) — both
     // engines compare structs lexicographically, so ties resolve identically
-    "agg_resample_ohlc" ->
+    Query("agg_resample_ohlc", q_agg_resample_ohlc, Sql(
       """WITH e AS (SELECT event_type,
         |       date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |       CAST(ts AS TIMESTAMP) AS t, event_id, value
@@ -11389,9 +10048,9 @@ object SparkEntry {
         |  max(value) AS high, min(value) AS low,
         |  max({'t': t, 'id': event_id, 'v': value}).v AS close,
         |  count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // integer counts into ln; PSI's portable-ln discipline, round(6)
-    "agg_entropy" ->
+    Query("agg_entropy", q_agg_entropy, Sql(
       """WITH u AS (SELECT event_type, user_id, count(*) AS nu
         |           FROM events GROUP BY 1, 2),
         |g AS (SELECT event_type, CAST(sum(nu) AS BIGINT) AS n_events,
@@ -11403,9 +10062,9 @@ object SparkEntry {
         |SELECT event_type, n_events, n_users, round(hraw, 6) AS entropy,
         |  round(hraw / nullif(ln(CAST(n_users AS DOUBLE)), 0.0), 6)
         |    AS norm_entropy
-        |FROM h ORDER BY 1""".stripMargin,
+        |FROM h ORDER BY 1""".stripMargin)),
     // exact integer surface counts; two mirrored IEEE divisions, round(4)
-    "text_readability" ->
+    Query("text_readability", q_text_readability, Sql(
       """WITH c AS (SELECT doc_id, lang,
         |    CAST(length(string_split(text, ' ')) AS BIGINT) AS words,
         |    CAST(length(regexp_replace(lower(text), '[aeiouy]+', '#', 'g'))
@@ -11424,9 +10083,9 @@ object SparkEntry {
         |SELECT doc_id, lang, words, sentences, syllables,
         |  round(206.835 - 1.015 * wps - 84.6 * spw, 4) AS flesch,
         |  round(0.39 * wps + 11.8 * spw - 15.59, 4) AS fk_grade
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin)),
     // exact BIGINT sufficient statistics; three mirrored IEEE divisions
-    "ml_ols_trend" ->
+    Query("ml_ols_trend", q_ml_ols_trend, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11457,9 +10116,9 @@ object SparkEntry {
         |  round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
         |    / nullif(CAST(dent AS DOUBLE) * CAST(denc AS DOUBLE), 0.0), 6)
         |    AS r2
-        |FROM sl ORDER BY 1""".stripMargin,
+        |FROM sl ORDER BY 1""".stripMargin)),
     // integer prefix sums; the one score division mirrored in IEEE
-    "ml_changepoint" ->
+    Query("ml_changepoint", q_ml_changepoint, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11488,9 +10147,9 @@ object SparkEntry {
         |  round(CAST(sk AS DOUBLE) / CAST(k AS DOUBLE), 6) AS mean_left,
         |  round(CAST(stot - sk AS DOUBLE) / CAST(nn - k AS DOUBLE), 6)
         |    AS mean_right
-        |FROM r WHERE rnk = 1 ORDER BY 1""".stripMargin,
+        |FROM r WHERE rnk = 1 ORDER BY 1""".stripMargin)),
     // slopes are exact-integer ratios; median = interpolated percentile
-    "agg_trend_sen" ->
+    Query("agg_trend_sen", q_agg_trend_sen, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11505,9 +10164,9 @@ object SparkEntry {
         |        ON a.event_type = b.event_type AND a.t < b.t)
         |SELECT event_type, round(quantile_cont(slope, 0.5), 6) AS sen_slope,
         |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the streamed candles must equal the batch candles exactly
-    "stream_ohlc" ->
+    Query("stream_ohlc", q_stream_ohlc, Sql(
       """WITH e AS (SELECT event_type,
         |       date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |       CAST(ts AS TIMESTAMP) AS t, event_id, value
@@ -11517,12 +10176,12 @@ object SparkEntry {
         |  max(value) AS high, min(value) AS low,
         |  max({'t': t, 'id': event_id, 'v': value}).v AS close,
         |  count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // p50_ok/p95_ok TRUE = the streamed t-digest estimates sit inside
     // their order-statistic brackets (q_stream_tdigest scaladoc); n and
     // the exact percentiles are SQL-recomputed, so a broken streaming
     // agg or sketch hash-fails the row.
-    "stream_tdigest" ->
+    Query("stream_tdigest", q_stream_tdigest, Sql(
       """SELECT event_type,
         |  date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |  count(*) AS n,
@@ -11530,28 +10189,28 @@ object SparkEntry {
         |  round(quantile_cont(value, 0.95), 6) AS p95_exact,
         |  TRUE AS p50_ok, TRUE AS p95_ok
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // rank_ok TRUE = the streamed t-digest p99's order-statistic bracket
     // (q_stream_threshold scaladoc)
-    "stream_threshold" ->
+    Query("stream_threshold", q_stream_threshold, Sql(
       """SELECT event_type, count(*) AS n,
         |  round(quantile_cont(value, 0.99), 6) AS thr_p99_exact,
         |  TRUE AS rank_ok
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the streamed as-of must equal the batch as-of — join_asof's oracle
-    "stream_asof" ->
+    Query("stream_asof", q_stream_asof, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
         |           FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         |SELECT l.event_id, l.user_id, l.value, round(r.vv, 6) AS asof_view
         |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t >= r.t
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
     // the FULL Kalman recursion replayed as a list_reduce fold — every
     // float op mirrors Streams.kalmanOnline verbatim (association
     // included); state = [level, P, K]; unrounded by construction
-    "stream_kalman" ->
+    Query("stream_kalman", q_stream_kalman, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11575,13 +10234,13 @@ object SparkEntry {
         |  FROM ser)
         |SELECT event_type, CAST(n AS BIGINT) AS n,
         |  st[1] AS level, st[2] AS p, st[3] AS k
-        |FROM fin ORDER BY event_type""".stripMargin,
+        |FROM fin ORDER BY event_type""".stripMargin)),
     // the FULL Holt-Winters recursion replayed as a list_reduce fold —
     // every float op mirrors HoltWinters.smooth verbatim (literals,
     // association, the (1 - 0.3)-is-not-0.7 trap), state = 27-double list
     // [t, level, trend, s0..s23]; input is the fixed-point hourly mean.
     // Unrounded output: the doubles are bit-identical by construction.
-    "ml_holt_winters" ->
+    Query("ml_holt_winters", q_ml_holt_winters, Sql(
       """WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
@@ -11624,9 +10283,9 @@ object SparkEntry {
         |    + st[4 + CAST((n + k - 1) % 24 AS INTEGER)] AS yhat,
         |  st[2] AS level, st[3] AS trend
         |FROM fin, unnest(range(1, 25)) AS t(k)
-        |ORDER BY event_type, step""".stripMargin,
+        |ORDER BY event_type, step""".stripMargin)),
     // exact integer sums divided by exact integer counts — no rounding
-    "sample_soft_dedup" ->
+    Query("sample_soft_dedup", q_sample_soft_dedup, Sql(
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |segs AS (
         |  SELECT doc_id,
@@ -11638,10 +10297,10 @@ object SparkEntry {
         |      FROM segs s JOIN df ON md5(s.seg) = df.h GROUP BY 1)
         |SELECT doc_id, CAST(sum_df AS DOUBLE) / n AS mean_df,
         |  CAST(n AS DOUBLE) / sum_df AS weight
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin)),
     // the streamed CDC apply must land on the SAME final state as the
     // one-shot batch merge — sink_upsert's oracle, verbatim
-    "stream_upsert" ->
+    Query("stream_upsert", q_stream_upsert, Sql(
       """WITH upd AS (
         |  SELECT event_id, event_type, value + 1000 AS value
         |  FROM events WHERE event_id % 7 = 0
@@ -11655,10 +10314,10 @@ object SparkEntry {
         |SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
         |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin)),
     // frozen-reference-edge KS (bin ranges from cohort A only, live values
     // clamped into the end bins) — the streaming monitor's exact semantic
-    "stream_drift" ->
+    Query("stream_drift", q_stream_drift, Sql(
       """WITH e AS (SELECT event_type, value,
         |       CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-16 00:00:00' AS is_a
         |     FROM events WHERE value IS NOT NULL AND isfinite(value)),
@@ -11679,33 +10338,31 @@ object SparkEntry {
         |        WINDOW pk AS (PARTITION BY event_type ORDER BY bin),
         |               pt AS (PARTITION BY event_type))
         |SELECT event_type, round(max(abs(fa - fb)), 6) AS ks
-        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin
-  ) ++ publishedOracles(
+        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the run-time-published entries (fitted-params / persisted-artifact
     // oracles): each query builds its own SQL at execution time via
     // publishOracle — no shared mutable state, no run-order coupling
     // (a cold process falls back to the registry-persisted fragment)
-    "simsearch_ivf", "simsearch_pq", "ml_ar_forecast", "ml_adaboost",
-    "ml_isolation_forest", "ml_anomaly_ensemble", "ml_autoencoder",
-    "ml_autoencoder_sgd", "ml_autoencoder_seq", "ml_rnn_autoencoder",
-    "esn_forecast", "multimodal_phash_dedup", "multimodal_phash_incr",
-    // The LSH family (round 14): each query publishes its oracle with
-    // plane literals generated from the fixture's autoPlanesSchedule —
-    // published text OVERRIDES the static uniform-8s default (map ++
-    // semantics), which remains the byte-identical below-floor
-    // fallback for a cold process.
-    "simsearch_lsh", "simsearch_recall_audit", "simsearch_knn_graph",
-    "simsearch_knn_incr", "graph_pagerank", "graph_triangles", "graph_cc",
-    "graph_bfs", "graph_jaccard_nbrs", "graph_degree", "ml_lof")
+    Query("ml_ar_forecast", q_ml_ar_forecast, Published()),
+    Query("ml_adaboost", q_ml_adaboost, Published()),
+    Query("ml_isolation_forest", q_ml_isolation_forest, Published()),
+    Query("ml_anomaly_ensemble", q_ml_anomaly_ensemble, Published()),
+    Query("ml_autoencoder", q_ml_autoencoder, Published()),
+    Query("ml_autoencoder_sgd", q_ml_autoencoder_sgd, Published()),
+    Query("ml_autoencoder_seq", q_ml_autoencoder_seq, Published()),
+    Query("ml_rnn_autoencoder", q_ml_rnn_autoencoder, Published()),
+    Query("esn_forecast", q_esn_forecast, Published()),
+    Query("multimodal_phash_dedup", q_multimodal_phash_dedup, Published()),
+    Query("multimodal_phash_incr", q_multimodal_phash_incr, Published())
+  )
 
-  /** DuckDB DOUBLE[] literal that parses EXACTLY: a plain decimal
-    * literal goes through DECIMAL(18,17) and the cast to DOUBLE can
-    * drift 1 ulp from the shortest-round-trip value (measured: 16 of a
-    * 512-entry codebook's elements drifted), while VARCHAR→DOUBLE is a
-    * correctly-rounded decimal parse — Double.toString round-trips.
-    */
-  private def doubleArraySql(v: Seq[Double]): String =
-    s"list_transform(string_split('${v.mkString("|")}', '|'), x -> CAST(x AS DOUBLE))"
+  /** Every declared query: this file's table, then each family file's. */
+  val declared: Seq[Query] = entryQueries ++ SimilarityGraph.queries
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.builds(declared)
+
+  /** Read on each call: a published oracle appears once its query ran. */
+  def oracleSql: Map[String, String] = Query.oracles(declared)
 
   /** (μ, 1/σ factors, principal components) of the fitted scaler+PCA
     * pipeline — oracle-input literals for q_ml_anomaly_ensemble. The
@@ -12175,104 +10832,6 @@ object SparkEntry {
          |SELECT bucket, event_type, round(v, 6) AS v,
          |  round(v_hat, 6) AS v_hat, round(abs(v - v_hat), 6) AS abs_err
          |FROM p ORDER BY bucket, event_type""".stripMargin
-
-  /** simsearch_pq oracle (round 11): with the persisted codebooks as
-    * literal inputs, DuckDB re-encodes every corpus vector (argmin of
-    * `‖c‖² − 2·v_sub·c` per subspace, ties → lowest code), rebuilds the
-    * decoded approximation by ordered lookup, and re-ranks the cosine
-    * top-k — the full PQ serving path, independent of the Spark plan.
-    */
-  private def pqOracleSqlFor(subDim: Int, vals: String): String =
-    s"""WITH cb AS (SELECT * FROM (VALUES $vals) AS t(sub, code, cvec)),
-           |dd AS (SELECT e.vec_id, cb.sub, cb.code, cb.cvec,
-           |    ${normSqSql("cb.cvec")} - 2.0 * list_sum(list_transform(
-           |      list_zip(e.embedding[cb.sub * $subDim + 1 : cb.sub * $subDim + $subDim],
-           |        cb.cvec),
-           |      x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE))) AS d
-           |  FROM embeddings e CROSS JOIN cb),
-           |enc AS (SELECT vec_id, sub, cvec FROM (
-           |    SELECT vec_id, sub, cvec,
-           |      row_number() OVER (PARTITION BY vec_id, sub
-           |        ORDER BY d ASC, code) AS rn
-           |    FROM dd) WHERE rn = 1),
-           |dec AS (SELECT vec_id, flatten(list(cvec ORDER BY sub)) AS dv
-           |  FROM enc GROUP BY 1),
-           |dots AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-           |    ${dotSql("q.embedding", "c.dv")} AS dot,
-           |    ${normSqSql("q.embedding")} AS nq, ${normSqSql("c.dv")} AS nc
-           |  FROM embeddings q CROSS JOIN dec c
-           |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-           |ranked AS (SELECT qid, nid,
-           |    dot / sqrt(NULLIF(nq * nc, 0)) AS cos_sim,
-           |    row_number() OVER (PARTITION BY qid
-           |      ORDER BY dot / sqrt(NULLIF(nq * nc, 0)) DESC, nid) AS rnk
-           |  FROM dots)
-           |SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-           |FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
-
-  /** simsearch_ivf oracle (round 11): with the persisted centroids as
-    * literal inputs, the whole IVF serving path — squared-L2 assignment
-    * (NearestCentroid's `‖c‖² − 2·q·c` with ties → lowest id), cosine
-    * probe ranking, probe-list join, final top-k — is re-derived
-    * independently in SQL. Float discipline as simsearch_ivf_exact:
-    * both engines evaluate the same double arithmetic left to right, so
-    * order statistics agree; cos_sim rounds to 6 on both sides.
-    */
-  private def ivfOracleSqlFor(vals: String): String =
-    s"""WITH cent AS (SELECT * FROM (VALUES $vals) AS t(cluster, cvec)),
-         |ad AS (SELECT e.vec_id, e.embedding, c.cluster,
-         |    ${normSqSql("c.cvec")} - 2.0 * ${dotSql("e.embedding", "c.cvec")} AS d
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, embedding, cluster FROM (
-         |    SELECT vec_id, embedding, cluster,
-         |      row_number() OVER (PARTITION BY vec_id
-         |        ORDER BY d ASC, cluster) AS rn
-         |    FROM ad) WHERE rn = 1),
-         |probes AS (SELECT qid, qv, nq, cluster FROM (
-         |    SELECT q.vec_id AS qid, q.embedding AS qv,
-         |      ${normSqSql("q.embedding")} AS nq, c.cluster,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${dotSql("q.embedding", "c.cvec")}
-         |          / sqrt(NULLIF(${normSqSql("c.cvec")}, 0)) DESC, c.cluster)
-         |        AS crnk
-         |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 10)
-         |  WHERE crnk <= 4),
-         |ranked AS (SELECT qid, nid, cos_raw,
-         |    row_number() OVER (PARTITION BY qid
-         |      ORDER BY cos_raw DESC, nid) AS rnk
-         |  FROM (SELECT p.qid, a.vec_id AS nid,
-         |      ${dotSql("p.qv", "a.embedding")}
-         |        / sqrt(NULLIF(p.nq * ${normSqSql("a.embedding")}, 0)) AS cos_raw
-         |    FROM asg a JOIN probes p USING (cluster)
-         |    WHERE p.qid <> a.vec_id))
-         |SELECT qid, nid, round(cos_raw, 6) AS cos_sim,
-         |  CAST(rnk AS BIGINT) AS rnk
-         |FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
-
-  /** Shared BM25 CTE chain ending in `b(doc_id, bm25)` — the full
-    * inverted-index algebra mirrored from [[graft.ops.Search.bm25]]
-    * (k1 = 1.2, b = 0.75, query = data/model/training). Scores are
-    * rounded to 6 INSIDE the CTE so every consumer (the ranking join in
-    * the hybrid oracle included) orders on cross-engine-identical values.
-    */
-  private def bm25Cte: String =
-    """toks AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-      |  FROM documents),
-      |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-      |q(term) AS (SELECT * FROM (VALUES ('data'), ('model'), ('training'))),
-      |tf AS (SELECT t.doc_id, t.term, count(*) AS tf
-      |       FROM toks t JOIN q USING (term) GROUP BY 1, 2),
-      |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-      |sc AS (
-      |  SELECT tf.doc_id,
-      |    ln(1 + (s.n - df.df + 0.5)/(df.df + 0.5))
-      |      * tf.tf * (1.2 + 1)
-      |      / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl)) AS sterm
-      |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s),
-      |b AS (SELECT doc_id, round(sum(sterm), 6) AS bm25 FROM sc GROUP BY 1)"""
-      .stripMargin
 
   /** Correlation-matrix oracle (mirrors q_agg_corr_matrix): integer-cents
     * hourly means via pure integer division (never a fractional

@@ -7,7 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Fixture-key the generated-oracle fragments (see
-    // SparkEntry.oracleFragmentFile): a query that fails here must
+    // graft.queries.Oracle.oracleFragmentFile): a query that fails here must
     // surface as a MISSING oracle, never as a stale one from a
     // different fixture's earlier run.
     System.setProperty("graft.oracle.fixture", sfDir)
@@ -36,7 +36,8 @@ object Verify {
     }
     // full JSON string escape (ALL control chars < 0x20): a tab or CR in
     // oracle SQL would otherwise make a JSON reader of this file fail.
-    val json = SparkEntry.oracleSql
+    // Sorted by name, so two runs' files compare byte for byte.
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -6,16 +6,27 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Static tripwire for the one-resolver rule: a parquet source read in
-  * `SparkEntry.scala` goes through [[Tables.resolve]] (directly, or via
-  * `T`/`E`/`Ebetween`), so a query pays the schema-inference job once per
-  * session, not once per read. A raw `read.parquet` is allowed only on the
-  * named paths below, each rewritten or written during the query, or a
-  * multi-file read.
+  * any file that declares queries (`SparkEntry.scala` and the family
+  * files under `graft/queries`) goes through [[Tables.resolve]]
+  * (directly, or via `T`/`E`/`Ebetween`), so a query pays the
+  * schema-inference job once per session, not once per read. A raw
+  * `read.parquet` is allowed only on the named paths below, each
+  * rewritten or written during the query, or a multi-file read.
   */
 class SourceReadsSpec extends AnyFunSuite {
 
   private def source(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+
+  /** Every main source file holding a `Query("<name>", …)` declaration. */
+  private def queryFiles: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get("src/main/scala"))
+    try files.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
+      .filter(p => """\bQuery\(\s*"""".r.findFirstIn(source(p)).isDefined)
+      .toSeq.sorted
+    finally files.close()
+  }
 
   // argument of a raw `.read.parquet(...)` -> why it is not resolved
   private val exempt = Map(
@@ -32,7 +43,10 @@ class SourceReadsSpec extends AnyFunSuite {
     "table" -> "stream_upsert's table, rewritten by every micro-batch")
 
   test("SparkEntry reads parquet sources only through the resolver") {
-    val src = source("src/main/scala/graft/SparkEntry.scala")
+    val files = queryFiles
+    assert(files.contains("src/main/scala/graft/SparkEntry.scala") && files.size > 1,
+      s"query-declaring files not found: $files")
+    val src = files.map(source).mkString("\n")
     val reads = """\.read\.parquet\(([^)]*)\)(\s*\.schema)?""".r
       .findAllMatchIn(src).map(m => (m.group(1).trim, m.group(2) != null)).toList
     assert(reads.nonEmpty && src.contains("Tables.resolve(s, "),
@@ -48,7 +62,7 @@ class SourceReadsSpec extends AnyFunSuite {
 
   test("the events reader and T resolve through Tables") {
     assert(!source("src/main/scala/graft/sources/Events.scala").contains("read.parquet"))
-    val entry = source("src/main/scala/graft/SparkEntry.scala")
+    val entry = source("src/main/scala/graft/queries/Common.scala")
     assert("""def T\(s: SparkSession, dir: String, name: String\): DataFrame =\s+Tables\.resolve\(""".r
       .findFirstIn(entry).isDefined)
   }
