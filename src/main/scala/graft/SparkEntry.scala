@@ -6,8 +6,9 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Artifacts.{registryKey, tableFingerprint}
 import graft.sources.Tables
-import graft.queries.{Query, SimilarityGraph}
-import graft.queries.Common.{T, bm25Cte, dotSql, normSqSql}
+import graft.queries.{Query, SimilarityGraph, Windows}
+import graft.queries.Common.{E, T, bm25Cte, corrPairs, corrTypes, dotSql, hourlyCentsCte,
+  hourlyCentsLong, hourlyCentsWide, longResampled, normSqSql, seasonalGrid}
 import graft.queries.Oracle.{Published, Sql, publishOracle}
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
@@ -16,8 +17,9 @@ import graft.expressions.{CountMinEstimates, DtwDistance}
 /** Driver contract — `queries` and `oracleSql`, both derived from the
   * declared [[graft.queries.Query]] tables: this file's (every query not
   * yet moved to a family file) and each family file's
-  * ([[graft.queries.SimilarityGraph]]). Every query has a DuckDB oracle,
-  * static or published by the query when it runs.
+  * ([[graft.queries.SimilarityGraph]], [[graft.queries.Windows]]).
+  * Every query has a DuckDB oracle, static or published by the query when
+  * it runs.
   *
   * Hash-match discipline (SURVEY.md §2, FIXTURES.md):
   *   - deterministic ORDER BY on a unique key in both engines;
@@ -30,14 +32,6 @@ import graft.expressions.{CountMinEstimates, DtwDistance}
   *     BIGINT for both).
   */
 object SparkEntry {
-
-  /** events scan with `ts` normalized to a µs timestamp regardless of the
-    * fixture generation's physical parquet type (ns-long vs µs — see
-    * [[graft.sources.Events]]). DuckDB's CAST(ts AS TIMESTAMP) performs
-    * the same µs truncation on the oracle side of the compare.
-    */
-  private def E(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Events.read(s, s"$dir/events.parquet")
 
   /** Time-bounded events scan with the range applied to the column AS
     * STORED, so the predicate lands in PushedFilters (row-group pruning
@@ -107,16 +101,6 @@ object SparkEntry {
       .orderBy("ts", "tag", "value")
   }
 
-  /** Small-files compaction — the lake-maintenance sink every long-lived
-    * 100 TB table needs: `repartitionByRange` on the time column packs
-    * the table into a fixed number of target-size files, and the
-    * within-partition sort gives each file a tight ts min/max so later
-    * time-range scans skip whole row groups via parquet statistics. The
-    * compacted copy is registry-gated (one layout pass per dir, the
-    * production cadence); the query reads it BACK and aggregates, with
-    * the oracle on the ORIGINAL table — a lossy compaction (dropped or
-    * duplicated rows at partition boundaries) hash-fails.
-    */
   /** Materialize-once compacted events copy (registry-gated,
     * fingerprint-keyed so a regenerated fixture — or a reader-
     * normalization change: v2 writes the normalized TimestampType ts —
@@ -144,6 +128,16 @@ object SparkEntry {
         .write.mode("overwrite").parquet(out)
     }
 
+  /** Small-files compaction — the lake-maintenance sink every long-lived
+    * 100 TB table needs: `repartitionByRange` on the time column packs
+    * the table into a fixed number of target-size files, and the
+    * within-partition sort gives each file a tight ts min/max so later
+    * time-range scans skip whole row groups via parquet statistics. The
+    * compacted copy is registry-gated (one layout pass per dir, the
+    * production cadence); the query reads it BACK and aggregates, with
+    * the oracle on the ORIGINAL table — a lossy compaction (dropped or
+    * duplicated rows at partition boundaries) hash-fails.
+    */
   private def q_sink_compact(s: SparkSession, dir: String): DataFrame = {
     val root = compactRoot(s, dir)
     Tables.resolve(s, root)
@@ -463,16 +457,6 @@ object SparkEntry {
       .orderBy("event_id")
   }
 
-  private def q_win_smooth_time(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(graft.sources.Events.epochSeconds(col("ts"))) // defensive: NTZ fixture generations
-      .rangeBetween(-600, 0) // trailing 10-minute TIME window (not rows)
-    E(s, dir)
-      .select(col("event_id"), col("user_id"),
-        round(avg(col("value")).over(w), 6).as("smoothed_t"))
-      .orderBy("event_id")
-  }
-
   private def q_join_anti(s: SparkSession, dir: String): DataFrame = {
     // "tags that yielded no rows" analogue; the urgent-order predicate keeps
     // the anti side non-empty at every sf (plain no-orders is empty at sf0.01).
@@ -675,22 +659,6 @@ object SparkEntry {
         round(AnomalyMath.threshold(col("l_extendedprice"), 0.95), 6).as("thr_p95"))
       .orderBy("l_returnflag")
 
-  /** Native t-digest TypedImperativeAggregate next to the exact
-    * percentile it approximates — the streaming/100 TB threshold path.
-    *
-    * ORACLE-CHECKED (round 10) via the countmin discipline: the sketch
-    * VALUE depends on partial-aggregation merge order (not
-    * hash-portable; it stays on the expression API, value accuracy
-    * pinned in TDigestSpec), so the driver row carries the SQL-exact
-    * percentile + count plus `rank_ok`, the order-statistic bracket of
-    * the t-digest estimate: with h = p·(n−1) the interpolated quantile
-    * lies between order stats ⌊h⌋ and ⌈h⌉ (0-based), so
-    * count(≤ est) ≥ ⌊h⌋+1 − ⌈ε·n⌉ and count(< est) ≤ ⌈h⌉ + ⌈ε·n⌉ with
-    * ε = 0.02 (2× the spec'd <1% rank error; tails are tighter still).
-    * A sketch regression flips the flag and hash-fails the row;
-    * estimates are deterministic on fixed data, so the flag is a
-    * reproducible fact.
-    */
   /** Order-statistic slack for a t-digest rank_ok bracket at quantile p
     * — sized to the k1-scale error bound, not a flat 2%: a δ=100
     * merging digest's max centroid weight near q is ≈ 4n·q(1−q)/δ, so
@@ -708,6 +676,22 @@ object SparkEntry {
     greatest(lit(4L), ceil(n.cast("double") * lit(eps)).cast("long"))
   }
 
+  /** Native t-digest TypedImperativeAggregate next to the exact
+    * percentile it approximates — the streaming/100 TB threshold path.
+    *
+    * ORACLE-CHECKED (round 10) via the countmin discipline: the sketch
+    * VALUE depends on partial-aggregation merge order (not
+    * hash-portable; it stays on the expression API, value accuracy
+    * pinned in TDigestSpec), so the output row carries the SQL-exact
+    * percentile + count plus `rank_ok`, the order-statistic bracket of
+    * the t-digest estimate: with h = p·(n−1) the interpolated quantile
+    * lies between order stats ⌊h⌋ and ⌈h⌉ (0-based), so
+    * count(≤ est) ≥ ⌊h⌋+1 − ⌈ε·n⌉ and count(< est) ≤ ⌈h⌉ + ⌈ε·n⌉ with
+    * ε = 0.02 (2× the spec'd <1% rank error; tails are tighter still).
+    * A sketch regression flips the flag and hash-fails the row;
+    * estimates are deterministic on fixed data, so the flag is a
+    * reproducible fact.
+    */
   private def q_agg_threshold_sketch(s: SparkSession, dir: String): DataFrame = {
     val li = T(s, dir, "lineitem").select("l_returnflag", "l_extendedprice")
     val sk = li.groupBy("l_returnflag")
@@ -762,71 +746,6 @@ object SparkEntry {
         col("max").cast("double").as("max_qty"),
         (col("sum").cast("double") / col("cnt")).as("avg_qty"))
       .orderBy("l_returnflag")
-  }
-
-  // ---------------------------------------------------------------------
-  // §2.5 windows
-  // ---------------------------------------------------------------------
-  private def evWindow = Window.partitionBy(col("user_id"))
-    .orderBy(col("ts"), col("event_id"))
-
-  private def q_win_lookback(s: SparkSession, dir: String): DataFrame =
-    E(s, dir)
-      .select(col("event_id"), col("user_id"),
-        collect_list(col("value")).over(evWindow.rowsBetween(-2, 0)).as("seq"))
-      .filter(size(col("seq")) === 3)
-      // serialize the window to a scalar: the driver's pandas compare
-      // cannot sort/hash a row containing a numpy array (round-1 failure).
-      // Via DECIMAL(18,6) — fixed-scale rendering is identical across
-      // engines, unlike double→string shortest-repr formatting.
-      .select(col("event_id"), col("user_id"),
-        concat_ws(",",
-          expr("transform(seq, x -> cast(cast(x as decimal(18,6)) as string))")).as("seq_str"))
-      .orderBy("event_id")
-
-  private def q_win_shift_forecast(s: SparkSession, dir: String): DataFrame =
-    E(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"),
-        lag(col("value"), 1).over(evWindow).as("prev_v"))
-      .orderBy("event_id")
-
-  private def q_win_smooth(s: SparkSession, dir: String): DataFrame =
-    E(s, dir)
-      .select(col("event_id"), col("user_id"),
-        round(AnomalyMath.smooth(col("value"), Seq(col("user_id")),
-          Seq(col("ts"), col("event_id")), 5), 6).as("smoothed"))
-      .orderBy("event_id")
-
-  private def q_win_rank_topk(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        row_number().over(
-          Window.partitionBy(col("o_custkey"))
-            .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        ).cast("long").as("rn"))
-      .filter(col("rn") <= 3)
-      .orderBy("o_custkey", "rn")
-
-  /** 10-min resample in LONG format (bucket, event_type, v) — the keyed
-    * layout ffill/interpolate need to window per tag instead of globally.
-    * v is rounded to 6 before any gap-filling so both engines interpolate
-    * from identical doubles.
-    */
-  private def longResampled(s: SparkSession, dir: String): DataFrame =
-    E(s, dir)
-      .filter(col("event_type").isin("click", "view", "purchase"))
-      .groupBy(Timeseries.bucket(col("ts"), "10 minutes").as("bucket"), col("event_type"))
-      .agg(round(avg(col("value")), 6).as("v"))
-
-  /** Forward-fill of resample gaps, windowed PER TAG on the long format —
-    * no single-partition sort anywhere in the plan (round-1 scale audit).
-    */
-  private def q_win_ffill(s: SparkSession, dir: String): DataFrame = {
-    val dense = Timeseries.densify(longResampled(s, dir), "bucket", "event_type",
-      Seq("click", "view", "purchase"))
-    Timeseries.ffill(dense, Seq("v"), Seq("event_type"), "bucket")
-      .select(col("bucket"), col("event_type"), col("v").as("v_filled"))
-      .orderBy("bucket", "event_type")
   }
 
   // ---------------------------------------------------------------------
@@ -1177,15 +1096,6 @@ object SparkEntry {
     Similarity.cosinePairs(T(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
       .orderBy("vec_a", "vec_b")
 
-  /** Linear interpolation of resample gaps, windowed PER TAG. */
-  private def q_win_interpolate(s: SparkSession, dir: String): DataFrame = {
-    val dense = Timeseries.densify(longResampled(s, dir), "bucket", "event_type",
-      Seq("click", "view", "purchase"))
-    Timeseries.interpolate(dense, Seq("v"), Seq("event_type"), "bucket")
-      .select(col("bucket"), col("event_type"), round(col("v"), 6).as("v_interp"))
-      .orderBy("bucket", "event_type")
-  }
-
   private def q_text_langid(s: SparkSession, dir: String): DataFrame = {
     val d = T(s, dir, "documents")
     d.join(TextAnalysis.langId(d, "doc_id", "text"), "doc_id")
@@ -1217,8 +1127,8 @@ object SparkEntry {
     * predictions are noise BY CONSTRUCTION — the oracle checks that both
     * engines derive the identical trained model and distances. Quality on
     * separable data is spec'd (≥95% held-out accuracy, TextAnalysisSpec).
-    */
-  /** Cavnar-Trenkle n-gram profiles are a pure function of the corpus, so
+    *
+    * Cavnar-Trenkle n-gram profiles are a pure function of the corpus, so
     * train-per-execution was pure waste in the bench signal (r4 verdict:
     * the most expensive query on every run). The profile frame is now
     * materialized once under the registry (content-fingerprint key, like
@@ -1562,33 +1472,6 @@ object SparkEntry {
   // repetition quality gates, semantic dedup, PII pseudonymization.
   // ---------------------------------------------------------------------
 
-  /** Two-sided CUSUM drift detection per sensor stream (Page's test via
-    * the running-min closed form — see AnomalyMath.cusum). Decimal-exact
-    * windows make the running sums bit-stable across engines.
-    */
-  private def q_win_cusum(s: SparkSession, dir: String): DataFrame =
-    AnomalyMath.cusum(E(s, dir), "value", Seq("event_type"),
-        Seq(col("ts"), col("event_id")), target = 50.0, slack = 5.0, h = 200.0)
-      // round(_, 6) is lossless (every CUSUM value is a scale-6 grid
-      // point) and papers over DuckDB's reciprocal-multiply DECIMAL→
-      // DOUBLE cast, which is off by an ulp from the correctly-rounded
-      // Spark/IEEE-division result
-      .select(col("event_id"), col("event_type"),
-        round(col("cusum_up"), 6).as("cusum_up"),
-        round(col("cusum_dn"), 6).as("cusum_dn"),
-        col("alarm_up"), col("alarm_dn"))
-      .orderBy("event_id")
-
-  /** Rolling lag-1 autocorrelation per sensor stream over a trailing
-    * 12-reading window — correlation-structure drift detection,
-    * bit-exact via integer sufficient statistics (no rounding at all).
-    */
-  private def q_win_autocorr(s: SparkSession, dir: String): DataFrame =
-    AnomalyMath.rollingAutocorr(E(s, dir), "value", Seq("event_type"),
-        Seq(col("ts"), col("event_id")), k = 12)
-      .select("event_id", "event_type", "autocorr")
-      .orderBy("event_id")
-
   /** MAD-based robust outlier score per sensor stream — the z-score whose
     * scale estimate outliers cannot drag (50% breakdown).
     */
@@ -1789,11 +1672,6 @@ object SparkEntry {
       .orderBy("lang", "rnk")
   }
 
-  /** SemDeDup-style semantic dedup over embeddings: deterministic seed
-    * clusters bound the quadratic pair search; keep = min-id canonical
-    * per duplicate pair. Production swaps seeds for fitIvf centroids
-    * (same downstream stages — spec'd equivalent in SimilaritySpec).
-    */
   /** Bloom-pruned incremental EXACT dedup (see
     * [[graft.ops.Dedup.bloomPrunedExactMatches]]): the delta is a
     * recrawl mix — exact re-fetches of every 11th doc (text verbatim in
@@ -1816,28 +1694,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** Per-stream EWMA snapshot — s ← s + α·(x − s) folded over the hourly
-    * integer-cents series in bucket order (α = 0.2). The fold is the
-    * win_holt_winters discipline: Spark `aggregate` over the per-key
-    * sorted array and DuckDB `list_reduce` replay the IDENTICAL
-    * double-arithmetic association (init = first element, same literal,
-    * same order), so the smoothed value is bit-exact before the
-    * defensive round. Per-key state is the bounded bucket array
-    * (|time range| / 1h), not the raw rows — the same per-key memory
-    * bound every win_* fold query documents.
-    */
-  private def q_win_ewma(s: SparkSession, dir: String): DataFrame = {
-    val h = hourlyCentsLong(s, dir)
-    h.groupBy("event_type")
-      .agg(sort_array(collect_list(struct(col("bucket"), col("c")))).as("xs"))
-      .select(col("event_type"), size(col("xs")).cast("long").as("n"),
-        round(aggregate(expr("slice(xs, 2, size(xs) - 1)"),
-          element_at(col("xs"), 1).getField("c").cast("double"),
-          (acc, x) => acc + lit(0.2) * (x.getField("c").cast("double") - acc)),
-          6).as("ewma"))
-      .orderBy("event_type")
-  }
-
   /** LIVE EWMA ([[graft.streaming.Streams.ewmaOnline]]) driven over the
     * hourly cents series — the streaming deployment of win_ewma's
     * α-smoothing. The recursion is the textbook αx + (1−α)s (NOT
@@ -1848,7 +1704,7 @@ object SparkEntry {
     */
   private def q_stream_ewma(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val readings = hourlyCentsLong(s, dir)
+    val readings = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
       .select(col("event_type").as("tag"), col("bucket").as("ts"),
         col("c").cast("double").as("value"))
       .as[graft.streaming.Reading]
@@ -1858,92 +1714,6 @@ object SparkEntry {
         round(max_by(col("ewma"), col("ts")), 6).as("ewma"))
       .select(col("tag").as("event_type"), col("n"), col("ewma"))
       .orderBy("event_type")
-  }
-
-  /** Bollinger bands per stream — trailing-24 mean ± 2σ over the hourly
-    * cents series, the volatility-aware envelope beside win_hampel's
-    * median/MAD one. The exactness trick: the band test never touches a
-    * float — |c − mean| > 2σ  ⟺  (24c − S)² > 4·(24·SS − S²), all exact
-    * BIGINTs from the two windowed integer sums (bounded ~10²× under
-    * overflow at 10⁷-cent hourly levels). mean and σ are display-only
-    * doubles (σ via the correctly-rounded sqrt, the sample_temperature
-    * precedent). Full windows only; one per-stream window shuffle.
-    */
-  private def q_win_bollinger(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("bucket"))
-      .rowsBetween(-23, 0)
-    hourlyCentsLong(s, dir)
-      .select(col("event_type"), col("bucket"), col("c"),
-        count(lit(1)).over(w).as("wn"),
-        sum(col("c")).over(w).as("s"),
-        sum(col("c") * col("c")).over(w).as("ss"))
-      .filter(col("wn") === 24)
-      .withColumn("dev24", col("c") * lit(24L) - col("s"))
-      .withColumn("var576", col("ss") * lit(24L) - col("s") * col("s"))
-      .select(col("event_type"), col("bucket"), col("c"),
-        round(col("s").cast("double") / lit(24.0), 6).as("mean"),
-        round(sqrt(col("var576").cast("double")) / lit(24.0), 6).as("sigma"),
-        when(col("dev24") * col("dev24") > col("var576") * lit(4L), 1L)
-          .otherwise(0L).as("outside"))
-      .orderBy("event_type", "bucket")
-  }
-
-  /** Rolling 24-bucket MEDIAN of the hourly cents series — the robust
-    * twin of win_smooth's trailing mean (one outlier hour cannot drag a
-    * median baseline). Exactness: the window holds integers, and both
-    * engines define even-count medians as the midpoint of the two middle
-    * values — (a+b)/2 over cents is exact in a double, no rounding
-    * needed. Emitted only for full windows (wn = 24), the rolling_corr
-    * convention. O(w log w) per row at w = 24 is flat; the partition-key
-    * window distributes per stream like every win_* query.
-    */
-  private def q_win_rolling_median(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("bucket"))
-      .rowsBetween(-23, 0)
-    hourlyCentsLong(s, dir)
-      .select(col("event_type"), col("bucket"),
-        count(lit(1)).over(w).as("wn"),
-        // percentile (NOT median): Spark's median rejects window frames;
-        // percentile(·, 0.5) is frame-legal and interpolates identically
-        percentile(col("c"), lit(0.5)).over(w).as("med"))
-      .filter(col("wn") === 24)
-      .select("event_type", "bucket", "med")
-      .orderBy("event_type", "bucket")
-  }
-
-  /** Hampel outlier filter over the hourly cents series — the rolling
-    * robust anomaly detector (flag where |x − med| > 3·MAD over the
-    * trailing 24-bucket window): one outlier cannot inflate its own
-    * rejection threshold, unlike z-scores on a rolling mean/stddev.
-    * ALL-INTEGER exactness: with w = 24 and integer cents, twice-median
-    * m2 = s₍₁₂₎+s₍₁₃₎ and quadruple-MAD mad4 = sd₍₁₂₎+sd₍₁₃₎ (sd sorts
-    * |2c−m2|, which is 2·|c−med| kept integral) are exact BIGINTs, and
-    * the flag |c−med| > 3·MAD rearranges to the pure-integer comparison
-    * 2·|2c−m2| > 3·mad4 — no float enters until the final /2.0 and /4.0
-    * display columns (exact halves/quarters in a double). Per-row cost
-    * is two w·log w sorts at w = 24 — flat; windows partition per
-    * stream like every win_* query.
-    */
-  private def q_win_hampel(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("bucket"))
-      .rowsBetween(-23, 0)
-    hourlyCentsLong(s, dir)
-      .select(col("event_type"), col("bucket"), col("c"),
-        count(lit(1)).over(w).as("wn"),
-        sort_array(collect_list(col("c")).over(w)).as("arr"))
-      .filter(col("wn") === 24)
-      .withColumn("m2", element_at(col("arr"), 12) + element_at(col("arr"), 13))
-      .withColumn("sd", sort_array(transform(col("arr"),
-        x => abs(x * lit(2L) - col("m2")))))
-      .withColumn("mad4", element_at(col("sd"), 12) + element_at(col("sd"), 13))
-      .select(col("event_type"), col("bucket"), col("c"),
-        (col("m2") / 2.0).as("med"), (col("mad4") / 4.0).as("mad"),
-        when(abs(col("c") * 2 - col("m2")) * 2 > col("mad4") * 3, 1L)
-          .otherwise(0L).as("outlier"))
-      .orderBy("event_type", "bucket")
   }
 
   /** Cohort retention — users grouped by their FIRST-seen day, activity
@@ -2387,6 +2157,11 @@ object SparkEntry {
       .orderBy("event_type")
   }
 
+  /** SemDeDup-style semantic dedup over embeddings: deterministic seed
+    * clusters bound the quadratic pair search; keep = min-id canonical
+    * per duplicate pair. Production swaps seeds for fitIvf centroids
+    * (same downstream stages — spec'd equivalent in SimilaritySpec).
+    */
   private def q_dedup_semantic(s: SparkSession, dir: String): DataFrame =
     Similarity.semanticDedup(T(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.4, nSeeds = 8)
@@ -2489,8 +2264,7 @@ object SparkEntry {
     * this sketch is how a continuous ingest maintains thresholds at all.
     * Streams the compacted events registry copy (a real directory
     * source); executor-parallel end to end.
-    */
-  /** Streaming per-key p99 threshold via the t-digest aggregate.
+    *
     * ORACLE-CHECKED (round 10): same discipline as q_stream_tdigest —
     * the streamed estimate is checked against its order-statistic
     * bracket over the raw values (which the oracle recomputes), with
@@ -2988,24 +2762,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** Image near-dup by perceptual hash over a corpus with REAL injected
-    * image twins. Fixture: each doc's 4×4 digest PNG is bilinear-rendered
-    * at 32×32 (the "original" photo); every 10th doc adds a 64×64 render
-    * of the SAME base (different bytes, different dims, same content) —
-    * the image analogue of docsWithDups' case-mutated text copies.
-    * Smooth renders, not the raw 4×4 noise: aHash is a content
-    * fingerprint, and measured twin distances are mean 1.2 / worst 4
-    * bits on smooth images vs mean 6.4 on raw noise (the pathological
-    * case for any perceptual hash). The pipeline aHashes every payload
-    * and finds hamming ≤ 3 pairs by 4×16-bit banded equi-join +
-    * bit_count rescore (the LSH band discipline in hamming space).
-    * Oracle-checked from the decode boundary down: the per-image 64-bit
-    * aHashes (the decode output) are persisted registry-keyed and the
-    * published oracle replays banding + bit_count(xor) rescore +
-    * threshold + min-id canonicalization in plain SQL over that table —
-    * only the ImageIO decode itself stays spec-verified (MultimodalSpec
-    * pins twin recall and determinism).
-    */
   /** Registry path of the materialized binary image corpus (originals +
     * every-10th-doc 64×64 twins) — shared by the batch and incremental
     * phash queries; see [[q_multimodal_phash_dedup]] for why it exists.
@@ -3056,6 +2812,24 @@ object SparkEntry {
          |SELECT media_a, media_b, hamming FROM pairs
          |WHERE hamming <= 3 ORDER BY media_a, media_b""".stripMargin
 
+  /** Image near-dup by perceptual hash over a corpus with REAL injected
+    * image twins. Fixture: each doc's 4×4 digest PNG is bilinear-rendered
+    * at 32×32 (the "original" photo); every 10th doc adds a 64×64 render
+    * of the SAME base (different bytes, different dims, same content) —
+    * the image analogue of docsWithDups' case-mutated text copies.
+    * Smooth renders, not the raw 4×4 noise: aHash is a content
+    * fingerprint, and measured twin distances are mean 1.2 / worst 4
+    * bits on smooth images vs mean 6.4 on raw noise (the pathological
+    * case for any perceptual hash). The pipeline aHashes every payload
+    * and finds hamming ≤ 3 pairs by 4×16-bit banded equi-join +
+    * bit_count rescore (the LSH band discipline in hamming space).
+    * Oracle-checked from the decode boundary down: the per-image 64-bit
+    * aHashes (the decode output) are persisted registry-keyed and the
+    * published oracle replays banding + bit_count(xor) rescore +
+    * threshold + min-id canonicalization in plain SQL over that table —
+    * only the ImageIO decode itself stays spec-verified (MultimodalSpec
+    * pins twin recall and determinism).
+    */
   private def q_multimodal_phash_dedup(s: SparkSession, dir: String): DataFrame = {
     // The binary corpus is registry-materialized once (the scan_csv
     // fixture discipline): at a real lake the images already exist, so
@@ -3205,18 +2979,6 @@ object SparkEntry {
       .orderBy("event_type")
   }
 
-  /** SCD TYPE-2 dimension merge ([[graft.ops.Lake.scd2Merge]]) over the
-    * customer dimension: one CDC batch carrying balance changes for
-    * every 9th customer (close v1, open v2), a NO-OP re-statement of
-    * every 9th-offset-7 customer (must produce zero version churn), and
-    * net-new customer keys (first open row at v2). The emitted history
-    * table is checked row-for-row against the SQL that states the SCD2
-    * contract directly — a spurious close, a missed insert, or no-op
-    * churn all change the row set. `v_to` is COALESCEd to 0 in the
-    * emitted projection (nullable-int columns land as float64 in both
-    * engines' pandas bridges, hashing "2.0" vs "2" — the round-2 repr
-    * class; the operator itself keeps NULL-means-open semantics).
-    */
   /** TEMPORAL DIMENSION JOIN — the data-warehouse classic the SCD2 sink
     * exists to serve: each fact row joins the dimension VERSION valid at
     * its event time (`valid_from ≤ ts < valid_to`), never the current
@@ -3254,6 +3016,18 @@ object SparkEntry {
       .orderBy("version", "seg")
   }
 
+  /** SCD TYPE-2 dimension merge ([[graft.ops.Lake.scd2Merge]]) over the
+    * customer dimension: one CDC batch carrying balance changes for
+    * every 9th customer (close v1, open v2), a NO-OP re-statement of
+    * every 9th-offset-7 customer (must produce zero version churn), and
+    * net-new customer keys (first open row at v2). The emitted history
+    * table is checked row-for-row against the SQL that states the SCD2
+    * contract directly — a spurious close, a missed insert, or no-op
+    * churn all change the row set. `v_to` is COALESCEd to 0 in the
+    * emitted projection (nullable-int columns land as float64 in both
+    * engines' pandas bridges, hashing "2.0" vs "2" — the round-2 repr
+    * class; the operator itself keeps NULL-means-open semantics).
+    */
   private def q_sink_scd2(s: SparkSession, dir: String): DataFrame = {
     val cust = T(s, dir, "customer")
       .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
@@ -3369,56 +3143,6 @@ object SparkEntry {
         count_distinct(col("doc_id")).as("n_docs"))
       .orderBy("lang")
   }
-
-  /** Additive seasonal decomposition of the hourly per-type series:
-    * 25-hour centered-MA trend (FULL windows only — the statsmodels
-    * edge-null semantic), hour-of-day seasonal means, residual. This is
-    * the FIXED-POINT twin of [[Timeseries.seasonalDecompose]] (the
-    * library op keeps clean double semantics; TimeseriesSpec pins it):
-    * the first cut of this query emitted round(avg, 6) floats and
-    * hash-flipped on a single half-way rounding at sf0.1 (engine window
-    * accumulation order), so like win_cusum/agg_metrics the query works
-    * in exact integer micro-units end to end — hourly mean = truncated
-    * integer division, detrended ×25, seasonal sums over integers — and
-    * every output is ONE exact integer divided by the same small exact
-    * doubles in both engines: bit-identical with NO rounding anywhere.
-    */
-  /** The decomposition's exact-INTEGER grid (v6/sum25/detr25/s_sum/cnt
-    * per bucket) shared by q_win_seasonal_decompose and
-    * q_agg_seasonal_strength — every downstream value is a mirrored
-    * expression over these exact BIGINTs, free of repr traps.
-    */
-  private def seasonalGrid(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hourly = E(s, dir)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("n"))
-      .withColumn("v6", expr("s_micro div n")) // both operands >= 0: floor
-    val w = Window.partitionBy("event_type").orderBy("bucket")
-      .rowsBetween(-12, 12)
-    val t = hourly
-      .withColumn("wn", count(lit(1)).over(w))
-      .withColumn("sum25", sum(col("v6")).over(w))
-      .filter(col("wn") === 25)
-      .withColumn("detr25", col("v6") * lit(25L) - col("sum25"))
-    val pw = Window.partitionBy(col("event_type"), hour(col("bucket")))
-    t.withColumn("s_sum", sum(col("detr25")).over(pw))
-      .withColumn("cnt", count(lit(1)).over(pw))
-  }
-
-  private def q_win_seasonal_decompose(s: SparkSession, dir: String): DataFrame =
-    seasonalGrid(s, dir)
-      .select(col("event_type"), col("bucket"),
-        (col("v6").cast("double") / lit(1000000.0)).as("v"),
-        (col("sum25").cast("double") / lit(25.0) / lit(1000000.0)).as("trend"),
-        (col("s_sum").cast("double") / (lit(25.0) * col("cnt")) / lit(1000000.0))
-          .as("seasonal"),
-        ((col("cnt") * col("detr25") - col("s_sum")).cast("double")
-          / (lit(25.0) * col("cnt")) / lit(1000000.0)).as("resid"))
-      .orderBy("event_type", "bucket")
 
   /** SEASONAL/TREND STRENGTH per stream (Hyndman & Athanasopoulos, FPP:
     * F_seasonal = max(0, 1 − Var(resid)/Var(detrended)), F_trend the
@@ -3587,31 +3311,6 @@ object SparkEntry {
       .orderBy("day")
   }
 
-  /** SEASONAL-RESIDUAL OUTLIERS — buckets whose decomposition residual
-    * breaks 3σ of the stream's residual distribution (the "this hour
-    * was anomalous EVEN ACCOUNTING for trend and seasonality" alert —
-    * the level detectors' blind spot). ALL-INTEGER: the residual
-    * quantizes through agg_seasonal_strength's offset-protected half-up
-    * division, and the 3σ gate compares n²·rq² > 9·(n·Σrq² − (Σrq)²)
-    * over exact BIGINTs (the win_bollinger never-touch-a-float
-    * discipline; all products ≤ ~1e15 ≪ 2⁵³).
-    */
-  private def q_win_seasonal_outliers(s: SparkSession, dir: String): DataFrame = {
-    val d = seasonalGrid(s, dir)
-      .withColumn("rq", expr(
-        "(((cnt * detr25 - s_sum) + cnt * 2500000000000) * 2 + 250000 * cnt)" +
-          " div (500000 * cnt) - 10000000"))
-    val st = d.groupBy(col("event_type").as("et"))
-      .agg(count(lit(1)).as("sn"), sum(col("rq")).as("sr"),
-        sum(col("rq") * col("rq")).as("srr"))
-    d.join(broadcast(st), col("event_type") === col("et"))
-      .filter(col("sn") * col("sn") * col("rq") * col("rq") >
-        lit(9L) * (col("sn") * col("srr") - col("sr") * col("sr")))
-      .select(col("event_type"), col("bucket"),
-        (col("rq").cast("double") / lit(100.0)).as("resid"))
-      .orderBy("event_type", "bucket")
-  }
-
   /** COHEN'S D effect size for the A/B user split per stream — the
     * experimentation companion of agg_ab_ttest ("significant, but how
     * BIG?"): pooled-σ standardized mean difference from the SAME exact
@@ -3712,20 +3411,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** SEGMENT-level exact dedup with text RECONSTRUCTION — the C4 /
-    * Dolma "line dedup" pipeline stage (remove every later occurrence of
-    * a duplicated line/paragraph ACROSS the corpus, keep the document
-    * otherwise), adapted to the unstructured fixture as fixed 50-word
-    * segments. Doc-level dedup ([[Dedup.exact]]) drops whole documents;
-    * this surgically removes the boilerplate inside them.
-    *
-    * Plan: one segment explode (n/50 rows per doc); first-occurrence
-    * selection is a row_number over the segment hash (shuffle keyed on
-    * md5 — uniform; heavy boilerplate groups cost their occurrence count,
-    * no pair explosion); the rebuild groups by doc. Reconstruction makes
-    * the op self-verifying: the oracle string-compares the full cleaned
-    * text, so a mis-ordered or mis-sliced rebuild hash-fails.
-    */
   /** 50-word segment table `(doc_id, seg_idx, seg)` of the documents
     * corpus — shared by the segment-dedup and duplication-weight queries.
     */
@@ -3741,6 +3426,20 @@ object SparkEntry {
       .select(col("doc_id"), col("e.seg_idx").as("seg_idx"), col("e.seg").as("seg"))
   }
 
+  /** SEGMENT-level exact dedup with text RECONSTRUCTION — the C4 /
+    * Dolma "line dedup" pipeline stage (remove every later occurrence of
+    * a duplicated line/paragraph ACROSS the corpus, keep the document
+    * otherwise), adapted to the unstructured fixture as fixed 50-word
+    * segments. Doc-level dedup ([[Dedup.exact]]) drops whole documents;
+    * this surgically removes the boilerplate inside them.
+    *
+    * Plan: one segment explode (n/50 rows per doc); first-occurrence
+    * selection is a row_number over the segment hash (shuffle keyed on
+    * md5 — uniform; heavy boilerplate groups cost their occurrence count,
+    * no pair explosion); the rebuild groups by doc. Reconstruction makes
+    * the op self-verifying: the oracle string-compares the full cleaned
+    * text, so a mis-ordered or mis-sliced rebuild hash-fails.
+    */
   private def q_dedup_paragraphs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val segs = docSegments(s, dir)
@@ -3780,17 +3479,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** STREAMING CDC apply — the lakehouse ingest loop: the update batch is
-    * streamed (file source, one file per micro-batch) and each
-    * micro-batch is MERGED into the current table state by
-    * [[graft.ops.Lake.upsert]] copy-on-write inside `foreachBatch`
-    * (versioned snapshot dirs — the Delta-style rewrite; production
-    * rewrites only touched partitions, the merge algebra per partition is
-    * identical). Update keys are unique, so the final state is
-    * batching-order-independent — and it must equal the one-shot batch
-    * merge, which is exactly what the oracle (shared with sink_upsert)
-    * hash-checks.
-    */
   /** Streaming CDC upsert into a PARTITIONED copy-on-write table — the
     * production Delta-style rewrite: the snapshot is laid out in
     * event_id-range partitions, each micro-batch merges ONLY the
@@ -3800,8 +3488,10 @@ object SparkEntry {
     * localize to a few partitions — the round-10 full-snapshot rewrite
     * paid 5 whole-table copies per execution; this pays
     * O(touched partitions) per batch, the shape that survives a 100 TB
-    * table. The oracle is the batch-merge algebra over the ORIGINAL
-    * events table, so a lost row, double-applied update, or
+    * table. Update keys are unique, so the final state is
+    * batching-order-independent and must equal the one-shot batch merge:
+    * the oracle (shared with sink_upsert) is the batch-merge algebra over
+    * the ORIGINAL events table, so a lost row, double-applied update, or
     * mis-partitioned write hash-fails.
     */
   private def q_stream_upsert(s: SparkSession, dir: String): DataFrame = {
@@ -3907,38 +3597,6 @@ object SparkEntry {
     * simultaneously (60 agg exprs, map-side combined) → literal unpivot.
     * Nothing is quadratic in rows; pairs are quadratic in TAGS only.
     */
-  private val corrTypes = Seq("click", "error", "purchase", "signup", "view")
-  private def corrPairs: Seq[(String, String)] =
-    for { i <- corrTypes.indices; j <- i + 1 until corrTypes.length }
-      yield (corrTypes(i), corrTypes(j))
-
-  /** Aligned wide frame of integer-CENTS hourly means, one row per bucket
-    * with a `c_<type>` column per stream — shared by the correlation
-    * matrix and the rolling-correlation window query. Pure integer
-    * quantization (see q_agg_corr_matrix's doc).
-    */
-  /** Long frame of integer-cents hourly means `(event_type, bucket, c)`
-    * — the exact-arithmetic input of the correlation and trend queries.
-    */
-  private def hourlyCentsLong(s: SparkSession, dir: String): DataFrame =
-    E(s, dir)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("n"))
-      .select(col("event_type"), col("bucket"),
-        expr("(s_micro div n) div 10000").as("c"))
-
-  private def hourlyCentsWide(s: SparkSession, dir: String): DataFrame = {
-    val hourly = hourlyCentsLong(s, dir)
-    hourly.groupBy("bucket")
-      .agg(corrTypes.map(t =>
-        max(when(col("event_type") === t, col("c"))).as(s"c_$t")).head,
-        corrTypes.tail.map(t =>
-          max(when(col("event_type") === t, col("c"))).as(s"c_$t")): _*)
-  }
-
   private def q_agg_corr_matrix(s: SparkSession, dir: String): DataFrame = {
     val wide = hourlyCentsWide(s, dir)
     val pairs = corrPairs
@@ -3971,20 +3629,6 @@ object SparkEntry {
     rows.reduce(_ unionByName _).orderBy("tag_a", "tag_b")
   }
 
-  /** Bivariate MAHALANOBIS anomaly score per hourly bucket over the
-    * aligned (click, view) cents-mean pair — the MULTIVARIATE upgrade of
-    * the per-stream z-score family: a bucket where both streams are
-    * individually in-range but their JOINT position violates the
-    * correlation structure scores high (the model-input covariance
-    * audit the reference's anomaly domain calls for). Exactness: the
-    * 2×2 covariance has a closed-form inverse, so
-    * d² = (n−1)·(ax²·Vyy − 2·ax·ay·Vxy + ay²·Vxx) / (n·det V) with
-    * ax = n·x − Sx (n-scaled deviation) and V = n·S₂ − S₁² — every
-    * input an exact BIGINT (magnitudes ≤ ~1e14 ≪ 2⁵³), then ONE
-    * verbatim-mirrored IEEE combination; outlier flag compares the
-    * UNROUNDED d² against χ²₂(0.99) = 9.21. One resample shuffle + a
-    * broadcast 1-row stats frame; nothing scales past |buckets|.
-    */
   /** CONSENSUS anomaly ensemble — the practitioner's move when no single
     * detector is trusted: PCA reconstruction error, isolation-forest
     * depth score, and Mahalanobis d² per hourly bucket, each
@@ -4066,6 +3710,20 @@ object SparkEntry {
       .orderBy("bucket")
   }
 
+  /** Bivariate MAHALANOBIS anomaly score per hourly bucket over the
+    * aligned (click, view) cents-mean pair — the MULTIVARIATE upgrade of
+    * the per-stream z-score family: a bucket where both streams are
+    * individually in-range but their JOINT position violates the
+    * correlation structure scores high (the model-input covariance
+    * audit the reference's anomaly domain calls for). Exactness: the
+    * 2×2 covariance has a closed-form inverse, so
+    * d² = (n−1)·(ax²·Vyy − 2·ax·ay·Vxy + ay²·Vxx) / (n·det V) with
+    * ax = n·x − Sx (n-scaled deviation) and V = n·S₂ − S₁² — every
+    * input an exact BIGINT (magnitudes ≤ ~1e14 ≪ 2⁵³), then ONE
+    * verbatim-mirrored IEEE combination; outlier flag compares the
+    * UNROUNDED d² against χ²₂(0.99) = 9.21. One resample shuffle + a
+    * broadcast 1-row stats frame; nothing scales past |buckets|.
+    */
   private def q_agg_mahalanobis(s: SparkSession, dir: String): DataFrame =
     mahalanobisD2(s, dir)
 
@@ -4208,47 +3866,6 @@ object SparkEntry {
       .orderBy("event_type", "bucket")
   }
 
-  /** Running MAXIMUM DRAWDOWN per stream — the finance/SRE classic
-    * ("how far below its best has this series fallen"): running max and
-    * drawdown = runmax − value over the hourly integer-cents series.
-    * ALL-INTEGER (exact cents, no floats anywhere), one per-stream
-    * window shuffle — never global.
-    */
-  private def q_win_drawdown(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("event_type").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hourlyCentsLong(s, dir)
-      .withColumn("runmax", max(col("c")).over(w))
-      .select(col("event_type"), col("bucket"), col("c"), col("runmax"),
-        (col("runmax") - col("c")).as("drawdown"))
-      .orderBy("event_type", "bucket")
-  }
-
-  /** PEAK detection per stream — strict local maxima over the hourly
-    * cents series with a minimum PROMINENCE over the trailing/leading
-    * 6-bucket neighborhood (c must exceed both immediate neighbors AND
-    * clear the neighborhood minimum by ≥ 500 cents) — the alerting
-    * primitive behind "spike at 14:00" dashboards. ALL-INTEGER: lag/
-    * lead/min windows over exact cents, no floats anywhere; one
-    * per-stream window shuffle shared by every frame.
-    */
-  private def q_win_peaks(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("event_type").orderBy("bucket")
-    val nb = w.rowsBetween(-6, 6)
-    hourlyCentsLong(s, dir)
-      .withColumn("prev", lag(col("c"), 1).over(w))
-      .withColumn("nxt", lead(col("c"), 1).over(w))
-      .withColumn("nbmin", min(col("c")).over(nb))
-      .filter(col("prev").isNotNull && col("nxt").isNotNull)
-      .filter(col("c") > col("prev") && col("c") > col("nxt") &&
-        col("c") - col("nbmin") >= 500)
-      .select(col("event_type"), col("bucket"), col("c"),
-        (col("c") - col("nbmin")).as("prominence"))
-      .orderBy("event_type", "bucket")
-  }
-
   /** Hour-of-day × day-of-week PROFILE per stream — the seasonality
     * heatmap grid behind capacity dashboards: exact integer micro-unit
     * means per (stream, dow, hod) cell plus sample counts. One hash-agg;
@@ -4264,73 +3881,6 @@ object SparkEntry {
       .select(col("event_type"), col("dow"), col("hod"), col("n"),
         (expr("s_micro div n").cast("double") / lit(1000000.0)).as("mean_v"))
       .orderBy("event_type", "dow", "hod")
-
-  /** PERCENT-RANK transform per stream — the rank-normalization
-    * feature-engineering staple (maps any value distribution to [0,1]
-    * uniformly, robust to outliers where min-max scaling is not): SQL
-    * `percent_rank` over the stream-keyed order on exact cents.
-    * Tie-safe by construction: tied values share a rank, so the output
-    * is independent of within-tie order (no id tie-break needed —
-    * unlike row_number transforms). One keyed window; round(6) because
-    * (rank−1)/(n−1) is one division — identical, but defensive.
-    */
-  private def q_win_percent_rank(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
-    E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_id"), col("event_type"), cents.as("c"))
-      .withColumn("pr", round(percent_rank().over(
-        Window.partitionBy("event_type").orderBy("c")), 6))
-      .orderBy("event_id")
-  }
-
-  /** RSI-14 per stream (Wilder's relative strength index, simple-average
-    * form over the hourly cents series): gains/losses are exact integer
-    * lag differences, trailing-14 sums exact BIGINTs (full windows
-    * only), and RSI = 100·SG/(SG+SL) needs ONE mirrored IEEE division —
-    * the flat-window case (SG=SL=0) nulls out via nullif, matching
-    * DuckDB's x/0. One per-stream window shuffle shared by the lag and
-    * both sums.
-    */
-  private def q_win_rsi(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val lagW = Window.partitionBy("event_type").orderBy("bucket")
-    val sumW = lagW.rowsBetween(-13, 0)
-    hourlyCentsLong(s, dir)
-      .withColumn("prev", lag(col("c"), 1).over(lagW))
-      .filter(col("prev").isNotNull)
-      .withColumn("gain", greatest(col("c") - col("prev"), lit(0L)))
-      .withColumn("loss", greatest(col("prev") - col("c"), lit(0L)))
-      .withColumn("wn", count(lit(1)).over(sumW))
-      .withColumn("sg", sum(col("gain")).over(sumW))
-      .withColumn("sl", sum(col("loss")).over(sumW))
-      .filter(col("wn") === 14)
-      .select(col("event_type"), col("bucket"),
-        round(lit(100.0) * col("sg").cast("double")
-          / nullif((col("sg") + col("sl")).cast("double"), lit(0.0)), 6)
-          .as("rsi"))
-      .orderBy("event_type", "bucket")
-  }
-
-  /** LOG RETURNS per stream — ln(c_t) − ln(c_{t−1}) over hourly cents
-    * (the additive, symmetric change measure of quantitative series
-    * analysis): each ln is over an exact positive integer (the portable-
-    * ln discipline), the difference is one mirrored IEEE op. Pure lag
-    * window, one per-stream shuffle.
-    */
-  private def q_win_log_return(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("event_type").orderBy("bucket")
-    hourlyCentsLong(s, dir)
-      .filter(col("c") > 0)
-      .withColumn("prev", lag(col("c"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .select(col("event_type"), col("bucket"), col("c"),
-        round(log(col("c").cast("double")) - log(col("prev").cast("double")), 6)
-          .as("log_return"))
-      .orderBy("event_type", "bucket")
-  }
 
   /** BENFORD first-digit audit per stream — the classic fraud /
     * data-fabrication screen: the observed leading-digit distribution of
@@ -4456,7 +4006,7 @@ object SparkEntry {
   private def q_ml_mase_baselines(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("event_type").orderBy("bucket")
-    val d = hourlyCentsLong(s, dir)
+    val d = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
       .withColumn("l1", lag(col("c"), 1).over(w))
       .withColumn("l24", lag(col("c"), 24).over(w))
       .filter(col("l24").isNotNull) // same support for both baselines
@@ -4621,18 +4171,11 @@ object SparkEntry {
   private def q_stream_mahalanobis(s: SparkSession, dir: String): DataFrame = {
     val root = compactRoot(s, dir)
     val types = Seq("click", "view")
-    def centsOf(df: DataFrame): DataFrame =
-      df.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-            .cast("long").as("s_micro"),
-          count(lit(1)).as("cn"))
-        .select(col("event_type"), col("bucket"),
-          expr("(s_micro div cn) div 10000").as("c"))
     def widen(cents: DataFrame): DataFrame = cents.groupBy("bucket")
       .agg(max(when(col("event_type") === "click", col("c"))).as("x"),
         max(when(col("event_type") === "view", col("c"))).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
-    val ref = widen(centsOf(Tables.resolve(s, root)
+    val ref = widen(hourlyCentsLong(Tables.resolve(s, root)
       .filter(driftIsA && col("value").isNotNull &&
         col("event_type").isin(types: _*))))
     val stats = ref.agg(count(lit(1)).as("n"),
@@ -4679,7 +4222,8 @@ object SparkEntry {
     import org.apache.spark.sql.expressions.Window
     val maxLag = 12
     val w = Window.partitionBy("event_type").orderBy("bucket")
-    val lagged = (1 to maxLag).foldLeft(hourlyCentsLong(s, dir)) { (df, k) =>
+    val hourly = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
+    val lagged = (1 to maxLag).foldLeft(hourly) { (df, k) =>
       df.withColumn(s"l$k", lag(col("c"), k).over(w))
     }
     val stackArgs = (1 to maxLag).map(k => s"$k, l$k").mkString(", ")
@@ -4700,44 +4244,6 @@ object SparkEntry {
       .orderBy("event_type", "lag")
   }
 
-  /** ROLLING pairwise correlation — correlation-STRUCTURE drift between
-    * streams (the pairs-trading / co-moving-sensors primitive): Pearson r
-    * over the trailing 24 aligned hourly buckets for every stream pair,
-    * emitted per bucket once the window is full. Same exactness
-    * discipline as agg_corr_matrix (integer cents, exact window sums,
-    * one verbatim-mirrored IEEE combination — unrounded bit-exact) and
-    * the win_autocorr plan shape: all six sufficient sums share ONE
-    * (pair, bucket) window spec, partitioned by pair — never a global
-    * window.
-    */
-  private def q_win_rolling_corr(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // bounded frame (hourly buckets × |types| cents columns) referenced
-    // by all 10 per-pair legs — materialize ONCE (round 14): each leg
-    // replayed the events scan + two aggregations through the union
-    val wide = hourlyCentsWide(s, dir).localCheckpoint()
-    val long = corrPairs.map { case (a, b) =>
-      wide.filter(col(s"c_$a").isNotNull && col(s"c_$b").isNotNull)
-        .select(lit(s"${a}_$b").as("pair"), col("bucket"),
-          col(s"c_$a").as("ca"), col(s"c_$b").as("cb"))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy("pair").orderBy("bucket").rowsBetween(-23, 0)
-    long
-      .withColumn("wn", count(lit(1)).over(w))
-      .withColumn("sa", sum(col("ca")).over(w))
-      .withColumn("sb", sum(col("cb")).over(w))
-      .withColumn("saa", sum(col("ca") * col("ca")).over(w))
-      .withColumn("sbb", sum(col("cb") * col("cb")).over(w))
-      .withColumn("sab", sum(col("ca") * col("cb")).over(w))
-      .filter(col("wn") === 24)
-      .select(col("pair"), col("bucket"),
-        ((col("wn") * col("sab") - col("sa") * col("sb")).cast("double") /
-          nullif(sqrt((col("wn") * col("saa") - col("sa") * col("sa")).cast("double"))
-            * sqrt((col("wn") * col("sbb") - col("sb") * col("sb")).cast("double")),
-            lit(0.0))).as("r"))
-      .orderBy("pair", "bucket")
-  }
-
   /** Mann-Kendall TREND test per stream — the standard nonparametric
     * monotonic-trend detector (environmental/sensor drift over time,
     * complementing the DISTRIBUTION drift of agg_ks_drift): over the
@@ -4751,7 +4257,7 @@ object SparkEntry {
   private def q_agg_trend_mk(s: SparkSession, dir: String): DataFrame = {
     // the hourly frame is model-sized (streams × hours) and feeds the
     // pair join twice plus the n aggregate — materialize once (round 14)
-    val h = hourlyCentsLong(s, dir).localCheckpoint()
+    val h = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull)).localCheckpoint()
     val a = h.select(col("event_type"), col("bucket").as("ba"), col("c").as("ca"))
     val b = h.select(col("event_type"), col("bucket").as("bb"), col("c").as("cb"))
     val sg = when(col("cb") > col("ca"), 1L)
@@ -4774,7 +4280,7 @@ object SparkEntry {
     * Same keyed, resample-bounded pair join as the MK test.
     */
   private def q_agg_trend_sen(s: SparkSession, dir: String): DataFrame = {
-    val h = hourlyCentsLong(s, dir)
+    val h = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
       .withColumn("es", graft.sources.Events.epochSeconds(col("bucket")))
       .withColumn("t", expr("es div 3600"))
       // model-sized, read by both sides of the pair join (round 14)
@@ -4804,7 +4310,7 @@ object SparkEntry {
     */
   private def q_ml_ols_trend(s: SparkSession, dir: String): DataFrame = {
     val wmin = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
-    hourlyCentsLong(s, dir)
+    hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
       .withColumn("es", graft.sources.Events.epochSeconds(col("bucket")))
       .withColumn("t0", expr("es div 3600"))
       .withColumn("t", col("t0") - min(col("t0")).over(wmin))
@@ -4847,7 +4353,7 @@ object SparkEntry {
     val wa = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy(col("score").desc, col("k"))
-    hourlyCentsLong(s, dir)
+    hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
       .withColumn("es", graft.sources.Events.epochSeconds(col("bucket")))
       .withColumn("t", expr("es div 3600"))
       .withColumn("k", row_number().over(wo))
@@ -5116,23 +4622,6 @@ object SparkEntry {
       .orderBy("p_type")
   }
 
-  /** Per-stream winsorization at [p05, p95] — the robust-stats
-    * pre-clamp before scaler fits. Exact interpolated percentiles per
-    * key (2 values/key: model-sized), broadcast back, pure column
-    * clamp: one shuffle for the percentiles, zero for the clamp.
-    */
-  private def q_win_winsorize(s: SparkSession, dir: String): DataFrame = {
-    val ev = E(s, dir).filter(col("value").isNotNull)
-    val pct = ev.groupBy("event_type").agg(
-      percentile(col("value"), lit(0.05)).as("p05"),
-      percentile(col("value"), lit(0.95)).as("p95"))
-    ev.join(broadcast(pct), "event_type")
-      .select(col("event_id"), col("event_type"), col("value"),
-        round(least(greatest(col("value"), col("p05")), col("p95")), 6)
-          .as("value_w"))
-      .orderBy("event_id")
-  }
-
   /** Count-Min point-frequency estimates beside exact counts — the
     * sketch family's frequency member (with t-digest quantiles, HLL++
     * cardinality, Misra-Gries heavy hitters): depth×width counters,
@@ -5243,30 +4732,6 @@ object SparkEntry {
       .select(col("media_id").as("doc_id"), col("n_samples"),
         col("n_zero_cross"), col("rms"))
       .orderBy("doc_id")
-  }
-
-  /** MACD on the hourly cents series — the two-constant EMA composition
-    * (fast 12, slow 26, the Appel trading defaults) over win_ewma's
-    * exact-fold machinery: per-key sorted array, one engine-internal
-    * fold per constant, zero window exchanges. The fold replays
-    * IDENTICALLY in the oracle's list_reduce, so even the recurrence is
-    * hash-checked.
-    */
-  private def q_win_macd(s: SparkSession, dir: String): DataFrame = {
-    val h = hourlyCentsLong(s, dir)
-    val xs = col("xs")
-    def ema(alpha: Double): Column =
-      aggregate(expr("slice(xs, 2, size(xs) - 1)"),
-        element_at(xs, 1).getField("c").cast("double"),
-        (acc, x) => acc + lit(alpha) * (x.getField("c").cast("double") - acc))
-    h.groupBy("event_type")
-      .agg(sort_array(collect_list(struct(col("bucket"), col("c")))).as("xs"))
-      .select(col("event_type"), size(xs).cast("long").as("n"),
-        ema(2.0 / 13.0).as("ef"), ema(2.0 / 27.0).as("es"))
-      .select(col("event_type"), col("n"),
-        round(col("ef"), 6).as("ema_fast"), round(col("es"), 6).as("ema_slow"),
-        round(col("ef") - col("es"), 6).as("macd"))
-      .orderBy("event_type")
   }
 
   /** Per-stream 3-component GMM via EM (12 iterations of DECIMAL-exact
@@ -5527,7 +4992,7 @@ object SparkEntry {
     * per window size over the hourly frame.
     */
   private def q_agg_hurst(s: SparkSession, dir: String): DataFrame = {
-    val hourly = hourlyCentsLong(s, dir)
+    val hourly = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
     // the indexed hourly frame feeds THREE window-size legs — materialize
     // once (the bandTable discipline) so the scan + resample groupBy +
     // row_number run once, not per leg
@@ -5745,7 +5210,7 @@ object SparkEntry {
     * score with a total tie order.
     */
   private def q_ml_ecod(s: SparkSession, dir: String): DataFrame = {
-    val hourly = hourlyCentsLong(s, dir)
+    val hourly = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
     val wUp = Window.partitionBy("event_type").orderBy(col("c"))
     val wDn = Window.partitionBy("event_type").orderBy(col("c").desc)
     val scored = hourly
@@ -6231,19 +5696,6 @@ object SparkEntry {
   private def triE4Sql(prefix: String, idExpr: String, off: Int, span: Long): String =
     s"CAST(('0x'||substr(md5('$prefix'||CAST($idExpr AS VARCHAR)),$off,15)) AS BIGINT) % $span - ${span / 2}"
 
-  /** POINT-IN-POLYGON join: every (user point, triangle) containment
-    * pair, with one hash-derived triangle per supplier (center ±50°/
-    * ±170°, vertices center ±10°) — the spatial-join primitive
-    * (geofencing, region tagging). The containment test is THREE INTEGER
-    * CROSS PRODUCTS on the e4 grid (same-sign ⇒ inside, boundary
-    * inclusive) — planar geometry, no floats anywhere, so the pair set
-    * is exact by construction in any engine (products bounded by
-    * (3.8·10⁶)² < 2⁶³). The triangle side is a DIM table — model-sized
-    * at any corpus scale — broadcast against the one point scan; a
-    * production variant with millions of polygons would bucket polygon
-    * bboxes onto [[graft.ops.Geo.radiusPairs]]' grid and equi-join cells
-    * instead (same plan family as ml_dbscan's ε-pairs).
-    */
   /** The hash-derived triangle dim (one triangle per supplier) and the
     * integer sign-test containment predicate — shared by
     * [[q_join_geo_polygon]] and the streaming geofence.
@@ -6306,6 +5758,19 @@ object SparkEntry {
         fenceCellOf(miny), fenceCellOf(maxy)))))
   }
 
+  /** POINT-IN-POLYGON join: every (user point, triangle) containment
+    * pair, with one hash-derived triangle per supplier (center ±50°/
+    * ±170°, vertices center ±10°) — the spatial-join primitive
+    * (geofencing, region tagging). The containment test is THREE INTEGER
+    * CROSS PRODUCTS on the e4 grid (same-sign ⇒ inside, boundary
+    * inclusive) — planar geometry, no floats anywhere, so the pair set
+    * is exact by construction in any engine (products bounded by
+    * (3.8·10⁶)² < 2⁶³). The triangle side is a DIM table — model-sized
+    * at any corpus scale — broadcast against the one point scan; a
+    * production variant with millions of polygons would bucket polygon
+    * bboxes onto [[graft.ops.Geo.radiusPairs]]' grid and equi-join cells
+    * instead (same plan family as ml_dbscan's ε-pairs).
+    */
   private def q_join_geo_polygon(s: SparkSession, dir: String): DataFrame = {
     val (ula, ulo) = geoE4("u", col("user_id"))
     val pts = E(s, dir).select(col("user_id")).distinct()
@@ -6827,26 +6292,6 @@ object SparkEntry {
        |      AS score
        |  FROM embeddings e JOIN probes p ON e.vec_id <> p.pid)""".stripMargin
 
-  /** Dense long-format 10-min resample grid — must stay formula-identical
-    * to `longResampled` + `Timeseries.densify`.
-    */
-  private val denseGridCte =
-    """l AS (SELECT time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP)) AS bucket,
-      |         event_type, round(avg(value), 6) AS v
-      |       FROM events WHERE event_type IN ('click','view','purchase')
-      |       GROUP BY 1, 2),
-      |g AS (SELECT b.bucket, t.event_type
-      |      FROM (SELECT DISTINCT bucket FROM l) b
-      |      CROSS JOIN (SELECT unnest(['click','view','purchase']) AS event_type) t),
-      |d AS (SELECT g.bucket, g.event_type, l.v
-      |      FROM g LEFT JOIN l USING (bucket, event_type))""".stripMargin
-
-  /** LSH oracle: the hyperplanes are deterministic md5-derived driver
-    * constants (Similarity.planeVector), so the SQL embeds the SAME
-    * literals the Spark plan does — bucket bits, candidate pairs, and
-    * re-scores are then bit-identical. Mirrors `lshCosinePairs`
-    * (8 tables × 8 planes, dim 64, threshold 0.3).
-    */
   /** Transition-matrix oracle — shared verbatim by `agg_transitions`
     * (batch lag window) and `stream_transitions` (stateful replay):
     * ordered single-pass emission is row-identical to the lag form.
@@ -7547,11 +6992,7 @@ object SparkEntry {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS cumhaz
         |FROM r WHERE n_events > 0 ORDER BY dur_days""".stripMargin)),
     Query("ml_ecod", q_ml_ecod, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |sc AS (SELECT bucket,
         |    -ln(least(
         |      cume_dist() OVER (PARTITION BY event_type ORDER BY c),
@@ -7674,11 +7115,7 @@ object SparkEntry {
            |    - CAST(max(s1) AS DOUBLE) * CAST(max(s1) AS DOUBLE) / $w)
            |    / $w > 0
            |) GROUP BY event_type""".stripMargin
-      s"""WITH h AS (SELECT event_type,
-         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |      // count(*)) // 10000 AS c
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
          |base AS (SELECT event_type, c,
          |    row_number() OVER (PARTITION BY event_type ORDER BY bucket) - 1
          |      AS i
@@ -7840,23 +7277,6 @@ object SparkEntry {
         |  round(quantile_cont(m, 0.025), 6) AS ci_lo,
         |  round(quantile_cont(m, 0.975), 6) AS ci_hi
         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin)),
-    Query("win_macd", q_win_macd, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT event_type,
-        |    list_transform(list(c ORDER BY bucket),
-        |      x -> CAST(x AS DOUBLE)) AS xs
-        |  FROM h GROUP BY 1),
-        |e AS (SELECT event_type, len(xs) AS n,
-        |    list_reduce(xs, (acc, x) -> acc + (2.0 / 13.0) * (x - acc)) AS ef,
-        |    list_reduce(xs, (acc, x) -> acc + (2.0 / 27.0) * (x - acc)) AS es
-        |  FROM l)
-        |SELECT event_type, n, round(ef, 6) AS ema_fast, round(es, 6) AS ema_slow,
-        |  round(ef - es, 6) AS macd
-        |FROM e ORDER BY event_type""".stripMargin)),
     Query("join_bloom_prune", q_join_bloom_prune, Sql(
       """SELECT p.p_type, count(*) AS n,
         |  round(CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
@@ -7864,15 +7284,6 @@ object SparkEntry {
         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         |WHERE p.p_brand = 'Brand#7'
         |GROUP BY 1 ORDER BY p.p_type""".stripMargin)),
-    Query("win_winsorize", q_win_winsorize, Sql(
-      """WITH p AS (SELECT event_type,
-        |    quantile_cont(value, 0.05) AS p05,
-        |    quantile_cont(value, 0.95) AS p95
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  round(least(greatest(e.value, p.p05), p.p95), 6) AS value_w
-        |FROM events e JOIN p USING (event_type)
-        |WHERE e.value IS NOT NULL ORDER BY e.event_id""".stripMargin)),
     Query("multimodal_audio_zcr", q_multimodal_audio_zcr, Sql(
       """WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents
         |  WHERE text IS NOT NULL),
@@ -8030,12 +7441,6 @@ object SparkEntry {
         |  ON c.user_id = v.user_id
         |  AND v.t >= c.t - INTERVAL 10 MINUTE AND v.t <= c.t
         |ORDER BY click_id, view_id""".stripMargin)),
-    Query("win_smooth_time", q_win_smooth_time, Sql(
-      """SELECT event_id, user_id,
-        |  round(avg(value) OVER (PARTITION BY user_id
-        |    ORDER BY CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
-        |    RANGE BETWEEN 600 PRECEDING AND CURRENT ROW), 6) AS smoothed_t
-        |FROM events ORDER BY event_id""".stripMargin)),
     Query("agg_resample_mean", q_agg_resample_mean, Sql(
       s"""SELECT $bucket10m AS bucket, event_type,
          |  round(avg(value), 6) AS avg_v, count(*) AS n
@@ -8143,35 +7548,6 @@ object SparkEntry {
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)),
-    Query("win_lookback", q_win_lookback, Sql(
-      """SELECT event_id, user_id,
-        |  array_to_string(list_transform(seq,
-        |    x -> CAST(CAST(x AS DECIMAL(18,6)) AS VARCHAR)), ',') AS seq_str
-        |FROM (
-        |  SELECT event_id, user_id,
-        |    array_agg(value) OVER (PARTITION BY user_id
-        |      ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS seq
-        |  FROM events)
-        |WHERE len(seq) = 3 ORDER BY event_id""".stripMargin)),
-    Query("win_shift_forecast", q_win_shift_forecast, Sql(
-      """SELECT event_id, user_id, value,
-        |  LAG(value) OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_v
-        |FROM events ORDER BY event_id""".stripMargin)),
-    Query("win_smooth", q_win_smooth, Sql(
-      """SELECT event_id, user_id,
-        |  round(avg(value) OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS smoothed
-        |FROM events ORDER BY event_id""".stripMargin)),
-    Query("win_rank_topk", q_win_rank_topk, Sql(
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
     Query("sort_time", q_sort_time, Sql(
       """SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id, event_type, value
         |FROM events ORDER BY ts_us, event_id""".stripMargin)),
@@ -8232,29 +7608,10 @@ object SparkEntry {
         |SELECT d.doc_id FROM delta d
         |WHERE EXISTS (SELECT 1 FROM documents b WHERE b.text = d.text)
         |ORDER BY doc_id""".stripMargin)),
-    // list_reduce replays the identical fold (init = first element,
-    // acc + 0.2*(x - acc), bucket order) — bit-exact before the round
-    Query("win_ewma", q_win_ewma, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT event_type,
-        |    list_transform(list(c ORDER BY bucket),
-        |      x -> CAST(x AS DOUBLE)) AS xs
-        |  FROM h GROUP BY 1)
-        |SELECT event_type, len(xs) AS n,
-        |  round(list_reduce(xs, (acc, x) -> acc + 0.2 * (x - acc)), 6) AS ewma
-        |FROM l ORDER BY 1""".stripMargin)),
     // replays ewmaOnline's αx + (1−α)s association exactly — including
     // (1.0 - 0.2) in place of a 0.8 literal (a different double)
     Query("stream_ewma", q_stream_ewma, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |l AS (SELECT event_type,
         |    list_transform(list(c ORDER BY bucket),
         |      x -> CAST(x AS DOUBLE)) AS xs
@@ -8263,65 +7620,6 @@ object SparkEntry {
         |  round(list_reduce(xs, (acc, x) -> 0.2 * x + (1.0 - 0.2) * acc), 6)
         |    AS ewma
         |FROM l ORDER BY 1""".stripMargin)),
-    // the band flag is an all-integer comparison; mean/σ display-only
-    Query("win_bollinger", q_win_bollinger, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |w AS (SELECT event_type, bucket, c,
-        |        count(*) OVER fr AS wn,
-        |        CAST(sum(c) OVER fr AS BIGINT) AS s,
-        |        CAST(sum(c*c) OVER fr AS BIGINT) AS ss
-        |      FROM h WINDOW fr AS (PARTITION BY event_type ORDER BY bucket
-        |        ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
-        |f AS (SELECT *, c * 24 - s AS dev24, ss * 24 - s * s AS var576
-        |      FROM w WHERE wn = 24)
-        |SELECT event_type, bucket, c,
-        |  round(CAST(s AS DOUBLE) / 24.0, 6) AS mean,
-        |  round(sqrt(CAST(var576 AS DOUBLE)) / 24.0, 6) AS sigma,
-        |  CASE WHEN dev24 * dev24 > var576 * 4 THEN 1 ELSE 0 END AS outside
-        |FROM f ORDER BY event_type, bucket""".stripMargin)),
-    // both engines define the even-count median as the midpoint of the
-    // two middle INTEGER cents — exact in a double, no rounding
-    Query("win_rolling_median", q_win_rolling_median, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT event_type, bucket, count(*) OVER pk AS wn,
-        |    median(c) OVER pk AS med
-        |  FROM h
-        |  WINDOW pk AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 23 PRECEDING AND CURRENT ROW))
-        |SELECT event_type, bucket, med FROM r WHERE wn = 24
-        |ORDER BY 1, 2""".stripMargin)),
-    // pure-integer Hampel: m2 = 2*median, mad4 = 4*MAD, flag
-    // 2*|2c-m2| > 3*mad4 — no float until the display /2.0, /4.0
-    Query("win_hampel", q_win_hampel, Sql(
-      """WITH h AS (SELECT event_type,
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT event_type, bucket, c, count(*) OVER pk AS wn,
-        |    list_sort(list(c) OVER pk) AS arr
-        |  FROM h
-        |  WINDOW pk AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
-        |f AS (SELECT event_type, bucket, c, arr,
-        |    arr[12] + arr[13] AS m2 FROM r WHERE wn = 24),
-        |g AS (SELECT event_type, bucket, c, m2,
-        |    list_sort(list_transform(arr, x -> abs(x * 2 - m2))) AS sd
-        |  FROM f),
-        |m AS (SELECT event_type, bucket, c, m2,
-        |    sd[12] + sd[13] AS mad4 FROM g)
-        |SELECT event_type, bucket, c, m2 / 2.0 AS med, mad4 / 4.0 AS mad,
-        |  CASE WHEN abs(c * 2 - m2) * 2 > mad4 * 3 THEN 1 ELSE 0 END
-        |    AS outlier
-        |FROM m ORDER BY 1, 2""".stripMargin)),
     Query("agg_retention", q_agg_retention, Sql(
       """WITH e AS (SELECT DISTINCT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d FROM events),
@@ -8965,59 +8263,6 @@ object SparkEntry {
          |      FROM cc c JOIN bs b USING (s) GROUP BY 1, 2)
          |SELECT doc_id, bench_id, CAST(shared AS BIGINT) AS shared
          |FROM m WHERE shared >= 3 ORDER BY doc_id, bench_id""".stripMargin)),
-    Query("win_ffill", q_win_ffill, Sql(
-      s"""WITH $denseGridCte
-         |SELECT bucket, event_type,
-         |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY bucket
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-         |FROM d ORDER BY bucket, event_type""".stripMargin)),
-    Query("win_interpolate", q_win_interpolate, Sql(
-      s"""WITH $denseGridCte,
-         |w AS (SELECT bucket, event_type, v,
-         |        CAST(epoch_us(bucket) AS DOUBLE) AS t,
-         |        last_value(v IGNORE NULLS) OVER back AS v_prev,
-         |        first_value(v IGNORE NULLS) OVER fwd AS v_next,
-         |        last_value(CASE WHEN v IS NOT NULL
-         |          THEN CAST(epoch_us(bucket) AS DOUBLE) END IGNORE NULLS) OVER back AS t_prev,
-         |        first_value(CASE WHEN v IS NOT NULL
-         |          THEN CAST(epoch_us(bucket) AS DOUBLE) END IGNORE NULLS) OVER fwd AS t_next
-         |      FROM d
-         |      WINDOW back AS (PARTITION BY event_type ORDER BY bucket
-         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |             fwd AS (PARTITION BY event_type ORDER BY bucket
-         |               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-         |SELECT bucket, event_type,
-         |  round(CASE WHEN v IS NOT NULL THEN v
-         |             WHEN v_prev IS NOT NULL AND v_next IS NOT NULL
-         |             THEN v_prev + (v_next - v_prev) * (t - t_prev) / (t_next - t_prev)
-         |        END, 6) AS v_interp
-         |FROM w ORDER BY bucket, event_type""".stripMargin)),
-    // CUSUM: deviations quantized to DECIMAL(18,6) once, then EVERY window
-    // aggregate stays decimal — running sums are exact scaled integers, so
-    // segment-tree vs sequential window evaluation cannot diverge. Cast to
-    // DOUBLE only at the output (exact below 2^53 scaled).
-    Query("win_cusum", q_win_cusum, Sql(
-      """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
-        |    CAST(value AS DECIMAL(18,6)) - CAST(55.0 AS DECIMAL(18,6)) AS dev_up,
-        |    CAST(45.0 AS DECIMAL(18,6)) - CAST(value AS DECIMAL(18,6)) AS dev_dn
-        |  FROM events),
-        |c AS (SELECT event_id, event_type, t,
-        |    sum(dev_up) OVER w AS cu, sum(dev_dn) OVER w AS cd
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY t, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT event_id, event_type,
-        |    cu - least(CAST(0 AS DECIMAL(18,6)), min(cu) OVER w) AS up,
-        |    cd - least(CAST(0 AS DECIMAL(18,6)), min(cd) OVER w) AS dn
-        |  FROM c
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY t, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id, event_type,
-        |  round(CAST(up AS DOUBLE), 6) AS cusum_up,
-        |  round(CAST(dn AS DOUBLE), 6) AS cusum_dn,
-        |  CAST(up > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_up,
-        |  CAST(dn > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_dn
-        |FROM m ORDER BY event_id""".stripMargin)),
     // Streaming CUSUM (batch replay): the same decimal-exact closed form,
     // keyed by tag and ordered by (ts, value) — the processing order the
     // stateful operator sorts each group by. Exact (tag, ts, value)
@@ -9046,38 +8291,6 @@ object SparkEntry {
         |  CAST(up > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_up,
         |  CAST(dn > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_dn
         |FROM m ORDER BY tag, ts, value, cusum_up, cusum_dn""".stripMargin)),
-    // Rolling autocorrelation: integer sufficient statistics (exact window
-    // sums of scale-2 units, all < 2^53) + a verbatim-mirrored IEEE
-    // combination — bit-identical, no rounding. CASTs AS BIGINT keep the
-    // window sums off HUGEINT (the round-2 repr-hash lesson).
-    Query("win_autocorr", q_win_autocorr, Sql(
-      """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS kx
-        |  FROM events),
-        |l AS (SELECT event_id, event_type, t, kx,
-        |    lag(kx) OVER (PARTITION BY event_type ORDER BY t, event_id) AS ky
-        |  FROM e),
-        |s AS (SELECT event_id, event_type,
-        |    CAST(count(ky) OVER w AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN ky IS NOT NULL THEN kx END) OVER w AS BIGINT) AS sx,
-        |    CAST(sum(ky) OVER w AS BIGINT) AS sy,
-        |    CAST(sum(kx * ky) OVER w AS BIGINT) AS sxy,
-        |    CAST(sum(CASE WHEN ky IS NOT NULL THEN kx * kx END) OVER w AS BIGINT) AS sxx,
-        |    CAST(sum(ky * ky) OVER w AS BIGINT) AS syy
-        |  FROM l
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY t, event_id
-        |    ROWS BETWEEN 11 PRECEDING AND CURRENT ROW))
-        |SELECT event_id, event_type,
-        |  CASE WHEN n >= 2 THEN
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / sqrt(NULLIF(
-        |        (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0))
-        |  END AS autocorr
-        |FROM s ORDER BY event_id""".stripMargin)),
     // Streaming autocorrelation (batch replay): same integer stats keyed
     // by tag and ordered by (ts, value) — the stateful operator's
     // processing order. autocorr joins the sort key (NULLS FIRST on both
@@ -9478,32 +8691,6 @@ object SparkEntry {
         |  COALESCE(nk.new_keys, 0) AS new_keys
         |FROM pd LEFT JOIN nk ON nk.day = pd.day
         |ORDER BY pd.day""".stripMargin)),
-    Query("win_seasonal_outliers", q_win_seasonal_outliers, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
-        |    count(*) AS n
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
-        |t AS (SELECT *, count(*) OVER w AS wn, sum(v6) OVER w AS sum25
-        |      FROM v WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |        ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |f AS (SELECT event_type, bucket, v6, sum25, v6 * 25 - sum25 AS detr25
-        |      FROM t WHERE wn = 25),
-        |g AS (SELECT *, sum(detr25) OVER pw AS s_sum, count(*) OVER pw AS cnt
-        |      FROM f WINDOW pw AS (PARTITION BY event_type, hour(bucket))),
-        |q AS (SELECT event_type, bucket,
-        |    (((cnt * detr25 - s_sum) + cnt * 2500000000000) * 2
-        |       + 250000 * cnt) // (500000 * cnt) - 10000000 AS rq
-        |  FROM g),
-        |st AS (SELECT event_type AS et, count(*) AS n,
-        |    CAST(sum(rq) AS BIGINT) AS sr,
-        |    CAST(sum(rq * rq) AS BIGINT) AS srr
-        |  FROM q GROUP BY 1)
-        |SELECT event_type, bucket, CAST(rq AS DOUBLE) / 100.0 AS resid
-        |FROM q JOIN st ON event_type = et
-        |WHERE n * n * rq * rq > 9 * (n * srr - sr * sr)
-        |ORDER BY 1, 2""".stripMargin)),
     Query("agg_effect_size", q_agg_effect_size, Sql(
       """WITH c AS (SELECT event_type,
         |    user_id % 2 = 0 AS isa,
@@ -9525,26 +8712,6 @@ object SparkEntry {
         |        + (CAST(s2b AS DOUBLE) - CAST(s1b AS DOUBLE) * CAST(s1b AS DOUBLE) / nb))
         |      / CAST(na + nb - 2 AS DOUBLE)), 0), 6) AS cohens_d
         |FROM g ORDER BY event_type""".stripMargin)),
-    Query("win_seasonal_decompose", q_win_seasonal_decompose, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
-        |    count(*) AS n
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
-        |t AS (SELECT *, count(*) OVER w AS wn, sum(v6) OVER w AS sum25
-        |      FROM v WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |        ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |f AS (SELECT event_type, bucket, v6, sum25, v6 * 25 - sum25 AS detr25
-        |      FROM t WHERE wn = 25),
-        |g AS (SELECT *, sum(detr25) OVER pw AS s_sum, count(*) OVER pw AS cnt
-        |      FROM f WINDOW pw AS (PARTITION BY event_type, hour(bucket)))
-        |SELECT event_type, bucket,
-        |  CAST(v6 AS DOUBLE) / 1000000.0 AS v,
-        |  CAST(sum25 AS DOUBLE) / 25.0 / 1000000.0 AS trend,
-        |  CAST(s_sum AS DOUBLE) / (25.0 * cnt) / 1000000.0 AS seasonal,
-        |  CAST(cnt * detr25 - s_sum AS DOUBLE) / (25.0 * cnt) / 1000000.0 AS resid
-        |FROM g ORDER BY event_type, bucket""".stripMargin)),
     // the decompose CTEs verbatim, each component quantized to exact
     // centi-unit BIGINTs (DECIMAL(18,2) HALF_UP), variances from
     // n·Σq² − (Σq)² (all products ≪ 2^53), one mirrored IEEE division
@@ -9635,18 +8802,6 @@ object SparkEntry {
     Query("agg_corr_matrix", q_agg_corr_matrix, Sql(corrMatrixOracle)),
     Query("agg_mahalanobis", q_agg_mahalanobis, Sql(mahalanobisOracle)),
     Query("agg_acf", q_agg_acf, Sql(acfOracle)),
-    Query("win_drawdown", q_win_drawdown, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT event_type, bucket, c,
-        |    max(c) OVER (PARTITION BY event_type ORDER BY bucket
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runmax
-        |  FROM h)
-        |SELECT event_type, bucket, c, runmax, runmax - c AS drawdown
-        |FROM r ORDER BY 1, 2""".stripMargin)),
     // every ln over an exact integer, milli-quantized half-up (positive
     // → identical both engines); OLS sums exact BIGINTs
     Query("agg_zipf_fit", q_agg_zipf_fit, Sql(
@@ -9692,21 +8847,6 @@ object SparkEntry {
         |    // count(*) AS v6,
         |  count(*) AS n
         |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    Query("win_peaks", q_win_peaks, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT event_type, bucket, c,
-        |    lag(c) OVER w AS prev, lead(c) OVER w AS nxt,
-        |    min(c) OVER (PARTITION BY event_type ORDER BY bucket
-        |      ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING) AS nbmin
-        |  FROM h WINDOW w AS (PARTITION BY event_type ORDER BY bucket))
-        |SELECT event_type, bucket, c, c - nbmin AS prominence
-        |FROM l WHERE prev IS NOT NULL AND nxt IS NOT NULL
-        |  AND c > prev AND c > nxt AND c - nbmin >= 500
-        |ORDER BY 1, 2""".stripMargin)),
     Query("agg_hod_profile", q_agg_hod_profile, Sql(
       """SELECT event_type,
         |  dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS dow,
@@ -9715,48 +8855,6 @@ object SparkEntry {
         |    // count(*) AS DOUBLE) / 1000000.0 AS mean_v
         |FROM events WHERE value IS NOT NULL
         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
-    Query("win_percent_rank", q_win_percent_rank, Sql(
-      """WITH e AS (SELECT event_id, event_type,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT event_id, event_type, c,
-        |  round(percent_rank() OVER (PARTITION BY event_type ORDER BY c), 6)
-        |    AS pr
-        |FROM e ORDER BY event_id""".stripMargin)),
-    Query("win_rsi", q_win_rsi, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |l AS (SELECT event_type, bucket, c,
-        |    lag(c) OVER (PARTITION BY event_type ORDER BY bucket) AS prev
-        |  FROM h),
-        |d AS (SELECT event_type, bucket,
-        |    greatest(c - prev, 0) AS gain, greatest(prev - c, 0) AS loss
-        |  FROM l WHERE prev IS NOT NULL),
-        |w AS (SELECT event_type, bucket, count(*) OVER ww AS wn,
-        |    sum(gain) OVER ww AS sg, sum(loss) OVER ww AS sl
-        |  FROM d WINDOW ww AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-        |SELECT event_type, bucket,
-        |  round(100.0 * CAST(sg AS DOUBLE)
-        |    / NULLIF(CAST(sg + sl AS DOUBLE), 0), 6) AS rsi
-        |FROM w WHERE wn = 14 ORDER BY 1, 2""".stripMargin)),
-    Query("win_log_return", q_win_log_return, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |p AS (SELECT event_type, bucket, c,
-        |    lag(c) OVER (PARTITION BY event_type ORDER BY bucket) AS prev
-        |  FROM h WHERE c > 0)
-        |SELECT event_type, bucket, c,
-        |  round(ln(CAST(c AS DOUBLE)) - ln(CAST(prev AS DOUBLE)), 6)
-        |    AS log_return
-        |FROM p WHERE prev IS NOT NULL ORDER BY 1, 2""".stripMargin)),
     Query("agg_benford", q_agg_benford, Sql(
       """WITH e AS (SELECT event_type,
         |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
@@ -9805,11 +8903,7 @@ object SparkEntry {
         |  r_score * 100 + f_score * 10 + m_score AS rfm
         |FROM sc ORDER BY user_id""".stripMargin)),
     Query("ml_mase_baselines", q_ml_mase_baselines, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |l AS (SELECT event_type, bucket, c,
         |    lag(c, 1) OVER w AS l1, lag(c, 24) OVER w AS l24
         |  FROM h WINDOW w AS (PARTITION BY event_type ORDER BY bucket)),
@@ -9965,14 +9059,9 @@ object SparkEntry {
         |SELECT bucket, x AS c_click, y AS c_view, round(d2u, 6) AS d2,
         |  CASE WHEN d2u > 9.21 THEN 1 ELSE 0 END AS outlier
         |FROM d ORDER BY bucket""".stripMargin)),
-    Query("win_rolling_corr", q_win_rolling_corr, Sql(rollingCorrOracle)),
     // all integers until the final tau division — bit-exact, unrounded
     Query("agg_trend_mk", q_agg_trend_mk, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |p AS (SELECT a.event_type,
         |        CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END AS sg
         |      FROM h a JOIN h b
@@ -10086,11 +9175,7 @@ object SparkEntry {
         |FROM r ORDER BY doc_id""".stripMargin)),
     // exact BIGINT sufficient statistics; three mirrored IEEE divisions
     Query("ml_ols_trend", q_ml_ols_trend, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |t AS (SELECT event_type,
         |        CAST(floor(epoch(bucket)) AS BIGINT) // 3600 AS t0, c
         |      FROM h),
@@ -10119,11 +9204,7 @@ object SparkEntry {
         |FROM sl ORDER BY 1""".stripMargin)),
     // integer prefix sums; the one score division mirrored in IEEE
     Query("ml_changepoint", q_ml_changepoint, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |t AS (SELECT event_type, bucket,
         |        CAST(floor(epoch(bucket)) AS BIGINT) // 3600 AS t, c
         |      FROM h),
@@ -10150,11 +9231,7 @@ object SparkEntry {
         |FROM r WHERE rnk = 1 ORDER BY 1""".stripMargin)),
     // slopes are exact-integer ratios; median = interpolated percentile
     Query("agg_trend_sen", q_agg_trend_sen, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      s"""WITH $hourlyCentsCte,
         |t AS (SELECT event_type,
         |        CAST(floor(epoch(bucket)) AS BIGINT) // 3600 AS t, c
         |      FROM h),
@@ -10357,7 +9434,7 @@ object SparkEntry {
   )
 
   /** Every declared query: this file's table, then each family file's. */
-  val declared: Seq[Query] = entryQueries ++ SimilarityGraph.queries
+  val declared: Seq[Query] = entryQueries ++ SimilarityGraph.queries ++ Windows.queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Query.builds(declared)
 
@@ -10647,19 +9724,6 @@ object SparkEntry {
       m.threshold.toString)
   }
 
-  /** ml_isolation_forest oracle (round 11): with the fitted node arrays
-    * as exact VALUES literals, the oracle re-walks every (bucket, tree)
-    * pair by recursive CTE — at each step the row moves to the left or
-    * right child by the same `x[f] < split` comparison the Scala
-    * traversal makes — then adds the precomputed per-leaf c(size)
-    * term, averages path lengths per bucket, and maps through
-    * 2^(−E[h]/c(ψ)). Tree-order vs hash-order float summation differ
-    * ~1e-14 relative (64 bounded terms), far inside the round-6
-    * contract; the anomalous flag compares the unrounded score to the
-    * published exact-percentile threshold, which interpolates strictly
-    * between training scores on every fixture (verified per SF), so no
-    * row sits at the flag boundary.
-    */
   /** Shared iforest-walk CTE fragment: published node table → recursive
     * per-(bucket, tree) descent → `sif(bucket, score)`. Callers must
     * define a `pts(bucket, …, x)` CTE first and open WITH RECURSIVE.
@@ -10691,6 +9755,19 @@ object SparkEntry {
        |  WHERE click IS NOT NULL AND view IS NOT NULL
        |    AND purchase IS NOT NULL)""".stripMargin
 
+  /** ml_isolation_forest oracle (round 11): with the fitted node arrays
+    * as exact VALUES literals, the oracle re-walks every (bucket, tree)
+    * pair by recursive CTE — at each step the row moves to the left or
+    * right child by the same `x[f] < split` comparison the Scala
+    * traversal makes — then adds the precomputed per-leaf c(size)
+    * term, averages path lengths per bucket, and maps through
+    * 2^(−E[h]/c(ψ)). Tree-order vs hash-order float summation differ
+    * ~1e-14 relative (64 bounded terms), far inside the round-6
+    * contract; the anomalous flag compares the unrounded score to the
+    * published exact-percentile threshold, which interpolates strictly
+    * between training scores on every fixture (verified per SF), so no
+    * row sits at the flag boundary.
+    */
   private def isoForestOracleSqlFor(
       bits: (String, Int, String, String)): String = {
     val (rows, nTrees, cPsi, thr) = bits
@@ -10729,17 +9806,12 @@ object SparkEntry {
          |  FROM px),
          |spca AS (SELECT bucket, sqrt(greatest(0.0,
          |    x1*x1 + x2*x2 + x3*x3 - z1*z1 - z2*z2)) AS s_pca FROM pz),
-         |hh AS (
-         |  SELECT event_type,
-         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-         |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |      // count(*)) // 10000 AS c
-         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+         |$hourlyCentsCte,
          |wm AS (
          |  SELECT bucket,
          |    max(CASE WHEN event_type = 'click' THEN c END) AS mx,
          |    max(CASE WHEN event_type = 'view' THEN c END) AS my
-         |  FROM hh GROUP BY 1
+         |  FROM h GROUP BY 1
          |  HAVING max(CASE WHEN event_type = 'click' THEN c END) IS NOT NULL
          |     AND max(CASE WHEN event_type = 'view' THEN c END) IS NOT NULL),
          |stm AS (SELECT count(*) AS mn,
@@ -10833,23 +9905,13 @@ object SparkEntry {
          |  round(v_hat, 6) AS v_hat, round(abs(v - v_hat), 6) AS abs_err
          |FROM p ORDER BY bucket, event_type""".stripMargin
 
-  /** Correlation-matrix oracle (mirrors q_agg_corr_matrix): integer-cents
-    * hourly means via pure integer division (never a fractional
-    * decimal→BIGINT cast — DuckDB rounds those, Spark truncates), exact
-    * sufficient sums, one verbatim-mirrored IEEE Pearson combination per
-    * pair. Generated over the same pair list as the Spark side.
-    */
   /** Mahalanobis oracle (mirrors q_agg_mahalanobis): same cents/wide
     * CTEs as the correlation matrix, exact-BIGINT n-scaled deviations
     * and covariance terms, the identical IEEE d² combination, flag on
     * the unrounded value.
     */
   private def mahalanobisOracle: String =
-    """WITH h AS (
-      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-      |      // count(*)) // 10000 AS c
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+    s"""WITH $hourlyCentsCte,
       |w AS (
       |  SELECT bucket,
       |    max(CASE WHEN event_type = 'click' THEN c END) AS x,
@@ -10889,11 +9951,7 @@ object SparkEntry {
     val legs = (1 to maxLag).map(k =>
       s"SELECT event_type, $k AS lag, c AS ca, l$k AS cb FROM l WHERE l$k IS NOT NULL")
       .mkString("\n|  UNION ALL\n|  ")
-    s"""WITH h AS (
-       |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-       |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-       |      // count(*)) // 10000 AS c
-       |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+    s"""WITH $hourlyCentsCte,
        |l AS (SELECT event_type, bucket, c,
        |    $lagCols
        |  FROM h WINDOW w AS (PARTITION BY event_type ORDER BY bucket)),
@@ -10907,26 +9965,24 @@ object SparkEntry {
        |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
+  /** Correlation-matrix oracle (mirrors q_agg_corr_matrix): integer-cents
+    * hourly means via pure integer division (never a fractional
+    * decimal→BIGINT cast — DuckDB rounds those, Spark truncates), exact
+    * sufficient sums, one verbatim-mirrored IEEE Pearson combination per
+    * pair. Generated over the same pair list as the Spark side.
+    */
   private def corrMatrixOracle: String = {
-    val types = Seq("click", "error", "purchase", "signup", "view")
-    val wideCols = types.map(t =>
+    val wideCols = corrTypes.map(t =>
       s"max(CASE WHEN event_type = '$t' THEN c END) AS c_$t").mkString(",\n|    ")
-    val selects = (for {
-      i <- types.indices; j <- i + 1 until types.length
-    } yield {
-      val (a, b) = (types(i), types(j))
+    val selects = corrPairs.map { case (a, b) =>
       s"""SELECT '$a' AS tag_a, '$b' AS tag_b, count(*) AS n,
          |  CAST(count(*) * sum(ca * cb) - sum(ca) * sum(cb) AS DOUBLE)
          |    / NULLIF(sqrt(CAST(count(*) * sum(ca * ca) - sum(ca) * sum(ca) AS DOUBLE))
          |       * sqrt(CAST(count(*) * sum(cb * cb) - sum(cb) * sum(cb) AS DOUBLE)), 0) AS r
          |FROM (SELECT c_$a AS ca, c_$b AS cb FROM wide
          |      WHERE c_$a IS NOT NULL AND c_$b IS NOT NULL)"""
-    }).mkString("\n|UNION ALL\n|")
-    s"""WITH h AS (
-       |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-       |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-       |      // count(*)) // 10000 AS c
-       |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+    }.mkString("\n|UNION ALL\n|")
+    s"""WITH $hourlyCentsCte,
        |wide AS (
        |  SELECT bucket,
        |    $wideCols
@@ -10934,45 +9990,6 @@ object SparkEntry {
        |SELECT * FROM (
        |$selects
        |) ORDER BY tag_a, tag_b""".stripMargin
-  }
-
-  /** Rolling-correlation oracle (mirrors q_win_rolling_corr): the same
-    * cents/wide CTEs, a per-pair long unpivot, one windowed pass for all
-    * six sufficient sums, the identical IEEE combination. Generated over
-    * the same pair list as the Spark side.
-    */
-  private def rollingCorrOracle: String = {
-    val wideCols = corrTypes.map(t =>
-      s"max(CASE WHEN event_type = '$t' THEN c END) AS c_$t").mkString(",\n|    ")
-    val unpivot = corrPairs.map { case (a, b) =>
-      s"""SELECT '${a}_$b' AS pair, bucket, c_$a AS ca, c_$b AS cb
-         |FROM wide WHERE c_$a IS NOT NULL AND c_$b IS NOT NULL"""
-    }.mkString("\n|UNION ALL\n|")
-    s"""WITH h AS (
-       |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-       |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-       |      // count(*)) // 10000 AS c
-       |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-       |wide AS (
-       |  SELECT bucket,
-       |    $wideCols
-       |  FROM h GROUP BY 1),
-       |long AS (
-       |$unpivot
-       |),
-       |roll AS (
-       |  SELECT pair, bucket,
-       |    count(*) OVER pk AS wn, sum(ca) OVER pk AS sa, sum(cb) OVER pk AS sb,
-       |    sum(ca * ca) OVER pk AS saa, sum(cb * cb) OVER pk AS sbb,
-       |    sum(ca * cb) OVER pk AS sab
-       |  FROM long
-       |  WINDOW pk AS (PARTITION BY pair ORDER BY bucket
-       |    ROWS BETWEEN 23 PRECEDING AND CURRENT ROW))
-       |SELECT pair, bucket,
-       |  CAST(wn * sab - sa * sb AS DOUBLE)
-       |    / NULLIF(sqrt(CAST(wn * saa - sa * sa AS DOUBLE))
-       |       * sqrt(CAST(wn * sbb - sb * sb AS DOUBLE)), 0) AS r
-       |FROM roll WHERE wn = 24 ORDER BY 1, 2""".stripMargin
   }
 
   /** Shared binned-histogram CTE of the drift oracles (mirrors

@@ -6,6 +6,18 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** Anything servable: per-tag + total anomaly scoring with a fitted
+  * threshold. Both anomaly models implement it, so the request path and
+  * the HTTP layer are model-agnostic — the reference swaps model classes
+  * under one server the same way.
+  */
+trait TagAnomalyScorer {
+  def threshold: Double
+
+  /** Add `anomaly_score` and `tag_anomaly_<tag>` columns for `tags`. */
+  def scoreWithTags(df: DataFrame, tags: Seq[String]): DataFrame
+}
+
 /** Request/response prediction surface — the reference's
   * `server/views/base.py::BaseModelView.post` analogue (public repo; mount
   * empty, SURVEY.md §0): POST /prediction receives an X payload of
@@ -21,18 +33,6 @@ import org.apache.spark.sql.types._
   * response carries the total anomaly, the threshold verdict, and per-tag
   * error columns.
   */
-/** Anything servable: per-tag + total anomaly scoring with a fitted
-  * threshold. Both anomaly models implement it, so the request path and
-  * the HTTP layer are model-agnostic — the reference swaps model classes
-  * under one server the same way.
-  */
-trait TagAnomalyScorer {
-  def threshold: Double
-
-  /** Add `anomaly_score` and `tag_anomaly_<tag>` columns for `tags`. */
-  def scoreWithTags(df: DataFrame, tags: Seq[String]): DataFrame
-}
-
 object Serve {
 
   /** Explicit request schema: optional `ts` + one double per tag. */

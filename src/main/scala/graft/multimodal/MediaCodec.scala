@@ -438,13 +438,6 @@ object MediaCodec {
     bos.toByteArray
   }
 
-  /** Deterministic 4×4 RGB PNG from the md5 of a UTF-8 string: pixel
-    * (x, y) is digest byte `4 y + x` replicated to r=g=b. Gives any text
-    * corpus a REAL image twin whose decoded luminance is computable in
-    * plain SQL (`md5` + byte extraction) — how the decode path gets an
-    * oracle. TYPE_INT_RGB deliberately: a gray-colorspace image would go
-    * through color management in getRGB and break the byte↔pixel map.
-    */
   /** Exact signed 16-bit samples of a PCM stream — the integer-exact
     * sibling of [[wavFeatures]] for oracle-checkable audio stats. Null
     * for unparseable or non-16-bit streams.
@@ -547,6 +540,13 @@ object MediaCodec {
     bb.array()
   }
 
+  /** Deterministic 4×4 RGB PNG from the md5 of a UTF-8 string: pixel
+    * (x, y) is digest byte `4 y + x` replicated to r=g=b. Gives any text
+    * corpus a REAL image twin whose decoded luminance is computable in
+    * plain SQL (`md5` + byte extraction) — how the decode path gets an
+    * oracle. TYPE_INT_RGB deliberately: a gray-colorspace image would go
+    * through color management in getRGB and break the byte↔pixel map.
+    */
   def digestPng(text: String): Array[Byte] = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(text.getBytes("UTF-8"))

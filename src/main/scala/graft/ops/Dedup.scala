@@ -314,53 +314,13 @@ object Dedup {
     lshBands(minhashSignatures(
       shingleTable(docs, idCol, textCol, shingleN, dedupe = false, maxDocFreq), k), k, bands)
 
-  /** INCREMENTAL near-dup for a growing corpus (the daily-crawl shape):
-    * band only the NEW batch, join it against the persisted band table ∪
-    * its own bands, and re-score just the candidate pairs that involve a
-    * new doc. Cost scales with |new batch| × collision rate — the
-    * existing corpus is touched only through the (band, bh) equi-join and
-    * the re-score's semi-joined shingle sets, never re-processed.
-    *
-    * `maxDocFreq` caps are PER BATCH: existingBands were filtered against
-    * the old corpus's document frequencies and the new batch only against
-    * its own, so a shingle that crosses the cap only in the union is NOT
-    * dropped and the result can differ from a full rebuild as batches
-    * accumulate. That is the standard incremental trade; when rebuild
-    * parity matters, use [[incrementalStepExact]], which carries the
-    * corpus-wide shingle stats as state and re-bands the (usually empty)
-    * set of docs a newly-hot shingle touches — parity is spec'd.
-    *
-    * @param allDocs existing ∪ new docs (re-score needs both sides' text)
-    * @param existingBands persisted `bandTable` of the existing corpus
-    * @param newDocs the newly arrived batch
-    * @return near-dup pairs involving at least one new doc; union with the
-    *         existing corpus's own pairs for the full picture. Persist
-    *         `bandTable(newDocs)` ∪ existingBands as the next state.
-    */
-  def incrementalNearDuplicates(allDocs: DataFrame, existingBands: DataFrame,
-      newDocs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      k: Int = 20, bands: Int = 5, shingleN: Int = 3,
-      maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
-    val newBands = bandTable(newDocs, idCol, textCol, k, bands, shingleN, maxDocFreq)
-    val unionBands = existingBands.unionByName(newBands)
-    val a = newBands.as("a")
-    val b = unionBands.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct()
-    jaccardRescore(allDocs, idCol, textCol, cand, threshold, shingleN, maxDocFreq)
-  }
-
   // --------------------------------------------------------------------
-  // Rebuild-exact incremental dedup: the hot-shingle-list mitigation the
-  // per-batch-cap scaladoc above documents, made concrete. State carried
-  // between batches = the band table + corpus-wide shingle occurrence
-  // counts; the df cap is evaluated against the WHOLE corpus every step,
-  // so the incremental state never drifts from what a from-scratch build
-  // would produce.
+  // Rebuild-exact incremental dedup for a growing corpus (the daily-crawl
+  // shape). State carried between batches = the band table + corpus-wide
+  // shingle occurrence counts; the df cap is evaluated against the WHOLE
+  // corpus every step (a cap applied per batch would let a shingle that
+  // crosses it only in the union survive), so the incremental state never
+  // drifts from what a from-scratch build would produce.
   // --------------------------------------------------------------------
 
   /** Persistable incremental-dedup state: the corpus band table and the
@@ -478,12 +438,13 @@ object Dedup {
       stats)
   }
 
-  /** Rebuild-EXACT incremental near-dup step. Unlike
-    * [[incrementalNearDuplicates]] (whose per-batch df caps drift from a
-    * full rebuild as batches accumulate — see its scaladoc), this step
-    * keeps corpus-wide df state and re-bands the (rare, usually empty)
-    * set of existing docs whose shingle sets changed because a shingle
-    * crossed the cap only in the union:
+  /** Rebuild-EXACT incremental near-dup step: band only the new batch and
+    * re-score only candidate pairs that involve a changed doc, so the cost
+    * scales with the batch, not the corpus. Document-frequency caps are
+    * corpus-wide, not per batch: the step keeps corpus-wide df state and
+    * re-bands the (rare, usually empty) set of existing docs whose
+    * shingle sets changed because a shingle crossed the cap only in the
+    * union:
     *
     *   1. merge the batch's shingle counts into the corpus stats;
     *   2. newly-hot = hot(now) − hot(before). In the common case this is
@@ -913,24 +874,6 @@ object Dedup {
   private[graft] def mentionPlanPreferred(st: ShingleStats): Boolean =
     st.mentions <= 32L * math.max(1L, st.memberships)
 
-  /** Build the index from scratch: ONE groupBy(s) (map-side collect_set —
-    * the dedup rides the aggregation, round 11 removed the separate
-    * distinct shuffle) yields df and the member lists; one explode +
-    * groupBy(doc_id) yields the df-sorted per-doc sets. Shingles leave
-    * the scan as xxhash64 KEYS (the text_novelty ids-only-shuffle
-    * discipline): every downstream stage shuffles, sorts, and compares
-    * 8-byte longs instead of ~40-byte n-gram strings (measured
-    * 4.6 → 2.9 s at sf0.1). Scores stay set-exact up to 64-bit hash
-    * equality: a pair's count is wrong only if two DISTINCT shingles of
-    * that pair collide (P ≤ |A|·|B|/2⁶⁴ per pair); the DuckDB oracle
-    * computes the string-exact sets, so a fixture collision would
-    * hash-fail loudly.
-    *
-    * `materialize = true` localCheckpoints both frames (the bandTable
-    * discipline) for one-shot in-memory use, where groups feeds both the
-    * doc-set derivation and the candidate join; pass false when the
-    * frames are about to be persisted anyway ([[saveShingleIndex]]).
-    */
   /** The per-doc aggregate shared by every index build/rebuild path:
     * from `(doc_id, s, df)` membership rows over the CAPPED universe
     * (df ≤ cap), emit `(doc_id, ts, n)` — `ts` the df-ordered struct
@@ -953,6 +896,24 @@ object Dedup {
           struct(col("df"), col("s"))))).as("ts"))
       .select(col("doc_id"), col("ts"), col("n"))
 
+  /** Build the index from scratch: ONE groupBy(s) (map-side collect_set —
+    * the dedup rides the aggregation, round 11 removed the separate
+    * distinct shuffle) yields df and the member lists; one explode +
+    * groupBy(doc_id) yields the df-sorted per-doc sets. Shingles leave
+    * the scan as xxhash64 KEYS (the text_novelty ids-only-shuffle
+    * discipline): every downstream stage shuffles, sorts, and compares
+    * 8-byte longs instead of ~40-byte n-gram strings (measured
+    * 4.6 → 2.9 s at sf0.1). Scores stay set-exact up to 64-bit hash
+    * equality: a pair's count is wrong only if two DISTINCT shingles of
+    * that pair collide (P ≤ |A|·|B|/2⁶⁴ per pair); the DuckDB oracle
+    * computes the string-exact sets, so a fixture collision would
+    * hash-fail loudly.
+    *
+    * `materialize = true` localCheckpoints both frames (the bandTable
+    * discipline) for one-shot in-memory use, where groups feeds both the
+    * doc-set derivation and the candidate join; pass false when the
+    * frames are about to be persisted anyway ([[saveShingleIndex]]).
+    */
   def buildShingleIndex(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, maxDocFreq: Int = DefaultMaxDocFreq,
       materialize: Boolean = true, pairState: Boolean = false): ShingleIndex = {

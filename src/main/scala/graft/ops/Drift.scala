@@ -25,11 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
-  /** Per-key binned histogram of `valueCol` split into cohorts A/B by
-    * `isA`: one row per (key, bin) with both cohorts' counts. Bin ranges
-    * are the PER-KEY [min, max] — computed in the same scan's sibling
-    * aggregate and re-joined (broadcast: |keys| rows).
-    */
   /** Finite-value gate shared by every histogram path: one NaN in a key
     * makes the bin width NaN and ANSI mode turns `floor(NaN).cast(long)`
     * into a job-killing exception; one ±Inf collapses every finite value
@@ -40,6 +35,11 @@ object Drift {
     v.isNotNull && !isnan(v) &&
       v > Double.NegativeInfinity && v < Double.PositiveInfinity
 
+  /** Per-key binned histogram of `valueCol` split into cohorts A/B by
+    * `isA`: one row per (key, bin) with both cohorts' counts. Bin ranges
+    * are the PER-KEY [min, max] — computed in the same scan's sibling
+    * aggregate and re-joined (broadcast: |keys| rows).
+    */
   private def binned(df: DataFrame, keyCol: String, valueCol: String,
       isA: Column, bins: Int): DataFrame = {
     val v = col(valueCol)

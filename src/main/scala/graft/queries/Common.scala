@@ -1,16 +1,114 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
+import graft.ops.Timeseries
 import graft.sources.Tables
 
-/** What more than one query family uses: the fixture-table resolver and
-  * the SQL fragments several oracles share.
+/** What more than one query family uses: the fixture-table resolvers, the
+  * resampled series several families start from, and the SQL fragments
+  * several oracles share.
   */
 object Common {
 
   private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.resolve(s, s"$dir/$name.parquet")
+
+  /** events scan with `ts` normalized to a µs timestamp regardless of the
+    * fixture generation's physical parquet type (ns-long vs µs — see
+    * [[graft.sources.Events]]). DuckDB's CAST(ts AS TIMESTAMP) performs
+    * the same µs truncation on the oracle side of the compare.
+    */
+  private[graft] def E(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Events.read(s, s"$dir/events.parquet")
+
+  /** The hourly integer-cents series `h(event_type, bucket, c)` as one
+    * oracle CTE: the mean `value` per (event_type, hour), quantized by
+    * integer operations alone — Σ value as DECIMAL(18,6) × 10⁶ as BIGINT,
+    * `//` the row count, `//` 10000 — never a fractional decimal→BIGINT
+    * cast, which truncates in Spark but rounds in DuckDB. DuckDB's `//`
+    * floors and Spark's `div` truncates; they agree because
+    * `events.value` is non-negative (ContractSpec pins that domain). The
+    * SQL twin of [[hourlyCentsLong]].
+    */
+  private[graft] val hourlyCentsCte: String =
+    """h AS (
+      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
+      |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+      |      // count(*)) // 10000 AS c
+      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2)""".stripMargin
+
+  /** The hourly integer-cents series `(event_type, bucket, c)` of an
+    * events frame the caller has already filtered (non-null `value`, plus
+    * any cohort or type filter of its own) — the Scala twin of
+    * [[hourlyCentsCte]], bit-identical to it over the same rows.
+    */
+  private[graft] def hourlyCentsLong(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
+          .cast("long").as("s_micro"),
+        count(lit(1)).as("n"))
+      .select(col("event_type"), col("bucket"),
+        expr("(s_micro div n) div 10000").as("c"))
+
+  private[graft] val corrTypes = Seq("click", "error", "purchase", "signup", "view")
+  private[graft] def corrPairs: Seq[(String, String)] =
+    for { i <- corrTypes.indices; j <- i + 1 until corrTypes.length }
+      yield (corrTypes(i), corrTypes(j))
+
+  /** Aligned wide frame of integer-CENTS hourly means, one row per bucket
+    * with a `c_<type>` column per stream of [[corrTypes]] — shared by the
+    * correlation matrix, the Mahalanobis score and the rolling-correlation
+    * window query.
+    */
+  private[graft] def hourlyCentsWide(s: SparkSession, dir: String): DataFrame = {
+    val hourly = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
+    hourly.groupBy("bucket")
+      .agg(corrTypes.map(t =>
+        max(when(col("event_type") === t, col("c"))).as(s"c_$t")).head,
+        corrTypes.tail.map(t =>
+          max(when(col("event_type") === t, col("c"))).as(s"c_$t")): _*)
+  }
+
+  /** 10-min resample in LONG format (bucket, event_type, v) — the keyed
+    * layout gap filling needs to window per tag instead of globally.
+    * v is rounded to 6 before any gap-filling so both engines interpolate
+    * from identical doubles.
+    */
+  private[graft] def longResampled(s: SparkSession, dir: String): DataFrame =
+    E(s, dir)
+      .filter(col("event_type").isin("click", "view", "purchase"))
+      .groupBy(Timeseries.bucket(col("ts"), "10 minutes").as("bucket"), col("event_type"))
+      .agg(round(avg(col("value")), 6).as("v"))
+
+  /** The seasonal decomposition's exact-INTEGER grid
+    * (v6/sum25/detr25/s_sum/cnt per bucket) shared by
+    * win_seasonal_decompose, win_seasonal_outliers and
+    * agg_seasonal_strength — every downstream value is a mirrored
+    * expression over these exact BIGINTs, free of repr traps.
+    */
+  private[graft] def seasonalGrid(s: SparkSession, dir: String): DataFrame = {
+    val hourly = E(s, dir)
+      .filter(col("value").isNotNull)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
+      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
+          .cast("long").as("s_micro"),
+        count(lit(1)).as("n"))
+      .withColumn("v6", expr("s_micro div n")) // both operands >= 0: floor
+    val w = Window.partitionBy("event_type").orderBy("bucket")
+      .rowsBetween(-12, 12)
+    val t = hourly
+      .withColumn("wn", count(lit(1)).over(w))
+      .withColumn("sum25", sum(col("v6")).over(w))
+      .filter(col("wn") === 25)
+      .withColumn("detr25", col("v6") * lit(25L) - col("sum25"))
+    val pw = Window.partitionBy(col("event_type"), hour(col("bucket")))
+    t.withColumn("s_sum", sum(col("detr25")).over(pw))
+      .withColumn("cnt", count(lit(1)).over(pw))
+  }
 
   /** Sequential double-fold list dot product — DuckDB's list_sum folds
     * left-to-right exactly like Spark's `aggregate`, so the doubles are

@@ -279,6 +279,12 @@ object SimilarityGraph {
       .orderBy("vec_a", "vec_b")
   }
 
+  /** LSH oracle: the hyperplanes are deterministic md5-derived driver
+    * constants (Similarity.planeVector), so the SQL embeds the SAME
+    * literals the Spark plan does — bucket bits, candidate pairs, and
+    * re-scores are then bit-identical. Mirrors `lshCosinePairsSched`
+    * (one table per schedule entry, dim 64, threshold 0.3).
+    */
   private def lshOracleSql(schedule: Seq[Int] = u8): String = {
     s"""WITH ${lshBucketCtes(schedule, 64)},
        |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b

@@ -39,10 +39,6 @@ case class AutoCorrScored(tag: String, ts: java.sql.Timestamp, value: Double,
 case class Drifted(tag: String, ts: java.sql.Timestamp, value: Double,
     cusum_up: Double, cusum_dn: Double, alarm_up: Int, alarm_dn: Int)
 
-/** One side-tagged as-of event: probe (isRight=false, carries eventId) or
-  * reference (isRight=true, value = the reference reading) — see
-  * Streams.asofOnline. Event time as epoch micros for exact ordering.
-  */
 /** One user event for sequence-order streaming ops — event time as epoch
   * micros so ordering is exact, with the unique event id as the
   * total-order tiebreak.
@@ -79,6 +75,10 @@ case class GapState(lastHb: Long)
   * `gap_start_hb` (bucket index = epoch-seconds div bucket width). */
 case class GapOut(tag: String, gap_start_hb: Long, missing: Long)
 
+/** One side-tagged as-of event: probe (isRight=false, carries eventId) or
+  * reference (isRight=true, value = the reference reading) — see
+  * Streams.asofOnline. Event time as epoch micros for exact ordering.
+  */
 case class AsOfIn(user: Long, tsMicros: Long, isRight: Boolean,
     eventId: Long, value: Option[Double])
 
@@ -198,6 +198,9 @@ object Streams {
   private lazy val replayCheckpointRoot: Option[String] =
     graft.Artifacts.tmpfsRoot.map(_.resolve("graft-replay-ck").toString)
 
+  /** State stores per stateful operator of a [[replayToTable]] run. */
+  private val StatePartitions = 4
+
   /** Run a bounded streaming plan to completion into a memory sink and
     * return the result table — the shared harness behind every
     * `stream_*` replay query.
@@ -212,9 +215,10 @@ object Streams {
     *     1.55 s/query vs 0.98 s at 4 partitions. Streaming state wants
     *     to be sized to KEY CARDINALITY and per-batch volume, not to the
     *     batch shuffle width — these replays aggregate dozens-to-hundreds
-    *     of keys, so 4 is ample parallelism; a 100 TB continuous ingest
-    *     would raise `statePartitions` to its real key/throughput scale
-    *     (it is pinned into the checkpoint at first start either way).
+    *     of keys, so 4 ([[StatePartitions]]) is ample parallelism; a
+    *     100 TB continuous ingest would size it to its real
+    *     key/throughput scale (it is pinned into the checkpoint at first
+    *     start either way).
     *   - **checkpoint fsync**: offset/commit/state files of a bounded
     *     replay are throwaway; tmpfs removes the fsync cost (0.98 →
     *     0.88 s). The checkpoint dir is deleted after the run.
@@ -223,15 +227,14 @@ object Streams {
     * (Structured Streaming pins the value from session conf at query
     * start) and restored before the batch-side readback, so surrounding
     * batch plans keep the session's width. Output is identical under
-    * any `statePartitions` — this knob moves only the fixed cost.
+    * any state-partition count — it moves only the fixed cost.
     */
-  def replayToTable(df: DataFrame, name: String, mode: String,
-      statePartitions: Int = 4): DataFrame = {
+  def replayToTable(df: DataFrame, name: String, mode: String): DataFrame = {
     val s = df.sparkSession
     s.catalog.dropTempView(name) // re-runs re-register the memory sink
     val saved = s.conf.get("spark.sql.shuffle.partitions")
     val ck = replayCheckpointRoot.map(r => s"$r/$name-${java.util.UUID.randomUUID()}")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
     try {
       val w0 = df.writeStream.format("memory").queryName(name).outputMode(mode)
       val q = ck.fold(w0)(c => w0.option("checkpointLocation", c)).start()

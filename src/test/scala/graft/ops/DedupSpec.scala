@@ -57,26 +57,6 @@ class DedupSpec extends SparkSpec {
     assert(viaLsh.contains((1L, 2L)))
   }
 
-  test("incremental near-dup over a new batch equals the full-corpus run") {
-    import spark.implicits._
-    val batch2 = Seq(
-      (6L, "the quick brown fox jumps over the lazy dog today"), // near dup of 1/2/3
-      (7L, "nothing in common with anything else at all whatsoever")
-    ).toDF("doc_id", "text")
-    val all = docs.unionByName(batch2)
-    val full = Dedup.nearDuplicates(all, "doc_id", "text", 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val existingPairs = Dedup.nearDuplicates(docs, "doc_id", "text", 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val incr = Dedup.incrementalNearDuplicates(all,
-        Dedup.bandTable(docs, "doc_id", "text"), batch2, "doc_id", "text", 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // processing only the new batch reproduces exactly the full run
-    assert(existingPairs.union(incr) == full, s"existing=$existingPairs incr=$incr full=$full")
-    // and the incremental pairs all involve a new doc
-    assert(incr.forall { case (a, b, _) => a >= 6L || b >= 6L })
-  }
-
   test("decontaminationMatches flags benchmark overlap and only that") {
     import spark.implicits._
     val bench = Seq(
