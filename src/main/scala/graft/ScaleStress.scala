@@ -264,10 +264,9 @@ object ScaleStress {
         Dedup.containmentPairsFromIndex(Dedup.loadShingleIndex(s, path), 0.7)
       }),
       "op_shidx_build" -> ((s: SparkSession, d: String) =>
-        // the parquet-through production build (incl. the index write):
-        // the in-memory materialize=true form stages the ~corpus-scale
-        // groups frame to block storage AND parquet — at sf100 that
-        // double-staging alone filled the sandbox disk
+        // the one index build, parquet-through (incl. the index write):
+        // groups is born on disk and docs derives from the re-read, so
+        // the corpus-scale groups frame is never staged twice
         Dedup.buildAndSaveShingleIndex(withTwins(s, d), "doc_id", "text",
           twinIndexPath(d, "bld"), 3, 20).docs),
       "op_containment_incr" -> ((s: SparkSession, d: String) => {

@@ -202,8 +202,9 @@ object Dedup {
     * that persist the band table (the registry discipline: fit/derive
     * once per corpus fingerprint, serve many) pay exactly one parquet
     * scan + one equi-join here, never the shingle→digest→k-min-agg
-    * derivation. The input must be a materialized frame (parquet read or
-    * localCheckpoint): the self-join references it twice.
+    * derivation. Pass a materialized frame (parquet read or
+    * localCheckpoint): the self-join references it twice, so a lazy input
+    * runs its derivation once per side.
     */
   def pairsFromBands(bands: DataFrame): DataFrame = {
     val a = bands.as("a")
@@ -269,8 +270,8 @@ object Dedup {
     // of its shingles is cheap and tokenization runs exactly once.
     // count(*) ≥ doc-frequency (dedupe=false) — the same conservative
     // cap shingleTable applies.
-    // shingles move as xxhash64 keys from here down (the
-    // shingleIntersections discipline — see its scaladoc for the
+    // shingles move as xxhash64 keys from here down (the shingle-index
+    // discipline — see buildAndSaveShingleIndex's scaladoc for the
     // collision bound): the cap window, the set agg, and the per-pair
     // merge-count all run on 8-byte longs
     val st = shingleTable(needed, idCol, textCol, shingleN, dedupe = false,
@@ -306,13 +307,16 @@ object Dedup {
   }
 
   /** Persistable LSH band table `(doc_id, band, bh)` for a corpus batch —
-    * write it once, reuse it for every later incremental batch.
+    * write it once, reuse it for every later incremental batch. The df
+    * cap is the batch's own hot list; the rows equal `shingleTable`'s
+    * capped form, whose df counts the same non-deduped explode.
     */
   def bandTable(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 20, bands: Int = 5, shingleN: Int = 3,
       maxDocFreq: Int = DefaultMaxDocFreq): DataFrame =
-    lshBands(minhashSignatures(
-      shingleTable(docs, idCol, textCol, shingleN, dedupe = false, maxDocFreq), k), k, bands)
+    bandTableWithHotList(docs, idCol, textCol,
+      hotList(shingleStats(docs, idCol, textCol, shingleN), maxDocFreq),
+      k, bands, shingleN)
 
   // --------------------------------------------------------------------
   // Rebuild-exact incremental dedup for a growing corpus (the daily-crawl
@@ -374,10 +378,11 @@ object Dedup {
   def hotList(stats: DataFrame, maxDocFreq: Int = DefaultMaxDocFreq): DataFrame =
     stats.filter(col("df") > maxDocFreq).select("s")
 
-  /** Band table built against an EXPLICIT hot list instead of the batch's
-    * own df counts — the rebuild-exact form (`bandTable` caps per batch).
+  /** Band table built against an EXPLICIT hot list — the rebuild-exact
+    * form the incremental step bands with the corpus hot list;
+    * [[bandTable]] passes the batch's own.
     */
-  def bandTableWithHotList(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def bandTableWithHotList(docs: DataFrame, idCol: String, textCol: String,
       hot: DataFrame, k: Int = 20, bands: Int = 5, shingleN: Int = 3): DataFrame =
     lshBands(minhashSignatures(
       shingleTable(docs, idCol, textCol, shingleN, dedupe = false,
@@ -416,12 +421,8 @@ object Dedup {
       maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
     val hot = hotList(shingleStats(docs, idCol, textCol, shingleN), maxDocFreq)
       .localCheckpoint() // tiny; referenced by banding AND re-score
-    val bt = bandTableWithHotList(docs, idCol, textCol, hot, k, bands, shingleN)
-    val cand = bt.as("a").join(bt.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = pairsFromBands(
+      bandTableWithHotList(docs, idCol, textCol, hot, k, bands, shingleN))
     jaccardRescoreWithHotList(docs, idCol, textCol, cand, threshold, shingleN, hot)
   }
 
@@ -633,55 +634,6 @@ object Dedup {
       minhashLshPairs(docs, idCol, textCol, k, bands, shingleN, maxDocFreq),
       threshold, shingleN, maxDocFreq)
 
-  /** Exact n-gram Jaccard: |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold over the
-    * maxDocFreq-capped shingle universe (sets keyed by xxhash64 — exact
-    * up to 64-bit hash equality; see [[shingleIntersections]]).
-    *
-    * Candidates come from [[shingleIntersections]]' prefix filter with
-    * the Jaccard-specific bound `jac ≥ τ ⟹ i/min(|A|,|B|) ≥ 2τ/(1+τ)`
-    * (from `i ≥ τ(|A|+|B|−i) ⟹ i ≥ τ/(1+τ)·(|A|+|B|) ≥ 2τ/(1+τ)·min`)
-    * — strictly tighter than the raw containment bound, so prefixes are
-    * shorter and candidate fan-out smaller. The exact Jaccard predicate
-    * re-applies here, so output equals the all-pairs formulation's.
-    *
-    * This operator is the exact baseline / re-scorer; at 100 TB, pair
-    * generation should normally go through minhashLshPairs first.
-    */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3,
-      maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
-    val jac = col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))
-    // size-compatibility prune: jac ≤ min/max, so jac ≥ τ needs min ≥ τ·max
-    shingleIntersections(docs, idCol, textCol, shingleN, maxDocFreq,
-        minOverlapFrac = 2.0 * threshold / (1.0 + threshold),
-        minSizeRatio = threshold)
-      .filter(jac >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
-  }
-
-  /** Exact n-gram CONTAINMENT over the same candidate space: per unordered
-    * pair, `cont_a = |A∩B| / |A|` (how much of A lies inside B) and the
-    * symmetric `cont_b`; kept when EITHER side reaches the threshold.
-    * Containment catches the subset duplicates Jaccard structurally
-    * misses — a document quoted whole inside a much longer one has
-    * containment ≈ 1 but Jaccard ≈ |A|/|B| (tiny), so a Jaccard-only
-    * dedup keeps the embedded copy. Same plan shape (and cap discipline)
-    * as [[ngramJaccardPairs]].
-    */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3,
-      maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
-    val contA = col("i") * lit(1.0) / col("na")
-    val contB = col("i") * lit(1.0) / col("nb")
-    // max(i/na, i/nb) = i/min(na,nb): the containment threshold IS the
-    // prefix filter's min-side overlap bound
-    shingleIntersections(docs, idCol, textCol, shingleN, maxDocFreq,
-        minOverlapFrac = threshold)
-      .filter(greatest(contA, contB) >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-        round(contA, 6).as("cont_a"), round(contB, 6).as("cont_b"))
-  }
-
   /** Train/test DECONTAMINATION — the benchmark-overlap scan a
     * training-data pipeline runs before release (the published GPT-3
     * appendix-C shape: flag any training document sharing at least
@@ -691,13 +643,11 @@ object Dedup {
     * Plan: the corpus is touched ONCE with a narrow tokenize and never
     * pair-explodes against itself — candidates come from the equi-join on
     * the shingle against the (small, by construction) benchmark side,
-    * broadcast by default; the only wide shuffle is the final
+    * always broadcast; the only wide shuffle is the final
     * (corpus doc, bench doc) overlap count, whose size is the match set,
     * not the corpus. Corpus boilerplate is df-capped as usual so a stock
     * phrase cannot fan one benchmark shingle out to the whole corpus.
-    * Cost O(corpus shingles + matches) — the right 100 TB shape. For a
-    * benchmark too large to broadcast, set `broadcastBench = false` (the
-    * equi-join then shuffles the corpus shingle stream once).
+    * Cost O(corpus shingles + matches) — the right 100 TB shape.
     *
     * Output: `(doc_id, bench_id, shared)` — shared = |distinct shingle
     * intersection|, integer-exact.
@@ -705,8 +655,7 @@ object Dedup {
   def decontaminationMatches(corpus: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchIdCol: String, benchTextCol: String,
       shingleN: Int = 8, minShared: Int = 1,
-      maxDocFreq: Int = DefaultMaxDocFreq,
-      broadcastBench: Boolean = true): DataFrame = {
+      maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
     val b = shingleTable(bench, benchIdCol, benchTextCol, shingleN,
         dedupe = true, maxDocFreq = Int.MaxValue)
       .select(col("doc_id").as("bench_id"), col("s"))
@@ -736,48 +685,11 @@ object Dedup {
           .filter(col("df") > maxDocFreq).select("s")
         matched.join(broadcast(hot), Seq("s"), "left_anti")
       }
-    c.join(if (broadcastBench) broadcast(b) else b, Seq("s"))
+    c.join(broadcast(b), Seq("s"))
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }
-
-  /** Shared machinery of the exact set-overlap scorers: every ordered
-    * pair that can reach `i ≥ minOverlapFrac · min(|A|,|B|)` with its
-    * EXACT intersection count and both (capped-universe) set sizes —
-    * `(doc_a, doc_b, i, na, nb)`. Callers pass the weakest such bound
-    * their own threshold implies (containment τ: the bound is τ itself;
-    * Jaccard τ: `jac ≥ τ ⟹ i/min ≥ 2τ/(1+τ)`, strictly tighter) and
-    * re-apply their exact predicate downstream, so the output they keep
-    * is identical to the all-pairs formulation's.
-    *
-    * Scale shape — PREFIX FILTERING (the AllPairs bound of Bayardo, Ma
-    * & Srikant, WWW'07, with PPJoin's df-ascending global order, Xiao
-    * et al., WWW'08): rank each doc's shingles by (global df asc,
-    * shingle asc) — one total order corpus-wide — and index only the
-    * first `n − iMin + 1` as candidate-generation keys, where
-    * `iMin = ⌈frac·n⌉` is the doc's qualifying overlap were it the
-    * smaller side. Pigeonhole: a pair whose intersection avoids the
-    * smaller doc's whole prefix has `i ≤ iMin − 1` and cannot qualify,
-    * so probing prefix(X) against the FULL capped table catches every
-    * qualifying pair from whichever side is smaller. Candidate cost
-    * drops from the all-pairs Σ df² to Σ df_prefix·df — and because the
-    * prefix is the RAREST (1−frac) fraction of each doc, boilerplate
-    * shingles (high df) almost never serve as keys: the quadratic term
-    * rides the df of rare shingles only. `iMin` is computed in integer
-    * micro-units (`T = ⌊frac·1e6⌋`, `iMin = ⌈T·n/1e6⌉` by long
-    * arithmetic) — floor makes T a conservative lower bound and no
-    * float rounding can shorten a prefix below the safe length;
-    * rationals i/n sit ≥ 1/(1e6·n) apart so the downstream double
-    * compare can never admit a pair the integer bound excluded.
-    */
-  private def shingleIntersections(docs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, maxDocFreq: Int,
-      minOverlapFrac: Double, minSizeRatio: Double = 0.0): DataFrame =
-    shingleIntersectionsFromIndex(
-      buildShingleIndex(docs, idCol, textCol, shingleN, maxDocFreq,
-        materialize = true),
-      minOverlapFrac, minSizeRatio)
 
   /** The set-overlap scorers' PERSISTENT STATE — the corpus statistics
     * the prefix filter runs on, factored out of the per-query plan so a
@@ -814,46 +726,46 @@ object Dedup {
     * output identical to the full rebuild's.
     *
     * Round-14 additions (both optional — a pre-v3 artifact loads with
-    * None and serves exactly as before):
-    *   - `stats`: the strategy-pick statistics ([[ShingleStats]]),
-    *     computed once at build/merge/save and persisted as `meta/` —
-    *     no serve ever re-aggregates the groups table;
+    * None and serves by the prefix filter):
+    *   - `stats`: the crossover statistics ([[ShingleStats]]), computed
+    *     once at build (or save) and persisted as `meta/`, then carried
+    *     forward by [[mergeShingleIndex]] — no serve ever aggregates the
+    *     groups table;
     *   - `pairs`: the PAIR STATE — exact intersection counts `(doc_a,
     *     doc_b, i)` over the capped df ≥ 2 universe, persisted as
     *     `pairs/` and maintained incrementally by [[mergeShingleIndex]]
     *     (the dedupstate pattern applied to the set-overlap family).
     *     With it, serving any (jaccard|containment, τ) is scan +
     *     attach n + filter — the sf100 probe's 383 s recompute becomes
-    *     a state scan. Built only while the mention economics hold
-    *     ([[mentionPlanPreferred]]): past the crossover the state is
-    *     Σ C(df,2)-scale and the prefix plan is the right serve anyway.
+    *     a state scan. Written only while the mention economics hold
+    *     ([[mentionPlanPreferred]], decided once at build): past the
+    *     crossover the state is Σ C(df,2)-scale and the prefix filter is
+    *     the right serve.
     */
   final case class ShingleIndex(groups: DataFrame, docs: DataFrame,
-      statsF: () => Option[ShingleStats] = () => None,
-      pairs: Option[DataFrame] = None) {
-    /** Strategy-pick statistics, LAZY (round 14, the r13 ADVICE item
+      statsF: () => Option[ShingleStats], pairs: Option[DataFrame]) {
+    /** Crossover statistics, LAZY (round 14, the r13 ADVICE item
       * generalized): forcing them costs a driver action — a meta-parquet
       * `head()` on a loaded index, the delta-vocabulary aggregate on a
-      * merged one — that a pair-state serve never needs. Memoized, so
-      * save + pick on the same index pay at most one action.
+      * merged one — that no serve needs; only [[saveShingleIndex]] and
+      * the stats of a merge on top of this index read them. Memoized, so
+      * each index pays at most one action.
       */
     lazy val stats: Option[ShingleStats] = statsF()
   }
 
-  /** Strategy-pick statistics over the capped df ≥ 2 groups — `mentions`
-    * = Σ C(df,2) (the mention plan's explode volume) and `memberships`
-    * = Σ df (the corpus co-occurrence mass). Computed ONCE at
-    * build/merge time and persisted with the index (`meta/`), never
+  /** Crossover statistics over the capped df ≥ 2 groups — `mentions`
+    * = Σ C(df,2) (the pair state's row count before aggregation) and
+    * `memberships` = Σ df (the corpus co-occurrence mass). Computed ONCE
+    * at build time and persisted with the index (`meta/`), never
     * re-aggregated per serve (round-13 ADVICE: the per-serve stats agg
     * + `.head()` cost ~20 s at sf100 and blocked the driver on every
     * call for a lazily merged index).
     */
   final case class ShingleStats(mentions: Long, memberships: Long)
 
-  /** One narrow model-sized aggregate over the groups stats — the only
-    * corpus-scale action the strategy pick ever needs, paid at
-    * build/merge/save, or once per serve only for an index that carries
-    * no stored stats (a pre-v3 artifact).
+  /** One narrow model-sized aggregate over the groups stats — paid once
+    * at build, and at save only for an index that carries no stats.
     */
   private[graft] def computeShingleStats(groups: DataFrame): ShingleStats = {
     val row = groups.filter(col("ds").isNotNull && col("df") >= 2)
@@ -864,12 +776,18 @@ object Dedup {
       if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 
-  /** The mentions-vs-prefix crossover guard (see
-    * [[shingleIntersectionsFromIndex]]): the mention plan moves
-    * Σ C(df,2) ids-only rows, the prefix plan ~memberships-scale rows
-    * with arrays on the re-score edge; mentions ≤ 32× memberships keeps
-    * the explode strictly cheaper than the measured pairs×arrays
-    * exchange it replaces. Pure function of the stored stats.
+  /** Whether a built index gets PAIR STATE — the pair-state-vs-prefix
+    * crossover, decided once, in [[buildAndSaveShingleIndex]]. The pair
+    * state is the mention aggregate: Σ C(df,2) ids-only rows (24 B, NO
+    * array crosses the wire — the scoredBucketPairs lesson applied to
+    * sets), where the prefix plan's pair-scale exchange carries
+    * candidate pairs × BOTH docs' shingle arrays (measured 12.4 GB at
+    * ~sf10, the wall that killed the r12 sf100 attempt). A
+    * boilerplate-heavy corpus at a large cap inverts that (one df = 1000
+    * shingle is 5·10⁵ mentions); mentions ≤ 32× memberships keeps the
+    * pair state strictly cheaper than the exchange it replaces. At the
+    * shipped cap of 20, C(df,2)/df = (df−1)/2 ≤ 9.5 for every df, so
+    * every shipped index carries pair state. Pure function of the stats.
     */
   private[graft] def mentionPlanPreferred(st: ShingleStats): Boolean =
     st.mentions <= 32L * math.max(1L, st.memberships)
@@ -887,7 +805,7 @@ object Dedup {
     * disk). Scores stay exact: `i` counts only shared shingles (df ≥ 2
     * by definition) and `n` keeps the full size for the caller's
     * jaccard/containment denominators. The prefix pigeonhole stays
-    * sound on the filtered sets — see [[shingleIntersectionsFromIndex]].
+    * sound on the filtered sets — see [[prefixIntersections]].
     */
   private def docSetsFromMembership(m: DataFrame): DataFrame =
     m.groupBy("doc_id")
@@ -896,76 +814,14 @@ object Dedup {
           struct(col("df"), col("s"))))).as("ts"))
       .select(col("doc_id"), col("ts"), col("n"))
 
-  /** Build the index from scratch: ONE groupBy(s) (map-side collect_set —
-    * the dedup rides the aggregation, round 11 removed the separate
-    * distinct shuffle) yields df and the member lists; one explode +
-    * groupBy(doc_id) yields the df-sorted per-doc sets. Shingles leave
-    * the scan as xxhash64 KEYS (the text_novelty ids-only-shuffle
-    * discipline): every downstream stage shuffles, sorts, and compares
-    * 8-byte longs instead of ~40-byte n-gram strings (measured
-    * 4.6 → 2.9 s at sf0.1). Scores stay set-exact up to 64-bit hash
-    * equality: a pair's count is wrong only if two DISTINCT shingles of
-    * that pair collide (P ≤ |A|·|B|/2⁶⁴ per pair); the DuckDB oracle
-    * computes the string-exact sets, so a fixture collision would
-    * hash-fail loudly.
-    *
-    * `materialize = true` localCheckpoints both frames (the bandTable
-    * discipline) for one-shot in-memory use, where groups feeds both the
-    * doc-set derivation and the candidate join; pass false when the
-    * frames are about to be persisted anyway ([[saveShingleIndex]]).
-    */
-  def buildShingleIndex(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, maxDocFreq: Int = DefaultMaxDocFreq,
-      materialize: Boolean = true, pairState: Boolean = false): ShingleIndex = {
-    val d = shingleTable(docs, idCol, textCol, shingleN, dedupe = false,
-        maxDocFreq = Int.MaxValue)
-      .select(col("doc_id"), xxhash64(col("s")).as("s"))
-    // (A/B note: the full PPJoin POSITIONAL filter was measured here and
-    // REVERTED — carrying (doc, pos, n) structs through a second
-    // full-table shuffle cost ~2× what the extra candidate pruning saved
-    // at every probed scale; the prefix + smaller-side + size-ratio
-    // filters keep the candidate stream linear without it.)
-    val grouped0 = d.groupBy("s")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ds0"))
-      .select(col("s"), size(col("ds0")).as("df"),
-        when(size(col("ds0")) <= maxDocFreq, col("ds0")).as("ds"))
-    val grouped = if (materialize) grouped0.localCheckpoint() else grouped0
-    // ONE per-doc aggregate over the capped universe: the df ≥ 2 shingle
-    // array sorted by the global (df asc, s asc) order — sort_array over
-    // structs IS that lexicographic order — plus the full capped size n.
-    val docSets0 = docSetsFromMembership(grouped
-      .filter(col("ds").isNotNull)
-      .select(col("s"), col("df"), explode(col("ds")).as("doc_id")))
-    val docSets = if (materialize) docSets0.localCheckpoint() else docSets0
-    // stats ride the build (one model-sized agg on the just-checkpointed
-    // groups — the serve-time strategy pick becomes a pure in-memory
-    // compare); the lazy materialize=false form stays action-free and
-    // leaves stats to the save path, which computes them from the
-    // written parquet.
-    val st: () => Option[ShingleStats] =
-      if (materialize) {
-        lazy val v = Some(computeShingleStats(grouped))
-        () => v
-      } else () => None
-    // pair state only when the mention economics allow (the same guard
-    // the serve-time strategy pick runs): past the crossover the state
-    // is Σ C(df,2)-scale — larger than the corpus — and the prefix plan
-    // is the right serve anyway. (Requesting pair state forces the
-    // stats; a plain build leaves them lazy — round 14.)
-    val ps = if (pairState && materialize && st().exists(mentionPlanPreferred))
-      Some(mentionPairCounts(grouped).localCheckpoint()) else None
-    ShingleIndex(grouped, docSets, st, ps)
-  }
-
   /** Persist an index (groups + pairs + docs + meta parquet; the META
     * commit marker lands last — it is the component every v3
     * writer always emits, so a half-written index never gates (round
     * 15: was docs-last, changed so the build can overlap the pairs and
     * docs jobs — see [[buildAndSaveShingleIndex]]). Stats are computed
     * here when the index carries none, so a saved artifact ALWAYS has
-    * `meta/` and a loaded index never pays a per-serve strategy
-    * aggregate; the pair state is written only when present (see
-    * [[buildShingleIndex]]'s economics guard).
+    * `meta/`; the pair state is written only when present (see
+    * [[mentionPlanPreferred]]).
     */
   def saveShingleIndex(idx: ShingleIndex, path: String): Unit = {
     val spark = idx.groups.sparkSession
@@ -980,29 +836,49 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Build an index DIRECTLY onto disk — the corpus-scale path. The
-    * composed build+save ([[buildShingleIndex]] then
-    * [[saveShingleIndex]]) stages every frame TWICE: both frames
-    * localCheckpoint to block storage and then write again as parquet,
-    * so the box carries ~2× the index's size in intermediates (measured:
-    * the sf100 probe leg filled the sandbox's disk — ~700 M group rows
-    * staged to block manager AND parquet, plus both aggregation
-    * shuffles' files held until job end). Here `groups` is born as
-    * parquet (one shuffle chain, one write), read BACK for the per-doc
-    * aggregation (a column-pruned scan — cheaper than the checkpoint it
-    * replaces), and `docs` written from that — peak disk ≈ the final
-    * artifact plus one live shuffle, the LSM discipline of never holding
-    * a second staged copy of state.
+  /** Build an index DIRECTLY onto disk — the one build. ONE groupBy(s)
+    * (map-side collect_set — the dedup rides the aggregation, round 11
+    * removed the separate distinct shuffle) yields df and the member
+    * lists; `groups` is born as parquet (one shuffle chain, one write),
+    * read BACK for the per-doc aggregation (a column-pruned scan), and
+    * one explode + groupBy(doc_id) writes the df-sorted per-doc sets as
+    * `docs`. Peak disk ≈ the final artifact plus one live shuffle, the
+    * LSM discipline of never holding a second staged copy of state (an
+    * in-memory build that localCheckpointed both frames and then wrote
+    * them again filled the sf100 probe's disk — ~700 M group rows staged
+    * to block manager AND parquet).
+    *
+    * Shingles leave the scan as xxhash64 KEYS (the text_novelty
+    * ids-only-shuffle discipline): every downstream stage shuffles,
+    * sorts, and compares 8-byte longs instead of ~40-byte n-gram strings
+    * (measured 4.6 → 2.9 s at sf0.1). Scores stay set-exact up to 64-bit
+    * hash equality: a pair's count is wrong only if two DISTINCT shingles
+    * of that pair collide (P ≤ |A|·|B|/2⁶⁴ per pair); the DuckDB oracle
+    * computes the string-exact sets, so a fixture collision would
+    * hash-fail loudly.
+    *
+    * The stats are computed from the written groups and stored as
+    * `meta/`; the pair state is written when [[mentionPlanPreferred]]
+    * holds for them.
     */
   def buildAndSaveShingleIndex(docs: DataFrame, idCol: String,
       textCol: String, path: String, shingleN: Int = 3,
-      maxDocFreq: Int = DefaultMaxDocFreq,
-      pairState: Boolean = true): ShingleIndex = {
+      maxDocFreq: Int = DefaultMaxDocFreq): ShingleIndex = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val idx = buildShingleIndex(docs, idCol, textCol, shingleN, maxDocFreq,
-      materialize = false)
-    idx.groups.write.mode("overwrite").parquet(s"$path/groups")
+    // (A/B note: the full PPJoin POSITIONAL filter was measured here and
+    // REVERTED — carrying (doc, pos, n) structs through a second
+    // full-table shuffle cost ~2× what the extra candidate pruning saved
+    // at every probed scale; the prefix + smaller-side + size-ratio
+    // filters keep the candidate stream linear without it.)
+    shingleTable(docs, idCol, textCol, shingleN, dedupe = false,
+        maxDocFreq = Int.MaxValue)
+      .select(col("doc_id"), xxhash64(col("s")).as("s"))
+      .groupBy("s")
+      .agg(sort_array(collect_set(col("doc_id"))).as("ds0"))
+      .select(col("s"), size(col("ds0")).as("df"),
+        when(size(col("ds0")) <= maxDocFreq, col("ds0")).as("ds"))
+      .write.mode("overwrite").parquet(s"$path/groups")
     val grouped = spark.read.parquet(s"$path/groups")
     // stats from the WRITTEN groups (a pruned two-column scan), stored
     // as meta so no serve ever re-aggregates; the pair state — the
@@ -1017,7 +893,7 @@ object Dedup {
     // jobs are full-width on a saturated 32-thread box, so they fight
     // for execution memory and disk instead of back-filling a tail;
     // reverted to sequential. meta/ still commits LAST as the gate.)
-    if (pairState && mentionPlanPreferred(st))
+    if (mentionPlanPreferred(st))
       // cluster + sort the pair state before writing: unsorted (doc_a,
       // doc_b, i) longs are incompressible id noise (measured 11 GB at
       // the sf100 probe — 2.75× the rest of the index and the disk
@@ -1057,11 +933,10 @@ object Dedup {
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {
     // meta/pairs are optional on disk (pre-v3 artifacts; indexes past
-    // the pair-economics guard) — absence degrades to the per-serve
-    // stats agg / recompute plans, never to an error
-    // LAZY (round 14): the meta head() is a driver action per load; a
-    // pair-state serve never consults the stats, so loading must not
-    // pay for them
+    // the pair-economics guard) — absence serves by the prefix filter,
+    // never an error
+    // LAZY (round 14): the meta head() is a driver action per load; no
+    // serve consults the stats, so loading must not pay for them
     val st: () => Option[ShingleStats] = () =>
       if (graft.Artifacts.committed(spark, path, "meta")) {
         val r = spark.read.parquet(s"$path/meta").head()
@@ -1286,94 +1161,52 @@ object Dedup {
     * `i ≥ minOverlapFrac · min(|A|,|B|)` with its EXACT intersection
     * count and both (capped-universe) set sizes — `(doc_a, doc_b, i,
     * na, nb)`. Callers pass the weakest such bound their own threshold
-    * implies and re-apply their exact predicate downstream, so the
-    * output they keep is identical to the all-pairs formulation's.
-    * With a loaded index this is the WHOLE per-run plan: two map-side
-    * projections (prefix slice + ss re-sort), the candidate equi-join,
-    * and the merge-count re-score — no corpus-wide aggregation at all.
+    * implies (containment τ: the bound is τ itself; Jaccard τ:
+    * `jac ≥ τ ⟹ i/min ≥ 2τ/(1+τ)`, strictly tighter) and re-apply their
+    * exact predicate downstream, so the output they keep is identical to
+    * the all-pairs formulation's.
+    *
+    * Two serves, picked by what the index carries — the crossover was
+    * decided once, at build ([[mentionPlanPreferred]]): the persisted
+    * PAIR STATE when present ([[pairStateIntersections]]), else the
+    * prefix filter ([[prefixIntersections]]). Both emit the same
+    * qualifying pairs, spec'd equal in DedupSpec; neither runs a
+    * corpus-wide aggregation.
     */
   private[graft] def shingleIntersectionsFromIndex(idx: ShingleIndex,
       minOverlapFrac: Double, minSizeRatio: Double = 0.0): DataFrame = {
     require(minOverlapFrac > 0.0 && minOverlapFrac <= 1.0,
       s"minOverlapFrac must be in (0, 1], got $minOverlapFrac")
-    // STRATEGY (round 13, the third-decade fix): the prefix-filter +
-    // array-re-score plan's pair-scale exchange carries candidate pairs
-    // × BOTH docs' shingle arrays — measured 12.4 GB at ~sf10 (→ ~10×
-    // that a decade up, the exact in-flight-shuffle wall that killed the
-    // r12 sf100 attempt). When the capped df distribution is low (every
-    // shipped graft surface runs cap = 20), the EXACT intersection
-    // counts come far cheaper from CO-MEMBERSHIP MENTIONS: each capped
-    // df ≥ 2 group emits its C(df, 2) ordered member pairs (ids only,
-    // 24 B), one hash-agg counts i per pair — Σ C(df,2) ≤ (cap/2)·
-    // memberships rows, and NO ARRAY EVER CROSSES THE WIRE (the
-    // scoredBucketPairs lesson applied to sets). A boilerplate-heavy
-    // corpus at a large cap inverts the economics (one df = 1000
-    // shingle is 5·10⁵ mentions), so the strategy is picked from the
-    // STORED index stats (computed once at build/merge/save — the
-    // fit-once discipline); both plans are exact and emit the identical
-    // (doc_a, doc_b, i, na, nb) contract, spec'd equal in DedupSpec.
     val tMicro = math.floor(minOverlapFrac * 1e6).toLong
-    // PAIR STATE (round 14): an index carrying persisted iCounts serves
-    // any (jaccard|containment, τ) as scan pairs + attach n + filter —
-    // no explode, no aggregation, no strategy question (the state IS
-    // the mention plan's aggregate, maintained incrementally by
-    // mergeShingleIndex). Without it, the strategy pick runs on the
-    // STORED stats (computed once at build/merge/save) and only a
-    // stats-less pre-v3 artifact pays a per-serve aggregate.
     if (idx.pairs.isDefined) pairStateIntersections(idx, tMicro, minSizeRatio)
-    else if (mentionPlanPreferred(
-        idx.stats.getOrElse(computeShingleStats(idx.groups))))
-      mentionIntersections(idx, tMicro, minSizeRatio)
     else prefixIntersections(idx, tMicro, minSizeRatio)
   }
 
-  /** The mention-count plan: i(A, B) = the number of capped df ≥ 2
-    * groups whose member list contains both docs, counted by exploding
-    * each group's ordered member pairs and one hash aggregation —
-    * ids-only end to end. Emits every pair with i ≥ 1 that survives the
-    * conservative integer micro-unit bounds (a SUPERSET of the
-    * qualifying pairs, like the prefix plan — callers re-apply their
-    * exact predicate).
-    */
-  private[graft] def mentionIntersections(idx: ShingleIndex, tMicro: Long,
-      minSizeRatio: Double): DataFrame =
-    boundedIntersections(mentionPairCounts(idx.groups), idx.docs,
-      tMicro, minSizeRatio)
-
-  /** Serve from the PERSISTED pair state: the iCounts scan replaces the
-    * whole mention explode + hash-agg (the sf100 383 s → state-scan
-    * turn). Identical `(doc_a, doc_b, i, na, nb)` contract — spec'd
-    * row-equal to [[mentionIntersections]] in DedupSpec.
+  /** Serve from the PERSISTED pair state: scan the `(doc_a, doc_b, i)`
+    * counts, attach both sizes, filter — no explode, no aggregation (the
+    * sf100 383 s recompute → state-scan turn). Emits every pair with
+    * i ≥ 1 that survives the conservative integer micro-unit bounds, a
+    * SUPERSET of the qualifying pairs like the prefix serve's.
     */
   private[graft] def pairStateIntersections(idx: ShingleIndex, tMicro: Long,
       minSizeRatio: Double): DataFrame =
     boundedIntersections(idx.pairs.get, idx.docs, tMicro, minSizeRatio)
 
-  /** Exact per-pair intersection counts `(doc_a, doc_b, i)` from the
-    * capped df ≥ 2 groups — the mention plan's aggregate and the pair
-    * state's on-disk layout. Two chained explodes stream C(df, 2) rows
-    * per group and keep (a < b): ds is build-sorted so values compare
-    * directly; no combination array is ever materialized.
-    */
-  private[graft] def mentionPairCounts(groups: DataFrame): DataFrame =
-    groups.filter(col("ds").isNotNull && col("df") >= 2)
-      .select(col("s"), explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("i"))
-
-  /** [[mentionPairCounts]] in the pair state's ON-DISK layout: the
-    * mention stream repartitions by doc_a FIRST, and because
-    * hashpartitioning(doc_a) satisfies ClusteredDistribution(doc_a,
-    * doc_b), the pair aggregation runs on that same exchange — agg
-    * partitioning and write layout share ONE shuffle (guide §2.4). The
-    * map-side partial aggregation the explicit repartition forgoes
-    * bought little here by construction: a pair's duplicate mentions
-    * come from different shingle groups, which the groups scan spreads
-    * across partitions, so pre-exchange rows ≈ post-partial rows — and
-    * the r14 shape paid a SECOND full pair-scale exchange to get the
-    * doc_a layout back. Same rows, same aggregation, same final layout.
+  /** The pair state: exact per-pair intersection counts `(doc_a, doc_b,
+    * i)` from the capped df ≥ 2 groups — i(A, B) = the number of groups
+    * whose member list holds both docs — in its ON-DISK layout. Two
+    * chained explodes stream C(df, 2) rows per group and keep (a < b):
+    * ds is build-sorted so values compare directly; no combination array
+    * is ever materialized. The mention stream repartitions by doc_a
+    * FIRST, and because hashpartitioning(doc_a) satisfies
+    * ClusteredDistribution(doc_a, doc_b), the pair aggregation runs on
+    * that same exchange — agg partitioning and write layout share ONE
+    * shuffle (guide §2.4). The map-side partial aggregation the explicit
+    * repartition forgoes bought little here by construction: a pair's
+    * duplicate mentions come from different shingle groups, which the
+    * groups scan spreads across partitions, so pre-exchange rows ≈
+    * post-partial rows — and the r14 shape paid a SECOND full pair-scale
+    * exchange to get the doc_a layout back.
     */
   private[graft] def mentionPairCountsByDocA(groups: DataFrame): DataFrame =
     groups.filter(col("ds").isNotNull && col("df") >= 2)
@@ -1406,9 +1239,29 @@ object Dedup {
         col("na").cast("long").as("na"), col("nb").cast("long").as("nb"))
   }
 
-  /** The prefix-filter + sorted-merge re-score plan — the right shape
-    * when hot capped shingles make Σ C(df,2) explode (large caps on
-    * boilerplate-heavy corpora); see [[shingleIntersectionsFromIndex]].
+  /** The prefix-filter + sorted-merge re-score serve — the plan for an
+    * index past the pair-state crossover, where hot capped shingles make
+    * Σ C(df,2) explode (large caps on boilerplate-heavy corpora).
+    *
+    * PREFIX FILTERING (the AllPairs bound of Bayardo, Ma & Srikant,
+    * WWW'07, with PPJoin's df-ascending global order, Xiao et al.,
+    * WWW'08): each doc's shingles are ranked by (global df asc, shingle
+    * asc) — one total order corpus-wide — and only the first
+    * `n − iMin + 1` serve as candidate-generation keys, where
+    * `iMin = ⌈frac·n⌉` is the doc's qualifying overlap were it the
+    * smaller side. Pigeonhole: a pair whose intersection avoids the
+    * smaller doc's whole prefix has `i ≤ iMin − 1` and cannot qualify,
+    * so probing prefix(X) against the FULL capped table catches every
+    * qualifying pair from whichever side is smaller. Candidate cost
+    * drops from the all-pairs Σ df² to Σ df_prefix·df — and because the
+    * prefix is the RAREST (1−frac) fraction of each doc, boilerplate
+    * shingles (high df) almost never serve as keys: the quadratic term
+    * rides the df of rare shingles only. `iMin` is computed in integer
+    * micro-units (`T = ⌊frac·1e6⌋`, `iMin = ⌈T·n/1e6⌉` by long
+    * arithmetic) — floor makes T a conservative lower bound and no
+    * float rounding can shorten a prefix below the safe length;
+    * rationals i/n sit ≥ 1/(1e6·n) apart so the downstream double
+    * compare can never admit a pair the integer bound excluded.
     */
   private[graft] def prefixIntersections(idx: ShingleIndex, tMicro: Long,
       minSizeRatio: Double): DataFrame = {
@@ -1481,7 +1334,18 @@ object Dedup {
       .filter(col("i") >= 1)
   }
 
-  /** [[ngramJaccardPairs]] served from a maintained [[ShingleIndex]]. */
+  /** Exact n-gram Jaccard served from a maintained [[ShingleIndex]]:
+    * |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold over the maxDocFreq-capped
+    * shingle universe (sets keyed by xxhash64 — exact up to 64-bit hash
+    * equality; see [[buildAndSaveShingleIndex]]). The serve gets the
+    * Jaccard-specific overlap bound `jac ≥ τ ⟹ i/min(|A|,|B|) ≥ 2τ/(1+τ)`
+    * (from `i ≥ τ(|A|+|B|−i) ⟹ i ≥ τ/(1+τ)·(|A|+|B|) ≥ 2τ/(1+τ)·min`) —
+    * strictly tighter than the raw containment bound — and the size
+    * prune `jac ≤ min/max`, so `min ≥ τ·max`. The exact Jaccard predicate
+    * re-applies here, so output equals the all-pairs formulation's. At
+    * 100 TB, pair generation for near-duplicates normally goes through
+    * [[minhashLshPairs]] instead.
+    */
   def ngramJaccardPairsFromIndex(idx: ShingleIndex, threshold: Double): DataFrame = {
     val jac = col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))
     shingleIntersectionsFromIndex(idx,
@@ -1491,7 +1355,15 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
   }
 
-  /** [[containmentPairs]] served from a maintained [[ShingleIndex]]. */
+  /** Exact n-gram CONTAINMENT served from a maintained [[ShingleIndex]]:
+    * per unordered pair, `cont_a = |A∩B| / |A|` (how much of A lies
+    * inside B) and the symmetric `cont_b`; kept when EITHER side reaches
+    * the threshold. Containment catches the subset duplicates Jaccard
+    * structurally misses — a document quoted whole inside a much longer
+    * one has containment ≈ 1 but Jaccard ≈ |A|/|B| (tiny), so a
+    * Jaccard-only dedup keeps the embedded copy. max(i/na, i/nb) =
+    * i/min(na, nb), so the threshold IS the serve's overlap bound.
+    */
   def containmentPairsFromIndex(idx: ShingleIndex, threshold: Double): DataFrame = {
     val contA = col("i") * lit(1.0) / col("na")
     val contB = col("i") * lit(1.0) / col("nb")
@@ -1543,25 +1415,32 @@ object Dedup {
     val anchors = filter(sequence(lit(1), lastStart), p =>
       conv(md5(col(textCol).substr(p, lit(anchorGram))).substr(1, 2), 16, 10)
         .cast("int") % anchorMod === 0)
-    // Pin the anchor scan's width BEFORE the per-character hashing: the
-    // projection below prices one md5 per character of corpus, and a
-    // single-file table otherwise runs it in however few partitions the
-    // scan produced (ONE task on a 32-core box — the fuzzyPairs lesson,
-    // same count-pinned-repartition fix so AQE's byte-sighted coalescer
-    // cannot fold the CPU-dense stage back together).
-    // NULL text is dropped (r11 ADVICE): md5/xxhash64 of a NULL substring
-    // collapses every null-text doc onto one fingerprint — they would
-    // all count as mutual "duplicates" while a SQL oracle's
-    // content-equality join never matches NULL.
-    val wide = docs.select(col(idCol).as("doc_id"), col(textCol))
-      .filter(col(textCol).isNotNull)
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
-    val spans = wide.select(col("doc_id"),
+    val spans = spanInput(docs, idCol, textCol).select(col("doc_id"),
       explode(transform(array_union(strided, anchors),
         p => md5(col(textCol).substr(p, lit(spanLen))))).as("h"))
     spanDupCounts(spans)
   }
+
+  /** Shared prelude of the substring-dedup variants: `(doc_id, text)`
+    * with NULL text dropped, spread by doc over the session's shuffle
+    * width.
+    *
+    * NULL text is dropped (r11 ADVICE): md5/xxhash64 of a NULL substring
+    * collapses every null-text doc onto one fingerprint — they would all
+    * count as mutual "duplicates" while a SQL oracle's content-equality
+    * join never matches NULL. The width is pinned BEFORE the per-position
+    * hashing: the span projection prices one hash per span (one md5 per
+    * character for the anchor scan), and a single-file table otherwise
+    * runs it in however few partitions the scan produced (ONE task on a
+    * 32-core box — the fuzzyPairs lesson, same count-pinned-repartition
+    * fix so AQE's byte-sighted coalescer cannot fold the CPU-dense stage
+    * back together).
+    */
+  private def spanInput(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), col(textCol))
+      .filter(col(textCol).isNotNull)
+      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+        col("doc_id"))
 
   /** Shared tail of the substring-dedup variants: spans `(doc_id, h)` →
     * per-doc count of spans whose fingerprint occurs in ≥2 distinct docs.
@@ -1598,11 +1477,7 @@ object Dedup {
     val anchors = Bridge.column(graft.expressions.RollingAnchors(
       Bridge.expression(col(textCol)), Bridge.expression(lit(anchorGram)),
       Bridge.expression(lit(anchorMod)), Bridge.expression(lit(spanLen))))
-    val wide = docs.select(col(idCol).as("doc_id"), col(textCol))
-      .filter(col(textCol).isNotNull) // see duplicatedSpans' NULL note
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
-    val spans = wide.select(col("doc_id"),
+    val spans = spanInput(docs, idCol, textCol).select(col("doc_id"),
       explode(transform(array_union(strided, anchors),
         p => xxhash64(col(textCol).substr(p, lit(spanLen))))).as("h"))
     spanDupCounts(spans)
@@ -1622,11 +1497,7 @@ object Dedup {
   def duplicatedSpansStrided(docs: DataFrame, idCol: String, textCol: String,
       spanLen: Int = 64, stride: Int = 32): DataFrame = {
     val lastStart = greatest(length(col(textCol)) - (spanLen - 1), lit(1))
-    val wide = docs.select(col(idCol).as("doc_id"), col(textCol))
-      .filter(col(textCol).isNotNull) // see duplicatedSpans' NULL note
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
-    val spans = wide.select(col("doc_id"),
+    val spans = spanInput(docs, idCol, textCol).select(col("doc_id"),
       explode(transform(sequence(lit(1), lastStart, lit(stride)),
         p => xxhash64(col(textCol).substr(p, lit(spanLen))))).as("h"))
     spanDupCounts(spans)

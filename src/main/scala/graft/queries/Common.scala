@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.ops.Timeseries
 import graft.sources.Tables
 
@@ -143,4 +144,55 @@ object Common {
       |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s),
       |b AS (SELECT doc_id, round(sum(sterm), 6) AS bm25 FROM sc GROUP BY 1)"""
       .stripMargin
+
+  /** The twin-injection fixtures ([[docsWithDups]] and the multimodal
+    * image twins) offset duplicate ids by +100000; a corpus whose ids
+    * reach that would silently collide twins with real docs (a pair
+    * dropped by the `<` ordering, ambiguous attribution). Checked ONCE
+    * per (process, dir) — parquet min/max stats make the scalar agg a
+    * footer read.
+    */
+  private[graft] def assertTwinIdHeadroom(s: SparkSession, dir: String): Unit =
+    Artifacts.remember(s"idcap|$dir") {
+      val mx = T(s, dir, "documents").agg(max(col("doc_id"))).head().getLong(0)
+      require(mx < 100000,
+        s"documents doc_id max $mx >= 100000: the twin-id offset would collide")
+      java.lang.Boolean.TRUE
+    }
+
+  /** documents ∪ case-mutated copies of every 10th doc — deterministic
+    * injected near-duplicates so the dedup operators have real work (the
+    * raw corpus is 100% distinct). Mirrored verbatim in the oracle CTE
+    * [[docsWithDupsSql]].
+    */
+  private[graft] def docsWithDups(s: SparkSession, dir: String): DataFrame = {
+    assertTwinIdHeadroom(s, dir)
+    val d = T(s, dir, "documents").select("doc_id", "text")
+    d.unionByName(
+      d.filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + 100000).as("doc_id"), upper(col("text")).as("text")))
+  }
+
+  /** 50-word segment table `(doc_id, seg_idx, seg)` of the documents
+    * corpus — shared by the segment-dedup and duplication-weight queries.
+    */
+  private[graft] def docSegments(s: SparkSession, dir: String): DataFrame = {
+    val words = split(col("text"), " ")
+    T(s, dir, "documents")
+      .select(col("doc_id"),
+        explode(transform(
+          sequence(lit(0L), ceil(size(words) / lit(50.0)).cast("long") - 1),
+          i => struct(i.as("seg_idx"),
+            array_join(slice(words, (i * 50 + 1).cast("int"), lit(50)), " ")
+              .as("seg")))).as("e"))
+      .select(col("doc_id"), col("e.seg_idx").as("seg_idx"), col("e.seg").as("seg"))
+  }
+
+  /** The oracle CTE `all_docs` — the SQL twin of [[docsWithDups]]. */
+  private[graft] val docsWithDupsSql =
+    """all_docs AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000 AS doc_id, upper(text) AS text
+      |  FROM documents WHERE doc_id % 10 = 0)""".stripMargin
 }

@@ -6,6 +6,14 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A shingle index of `corpus` built onto a fresh temp dir — the one
+    * build every set-overlap serve reads.
+    */
+  private def indexOf(corpus: org.apache.spark.sql.DataFrame, shingleN: Int = 3,
+      maxDocFreq: Int = Dedup.DefaultMaxDocFreq): Dedup.ShingleIndex =
+    Dedup.buildAndSaveShingleIndex(corpus, "doc_id", "text",
+      java.nio.file.Files.createTempDirectory("shidx").toString, shingleN, maxDocFreq)
+
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"), // case dup of 1
@@ -50,7 +58,7 @@ class DedupSpec extends SparkSpec {
   test("nearDuplicates (LSH -> exact re-score) agrees with all-pairs jaccard on its candidates") {
     val viaLsh = Dedup.nearDuplicates(docs, "doc_id", "text", 0.3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.3)
+    val exact = Dedup.ngramJaccardPairsFromIndex(indexOf(docs), 0.3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // no false positives, identical scores on recovered pairs
     viaLsh.foreach { case (pair, j) => assert(exact(pair) == j) }
@@ -198,9 +206,9 @@ class DedupSpec extends SparkSpec {
     val capped = Dedup.shingleTable(boiler, "doc_id", "text", maxDocFreq = 3)
     assert(!capped.select("s").distinct().as[String].collect().contains("x y z"))
     // with the hot shingle capped, the only shared shingle is gone -> no pairs
-    assert(Dedup.ngramJaccardPairs(boiler, "doc_id", "text", 0.1, maxDocFreq = 3).isEmpty)
+    assert(Dedup.ngramJaccardPairsFromIndex(indexOf(boiler, maxDocFreq = 3), 0.1).isEmpty)
     // uncapped, every pair shares "x y z"
-    assert(!Dedup.ngramJaccardPairs(boiler, "doc_id", "text", 0.1).isEmpty)
+    assert(!Dedup.ngramJaccardPairsFromIndex(indexOf(boiler), 0.1).isEmpty)
   }
 
   test("duplicateClusters works with string doc ids (lexicographic min label)") {
@@ -220,15 +228,15 @@ class DedupSpec extends SparkSpec {
     // must refuse to explode it into ~cap²/2 pairs
     val n = Dedup.DefaultMaxDocFreq + 1
     val boiler = (1 to n).map(i => (i.toLong, "x y z")).toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(boiler, "doc_id", "text", 0.1).isEmpty)
+    assert(Dedup.ngramJaccardPairsFromIndex(indexOf(boiler), 0.1).isEmpty)
     assert(Dedup.shingleTable(boiler, "doc_id", "text").isEmpty)
     // and the explicit opt-out still explodes
-    assert(!Dedup.ngramJaccardPairs(boiler, "doc_id", "text", 0.1,
-      maxDocFreq = Int.MaxValue).isEmpty)
+    assert(!Dedup.ngramJaccardPairsFromIndex(
+      indexOf(boiler, maxDocFreq = Int.MaxValue), 0.1).isEmpty)
   }
 
   test("ngram jaccard scores the near dup high and excludes disjoint docs") {
-    val out = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.3)
+    val out = Dedup.ngramJaccardPairsFromIndex(indexOf(docs), 0.3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(out((1L, 2L)) == 1.0)
     assert(out.contains((1L, 3L)))
@@ -244,14 +252,15 @@ class DedupSpec extends SparkSpec {
     val corpus = Seq((1L, short), (2L, long), (3L, "totally different words here"))
       .toDF("doc_id", "text")
     // doc 1's shingles all appear in doc 2 -> containment 1.0 for A
-    val cont = Dedup.containmentPairs(corpus, "doc_id", "text", 0.9)
+    val idx = indexOf(corpus)
+    val cont = Dedup.containmentPairsFromIndex(idx, 0.9)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getDouble(2), r.getDouble(3)))).toMap
     assert(cont.contains((1L, 2L)))
     assert(cont((1L, 2L))._1 == 1.0) // A fully inside B
     assert(cont((1L, 2L))._2 < 0.5)  // B mostly NOT inside A
     // ... while Jaccard at the same confidence bar misses the pair
-    val jac = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 0.9)
+    val jac = Dedup.ngramJaccardPairsFromIndex(idx, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!jac.contains((1L, 2L)))
     // disjoint docs never pair either way
@@ -334,12 +343,12 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val all = batchA.unionByName(batchB)
 
-    val full = Dedup.buildShingleIndex(all, "doc_id", "text", n, cap,
-      materialize = true, pairState = true)
-    val merged = Dedup.mergeShingleIndex(
-      Dedup.buildShingleIndex(batchA, "doc_id", "text", n, cap,
-        materialize = true, pairState = true),
+    val full = indexOf(all, n, cap)
+    val merged = Dedup.mergeShingleIndex(indexOf(batchA, n, cap),
       batchB, "doc_id", "text", n, cap)
+    // the same rebuilt index served by the prefix filter instead of its
+    // pair state: the reference for every served result below
+    val prefixOnly = full.copy(pairs = None)
 
     // shingle statistics: identical (s, df, member-set) rows — df keeps
     // counting past the cap, the list nulls exactly when df > cap
@@ -388,31 +397,32 @@ class DedupSpec extends SparkSpec {
     assert(merged.pairs.isDefined && full.pairs.isDefined)
     assert(pset(merged.pairs.get) == pset(full.pairs.get),
       "merged pair state must equal the rebuilt iCounts")
-    assert(pset(full.pairs.get) == pset(Dedup.mentionPairCounts(full.groups)))
+    assert(pset(full.pairs.get) == pset(Dedup.mentionPairCountsByDocA(full.groups)))
 
-    // serve-from-state ≡ the mention plan, row for row (the contract
-    // callers consume — both post the same conservative bounds)
+    // serving the merged pair state ≡ serving the rebuilt one, row for
+    // row (the contract callers consume — both post the same
+    // conservative bounds)
     def rowset(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
     for (frac <- Seq(0.3, 0.75)) {
       val t = math.floor(frac * 1e6).toLong
       assert(rowset(Dedup.pairStateIntersections(merged, t, 0.0)) ==
-        rowset(Dedup.mentionIntersections(full, t, 0.0)),
+        rowset(Dedup.pairStateIntersections(full, t, 0.0)),
         s"pair-state serve drift at frac=$frac")
     }
 
-    // served results: indistinguishable from the direct operators on the
-    // full corpus (the drift this state machinery exists to prevent)
+    // served results: indistinguishable from the prefix serve of the
+    // full rebuild (the drift this state machinery exists to prevent)
     def cpairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getDouble(3))).toSet
     def jpairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(cpairs(Dedup.containmentPairsFromIndex(merged, 0.5)) ==
-      cpairs(Dedup.containmentPairs(all, "doc_id", "text", 0.5, n, cap)))
+      cpairs(Dedup.containmentPairsFromIndex(prefixOnly, 0.5)))
     assert(jpairs(Dedup.ngramJaccardPairsFromIndex(merged, 0.3)) ==
-      jpairs(Dedup.ngramJaccardPairs(all, "doc_id", "text", 0.3, n, cap)))
+      jpairs(Dedup.ngramJaccardPairsFromIndex(prefixOnly, 0.3)))
 
     // persistence round-trip: save, load, serve — identical pairs
     val dir = java.nio.file.Files.createTempDirectory("shidx").toString
@@ -425,21 +435,12 @@ class DedupSpec extends SparkSpec {
     assert(loaded.pairs.isDefined &&
       pset(loaded.pairs.get) == pset(full.pairs.get))
     assert(cpairs(Dedup.containmentPairsFromIndex(loaded, 0.5)) ==
-      cpairs(Dedup.containmentPairs(all, "doc_id", "text", 0.5, n, cap)))
+      cpairs(Dedup.containmentPairsFromIndex(prefixOnly, 0.5)))
 
-    // the parquet-through corpus-scale build (groups born on disk, docs
-    // derived from the re-read) is the SAME index as the in-memory build
-    val dir2 = java.nio.file.Files.createTempDirectory("shidx2").toString
-    val disk = Dedup.buildAndSaveShingleIndex(all, "doc_id", "text", dir2, n, cap)
-    assert(groupSet(disk.groups) == groupSet(full.groups))
-    assert(docMap(disk.docs) == docMap(full.docs))
-    assert(disk.stats.contains(full.stats.get))
-    assert(disk.pairs.isDefined && pset(disk.pairs.get) == pset(full.pairs.get))
-
-    // BOTH serving strategies emit the identical (doc_a, doc_b, i, na,
-    // nb) rows under the same conservative bounds: the mention-count
-    // plan (ids-only co-membership agg — the third-decade shape) and
-    // the prefix-filter + sorted-merge re-score plan (the large-cap
+    // BOTH serves emit the identical qualifying (doc_a, doc_b, i, na, nb)
+    // rows under the same conservative bounds: the pair-state scan
+    // (ids-only co-membership counts — the third-decade shape) and the
+    // prefix-filter + sorted-merge re-score plan (the large-cap
     // fallback). The qualifying-pair contract is what callers consume;
     // compare it exactly under both thresholds used by the public API.
     def iset(df: org.apache.spark.sql.DataFrame, frac: Double) = {
@@ -452,7 +453,7 @@ class DedupSpec extends SparkSpec {
     }
     for (frac <- Seq(0.3, 0.5, 0.75, 1.0)) {
       val t = math.floor(frac * 1e6).toLong
-      assert(iset(Dedup.mentionIntersections(full, t, 0.0), frac) ==
+      assert(iset(Dedup.pairStateIntersections(full, t, 0.0), frac) ==
         iset(Dedup.prefixIntersections(full, t, 0.0), frac),
         s"strategy drift at frac=$frac")
     }
@@ -465,9 +466,7 @@ class DedupSpec extends SparkSpec {
     // doc 10 arrives again: every merged member array of its shingles
     // holds id 10 twice, once from the base and once from the delta
     val delta = Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val merged = Dedup.mergeShingleIndex(
-      Dedup.buildShingleIndex(base, "doc_id", "text", n, cap,
-        materialize = true, pairState = true),
+    val merged = Dedup.mergeShingleIndex(indexOf(base, n, cap),
       delta, "doc_id", "text", n, cap)
     val pairs = merged.pairs.get
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -501,21 +500,19 @@ class DedupSpec extends SparkSpec {
       (0 until nDocs).map(i => (i.toLong, s"alpha beta uniq$i"))
         .toDF("doc_id", "text")
     val cap = 200
-    val hot = Dedup.buildShingleIndex(corpus(100), "doc_id", "text", 2, cap,
-      materialize = true, pairState = true)
-    val cool = Dedup.buildShingleIndex(corpus(60), "doc_id", "text", 2, cap,
-      materialize = true, pairState = true)
+    val hot = indexOf(corpus(100), 2, cap)
+    val cool = indexOf(corpus(60), 2, cap)
     assert(hot.stats.contains(Dedup.ShingleStats(4950L, 100L)))
     assert(cool.stats.contains(Dedup.ShingleStats(1770L, 60L)))
     assert(!Dedup.mentionPlanPreferred(hot.stats.get),
       "hot corpus must pick the prefix plan")
     assert(Dedup.mentionPlanPreferred(cool.stats.get),
       "cool corpus must pick the mention plan")
-    // the pair-economics guard must DECLINE pair state past the
-    // crossover even when the caller requests it
+    // the build's pair-economics guard must DECLINE pair state past the
+    // crossover
     assert(hot.pairs.isEmpty, "pair state built past the mention crossover")
     assert(cool.pairs.isDefined)
-    // row-identity of the PICKED plan against both explicit plans on
+    // row-identity of the PICKED serve against both explicit serves on
     // both sides of the boundary — the guard may only change cost,
     // never the qualifying pairs (same comparison discipline as above:
     // the contract is the qualifying set)
@@ -530,7 +527,8 @@ class DedupSpec extends SparkSpec {
     for (idx <- Seq(hot, cool); frac <- Seq(0.3, 0.6)) {
       val t = math.floor(frac * 1e6).toLong
       val picked = iset(Dedup.shingleIntersectionsFromIndex(idx, frac), frac)
-      assert(picked == iset(Dedup.mentionIntersections(idx, t, 0.0), frac))
+      idx.pairs.foreach(_ =>
+        assert(picked == iset(Dedup.pairStateIntersections(idx, t, 0.0), frac)))
       assert(picked == iset(Dedup.prefixIntersections(idx, t, 0.0), frac))
     }
     // every pair shares exactly the one hot bigram: i = 1, n = 2 — the
@@ -552,15 +550,15 @@ class DedupSpec extends SparkSpec {
       ((1 to nHot).map(i => (i.toLong, s"hot u${i}a u${i}b")) ++
         Seq((9001L, "hot"), (9002L, "hot shared xa"), (9003L, "hot shared xb")))
         .toDF("doc_id", "text")
-    def build(nHot: Int) = Dedup.buildShingleIndex(corpus(nHot),
-      "doc_id", "text", shingleN = 1, maxDocFreq = 100,
-      materialize = true, pairState = false) // no pairs: the guard must run
+    def build(nHot: Int) = indexOf(corpus(nHot), shingleN = 1, maxDocFreq = 100)
     val over = build(70)
     val under = build(60)
-    // the pick itself, on the stats the serve consults
+    // the pick itself, on the stats the build stored, and what the build
+    // did with it: pair state only on the mention side
     assert(!Dedup.mentionPlanPreferred(over.stats.get))
     assert(Dedup.mentionPlanPreferred(under.stats.get))
-    // row identity against the direct all-in-one operators on BOTH
+    assert(over.pairs.isEmpty && under.pairs.isDefined)
+    // row identity against the prefix serve of the same index on BOTH
     // sides of the boundary, at both public thresholds (containment
     // catches the {hot} ⊂ {hot, u, u} subset docs; Jaccard the
     // {hot, shared, x} near-pair)
@@ -569,11 +567,12 @@ class DedupSpec extends SparkSpec {
         r.getDouble(2), r.getDouble(3))).toSet
     def jpairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    for ((idx, n) <- Seq((over, 70), (under, 60))) {
+    for (idx <- Seq(over, under)) {
+      val prefixOnly = idx.copy(pairs = None)
       assert(cpairs(Dedup.containmentPairsFromIndex(idx, 0.3)) ==
-        cpairs(Dedup.containmentPairs(corpus(n), "doc_id", "text", 0.3, 1, 100)))
+        cpairs(Dedup.containmentPairsFromIndex(prefixOnly, 0.3)))
       assert(jpairs(Dedup.ngramJaccardPairsFromIndex(idx, 0.3)) ==
-        jpairs(Dedup.ngramJaccardPairs(corpus(n), "doc_id", "text", 0.3, 1, 100)))
+        jpairs(Dedup.ngramJaccardPairsFromIndex(prefixOnly, 0.3)))
     }
     // the subset doc 9001 ({hot}, n = 1) is fully contained in every
     // other doc: cont_a = 1.0 must survive the prefix plan's bounds
@@ -595,7 +594,8 @@ class DedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val byA = Dedup.mentionPairCountsByDocA(groups)
       .sortWithinPartitions("doc_a", "doc_b")
-    assert(pset(byA) == pset(Dedup.mentionPairCounts(groups)))
+    // (1,2) share group 1; (1,5) groups 1 and 3; (2,5) groups 1 and 2
+    assert(pset(byA) == Set((1L, 2L, 1L), (1L, 5L, 2L), (2L, 5L, 2L)))
     // the round-15 build-cost contract: hashpartitioning(doc_a) satisfies
     // the (doc_a, doc_b) aggregation's clustering requirement, so the
     // explicit repartition is the ONLY exchange — the r14 write shape
@@ -606,5 +606,28 @@ class DedupSpec extends SparkSpec {
     }.size
     assert(exchanges == 1, s"pair write carries $exchanges exchanges:\n" +
       byA.queryExecution.sparkPlan.toString.take(2000))
+  }
+
+  test("the shipped shingle-index queries serve from their index's pair state") {
+    // every shipped index runs cap 20, and a capped df contributes
+    // C(df,2) = df·(df−1)/2 ≤ 9.5·df mentions, so the build's crossover
+    // writes pair state for any mix of df in 2..20
+    for (df <- 2 to 20) {
+      val st = Dedup.ShingleStats(df.toLong * (df - 1) / 2, df.toLong)
+      assert(Dedup.mentionPlanPreferred(st), s"df $df declines pair state")
+    }
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plans = new AdaptiveSparkPlanHelper {}
+    for (q <- Seq("dedup_ngram_jaccard", "dedup_containment", "dedup_containment_incr")) {
+      val df = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      assert(df.collect().nonEmpty, s"$q returned no rows")
+      val pairScans = plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case f: FileSourceScanExec if f.relation.location.rootPaths.exists(p =>
+          p.getName == "pairs" && p.getParent.getName.startsWith("shidx")) => f
+      }
+      assert(pairScans.nonEmpty, s"$q executed no scan of its index's pairs part:\n" +
+        df.queryExecution.executedPlan.toString.take(3000))
+    }
   }
 }

@@ -14,6 +14,11 @@ class EdgeCasesSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** A shingle index of `docs` built onto a fresh temp dir. */
+  private def shingleIndex(docs: org.apache.spark.sql.DataFrame): Dedup.ShingleIndex =
+    Dedup.buildAndSaveShingleIndex(docs, "doc_id", "text",
+      java.nio.file.Files.createTempDirectory("shidx").toString)
+
   test("align on an empty frame yields an empty wide matrix with the right schema") {
     val empty = Seq.empty[(Timestamp, String, Double)].toDF("ts", "tag", "value")
     val wide = Timeseries.align(empty, "ts", "tag", "value", Seq("a", "b"), "10 minutes")
@@ -48,7 +53,7 @@ class EdgeCasesSpec extends SparkSpec {
     val docs = Seq((1L, ""), (2L, "one two three four"), (3L, "   ")).toDF("doc_id", "text")
     val sh = Dedup.shingleTable(docs, "doc_id", "text")
     assert(sh.select("doc_id").distinct().as[Long].collect().toSeq == Seq(2L))
-    assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.1).count() == 0)
+    assert(Dedup.ngramJaccardPairsFromIndex(shingleIndex(docs), 0.1).count() == 0)
   }
 
   test("cosine of a zero vector is null (not an ANSI crash); filters exclude it") {
@@ -141,9 +146,9 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("ngramJaccardPairs on single-doc and empty corpora returns no pairs") {
     val one = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(one, "doc_id", "text", 0.1).count() == 0)
+    assert(Dedup.ngramJaccardPairsFromIndex(shingleIndex(one), 0.1).count() == 0)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(empty, "doc_id", "text", 0.1).count() == 0)
+    assert(Dedup.ngramJaccardPairsFromIndex(shingleIndex(empty), 0.1).count() == 0)
   }
 
   test("randomSeries with n=0 or no tags is empty but schema-stable") {

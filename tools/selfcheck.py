@@ -4,9 +4,11 @@
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
 Registers each parquet table as a DuckDB view, runs every oracle_sql.json
 entry, and compares with the Spark parquet dump: row count, column names
-(sorted), and exact values (NaN==NaN, timestamps at µs).
+(sorted), and exact values (NaN==NaN, timestamps at µs). Each key's
+OK/FAIL line carries its oracle's DuckDB seconds, and the five slowest
+oracles are listed before the summary.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb, pandas as pd, numpy as np
 
 sf, out = sys.argv[1], sys.argv[2]
@@ -17,14 +19,18 @@ for p in glob.glob(f"{sf}/*.parquet"):
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails = []
+secs = {}  # name -> seconds DuckDB spent running the oracle
 for name, sql in sorted(oracle.items()):
     spark_dir = f"{out}/{name}"
     if not os.path.isdir(spark_dir):
         fails.append((name, "no spark output")); continue
+    t0 = time.perf_counter()
     try:
         odf = con.execute(sql).fetchdf()
     except Exception as e:
         fails.append((name, f"oracle error: {e}")); continue
+    finally:
+        secs[name] = time.perf_counter() - t0
     sdf = pd.concat([pd.read_parquet(f) for f in sorted(glob.glob(f"{spark_dir}/*.parquet"))])
     if len(odf) != len(sdf):
         fails.append((name, f"rows oracle={len(odf)} spark={len(sdf)}")); continue
@@ -74,10 +80,15 @@ for name, sql in sorted(oracle.items()):
             except Exception: pass
             fails.append((name, f"col {c} values differ ({mism})")); ok = False; break
     if ok:
-        print(f"  OK  {name} ({len(odf)} rows)")
+        print(f"  OK  {name} ({len(odf)} rows, {secs[name]:.2f} s)")
+print()
+print("slowest oracles:")
+for n in sorted(secs, key=secs.get, reverse=True)[:5]:
+    print(f"  {secs[n]:8.2f} s  {n}")
 print()
 if fails:
     print(f"FAILED {len(fails)}/{len(oracle)}:")
-    for n, r in fails: print(f"  FAIL {n}: {r}")
+    for n, r in fails:
+        print(f"  FAIL {n}: {r}" + (f" ({secs[n]:.2f} s)" if n in secs else ""))
     sys.exit(1)
 print(f"ALL {len(oracle)} MATCH")
