@@ -111,15 +111,14 @@ object Dedup {
     * insensitive (MinHash's min() — set semantics for free); Jaccard
     * counts need real set semantics and must keep it.
     *
-    * `maxDocFreq` drops shingles present in more than that many documents
-    * (corpus boilerplate). The shared-shingle self-join is O(Σ df²) over
-    * shingle document frequency, so one hot shingle ("the quick brown" of
-    * the corpus) explodes quadratically at scale — standard practice is to
-    * cap df before any pair generation. The hot list is by construction
-    * tiny (only shingles ABOVE the cap), so the anti-join broadcasts.
+    * Uncapped: every consumer applies its own df cap downstream —
+    * [[hotList]] anti-joined in [[bandTableWithHotList]], the index
+    * build's null member list, `jaccardRescore`'s count window. The
+    * shared-shingle self-join is O(Σ df²) over shingle document
+    * frequency, so no pair generation may run on this table uncapped.
     */
   def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
-      dedupe: Boolean = true, maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
+      dedupe: Boolean = true): DataFrame = {
     // Materialize the word array as a column FIRST: if `shingles` received
     // the raw split(...) expression, every element_at inside the transform
     // lambda would re-run the split — ~3·shingle-count tokenizations per
@@ -127,21 +126,7 @@ object Dedup {
     val exploded = docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("__ws"))
       .select(col("doc_id"), explode(shingles(col("__ws"), n)).as("s"))
-    val base = if (dedupe) exploded.distinct() else exploded
-    if (maxDocFreq == Int.MaxValue) base
-    else {
-      // df by count(*), NOT countDistinct: partial aggregation reduces
-      // map-side to |vocab| rows before the shuffle, where a countDistinct
-      // would shuffle every (s, doc) row just to build the hot list. With
-      // dedupe=true the input is distinct so count ≡ doc-frequency; with
-      // dedupe=false count ≥ df — a CONSERVATIVE cap (a shingle repeated
-      // within docs trips it sooner), the right direction for a guard.
-      // Two-pass on purpose: filtering ABOVE the aggregation means no
-      // oversized group is ever materialized, unlike a collect_set+filter.
-      val hot = base.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDocFreq).select("s")
-      base.join(broadcast(hot), Seq("s"), "left_anti")
-    }
+    if (dedupe) exploded.distinct() else exploded
   }
 
   /** MinHash signatures via the Carter-Wegman affine family: ONE md5 per
@@ -262,20 +247,19 @@ object Dedup {
     val docsInPairs = p.select(col("doc_a").as(idCol))
       .unionByName(p.select(col("doc_b").as(idCol))).distinct()
     val needed = docs.join(docsInPairs, Seq(idCol), "left_semi")
-    // df-cap via a count window, not shingleTable's two-pass hot list:
+    // df-cap via a count window, not bandTable's two-pass hot list:
     // the two-pass form evaluates the tokenize+explode subtree once for
     // the hot aggregate and again for the anti-join probe (no exchange
     // between them, so nothing is reusable — measured 2× the rescore
     // cost). Here the input is candidate-bounded, so one extra shuffle
     // of its shingles is cheap and tokenization runs exactly once.
     // count(*) ≥ doc-frequency (dedupe=false) — the same conservative
-    // cap shingleTable applies.
+    // measure shingleStats counts.
     // shingles move as xxhash64 keys from here down (the shingle-index
     // discipline — see buildAndSaveShingleIndex's scaladoc for the
     // collision bound): the cap window, the set agg, and the per-pair
     // merge-count all run on 8-byte longs
-    val st = shingleTable(needed, idCol, textCol, shingleN, dedupe = false,
-        maxDocFreq = Int.MaxValue)
+    val st = shingleTable(needed, idCol, textCol, shingleN, dedupe = false)
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
     val capped = if (maxDocFreq == Int.MaxValue) st
       else st.withColumn("__df", count(lit(1)).over(
@@ -308,8 +292,7 @@ object Dedup {
 
   /** Persistable LSH band table `(doc_id, band, bh)` for a corpus batch —
     * write it once, reuse it for every later incremental batch. The df
-    * cap is the batch's own hot list; the rows equal `shingleTable`'s
-    * capped form, whose df counts the same non-deduped explode.
+    * cap is the batch's own hot list.
     */
   def bandTable(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 20, bands: Int = 5, shingleN: Int = 3,
@@ -345,9 +328,13 @@ object Dedup {
       state: DedupState)
 
   /** Corpus-wide shingle occurrence counts `(s, df)` — count(*) over the
-    * non-deduped shingle explosion, the SAME conservative df measure
-    * `shingleTable`'s cap uses, and additive across disjoint batches
-    * (which is what makes the state mergeable with one sum).
+    * non-deduped shingle explosion, additive across disjoint batches
+    * (which is what makes the state mergeable with one sum). count(*),
+    * NOT countDistinct: partial aggregation reduces map-side to |vocab|
+    * rows before the shuffle, where a countDistinct would shuffle every
+    * (s, doc) row. count ≥ doc-frequency — a CONSERVATIVE cap (a shingle
+    * repeated within docs trips it sooner), the right direction for a
+    * guard.
     */
   def shingleStats(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
@@ -385,8 +372,7 @@ object Dedup {
   private[graft] def bandTableWithHotList(docs: DataFrame, idCol: String, textCol: String,
       hot: DataFrame, k: Int = 20, bands: Int = 5, shingleN: Int = 3): DataFrame =
     lshBands(minhashSignatures(
-      shingleTable(docs, idCol, textCol, shingleN, dedupe = false,
-          maxDocFreq = Int.MaxValue)
+      shingleTable(docs, idCol, textCol, shingleN, dedupe = false)
         .join(broadcast(hot), Seq("s"), "left_anti"), k), k, bands)
 
   /** Exact Jaccard re-score with the corpus hot list as the cap: the
@@ -404,8 +390,7 @@ object Dedup {
     // hot-list anti-join stays on the STRING key (the persisted hot list
     // is string-keyed state); hashing happens after, so the set agg and
     // merge-count run on longs like jaccardRescore's
-    val sets = shingleTable(needed, idCol, textCol, shingleN, dedupe = false,
-        maxDocFreq = Int.MaxValue)
+    val sets = shingleTable(needed, idCol, textCol, shingleN, dedupe = false)
       .join(broadcast(hot), Seq("s"), "left_anti")
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
       .groupBy("doc_id").agg(sort_array(collect_set(col("s"))).as("ss"))
@@ -422,7 +407,8 @@ object Dedup {
     val hot = hotList(shingleStats(docs, idCol, textCol, shingleN), maxDocFreq)
       .localCheckpoint() // tiny; referenced by banding AND re-score
     val cand = pairsFromBands(
-      bandTableWithHotList(docs, idCol, textCol, hot, k, bands, shingleN))
+      bandTableWithHotList(docs, idCol, textCol, hot, k, bands, shingleN)
+        .localCheckpoint()) // the self-join reads it twice
     jaccardRescoreWithHotList(docs, idCol, textCol, cand, threshold, shingleN, hot)
   }
 
@@ -656,8 +642,7 @@ object Dedup {
       bench: DataFrame, benchIdCol: String, benchTextCol: String,
       shingleN: Int = 8, minShared: Int = 1,
       maxDocFreq: Int = DefaultMaxDocFreq): DataFrame = {
-    val b = shingleTable(bench, benchIdCol, benchTextCol, shingleN,
-        dedupe = true, maxDocFreq = Int.MaxValue)
+    val b = shingleTable(bench, benchIdCol, benchTextCol, shingleN)
       .select(col("doc_id").as("bench_id"), col("s"))
       // feeds the key set AND the final join — materialize once (lazy:
       // cached by the first consuming job, no dedicated job)
@@ -725,47 +710,32 @@ object Dedup {
     * candidates, never a missed pair, and the exact re-score keeps
     * output identical to the full rebuild's.
     *
-    * Round-14 additions (both optional — a pre-v3 artifact loads with
-    * None and serves by the prefix filter):
-    *   - `stats`: the crossover statistics ([[ShingleStats]]), computed
-    *     once at build (or save) and persisted as `meta/`, then carried
-    *     forward by [[mergeShingleIndex]] — no serve ever aggregates the
-    *     groups table;
-    *   - `pairs`: the PAIR STATE — exact intersection counts `(doc_a,
-    *     doc_b, i)` over the capped df ≥ 2 universe, persisted as
-    *     `pairs/` and maintained incrementally by [[mergeShingleIndex]]
-    *     (the dedupstate pattern applied to the set-overlap family).
-    *     With it, serving any (jaccard|containment, τ) is scan +
-    *     attach n + filter — the sf100 probe's 383 s recompute becomes
-    *     a state scan. Written only while the mention economics hold
-    *     ([[mentionPlanPreferred]], decided once at build): past the
-    *     crossover the state is Σ C(df,2)-scale and the prefix filter is
-    *     the right serve.
+    * `pairs` (optional — absent on an index past the crossover and on
+    * a pre-v3 artifact, both served by the prefix filter) is the PAIR
+    * STATE: exact intersection counts `(doc_a, doc_b, i)` over the
+    * capped df ≥ 2 universe, persisted as `pairs/` and maintained
+    * incrementally by [[mergeShingleIndex]] (the dedupstate pattern
+    * applied to the set-overlap family). With it, serving any
+    * (jaccard|containment, τ) is scan + attach n + filter — the sf100
+    * probe's 383 s recompute becomes a state scan. Written only while
+    * the mention economics hold ([[mentionPlanPreferred]], decided once
+    * at build): past the crossover the state is Σ C(df,2)-scale and the
+    * prefix filter is the right serve.
     */
   final case class ShingleIndex(groups: DataFrame, docs: DataFrame,
-      statsF: () => Option[ShingleStats], pairs: Option[DataFrame]) {
-    /** Crossover statistics, LAZY (round 14, the r13 ADVICE item
-      * generalized): forcing them costs a driver action — a meta-parquet
-      * `head()` on a loaded index, the delta-vocabulary aggregate on a
-      * merged one — that no serve needs; only [[saveShingleIndex]] and
-      * the stats of a merge on top of this index read them. Memoized, so
-      * each index pays at most one action.
-      */
-    lazy val stats: Option[ShingleStats] = statsF()
-  }
+      pairs: Option[DataFrame])
 
   /** Crossover statistics over the capped df ≥ 2 groups — `mentions`
     * = Σ C(df,2) (the pair state's row count before aggregation) and
-    * `memberships` = Σ df (the corpus co-occurrence mass). Computed ONCE
-    * at build time and persisted with the index (`meta/`), never
-    * re-aggregated per serve (round-13 ADVICE: the per-serve stats agg
-    * + `.head()` cost ~20 s at sf100 and blocked the driver on every
-    * call for a lazily merged index).
+    * `memberships` = Σ df (the corpus co-occurrence mass). Computed at
+    * build, where they decide the pair state, and at save; written as
+    * `meta/`, the index's commit marker. No serve reads them (round-13
+    * ADVICE: a per-serve stats agg + `.head()` cost ~20 s at sf100).
     */
   final case class ShingleStats(mentions: Long, memberships: Long)
 
   /** One narrow model-sized aggregate over the groups stats — paid once
-    * at build, and at save only for an index that carries no stats.
+    * at build and once per save.
     */
   private[graft] def computeShingleStats(groups: DataFrame): ShingleStats = {
     val row = groups.filter(col("ds").isNotNull && col("df") >= 2)
@@ -819,8 +789,8 @@ object Dedup {
     * writer always emits, so a half-written index never gates (round
     * 15: was docs-last, changed so the build can overlap the pairs and
     * docs jobs — see [[buildAndSaveShingleIndex]]). Stats are computed
-    * here when the index carries none, so a saved artifact ALWAYS has
-    * `meta/`; the pair state is written only when present (see
+    * here from the groups, so a saved artifact ALWAYS has `meta/`; the
+    * pair state is written only when present (see
     * [[mentionPlanPreferred]]).
     */
   def saveShingleIndex(idx: ShingleIndex, path: String): Unit = {
@@ -830,7 +800,7 @@ object Dedup {
     idx.pairs.foreach(_.repartition(col("doc_a"))
       .sortWithinPartitions("doc_a", "doc_b") // see buildAndSaveShingleIndex
       .write.mode("overwrite").parquet(s"$path/pairs"))
-    val st = idx.stats.getOrElse(computeShingleStats(idx.groups))
+    val st = computeShingleStats(idx.groups)
     idx.docs.write.mode("overwrite").parquet(s"$path/docs")
     Seq((st.mentions, st.memberships)).toDF("mentions", "memberships")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -871,8 +841,7 @@ object Dedup {
     // full-table shuffle cost ~2× what the extra candidate pruning saved
     // at every probed scale; the prefix + smaller-side + size-ratio
     // filters keep the candidate stream linear without it.)
-    shingleTable(docs, idCol, textCol, shingleN, dedupe = false,
-        maxDocFreq = Int.MaxValue)
+    shingleTable(docs, idCol, textCol, shingleN, dedupe = false)
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
       .groupBy("s")
       .agg(sort_array(collect_set(col("doc_id"))).as("ds0"))
@@ -880,8 +849,8 @@ object Dedup {
         when(size(col("ds0")) <= maxDocFreq, col("ds0")).as("ds"))
       .write.mode("overwrite").parquet(s"$path/groups")
     val grouped = spark.read.parquet(s"$path/groups")
-    // stats from the WRITTEN groups (a pruned two-column scan), stored
-    // as meta so no serve ever re-aggregates; the pair state — the
+    // stats from the WRITTEN groups (a pruned two-column scan), deciding
+    // the pair state here and never at serve; the pair state — the
     // round-13 verdict's named lead — is born from the same parquet
     // scan when the mention economics allow, turning every later serve
     // into scan + attach-n + filter instead of the ΣC(df,2) explode +
@@ -932,22 +901,15 @@ object Dedup {
 
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {
-    // meta/pairs are optional on disk (pre-v3 artifacts; indexes past
-    // the pair-economics guard) — absence serves by the prefix filter,
-    // never an error
-    // LAZY (round 14): the meta head() is a driver action per load; no
-    // serve consults the stats, so loading must not pay for them
-    val st: () => Option[ShingleStats] = () =>
-      if (graft.Artifacts.committed(spark, path, "meta")) {
-        val r = spark.read.parquet(s"$path/meta").head()
-        Some(ShingleStats(r.getAs[Long]("mentions"), r.getAs[Long]("memberships")))
-      } else None
+    // pairs are optional on disk (pre-v3 artifacts; indexes past the
+    // pair-economics guard) — absence serves by the prefix filter, never
+    // an error; meta/ is only the commit marker, never read here
     val ps =
       if (graft.Artifacts.committed(spark, path, "pairs"))
         Some(spark.read.parquet(s"$path/pairs"))
       else None
     ShingleIndex(spark.read.parquet(s"$path/groups"),
-      spark.read.parquet(s"$path/docs"), st, ps)
+      spark.read.parquet(s"$path/docs"), ps)
   }
 
   /** O(delta + affected) index maintenance — the daily-crawl step. New
@@ -968,8 +930,7 @@ object Dedup {
   def mergeShingleIndex(idx: ShingleIndex, delta: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3,
       maxDocFreq: Int = DefaultMaxDocFreq): ShingleIndex = {
-    val dNew = shingleTable(delta, idCol, textCol, shingleN, dedupe = false,
-        maxDocFreq = Int.MaxValue)
+    val dNew = shingleTable(delta, idCol, textCol, shingleN, dedupe = false)
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
       .distinct() // set semantics: rebuild keys and df both need it
       // lazy (round 14): materialize-once on first use, no dedicated job
@@ -1059,34 +1020,11 @@ object Dedup {
       .join(crossedDocs, Seq("doc_id"), "left_anti")
       .join(delta.select(col(idCol).as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
-    // ----- pair-state + stats maintenance (round 14): both derive from
-    // the SAME checkpointed `updated` frame — O(delta vocabulary), no
-    // corpus re-scan, no extra base pass beyond the pair-state scan the
-    // serving plan pays anyway.
+    // ----- pair-state maintenance (round 14): derives from the
+    // checkpointed `updated` frame — O(delta vocabulary), no corpus
+    // re-scan, no extra base pass beyond the pair-state scan the serving
+    // plan pays anyway.
     //
-    // Stats: only updated rows change the capped df ≥ 2 sums. Per row,
-    // new contribution − old contribution; old side counted iff the
-    // base row was under cap (ds_old present; C(1,2) = 0 handles the
-    // df = 1 slice), new side iff the merged row stays under cap.
-    // LAZY thunk (round 14): the delta aggregate + head() is a driver
-    // action a pair-state serve never needs; only save/strategy-pick
-    // forces it (ShingleIndex.stats memoizes). `updated` is already
-    // checkpointed, so a deferred force re-reads the materialized
-    // blocks, not the merge lineage.
-    val mergedStats: () => Option[ShingleStats] = () => idx.stats.map { base =>
-      val c2new = expr("(CAST(df AS BIGINT) * (df - 1)) div 2")
-      val c2old = expr("(CAST(df_old AS BIGINT) * (df_old - 1)) div 2")
-      val r = updated.agg(
-        sum(when(col("ds").isNotNull, c2new).otherwise(0L) -
-          when(col("ds_old").isNotNull, c2old).otherwise(0L)).as("dm"),
-        sum(when(col("ds").isNotNull && col("df") >= 2,
-            col("df").cast("long")).otherwise(0L) -
-          when(col("ds_old").isNotNull && col("df_old") >= 2,
-            col("df_old").cast("long")).otherwise(0L)).as("dmem"))
-        .head()
-      ShingleStats(base.mentions + (if (r.isNullAt(0)) 0L else r.getLong(0)),
-        base.memberships + (if (r.isNullAt(1)) 0L else r.getLong(1)))
-    }
     // Pair state: the delta-mention algebra. An updated group that STAYS
     // under cap gains exactly its (old × new) + C(new, 2) member pairs
     // (+1 mention each — the df 1→2 grow case falls out: C(1,2) = 0 old
@@ -1153,8 +1091,7 @@ object Dedup {
         .join(dAgg.select("doc_a", "doc_b"), Seq("doc_a", "doc_b"), "left_anti")
         .unionByName(touched)
     }
-    ShingleIndex(newGroups, untouched.unionByName(rebuilt),
-      mergedStats, mergedPairs)
+    ShingleIndex(newGroups, untouched.unionByName(rebuilt), mergedPairs)
   }
 
   /** The serving leg: every ordered pair that can reach

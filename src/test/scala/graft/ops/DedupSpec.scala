@@ -203,8 +203,9 @@ class DedupSpec extends SparkSpec {
     val boiler = Seq(
       (1L, "x y z a1 b1 c1"), (2L, "x y z a2 b2 c2"),
       (3L, "x y z a3 b3 c3"), (4L, "x y z a4 b4 c4")).toDF("doc_id", "text")
-    val capped = Dedup.shingleTable(boiler, "doc_id", "text", maxDocFreq = 3)
-    assert(!capped.select("s").distinct().as[String].collect().contains("x y z"))
+    // the cap-3 hot list holds exactly the boilerplate shingle
+    val hot = Dedup.hotList(Dedup.shingleStats(boiler, "doc_id", "text"), 3)
+    assert(hot.as[String].collect().toSeq == Seq("x y z"))
     // with the hot shingle capped, the only shared shingle is gone -> no pairs
     assert(Dedup.ngramJaccardPairsFromIndex(indexOf(boiler, maxDocFreq = 3), 0.1).isEmpty)
     // uncapped, every pair shares "x y z"
@@ -229,7 +230,7 @@ class DedupSpec extends SparkSpec {
     val n = Dedup.DefaultMaxDocFreq + 1
     val boiler = (1 to n).map(i => (i.toLong, "x y z")).toDF("doc_id", "text")
     assert(Dedup.ngramJaccardPairsFromIndex(indexOf(boiler), 0.1).isEmpty)
-    assert(Dedup.shingleTable(boiler, "doc_id", "text").isEmpty)
+    assert(Dedup.bandTable(boiler, "doc_id", "text").isEmpty)
     // and the explicit opt-out still explodes
     assert(!Dedup.ngramJaccardPairsFromIndex(
       indexOf(boiler, maxDocFreq = Int.MaxValue), 0.1).isEmpty)
@@ -382,16 +383,11 @@ class DedupSpec extends SparkSpec {
     assert(fm(17L)._1.isEmpty && fm(17L)._2 == 2)
     assert(fm(15L)._1.size == 3 && fm(15L)._2 == 3)
 
-    // round 14 — PAIR STATE and stats ride the merge: the incremental
+    // round 14 — PAIR STATE rides the merge: the incremental
     // delta-mention algebra (new×old + C(new,2) adds for under-cap
     // updated groups, C(df_old,2) removals for cap-CROSSED groups — the
     // batch has both, plus the df 1→2 grow case) must land on exactly
-    // the pair rows a from-scratch rebuild computes, and the merged
-    // stats must equal a recount of the merged groups.
-    assert(merged.stats.isDefined && full.stats.isDefined)
-    assert(merged.stats.get == full.stats.get, "merged stats drifted")
-    assert(merged.stats.get == Dedup.computeShingleStats(merged.groups),
-      "stored stats must equal a recount of the merged groups")
+    // the pair rows a from-scratch rebuild computes.
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(merged.pairs.isDefined && full.pairs.isDefined)
@@ -429,9 +425,12 @@ class DedupSpec extends SparkSpec {
     Dedup.saveShingleIndex(merged, dir)
     assert(Dedup.shingleIndexExists(spark, dir))
     val loaded = Dedup.loadShingleIndex(spark, dir)
-    // v3 artifact: meta + pairs persist and reload — the loaded index
-    // serves from state with zero per-serve aggregation
-    assert(loaded.stats.contains(merged.stats.get))
+    // v3 artifact: meta + pairs persist and reload — meta holds the
+    // rebuild's stats, and the loaded index serves from state with zero
+    // per-serve aggregation
+    val meta = spark.read.parquet(s"$dir/meta").head()
+    assert(Dedup.ShingleStats(meta.getAs[Long]("mentions"),
+      meta.getAs[Long]("memberships")) == Dedup.computeShingleStats(full.groups))
     assert(loaded.pairs.isDefined &&
       pset(loaded.pairs.get) == pset(full.pairs.get))
     assert(cpairs(Dedup.containmentPairsFromIndex(loaded, 0.5)) ==
@@ -502,11 +501,13 @@ class DedupSpec extends SparkSpec {
     val cap = 200
     val hot = indexOf(corpus(100), 2, cap)
     val cool = indexOf(corpus(60), 2, cap)
-    assert(hot.stats.contains(Dedup.ShingleStats(4950L, 100L)))
-    assert(cool.stats.contains(Dedup.ShingleStats(1770L, 60L)))
-    assert(!Dedup.mentionPlanPreferred(hot.stats.get),
+    val hotStats = Dedup.computeShingleStats(hot.groups)
+    val coolStats = Dedup.computeShingleStats(cool.groups)
+    assert(hotStats == Dedup.ShingleStats(4950L, 100L))
+    assert(coolStats == Dedup.ShingleStats(1770L, 60L))
+    assert(!Dedup.mentionPlanPreferred(hotStats),
       "hot corpus must pick the prefix plan")
-    assert(Dedup.mentionPlanPreferred(cool.stats.get),
+    assert(Dedup.mentionPlanPreferred(coolStats),
       "cool corpus must pick the mention plan")
     // the build's pair-economics guard must DECLINE pair state past the
     // crossover
@@ -553,10 +554,10 @@ class DedupSpec extends SparkSpec {
     def build(nHot: Int) = indexOf(corpus(nHot), shingleN = 1, maxDocFreq = 100)
     val over = build(70)
     val under = build(60)
-    // the pick itself, on the stats the build stored, and what the build
+    // the pick itself, on the built groups' stats, and what the build
     // did with it: pair state only on the mention side
-    assert(!Dedup.mentionPlanPreferred(over.stats.get))
-    assert(Dedup.mentionPlanPreferred(under.stats.get))
+    assert(!Dedup.mentionPlanPreferred(Dedup.computeShingleStats(over.groups)))
+    assert(Dedup.mentionPlanPreferred(Dedup.computeShingleStats(under.groups)))
     assert(over.pairs.isEmpty && under.pairs.isDefined)
     // row identity against the prefix serve of the same index on BOTH
     // sides of the boundary, at both public thresholds (containment
