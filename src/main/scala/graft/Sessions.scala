@@ -35,7 +35,7 @@ object Sessions {
     // checkpoint file (offsets, commits, one state delta per store per
     // batch) pays a FORKED `chmod` via RawLocalFileSystem.setPermission
     // plus a .crc sibling — measured ~0.6 s of stream_ohlc's 1.0 s
-    // (JobTrace stack sampler). SCOPED to local masters: a cluster
+    // (`Probe trace` stack sampler). SCOPED to local masters: a cluster
     // deployment's checkpoints live on HDFS/S3, which this manager
     // rejects by scheme — it never silently takes over a remote path;
     // a local session that must checkpoint remotely can still reset

@@ -6,10 +6,8 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Artifacts.{registryKey, tableFingerprint}
 import graft.sources.Tables
-import graft.queries.{Deduplication, Query, SimilarityGraph, Windows}
-import graft.queries.Common.{E, T, assertTwinIdHeadroom, bm25Cte, corrPairs, corrTypes,
-  docSegments, docsWithDups, docsWithDupsSql, dotSql, hourlyCentsCte, hourlyCentsLong,
-  hourlyCentsWide, longResampled, normSqSql, seasonalGrid}
+import graft.queries.{Deduplication, Query, SimilarityGraph, Streaming, Windows}
+import graft.queries.Common._
 import graft.queries.Oracle.{Published, Sql, publishOracle}
 import graft.multimodal.Multimodal
 import graft.ops.{AnomalyMath, Calibration, Dedup, Filters, Linkage, Scalers, Similarity, Skew, Survival, TextAnalysis, Timeseries}
@@ -19,7 +17,7 @@ import graft.expressions.{CountMinEstimates, DtwDistance}
   * declared [[graft.queries.Query]] tables: this file's (every query not
   * yet moved to a family file) and each family file's
   * ([[graft.queries.SimilarityGraph]], [[graft.queries.Windows]],
-  * [[graft.queries.Deduplication]]).
+  * [[graft.queries.Deduplication]], [[graft.queries.Streaming]]).
   * Every query has a DuckDB oracle, static or published by the query when
   * it runs.
   *
@@ -41,18 +39,6 @@ object SparkEntry {
     */
   private def Ebetween(s: SparkSession, dir: String, fromDate: String, toDate: String): DataFrame =
     graft.sources.Events.readBetween(s, s"$dir/events.parquet", fromDate, toDate)
-
-  /** Streaming file source over a committed parquet directory, with the
-    * schema of its resolved table (no inference job per query).
-    */
-  private def parquetStream(s: SparkSession, root: String): DataFrame =
-    s.readStream.schema(Tables.resolve(s, root).schema).parquet(root)
-
-  /** Exact order-independent sum of a double expression: sum in
-    * DECIMAL(18,6), emit DOUBLE. Mirrors CAST(SUM(CAST(x AS
-    * DECIMAL(18,6))) AS DOUBLE) in the oracle.
-    */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
 
   // ---------------------------------------------------------------------
   // Flagship: the gordo essence — per-event_type streams resampled to
@@ -102,33 +88,6 @@ object SparkEntry {
         graft.sources.LineProtocol.toLines(long, "events"), "events")
       .orderBy("ts", "tag", "value")
   }
-
-  /** Materialize-once compacted events copy (registry-gated,
-    * fingerprint-keyed so a regenerated fixture — or a reader-
-    * normalization change: v2 writes the normalized TimestampType ts —
-    * can never serve a stale layout) — shared by the compaction query and
-    * the parquet-file-source streaming queries, which need a real
-    * DIRECTORY source. Package-private so LakeSinksSpec audits the exact
-    * artifact. File count derives from input SIZE (v3 — one
-    * range-sorted file per ~32 MB, min 2): a literal 8
-    * made every sf0.1 file 250 KB, and the seven streaming consumers
-    * each paid 8 scan tasks' fixed cost (parquet reader init dominates
-    * at that size — JobTrace: ~200 ms CPU per tiny task) per replay; a
-    * real compaction job targets a file-size band, not a file count, so
-    * the count grows with the data and scan parallelism at 100 TB comes
-    * from the data itself.
-    */
-  private[graft] def compactRoot(s: SparkSession, dir: String): String =
-    Artifacts.materialize(s, "compact",
-        s"compact-v3|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
-      val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val srcBytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(src).getLength
-      val nFiles = math.max(2L, srcBytes / (32L << 20)).toInt
-      E(s, dir).repartitionByRange(nFiles, col("ts"))
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite").parquet(out)
-    }
 
   /** Small-files compaction — the lake-maintenance sink every long-lived
     * 100 TB table needs: `repartitionByRange` on the time column packs
@@ -582,22 +541,6 @@ object SparkEntry {
     * table, so any escaping or parse drift in the text payload (the
     * length sum covers every character) hash-fails the round trip.
     */
-  private val jsonlSchema =
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
-  /** Materialize-once JSONL copy of the documents table (registry-gated,
-    * fingerprint-keyed) — shared by the batch round-trip query and the
-    * file-source streaming queries.
-    */
-  private def jsonlRoot(s: SparkSession, dir: String): String =
-    Artifacts.materialize(s, "jsonl",
-        s"jsonl-v2|$dir|${tableFingerprint(s, s"$dir/documents.parquet")}") { out =>
-      T(s, dir, "documents")
-        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-          col("source"), col("n_chars"))).as("value"))
-        .write.mode("overwrite").text(out)
-    }
-
   private def q_scan_jsonl(s: SparkSession, dir: String): DataFrame = {
     s.read.schema(jsonlSchema).json(jsonlRoot(s, dir))
       .groupBy("lang")
@@ -660,23 +603,6 @@ object SparkEntry {
       .agg(round(AnomalyMath.threshold(col("l_extendedprice"), 0.99), 6).as("thr_p99"),
         round(AnomalyMath.threshold(col("l_extendedprice"), 0.95), 6).as("thr_p95"))
       .orderBy("l_returnflag")
-
-  /** Order-statistic slack for a t-digest rank_ok bracket at quantile p
-    * — sized to the k1-scale error bound, not a flat 2%: a δ=100
-    * merging digest's max centroid weight near q is ≈ 4n·q(1−q)/δ, so
-    * the interpolated estimate sits within ~2n·q(1−q)/δ order
-    * statistics of the true quantile. ε = 10 × that bound (measured:
-    * the ACTUAL p99 rank error on the fixture is 0.025–0.1% of n at
-    * every SF, so 10× theory ≈ 8–20× observed — merge-order headroom
-    * without the old 2% near-vacuity the round-10 advice flagged), with
-    * a ±4 floor so tiny groups keep a non-degenerate bracket. Tail
-    * quantiles get the 0.2% floor; p50's centroids are legitimately
-    * fatter (ε = 1%).
-    */
-  private def tdigestRankSlack(n: Column, p: Double): Column = {
-    val eps = math.max(0.002, 20.0 * p * (1 - p) / 100.0)
-    greatest(lit(4L), ceil(n.cast("double") * lit(eps)).cast("long"))
-  }
 
   /** Native t-digest TypedImperativeAggregate next to the exact
     * percentile it approximates — the streaming/100 TB threshold path.
@@ -1309,11 +1235,9 @@ object SparkEntry {
     */
   private def q_agg_growth_rate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val wk = E(s, dir).filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("week", col("ts")).as("week"))
-      .agg(sum(cents).as("total_cents"), count(lit(1)).as("n"))
+      .agg(sum(valueCents).as("total_cents"), count(lit(1)).as("n"))
     val w = Window.partitionBy("event_type").orderBy("week")
     wk.withColumn("prev", lag(col("total_cents"), 1).over(w))
       .select(col("event_type"), col("week"), col("n"), col("total_cents"),
@@ -1426,35 +1350,8 @@ object SparkEntry {
   private def q_agg_heavyhitters(s: SparkSession, dir: String): DataFrame = {
     val words = T(s, dir, "documents").select(col("lang"),
       explode(graft.ops.Dedup.words(col("text"))).as("w"))
-    words.groupBy("lang")
-      .agg(TextAnalysis.heavyHitters(col("w"), 40).as("hh"))
-      .select(col("lang"), posexplode(col("hh")).as(Seq("rnk", "c")))
-      .select(col("lang"), col("rnk"), col("c.item").as("item"),
-        col("c.est").as("est"))
-      .filter(col("rnk") < 10)
-      .orderBy("lang", "rnk")
-  }
-
-  /** LIVE EWMA ([[graft.streaming.Streams.ewmaOnline]]) driven over the
-    * hourly cents series — the streaming deployment of win_ewma's
-    * α-smoothing. The recursion is the textbook αx + (1−α)s (NOT
-    * win_ewma's algebraically-equal but IEEE-different s + α(x−s)), so
-    * the oracle replays THIS association — including writing (1.0 − 0.2)
-    * rather than a 0.8 literal, which is a different double. Output is
-    * the final smoothed level per stream; state is ONE double per tag.
-    */
-  private def q_stream_ewma(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val readings = hourlyCentsLong(E(s, dir).filter(col("value").isNotNull))
-      .select(col("event_type").as("tag"), col("bucket").as("ts"),
-        col("c").cast("double").as("value"))
-      .as[graft.streaming.Reading]
-    graft.streaming.Streams.ewmaOnline(readings, 0.2)
-      .groupBy(col("tag"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        round(max_by(col("ewma"), col("ts")), 6).as("ewma"))
-      .select(col("tag").as("event_type"), col("n"), col("ewma"))
-      .orderBy("event_type")
+    heavyHittersTop10(words.groupBy("lang")
+      .agg(TextAnalysis.heavyHitters(col("w"), 40).as("hh")))
   }
 
   /** Cohort retention — users grouped by their FIRST-seen day, activity
@@ -1556,16 +1453,11 @@ object SparkEntry {
   private def q_agg_transitions(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val wp = org.apache.spark.sql.expressions.Window.partitionBy("prev_type")
-    E(s, dir)
+    transitionMatrix(E(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("p", round(col("n").cast("double") /
-        sum(col("n")).over(wp).cast("double"), 6))
-      .orderBy("prev_type", "next_type")
+      .select(col("prev_type"), col("event_type").as("next_type")))
   }
 
   /** STATIONARY distribution of the behavioral Markov chain — the
@@ -1611,55 +1503,6 @@ object SparkEntry {
     states.map(st => (st, pi(st))).toSeq.toDF("state", "pi").orderBy("state")
   }
 
-  /** LIVE transition feed ([[graft.streaming.Streams.transitionsOnline]])
-    * aggregated into the same matrix — per-user last-event state only,
-    * O(users); ordered replay is row-identical to the batch lag window,
-    * so the query shares [[q_agg_transitions]]' oracle verbatim.
-    */
-  private def q_stream_transitions(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val wp = org.apache.spark.sql.expressions.Window.partitionBy("prev_type")
-    val evs = E(s, dir)
-      .select(col("user_id").as("user"),
-        graft.sources.Events.epochMicros(col("ts")).as("tsMicros"),
-        col("event_id").as("eventId"), col("event_type").as("etype"))
-      .as[graft.streaming.UserEvent]
-    graft.streaming.Streams.transitionsOnline(evs)
-      .groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("p", round(col("n").cast("double") /
-        sum(col("n")).over(wp).cast("double"), 6))
-      .orderBy("prev_type", "next_type")
-  }
-
-  /** LIVE conversion funnel ([[graft.streaming.Streams.funnelOnline]])
-    * aggregated into the same stage counts — per-user write-once
-    * three-slot state, O(users); first-qualifying-in-order ≡
-    * min-chaining, so the single-batch replay shares [[q_agg_funnel]]'s
-    * oracle verbatim.
-    */
-  private def q_stream_funnel(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val evs = E(s, dir)
-      .select(col("user_id").as("user"),
-        graft.sources.Events.epochMicros(col("ts")).as("tsMicros"),
-        col("event_id").as("eventId"), col("event_type").as("etype"))
-      .as[graft.streaming.UserEvent]
-    val snap = graft.streaming.Streams.funnelOnline(evs).toDF()
-    snap.filter(col("c_us").isNotNull)
-      .select(lit(1L).as("stage"), lit("click").as("stage_name"),
-        col("user_id"))
-      .unionByName(snap.filter(col("v_us").isNotNull)
-        .select(lit(2L).as("stage"), lit("view_after_click").as("stage_name"),
-          col("user_id")))
-      .unionByName(snap.filter(col("p_us").isNotNull)
-        .select(lit(3L).as("stage"),
-          lit("purchase_after_view").as("stage_name"), col("user_id")))
-      .groupBy("stage", "stage_name")
-      .agg(count_distinct(col("user_id")).as("users"))
-      .orderBy("stage")
-  }
-
   /** Rolling active users (DAU/WAU) — the engagement dashboard staple.
     * The WAU side REPLICATES each distinct user-day to the 7 window days
     * it contributes to (explode of a 7-element sequence) instead of
@@ -1693,11 +1536,9 @@ object SparkEntry {
     * one groupBy; nothing scales past |event types|.
     */
   private def q_agg_ab_ttest(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val g = E(s, dir).filter(col("value").isNotNull)
       .select(col("event_type"), (col("user_id") % 2 === 0).as("isa"),
-        cents.as("c"))
+        valueCents.as("c"))
       .groupBy("event_type")
       .agg(
         sum(when(col("isa"), 1L).otherwise(0L)).as("na"),
@@ -1744,14 +1585,7 @@ object SparkEntry {
     val p = e.filter(col("event_type") === "purchase").join(v, "user_id")
       .filter(col("us") > col("v_us"))
       .groupBy("user_id").agg(min(col("us")).as("p_us"))
-    c.select(lit(1L).as("stage"), lit("click").as("stage_name"), col("user_id"))
-      .unionByName(v.select(lit(2L).as("stage"),
-        lit("view_after_click").as("stage_name"), col("user_id")))
-      .unionByName(p.select(lit(3L).as("stage"),
-        lit("purchase_after_view").as("stage_name"), col("user_id")))
-      .groupBy("stage", "stage_name")
-      .agg(count_distinct(col("user_id")).as("users"))
-      .orderBy("stage")
+    funnelStages(c, v, p)
   }
 
   /** Time-BOUNDED funnel (the ClickHouse `windowFunnel` shape): stages
@@ -1802,11 +1636,9 @@ object SparkEntry {
     * BIGINT-exact in both engines — no rounding anywhere.
     */
   private def q_agg_cohort_value(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val e = E(s, dir).filter(col("value").isNotNull)
       .select(col("user_id"), date_trunc("day", col("ts")).as("d"),
-        cents.as("c"))
+        valueCents.as("c"))
     val coh = e.groupBy("user_id").agg(min(col("d")).as("cohort"))
     e.join(coh, "user_id")
       .groupBy(col("cohort"), datediff(col("d"), col("cohort")).as("day_offset"))
@@ -1875,10 +1707,8 @@ object SparkEntry {
     */
   private def q_agg_pareto(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val u = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), col("user_id"), cents.as("c"))
+      .select(col("event_type"), col("user_id"), valueCents.as("c"))
       .groupBy("event_type", "user_id").agg(sum(col("c")).as("uc"))
     val w = Window.partitionBy("event_type")
       .orderBy(col("uc").desc, col("user_id"))
@@ -1899,204 +1729,10 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------------
-  // Module-driven queries: the streaming transforms run in batch replay
-  // mode (same code path the incremental plans use), ML and multimodal
-  // drive their whole pipelines. A fitted model or a decoded artifact
-  // publishes its oracle when the query runs.
+  // Module-driven queries: ML and multimodal drive their whole
+  // pipelines. A fitted model or a decoded artifact publishes its oracle
+  // when the query runs.
   // ---------------------------------------------------------------------
-
-  private def q_stream_resample(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streams.resample(E(s, dir), "ts", "event_type", "value",
-        "10 minutes", "20 minutes")
-      .select(col("bucket"), col("event_type"),
-        round(col("avg_value"), 6).as("avg_value"), col("n"))
-      .orderBy("bucket", "event_type")
-
-  private def q_stream_session(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streams.sessionize(E(s, dir), "ts", "user_id",
-        "30 minutes", "20 minutes")
-      .orderBy("user_id", "session_start")
-
-  /** Streaming CUSUM in batch replay — bit-identical to the batch closed
-    * form (exact micro-unit state), so it carries a full oracle. Ties on
-    * (tag, ts, value) are exact duplicate readings whose outputs form the
-    * same multiset under any processing order; BOTH cusum columns join
-    * the final sort because either side alone can stay clamped at 0
-    * across a duplicate pair — only the pair of scores is a total order.
-    */
-  private def q_stream_cusum(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val readings = E(s, dir)
-      .select(col("event_type").as("tag"), col("ts"), col("value"))
-      .as[graft.streaming.Reading]
-    graft.streaming.Streams.cusumOnline(readings, target = 50.0, slack = 5.0,
-        h = 200.0)
-      .toDF()
-      // same lossless grid rounding as win_cusum (DuckDB cast ulp)
-      .withColumn("cusum_up", round(col("cusum_up"), 6))
-      .withColumn("cusum_dn", round(col("cusum_dn"), 6))
-      // BOTH cusum columns join the sort: a duplicate reading whose up
-      // side stays clamped at 0 still differs on the down side, and the
-      // sort must be a total order for the hash compare
-      .orderBy("tag", "ts", "value", "cusum_up", "cusum_dn")
-  }
-
-  /** Streaming rolling autocorrelation in batch replay — bit-identical to
-    * the batch closed form (exact integer ring-buffer state), so it
-    * carries a full oracle like stream_cusum. The nullable autocorr sort
-    * key is pinned NULLS FIRST on both engines.
-    */
-  private def q_stream_autocorr(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val readings = E(s, dir)
-      .select(col("event_type").as("tag"), col("ts"), col("value"))
-      .as[graft.streaming.Reading]
-    graft.streaming.Streams.autocorrOnline(readings, k = 12)
-      .toDF()
-      .orderBy(col("tag"), col("ts"), col("value"), col("autocorr"))
-  }
-
-  /** Heavy hitters over a LIVE file-source stream — the Misra-Gries
-    * native aggregate running as a stateful streaming aggregation: the
-    * state store holds one O(k) sketch buffer per language, each
-    * micro-batch's partial sketches merge into it (the mergeable-
-    * summaries property HeavyHittersSpec pins), and complete-mode output
-    * re-emits the current top-k. This is the real 100 TB continuous-
-    * ingest shape: per-key state is k counters regardless of stream
-    * length, vs an exact word count whose state grows with the
-    * vocabulary. Executor-parallel end to end (file source → explode →
-    * partial sketches), nothing driver-side but the k×|langs| result.
-    * ORACLE-CHECKED by the same k-sizing argument as
-    * [[q_agg_heavyhitters]] (k = 40 > the 31-word fixture vocabulary ⇒
-    * zero evictions ⇒ exact counts deterministically), which makes the
-    * streaming state-store merge path itself hash-verified against the
-    * batch-SQL exact top-10.
-    */
-  private def q_stream_heavyhitters(s: SparkSession, dir: String): DataFrame = {
-    val name = s"hh_stream_${registryKey(dir).take(8)}"
-    val stream = s.readStream.schema(jsonlSchema).json(jsonlRoot(s, dir))
-      .select(col("lang"), explode(graft.ops.Dedup.words(col("text"))).as("w"))
-      .groupBy("lang")
-      .agg(TextAnalysis.heavyHitters(col("w"), 40).as("hh"))
-    graft.streaming.Streams.replayToTable(stream, name, "complete")
-      .select(col("lang"), posexplode(col("hh")).as(Seq("rnk", "c")))
-      .select(col("lang"), col("rnk"), col("c.item").as("item"),
-        col("c.est").as("est"))
-      .filter(col("rnk") < 10)
-      .orderBy("lang", "rnk")
-  }
-
-  /** Anomaly threshold over a LIVE parquet-file stream — the t-digest
-    * native aggregate as a stateful streaming aggregation (the claim in
-    * AnomalyMath.thresholdSketch's doc, proven as a real run): the state
-    * store holds one O(compression) digest per event_type, micro-batch
-    * partial digests merge in, complete mode re-emits the current p99.
-    * The exact sort-based `percentile` is ILLEGAL in this position —
-    * this sketch is how a continuous ingest maintains thresholds at all.
-    * Streams the compacted events registry copy (a real directory
-    * source); executor-parallel end to end.
-    *
-    * ORACLE-CHECKED (round 10): same discipline as q_stream_tdigest —
-    * the streamed estimate is checked against its order-statistic
-    * bracket over the raw values (which the oracle recomputes), with
-    * the SQL-exact percentile and count beside it.
-    */
-  private def q_stream_threshold(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val name = s"thr_stream_${registryKey(dir).take(8)}"
-    val stream = parquetStream(s, root)
-      .filter(col("value").isNotNull)
-      .groupBy("event_type")
-      .agg(AnomalyMath.thresholdSketch(col("value"), 0.99).as("est"),
-        count(lit(1)).as("n"))
-    val est = graft.streaming.Streams.replayToTable(stream, name, "complete")
-    val h = col("n").cast("double") * lit(0.99) - lit(0.99) // p*(n-1)
-    val slack = tdigestRankSlack(col("n"), 0.99)
-    Tables.resolve(s, root).filter(col("value").isNotNull)
-      .select(col("event_type"), col("value"))
-      .join(broadcast(est), Seq("event_type"))
-      .groupBy("event_type")
-      .agg(first(col("n")).as("n"),
-        round(percentile(col("value"), lit(0.99)), 6).as("thr_p99_exact"),
-        sum((col("value") < col("est")).cast("long")).as("n_lt"),
-        sum((col("value") <= col("est")).cast("long")).as("n_le"))
-      .select(col("event_type"), col("n"), col("thr_p99_exact"),
-        (col("n_le") >= floor(h).cast("long") + lit(1L) - slack &&
-          col("n_lt") <= ceil(h).cast("long") + slack).as("rank_ok"))
-      .orderBy("event_type")
-  }
-
-  /** Exactly-once delivery over an at-least-once spool — a LIVE
-    * parquet-file-source stream through [[graft.streaming.Streams.dedup]]
-    * (`dropDuplicatesWithinWatermark`): the spool is the full events
-    * table plus injected exact retransmissions (`event_id % 13 == 3`,
-    * the at-least-once redelivery shape), and the deduped stream must
-    * reconstruct the original table EXACTLY — the oracle is the base
-    * table verbatim, so one surviving duplicate or dropped original
-    * fails rows/hash. Retransmissions are byte-identical copies, so
-    * whichever arrival survives, the emitted row is the same —
-    * deterministic under any file order. The whole spool lands in one
-    * micro-batch (no maxFilesPerTrigger), so every duplicate is inside
-    * the state horizon by construction; per-key state is one id within
-    * the watermark, O(horizon), the 100 TB continuous-ingest shape.
-    */
-  private def q_stream_dedup(s: SparkSession, dir: String): DataFrame = {
-    val root = Artifacts.materialize(s, "dedupspool",
-        s"dedupspool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
-      val base = E(s, dir).select("event_id", "ts", "event_type", "value")
-      base.unionByName(base.filter(col("event_id") % 13 === 3))
-        .repartition(4) // 4 spool files, one micro-batch
-        .write.mode("overwrite").parquet(out)
-    }
-    val name = s"dedup_stream_${registryKey(dir).take(8)}"
-    val stream = parquetStream(s, root)
-    val deduped = graft.streaming.Streams.dedup(
-      stream, "ts", Seq("event_id"), "30 minutes")
-    graft.streaming.Streams.replayToTable(deduped, name, "append")
-      .select(col("event_id"),
-        graft.sources.Events.epochMicros(col("ts")).as("ts_us"),
-        col("event_type"), col("value"))
-      .orderBy("event_id")
-  }
-
-  /** Streaming gap detection in batch replay — bit-identical to the
-    * batch lag formulation (integer bucket arithmetic, single batch =
-    * the full ordered replay), so it carries a full oracle; the
-    * cross-batch state carry is MemoryStream-spec'd. The live form is
-    * the O(tags)-state liveness monitor.
-    */
-  private def q_stream_gap_detect(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val readings = E(s, dir)
-      .select(col("event_type").as("tag"), col("ts"), col("value"))
-      .as[graft.streaming.Reading]
-    graft.streaming.Streams.gapsOnline(readings, 3600L)
-      .toDF()
-      .orderBy("tag", "gap_start_hb")
-  }
-
-  /** Prequential z-scores in batch replay ([[Streams.scoreOnline]]'s
-    * Welford state over the full ordered history, one batch). ORACLE-
-    * CHECKED (round 11): the prequential z at row k IS the windowed
-    * (avg, stddev_samp) over rows 1..k−1 in (ts, value) order, so the
-    * oracle is an exact windowed-SQL twin — no sketch flags needed.
-    * Welford vs the two-pass window agree to ~2e-14 (measured max over
-    * sf0.1), five orders inside the round-6 contract, and no fixture z
-    * sits near the 3.0 threshold, so the anomaly flag is stable too.
-    * The cross-batch state carry stays MemoryStream-spec'd.
-    */
-  private def q_stream_score(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val readings = E(s, dir)
-      .select(col("event_type").as("tag"), col("ts"), col("value"))
-      .as[graft.streaming.Reading]
-    graft.streaming.Streams.scoreOnline(readings, 3.0)
-      .toDF()
-      .select(col("tag"),
-        graft.sources.Events.epochMicros(col("ts")).as("ts_us"),
-        col("value"), round(col("z"), 6).as("z"), col("anomalous"))
-      .orderBy("tag", "ts_us", "value")
-  }
 
   /** PCA-reconstruction anomaly scoring over the aligned hourly matrix.
     *
@@ -3049,11 +2685,9 @@ object SparkEntry {
     * correctly-rounded sqrt.
     */
   private def q_agg_effect_size(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val g = E(s, dir).filter(col("value").isNotNull)
       .select(col("event_type"), (col("user_id") % 2 === 0).as("isa"),
-        cents.as("c"))
+        valueCents.as("c"))
       .groupBy("event_type")
       .agg(
         sum(when(col("isa"), 1L).otherwise(0L)).as("na"),
@@ -3102,106 +2736,6 @@ object SparkEntry {
         (col("sum_df").cast("double") / col("n")).as("mean_df"),
         (col("n").cast("double") / col("sum_df")).as("weight"))
       .orderBy("doc_id")
-  }
-
-  /** Streaming CDC upsert into a PARTITIONED copy-on-write table — the
-    * production Delta-style rewrite: the snapshot is laid out in
-    * event_id-range partitions, each micro-batch merges ONLY the
-    * partitions its keys touch, and the write replaces exactly those
-    * partition directories (dynamic partition overwrite). The CDC feed
-    * is range-ordered (repartitionByRange), so a micro-batch's keys
-    * localize to a few partitions — the round-10 full-snapshot rewrite
-    * paid 5 whole-table copies per execution; this pays
-    * O(touched partitions) per batch, the shape that survives a 100 TB
-    * table. Update keys are unique, so the final state is
-    * batching-order-independent and must equal the one-shot batch merge:
-    * the oracle (shared with sink_upsert) is the batch-merge algebra over
-    * the ORIGINAL events table, so a lost row, double-applied update, or
-    * mis-partitioned write hash-fails.
-    */
-  private def q_stream_upsert(s: SparkSession, dir: String): DataFrame = {
-    val base = E(s, dir)
-    // v2: range-ordered CDC files — each micro-batch (one file) covers a
-    // contiguous id range, the locality a partition-pruned merge exploits
-    val updatesDir = Artifacts.materialize(s, "upsertcdc",
-        s"upsertcdc-v2|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
-      base.filter(col("event_id") % 7 === 0)
-        .withColumn("value", col("value") + lit(1000.0))
-        .unionByName(base.filter(col("event_id") % 97 === 0)
-          .withColumn("event_id", col("event_id") + lit(1000000L))
-          .withColumn("event_type", lit("backfill")))
-        .repartitionByRange(4, col("event_id")) // 4 files -> 4 micro-batches
-        .write.mode("overwrite").parquet(out)
-    }
-    // Table lives for this invocation in a temp dir (tmpfs-preferring,
-    // deleted at JVM exit); __p = event_id div width is the partition
-    // key, width derived from the id domain so the table has ~16 live
-    // partitions at ANY sf (a fixed literal left the whole sf0.1 table
-    // in one partition and pruned nothing) — on a real table the
-    // partition spec is date/tenant and pre-exists.
-    // The ONE layout constant: ~16 live event_id-range partitions at any
-    // sf (width derives from the id domain). Both hash-repartitions below
-    // derive from it — a changed layout can't silently leave a stale
-    // width pin behind (r11 verdict #7).
-    val nTableParts = 16
-    val width = math.max(1L,
-      (base.agg(max(col("event_id"))).head().getLong(0) + 1L) / nTableParts)
-    val state = Artifacts.tempDirDeletedAtExit("graft-stream-upsert")
-    val table = s"$state/t"
-    base.withColumn("__p", expr(s"event_id div $width"))
-      // one file per partition dir: without the pin, partitionBy fans
-      // each of 32 write tasks across every dir (≈512 small files) and
-      // every later batch pays the listing
-      .repartition(nTableParts, col("__p"))
-      .write.partitionBy("__p").mode("overwrite").parquet(table)
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stream = s.readStream.schema(s.read.parquet(updatesDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(updatesDir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-          .withColumn("__p", expr(s"event_id div $width"))
-        // ONE job per batch: the merge semi-joins against the batch's
-        // own partition set, so the staged output holds exactly the
-        // TOUCHED partitions and untouched directories never rewrite —
-        // the copy-on-write economics. (A separate driver-side
-        // touched-partition probe job was A/B'd and removed: its 4 extra
-        // job launches cost more than the full-table scan it pruned at
-        // this table size; at 100 TB the read side prunes from table
-        // metadata — here the table fits the page cache and the WRITE
-        // pruning is where the win is.)
-        val current = s.read.option("basePath", table).parquet(table)
-          // partition-dir values read back inferred; restore the
-          // written long type so upsert's schema contract holds
-          .withColumn("__p", col("__p").cast("long"))
-        val merged = graft.ops.Lake.upsert(current, b, Seq("event_id"))
-          .join(b.select("__p").distinct(), Seq("__p"), "left_semi")
-        // stage-then-rename commit: the merge job reads the live dirs
-        // and writes to a staging path (no read/overwrite conflict, no
-        // checkpoint materialization), then the staged dirs swap in as
-        // metadata renames — the Delta/Iceberg commit shape reduced to
-        // directories. Which dirs were touched is read off the staging
-        // listing: no extra Spark job.
-        val staging = s"$state/stage"
-        // hash-partitioned on __p at the table's own partition count:
-        // each touched dir gets exactly one file (a dir's rows land in
-        // one task), untouched candidates resolve to empty tasks
-        merged.repartition(nTableParts, col("__p"))
-          .write.mode("overwrite").partitionBy("__p").parquet(staging)
-        for (st <- fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-             if st.getPath.getName.startsWith("__p=")) {
-          val dst = new org.apache.hadoop.fs.Path(table, st.getPath.getName)
-          if (fs.exists(dst)) fs.delete(dst, true)
-          fs.rename(st.getPath, dst)
-        }
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(table)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-      .orderBy("event_type")
   }
 
   /** Cross-stream CORRELATION MATRIX — the feature-engineering staple
@@ -3352,144 +2886,14 @@ object SparkEntry {
   private def q_agg_mahalanobis(s: SparkSession, dir: String): DataFrame =
     mahalanobisD2(s, dir)
 
-  /** Streaming AS-OF enrichment in batch replay
-    * ([[graft.streaming.Streams.asofOnline]]): clicks joined to the
-    * latest same-user view at-or-before them through one O(1) state slot
-    * per user. A single-batch replay is bit-identical to the batch as-of
-    * join, so this STATEFUL streaming op carries join_asof's full oracle
-    * (the stream_cusum discipline); StreamsSpec pins the multi-batch
-    * incremental run against the batch result.
-    */
-  private def q_stream_asof(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = E(s, dir)
-    val l = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("user"),
-        graft.sources.Events.epochMicros(col("ts")).as("tsMicros"),
-        lit(false).as("isRight"), col("event_id").as("eventId"),
-        col("value"))
-    val r = ev.filter(col("event_type") === "view")
-      .groupBy("user_id", "ts").agg(avg(col("value")).as("vv"))
-      .select(col("user_id").as("user"),
-        graft.sources.Events.epochMicros(col("ts")).as("tsMicros"),
-        lit(true).as("isRight"), lit(-1L).as("eventId"),
-        col("vv").as("value"))
-    graft.streaming.Streams.asofOnline(l.unionByName(r).as[graft.streaming.AsOfIn])
-      .toDF()
-      .select(col("event_id"), col("user_id"), col("value"),
-        round(col("asof_vv"), 6).as("asof_view"))
-      .orderBy("event_id")
-  }
-
   /** OHLC downsampling — the classic financial/sensor compaction: per
-    * (stream, hour) the opening reading, extrema, and closing reading.
-    * first/last are made DETERMINISTIC under timestamp ties by taking
-    * min/max over the total-order struct (ts, event_id, value) — both
-    * engines compare structs lexicographically, so the pick is identical
-    * (a bare min_by/arg_min tie is engine-arbitrary). ONE hash aggregate,
-    * map-side combined — the O(1)-state-per-bucket shape that holds at
-    * any scale.
+    * (stream, hour) the opening reading, extrema, and closing reading,
+    * tie-deterministic ([[hourlyCandles]]). ONE hash aggregate, map-side
+    * combined — the O(1)-state-per-bucket shape that holds at any scale.
     */
-  private def q_agg_resample_ohlc(s: SparkSession, dir: String): DataFrame = {
-    val e = E(s, dir).filter(col("value").isNotNull)
-    val ord = struct(col("ts").as("t"), col("event_id").as("id"),
-      col("value").as("v"))
-    e.groupBy(col("event_type"),
-        date_trunc("hour", col("ts")).as("bucket"))
-      .agg(min(ord).getField("v").as("open"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        max(ord).getField("v").as("close"),
-        count(lit(1)).as("n"))
+  private def q_agg_resample_ohlc(s: SparkSession, dir: String): DataFrame =
+    hourlyCandles(E(s, dir).filter(col("value").isNotNull))
       .orderBy("event_type", "bucket")
-  }
-
-  /** CONTINUOUS OHLC — the same compaction as agg_resample_ohlc running
-    * as a live streaming aggregation over the compacted-events directory
-    * source: struct-min/max and count are all mergeable O(1)-state
-    * aggregates, so each (stream, hour) bucket's candles update in place
-    * in the state store (complete mode re-emits). Shares
-    * agg_resample_ohlc's oracle — the streamed candles must equal the
-    * batch candles exactly, ties included.
-    */
-  private def q_stream_ohlc(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val name = s"ohlc_stream_${registryKey(dir).take(8)}"
-    val ord = struct(col("ts").as("t"), col("event_id").as("id"),
-      col("value").as("v"))
-    val stream = parquetStream(s, root)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(min(ord).getField("v").as("open"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        max(ord).getField("v").as("close"),
-        count(lit(1)).as("n"))
-    graft.streaming.Streams.replayToTable(stream, name, "complete")
-      .orderBy("event_type", "bucket")
-  }
-
-  /** SLIDING-window streaming aggregation — the overlapping-window shape
-    * tumbling stream_resample cannot express (a 1-hour window advancing
-    * every 15 minutes: each event feeds FOUR windows; the state store
-    * holds one mergeable sum+count per open window — the dashboard
-    * "rolling last hour, refreshed every 15 min" semantics). Exactness:
-    * the decimal sum → micro BIGINT → integer mean discipline, so the
-    * streamed windows hash-match a replicate-then-aggregate SQL replay
-    * (each event row contributes to its four window starts — the
-    * agg_active_users WAU trick in time-window form).
-    */
-  private def q_stream_sliding(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val name = s"slide_stream_${registryKey(dir).take(8)}"
-    val stream = parquetStream(s, root)
-      .filter(col("value").isNotNull)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(sum(col("value").cast("decimal(18,6)")).as("sdec"),
-        count(lit(1)).as("n"))
-    graft.streaming.Streams.replayToTable(stream, name, "complete")
-      .select(col("window.start").as("wstart"), col("event_type"),
-        expr("cast(sdec * 1000000 as long) div n").as("v6"), col("n"))
-      .orderBy("wstart", "event_type")
-  }
-
-  /** LIVE seasonal-residual monitor — the deployment form of seasonal
-    * scoring: the hour-of-day profile is FROZEN from the reference
-    * cohort (first half-month, batch, exact integer micro-units), the
-    * live cohort streams through a stateful hourly-mean aggregation
-    * (sum+count are mergeable; the mean forms AFTER the stream stops),
-    * and each live bucket is scored against the broadcast profile:
-    * resid = live mean − expected-at-this-hour. Every output is one
-    * exact integer over the same exact divisor — unrounded, bit-exact,
-    * and the whole stream path is hash-checked by a frozen-profile SQL
-    * mirror.
-    */
-  private def q_stream_seasonal(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val ref = Tables.resolve(s, root)
-      .filter(driftIsA && col("value").isNotNull)
-    val profile = ref
-      .groupBy(col("event_type"), hour(col("ts")).as("hod"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("sp"), count(lit(1)).as("pn"))
-      .select(col("event_type"), col("hod"), expr("sp div pn").as("p6"))
-    val name = s"seasonal_stream_${registryKey(dir).take(8)}"
-    val liveStream = parquetStream(s, root)
-      .filter(!driftIsA && col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(sum(col("value").cast("decimal(18,6)")).as("sdec"),
-        count(lit(1)).as("n"))
-    val live = graft.streaming.Streams.replayToTable(liveStream, name, "complete")
-      .withColumn("v6", expr("cast(sdec * 1000000 as long) div n"))
-      .withColumn("hod", hour(col("bucket")))
-    val prof = profile.select(col("event_type").as("p_type"),
-      col("hod").as("p_hod"), col("p6"))
-    live.join(broadcast(prof),
-        col("event_type") === col("p_type") && col("hod") === col("p_hod"))
-      .select(col("event_type"), col("bucket"),
-        (col("v6").cast("double") / lit(1000000.0)).as("v"),
-        (col("p6").cast("double") / lit(1000000.0)).as("expected"),
-        ((col("v6") - col("p6")).cast("double") / lit(1000000.0)).as("resid"))
-      .orderBy("event_type", "bucket")
-  }
 
   /** Hour-of-day × day-of-week PROFILE per stream — the seasonality
     * heatmap grid behind capacity dashboards: exact integer micro-unit
@@ -3497,14 +2901,11 @@ object SparkEntry {
     * output bounded by |streams|·168.
     */
   private def q_agg_hod_profile(s: SparkSession, dir: String): DataFrame =
-    E(s, dir).filter(col("value").isNotNull)
-      .groupBy(col("event_type"), dayofweek(col("ts")).as("dow"),
-        hour(col("ts")).as("hod"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("n"))
+    microMeans(E(s, dir).filter(col("value").isNotNull)
+        .groupBy(col("event_type"), dayofweek(col("ts")).as("dow"),
+          hour(col("ts")).as("hod")))
       .select(col("event_type"), col("dow"), col("hod"), col("n"),
-        (expr("s_micro div n").cast("double") / lit(1000000.0)).as("mean_v"))
+        (microMean.cast("double") / lit(1000000.0)).as("mean_v"))
       .orderBy("event_type", "dow", "hod")
 
   /** BENFORD first-digit audit per stream — the classic fraud /
@@ -3516,10 +2917,8 @@ object SparkEntry {
     * total, which would sum nine doubles in engine-dependent order.
     */
   private def q_agg_benford(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val d = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), cents.as("c"))
+      .select(col("event_type"), valueCents.as("c"))
       .filter(col("c") > 0)
       .withColumn("digit", substring(col("c").cast("string"), 1, 1).cast("int"))
     val g = d.groupBy("event_type", "digit").agg(count(lit(1)).as("obs"))
@@ -3543,11 +2942,9 @@ object SparkEntry {
     */
   private def q_agg_gini(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val w = Window.partitionBy("event_type").orderBy("c")
     val r = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), cents.as("c"))
+      .select(col("event_type"), valueCents.as("c"))
       .withColumn("i", row_number().over(w))
     val g = r.groupBy("event_type").agg(count(lit(1)).as("n"),
       sum(col("c")).as("sx"), sum(col("i") * col("c")).as("si"))
@@ -3569,11 +2966,9 @@ object SparkEntry {
     * the comparisons is value-preserving.
     */
   private def q_agg_rfm(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val u = E(s, dir).filter(col("value").isNotNull)
       .select(col("user_id"),
-        graft.sources.Events.epochMicros(col("ts")).as("us"), cents.as("c"))
+        graft.sources.Events.epochMicros(col("ts")).as("us"), valueCents.as("c"))
       .groupBy("user_id")
       .agg(max(col("us")).as("last_us"), count(lit(1)).as("freq"),
         sum(col("c")).as("monetary"))
@@ -3605,10 +3000,8 @@ object SparkEntry {
     * per-stream extrema agg broadcast back, then one hash-agg.
     */
   private def q_agg_value_histogram(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val e = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), cents.as("c"))
+      .select(col("event_type"), valueCents.as("c"))
     val ext = e.groupBy("event_type")
       .agg(min(col("c")).as("lo"), max(col("c")).as("hi"),
         count(lit(1)).as("n"))
@@ -3658,12 +3051,10 @@ object SparkEntry {
     */
   private def q_agg_interval_union(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val iv = E(s, dir).filter(col("value").isNotNull)
       .select(col("user_id"), date_trunc("day", col("ts")).as("day"),
         graft.sources.Events.epochMicros(col("ts")).as("st"),
-        col("event_id"), cents.as("c"))
+        col("event_id"), valueCents.as("c"))
       .withColumn("en", col("st") + col("c") * 10000L) // value seconds in µs
     val w = Window.partitionBy("user_id", "day")
       .orderBy(col("st"), col("en"), col("event_id"))
@@ -3779,58 +3170,6 @@ object SparkEntry {
         round(sxy / nullif(sxx, lit(0.0)), 6).as("slope"),
         round((sxy * sxy) / nullif(sxx * syy, lit(0.0)), 6).as("r2"))
       .orderBy("lang")
-  }
-
-  /** LIVE multivariate anomaly monitor — Mahalanobis scoring as a
-    * deployment runs it (the stream_seasonal/stream_drift "frozen
-    * reference" discipline): the (click, view) covariance is FROZEN from
-    * the first-half reference cohort (what makes scores comparable
-    * across days, and what a stream — which cannot rescan history —
-    * requires); the live second half streams through a real parquet
-    * readStream into a stateful per-(type, hour) sum+count aggregation
-    * (mergeable, complete mode), aligns to (x, y) pairs post-stream, and
-    * scores each live bucket against the frozen inverse. Arithmetic is
-    * q_agg_mahalanobis' exact-BIGINT + one-mirrored-IEEE-combination
-    * discipline, so the ENTIRE stream path is hash-checked by SQL.
-    */
-  private def q_stream_mahalanobis(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val types = Seq("click", "view")
-    def widen(cents: DataFrame): DataFrame = cents.groupBy("bucket")
-      .agg(max(when(col("event_type") === "click", col("c"))).as("x"),
-        max(when(col("event_type") === "view", col("c"))).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-    val ref = widen(hourlyCentsLong(Tables.resolve(s, root)
-      .filter(driftIsA && col("value").isNotNull &&
-        col("event_type").isin(types: _*))))
-    val stats = ref.agg(count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"),
-      sum(col("x") * col("y")).as("sxy"))
-    val name = s"maha_stream_${registryKey(dir).take(8)}"
-    val liveAgg = parquetStream(s, root)
-      .filter(!driftIsA && col("value").isNotNull &&
-        col("event_type").isin(types: _*))
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(sum(col("value").cast("decimal(18,6)")).as("sdec"),
-        count(lit(1)).as("cn"))
-    val live = widen(graft.streaming.Streams.replayToTable(liveAgg, name, "complete")
-      .select(col("event_type"), col("bucket"),
-        expr("(cast(sdec * 1000000 as long) div cn) div 10000").as("c")))
-    val j = live.crossJoin(broadcast(stats))
-    val ax = (col("n") * col("x") - col("sx")).cast("double")
-    val ay = (col("n") * col("y") - col("sy")).cast("double")
-    val vxx = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val vyy = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
-    val vxy = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-    val qd = ax * ax * vyy - ax * ay * vxy * lit(2.0) + ay * ay * vxx
-    val d2u = (col("n") - 1).cast("double") * qd /
-      nullif(col("n").cast("double") * (vxx * vyy - vxy * vxy), lit(0.0))
-    j.select(col("bucket"), col("x").as("c_click"), col("y").as("c_view"),
-        round(d2u, 6).as("d2"),
-        when(d2u > 9.21, 1).otherwise(0).as("outlier"))
-      .orderBy("bucket")
   }
 
   /** ACF correlogram per stream — autocorrelation at lags 1..12 over the
@@ -4069,13 +3408,6 @@ object SparkEntry {
     graft.ops.Search.tfidfTopTerms(T(s, dir, "documents"), "doc_id", "text", 5)
       .orderBy("doc_id", "rnk")
 
-  /** Split instant shared by the drift queries: cohort A = the first half
-    * of the fixture month. An Instant literal is timezone-fixed (a
-    * java.sql.Timestamp literal would parse in the JVM default zone).
-    */
-  private val driftSplit = java.time.Instant.parse("2024-01-16T00:00:00Z")
-  private def driftIsA: Column = col("ts") < lit(driftSplit)
-
   /** Binned two-sample KS drift per event_type between the two halves of
     * the month ([[graft.ops.Drift.ksStatistic]]). */
   private def q_agg_ks_drift(s: SparkSession, dir: String): DataFrame =
@@ -4088,77 +3420,6 @@ object SparkEntry {
     graft.ops.Drift.psi(E(s, dir), "event_type", "value", driftIsA)
       .orderBy("event_type")
 
-  /** LIVE drift monitor — the deployment form of the KS test: bin edges
-    * frozen from the reference cohort (first half-month, batch), the
-    * live cohort streamed from a real parquet directory source through a
-    * stream-static broadcast range join + a stateful binned-count
-    * aggregation (complete mode), KS computed from the final histograms.
-    * Out-of-range live values clamp into the end bins. The oracle derives
-    * the identical frozen-edge statistic in SQL — the whole
-    * stream-vs-batch path is hash-checked, not just row-counted.
-    */
-  private def q_stream_drift(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    // The reference cohort's bin ranges + histogram are FROZEN artifacts
-    // — a production monitor computes them once at train time and scores
-    // every live window against them (the whole point of frozen edges:
-    // comparability across days). Persist both fingerprint-keyed, so a
-    // serving run pays a model-sized parquet read (|keys| + |keys|×bins
-    // rows), not a rescan of the reference history.
-    val refRoot = Artifacts.materialize(s, "driftref",
-        s"driftref-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
-      val ref = Tables.resolve(s, root).filter(driftIsA)
-      val rng = graft.ops.Drift.referenceRanges(ref, "event_type", "value")
-      graft.ops.Drift.binAgainst(ref, "event_type", "value", rng)
-        .groupBy("event_type", "__bin").agg(count(lit(1)).as("__na"))
-        .join(rng, Seq("event_type"))
-        .coalesce(1).write.mode("overwrite").parquet(out)
-    }
-    val frozen = Tables.resolve(s, refRoot)
-    val ranges = frozen.select("event_type", "__mn", "__mx").distinct()
-    val refHist = frozen.select("event_type", "__bin", "__na")
-    val name = s"drift_stream_${registryKey(dir).take(8)}"
-    val liveStream = graft.ops.Drift.binAgainst(
-        parquetStream(s, root).filter(!driftIsA),
-        "event_type", "value", ranges)
-      .groupBy("event_type", "__bin").agg(count(lit(1)).as("__nb"))
-    val joint = refHist.join(
-      graft.streaming.Streams.replayToTable(liveStream, name, "complete"),
-      Seq("event_type", "__bin"), "full_outer")
-      .na.fill(0L, Seq("__na", "__nb"))
-    graft.ops.Drift.ksOfCounts(joint, "event_type").orderBy("event_type")
-  }
-
-  /** ONLINE Kalman local-level filter in batch replay
-    * ([[graft.streaming.Streams.kalmanOnline]], Q=1, R=10) over the
-    * exact-integer hourly mean series: the terminal posterior per stream
-    * must equal a DuckDB `list_reduce` replay of the identical recursion
-    * (the ml_holt_winters discipline — same literals, same association),
-    * so the whole adaptive-gain filter path is hash-checked. Unrounded:
-    * the doubles are bit-identical by construction.
-    */
-  private def q_stream_kalman(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val hourly = E(s, dir)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("cn"))
-      .select(col("event_type").as("tag"), col("bucket").as("ts"),
-        (expr("s_micro div cn").cast("double") / lit(1000000.0)).as("value"))
-      .as[graft.streaming.Reading]
-    val filtered = graft.streaming.Streams.kalmanOnline(hourly, q = 1.0, r = 10.0)
-      .toDF()
-    filtered.groupBy(col("tag").as("event_type"))
-      .agg(max(struct(col("ts"), col("level"), col("p"), col("k"), col("n")))
-        .as("fin"))
-      .select(col("event_type"), col("fin.n").as("n"),
-        col("fin.level").as("level"), col("fin.p").as("p"),
-        col("fin.k").as("k"))
-      .orderBy("event_type")
-  }
-
   /** Holt-Winters 24-hour-ahead forecast per event_type over the hourly
     * series ([[graft.ml.HoltWinters]]) — ORACLE-CHECKED, bit-exact and
     * unrounded: the input series is the fixed-point hourly mean (exact
@@ -4170,14 +3431,9 @@ object SparkEntry {
     * hash-matches SQL exactly, like stream_cusum.
     */
   private def q_ml_holt_winters(s: SparkSession, dir: String): DataFrame = {
-    val hourly = E(s, dir)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("n"))
+    val hourly = hourlyMicroMeans(E(s, dir).filter(col("value").isNotNull))
       .select(col("event_type"), col("bucket"),
-        (expr("s_micro div n").cast("double") / lit(1000000.0)).as("v"))
+        (microMean.cast("double") / lit(1000000.0)).as("v"))
     graft.ml.HoltWinters.forecast(hourly, "event_type", "bucket", "v",
         horizon = 24)
       .select(col("event_type"), col("step").cast("long").as("step"),
@@ -4325,11 +3581,8 @@ object SparkEntry {
     val B = org.apache.spark.sql.graft.Bridge
     def dtwCol(a: Column, b: Column): Column =
       B.column(DtwDistance(B.expression(a), B.expression(b)))
-    val prof = E(s, dir).filter(col("value").isNotNull)
-      .groupBy(col("event_type"), hour(col("ts")).as("h"))
-      .agg((sum(col("value").cast("decimal(18,6)")) * lit(1000000L))
-          .cast("long").as("s_micro"),
-        count(lit(1)).as("n"))
+    val prof = microMeans(E(s, dir).filter(col("value").isNotNull)
+        .groupBy(col("event_type"), hour(col("ts")).as("h")))
       .select(col("event_type"), col("h"),
         expr("(s_micro div n) div 10000").cast("double").as("m"))
       .groupBy("event_type")
@@ -4402,10 +3655,8 @@ object SparkEntry {
     * cancels the shared ULP scale — the t-test's argument).
     */
   private def q_agg_anova(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val g = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), cents.as("c"))
+      .select(col("event_type"), valueCents.as("c"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
         sum(col("c") * col("c")).as("s2"))
@@ -4446,8 +3697,6 @@ object SparkEntry {
       1060340297073263360L, 1131029650211480960L, 1148701988496035328L,
       1152236456152946176L, 1152825534095764608L, 1152909688087595776L,
       1152920207336574720L)
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     // ONE md5 per row, per-replica uniforms by the Carter-Wegman affine
     // family (the minhash discipline): u_rep = (h1 + rep·h2) mod 2^60 —
     // 20× fewer digests than hashing (event_id, rep) pairs (measured
@@ -4455,7 +3704,7 @@ object SparkEntry {
     // integer and bit-identical cross-engine.
     val digest = md5(col("event_id").cast("string"))
     val base = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), cents.as("c"),
+      .select(col("event_type"), valueCents.as("c"),
         conv(substring(digest, 1, 15), 16, 10).cast("long").as("h1"),
         (conv(substring(digest, 17, 15), 16, 10).cast("long")
           % lit(1099511627776L)).as("h2"))
@@ -4525,11 +3774,9 @@ object SparkEntry {
     * table.
     */
   private def q_agg_mannwhitney(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val base = E(s, dir).filter(col("value").isNotNull)
       .select(col("event_type"), (col("user_id") % 2 === 0).as("isa"),
-        cents.as("c"))
+        valueCents.as("c"))
     // midranks via the distinct-value table: rank(v) = (#below) + (cnt+1)/2
     val byVal = base.groupBy("event_type", "c")
       .agg(count(lit(1)).as("cnt"),
@@ -4566,10 +3813,8 @@ object SparkEntry {
     * partitioned by stream.
     */
   private def q_agg_kruskal(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val base = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), (col("user_id") % 3).as("grp"), cents.as("c"))
+      .select(col("event_type"), (col("user_id") % 3).as("grp"), valueCents.as("c"))
     val byVal = base.groupBy("event_type", "c")
       .agg(count(lit(1)).as("cnt"),
         (0 until 3).map(g =>
@@ -4668,58 +3913,6 @@ object SparkEntry {
       .orderBy("event_type")
   }
 
-  /** CONTINUOUS windowed quantiles via the t-digest aggregate — the
-    * sketch family's quantile member running inside Structured
-    * Streaming (beside stream_heavyhitters' Misra-Gries): per
-    * (stream, hour) the state store holds ONE mergeable digest
-    * (O(compression) centroids), not the window's values — the only
-    * way windowed p95 exists at 100 TB stream rates.
-    *
-    * ORACLE-CHECKED (round 10, the countmin/threshold_sketch
-    * discipline): centroid layout is merge-order-dependent, so the raw
-    * estimates stay on the expression API (TDigestSpec pins accuracy);
-    * the driver row carries the streaming COUNT (exact — checked
-    * against SQL count(*)), the SQL-exact batch percentiles, and the
-    * per-quantile order-statistic bracket flags of the streamed
-    * estimates (see q_agg_threshold_sketch). The flags verify the
-    * sketch against raw data the oracle can recompute; the count
-    * verifies the streaming aggregation itself.
-    */
-  private def q_stream_tdigest(s: SparkSession, dir: String): DataFrame = {
-    val root = compactRoot(s, dir)
-    val name = s"tdig_stream_${registryKey(dir).take(8)}"
-    val stream = parquetStream(s, root)
-      .filter(col("value").isNotNull)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(AnomalyMath.thresholdSketch(col("value"), 0.5).as("p50_est"),
-        AnomalyMath.thresholdSketch(col("value"), 0.95).as("p95_est"),
-        count(lit(1)).as("n"))
-    val est = graft.streaming.Streams.replayToTable(stream, name, "complete")
-    def bracket(p: Double, nLt: Column, nLe: Column): Column = {
-      val h = col("n").cast("double") * lit(p) - lit(p) // p*(n-1)
-      val slack = tdigestRankSlack(col("n"), p)
-      nLe >= floor(h).cast("long") + lit(1L) - slack &&
-        nLt <= ceil(h).cast("long") + slack
-    }
-    Tables.resolve(s, root).filter(col("value").isNotNull)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("bucket"),
-        col("value"))
-      .join(broadcast(est), Seq("event_type", "bucket"))
-      .groupBy("event_type", "bucket")
-      .agg(first(col("n")).as("n"),
-        round(percentile(col("value"), lit(0.5)), 6).as("p50_exact"),
-        round(percentile(col("value"), lit(0.95)), 6).as("p95_exact"),
-        sum((col("value") < col("p50_est")).cast("long")).as("lt50"),
-        sum((col("value") <= col("p50_est")).cast("long")).as("le50"),
-        sum((col("value") < col("p95_est")).cast("long")).as("lt95"),
-        sum((col("value") <= col("p95_est")).cast("long")).as("le95"))
-      .select(col("event_type"), col("bucket"), col("n"),
-        col("p50_exact"), col("p95_exact"),
-        bracket(0.5, col("lt50"), col("le50")).as("p50_ok"),
-        bracket(0.95, col("lt95"), col("le95")).as("p95_ok"))
-      .orderBy("event_type", "bucket")
-  }
-
   /** Declarative data-quality expectation suite (the Deequ pattern —
     * Schelter et al. 2018, VLDB): N constraints over a table verified
     * from ONE aggregation pass (completeness, uniqueness, bounds,
@@ -4798,12 +3991,10 @@ object SparkEntry {
     * cents.
     */
   private def q_join_attribution(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val ev = E(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"),
-        when(col("value").isNotNull, cents).otherwise(0L).as("c"))
+        when(col("value").isNotNull, valueCents).otherwise(0L).as("c"))
     val touches = ev.filter(col("event_type") =!= "purchase")
       .select(col("user_id").as("t_user"), col("event_type").as("touch_type"),
         col("ts").as("t_ts"), col("event_id").as("t_id"))
@@ -4860,10 +4051,8 @@ object SparkEntry {
     * model-sized contingency table.
     */
   private def q_agg_mutual_info(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     val binned = E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_type"), length(cents.cast("string")).as("mag"))
+      .select(col("event_type"), length(valueCents.cast("string")).as("mag"))
     // model-sized contingency table (|types| x |magnitudes|) referenced
     // four times (marginals, N, cells) - materialize ONCE (round 14, the
     // agg_basket_lift finding: each reference replayed the events scan)
@@ -4889,25 +4078,6 @@ object SparkEntry {
         round(col("mi") / sqrt(col("hx") * col("hy")), 6).as("nmi"),
         col("k_streams"), col("k_magnitudes"))
   }
-
-  /** Hash-derived site coordinates in exact 1e-4-degree integer units
-    * (lat ∈ [-60°, 60°), lon ∈ [-180°, 180°)) — the geo family's fixture
-    * derivation, portable to the oracle engine verbatim because every
-    * step is md5-hex → 60-bit integer → modulus. The ±60° latitude cap
-    * is what makes [[graft.ops.Geo.radiusPairs]]' fixed-width grid sound
-    * (see its scaladoc).
-    */
-  private def geoE4(prefix: String, id: Column): (Column, Column) = {
-    val hx = md5(concat(lit(prefix), id.cast("string")))
-    val h1 = conv(substring(hx, 1, 15), 16, 10).cast("long")
-    val h2 = conv(substring(hx, 17, 15), 16, 10).cast("long")
-    (h1 % 1200000L - 600000L, h2 % 3600000L - 1800000L)
-  }
-
-  /** Matching oracle-side SQL for [[geoE4]]. */
-  private def geoE4Sql(prefix: String, idExpr: String): (String, String) = (
-    s"CAST(('0x'||substr(md5('$prefix'||CAST($idExpr AS VARCHAR)),1,15)) AS BIGINT) % 1200000 - 600000",
-    s"CAST(('0x'||substr(md5('$prefix'||CAST($idExpr AS VARCHAR)),17,15)) AS BIGINT) % 3600000 - 1800000")
 
   private def custSites(s: SparkSession, dir: String): DataFrame = {
     val (la, lo) = geoE4("c", col("c_custkey"))
@@ -5312,78 +4482,6 @@ object SparkEntry {
       .select(col("doc_id"), col("n_hash"), col("n_merge"))
       .orderBy("doc_id")
 
-  /** Hash-derived integer e4 value in [-half, half): the triangle-fixture
-    * building block ([[q_join_geo_polygon]]); mirrors [[triE4Sql]].
-    */
-  private def triE4(prefix: String, id: Column, off: Int, span: Long): Column =
-    conv(substring(md5(concat(lit(prefix), id.cast("string"))), off, 15), 16, 10)
-      .cast("long") % span - span / 2
-
-  private def triE4Sql(prefix: String, idExpr: String, off: Int, span: Long): String =
-    s"CAST(('0x'||substr(md5('$prefix'||CAST($idExpr AS VARCHAR)),$off,15)) AS BIGINT) % $span - ${span / 2}"
-
-  /** The hash-derived triangle dim (one triangle per supplier) and the
-    * integer sign-test containment predicate — shared by
-    * [[q_join_geo_polygon]] and the streaming geofence.
-    */
-  private def trisDim(s: SparkSession, dir: String): DataFrame = {
-    val k = col("s_suppkey")
-    val cy = triE4("tc", k, 1, 1000000L)
-    val cx = triE4("tc", k, 17, 3400000L)
-    T(s, dir, "supplier").select(k.as("tri_id"),
-      (cy + triE4("tv1", k, 1, 200000L)).as("y1"),
-      (cx + triE4("tv1", k, 17, 200000L)).as("x1"),
-      (cy + triE4("tv2", k, 1, 200000L)).as("y2"),
-      (cx + triE4("tv2", k, 17, 200000L)).as("x2"),
-      (cy + triE4("tv3", k, 1, 200000L)).as("y3"),
-      (cx + triE4("tv3", k, 17, 200000L)).as("x3"))
-  }
-
-  /** Point (py, px) inside the row's triangle: three exact integer cross
-    * products, same sign (boundary inclusive).
-    */
-  private def insideTri: Column = {
-    val d1 = (col("px") - col("x1")) * (col("y2") - col("y1")) -
-      (col("py") - col("y1")) * (col("x2") - col("x1"))
-    val d2 = (col("px") - col("x2")) * (col("y3") - col("y2")) -
-      (col("py") - col("y2")) * (col("x3") - col("x2"))
-    val d3 = (col("px") - col("x3")) * (col("y1") - col("y3")) -
-      (col("py") - col("y3")) * (col("x1") - col("x3"))
-    (d1 >= 0 && d2 >= 0 && d3 >= 0) || (d1 <= 0 && d2 <= 0 && d3 <= 0)
-  }
-
-  /** Fixed 20°-cell grid for the polygon joins. Triangle vertices sit
-    * within ±1e5 e4-units of the center ([[triE4]] span 2e5), so a
-    * triangle bbox spans ≤ one cell width per axis and covers at most
-    * 2×2 cells — each triangle explodes to ≤ 4 (cx, cy) entries, a
-    * bounded blow-up of the dim at ANY polygon count. A point lands in
-    * exactly one cell, so the cell equi-join tests each (point,
-    * triangle-cell-entry) pair at most once and can never duplicate a
-    * containment pair. This turns the broadcast NESTED-LOOP join
-    * (|points| × |polygons| sign tests — 300M at sf0.1, unbounded at
-    * scale) into a broadcast HASH join on (cx, cy) whose candidate
-    * count is |points| × (polygons per cell): measured 2.3 s → sub-1 s
-    * at sf0.1, and the plan survives millions of polygons because the
-    * per-cell fan-out, not the dim size, bounds per-point work.
-    */
-  private val fenceCellE4 = 200000L
-
-  private def fenceCellOf(c: Column): Column =
-    floor(c.cast("double") / fenceCellE4).cast("long")
-
-  /** Triangle dim exploded to its ≤4 covering grid cells. */
-  private def trisCellDim(s: SparkSession, dir: String): DataFrame = {
-    val minx = least(col("x1"), col("x2"), col("x3"))
-    val maxx = greatest(col("x1"), col("x2"), col("x3"))
-    val miny = least(col("y1"), col("y2"), col("y3"))
-    val maxy = greatest(col("y1"), col("y2"), col("y3"))
-    trisDim(s, dir)
-      .withColumn("cx", explode(array_distinct(array(
-        fenceCellOf(minx), fenceCellOf(maxx)))))
-      .withColumn("cy", explode(array_distinct(array(
-        fenceCellOf(miny), fenceCellOf(maxy)))))
-  }
-
   /** POINT-IN-POLYGON join: every (user point, triangle) containment
     * pair, with one hash-derived triangle per supplier (center ±50°/
     * ±170°, vertices center ±10°) — the spatial-join primitive
@@ -5398,45 +4496,9 @@ object SparkEntry {
     * instead (same plan family as ml_dbscan's ε-pairs).
     */
   private def q_join_geo_polygon(s: SparkSession, dir: String): DataFrame = {
-    val (ula, ulo) = geoE4("u", col("user_id"))
-    val pts = E(s, dir).select(col("user_id")).distinct()
-      .select(col("user_id"), ula.as("py"), ulo.as("px"),
-        fenceCellOf(ulo).as("cx"), fenceCellOf(ula).as("cy"))
-    pts.join(broadcast(trisCellDim(s, dir)), Seq("cx", "cy"))
-      .filter(insideTri)
+    fenceHits(s, dir, E(s, dir).select(col("user_id")).distinct())
       .select(col("user_id"), col("tri_id"))
       .orderBy("user_id", "tri_id")
-  }
-
-  /** STREAMING GEOFENCE — the live form of [[q_join_geo_polygon]]: a
-    * real file-source readStream of purchase events stream-static
-    * hash-joins the BROADCAST cell-exploded triangle dim on the grid
-    * cell ([[trisCellDim]]) with the exact containment sign tests as a
-    * post-filter, emitting (event, fence) alerts in append mode. The
-    * exactly-mirrorable batch replay IS the oracle (integer geometry,
-    * stateless per event — replay order cannot matter). At scale this
-    * is the canonical alerting shape: per-event work is
-    * (fences-in-cell) integer tests against a broadcast dim, no state,
-    * no shuffle.
-    */
-  private def q_stream_geo_fence(s: SparkSession, dir: String): DataFrame = {
-    val root = Artifacts.materialize(s, "fencespool",
-        s"fencespool-v1|$dir|${tableFingerprint(s, s"$dir/events.parquet")}") { out =>
-      E(s, dir).filter(col("event_type") === "purchase")
-        .select("event_id", "user_id")
-        .repartition(4) // 4 spool files, one micro-batch
-        .write.mode("overwrite").parquet(out)
-    }
-    val (ula, ulo) = geoE4("u", col("user_id"))
-    val pts = parquetStream(s, root)
-      .select(col("event_id"), col("user_id"), ula.as("py"), ulo.as("px"),
-        fenceCellOf(ulo).as("cx"), fenceCellOf(ula).as("cy"))
-    val hits = pts.join(broadcast(trisCellDim(s, dir)), Seq("cx", "cy"))
-      .filter(insideTri)
-      .select(col("event_id"), col("user_id"), col("tri_id"))
-    val name = s"geo_fence_${registryKey(dir).take(8)}"
-    graft.streaming.Streams.replayToTable(hits, name, "append")
-      .orderBy("event_id", "tri_id")
   }
 
   /** Multivariate OLS per stream via EXACT normal equations — the
@@ -5724,7 +4786,7 @@ object SparkEntry {
       s"r_${i}_$j AS (SELECT *, abs(pa[$i] - pb[$j]) + $best AS c_${i}_$j FROM $src)"
     }
     s"""WITH p AS (SELECT event_type, hour(CAST(ts AS TIMESTAMP)) AS h,
-       |    CAST((CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+       |    CAST(($microSumSql
        |      // count(*)) // 10000 AS DOUBLE) AS m
        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
        |prof AS (SELECT event_type, list(m ORDER BY h) AS xs
@@ -5827,27 +4889,6 @@ object SparkEntry {
        |      / sqrt(${normSqSql("e.embedding")} * ${normSqSql("p.pv")})
        |      AS score
        |  FROM embeddings e JOIN probes p ON e.vec_id <> p.pid)""".stripMargin
-
-  /** Transition-matrix oracle — shared verbatim by `agg_transitions`
-    * (batch lag window) and `stream_transitions` (stateful replay):
-    * ordered single-pass emission is row-identical to the lag form.
-    */
-  private def funnelOracleSql: String =
-    """WITH e AS (SELECT user_id, event_type,
-      |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-      |c AS (SELECT user_id, min(us) AS c_us FROM e
-      |      WHERE event_type = 'click' GROUP BY 1),
-      |v AS (SELECT e.user_id, min(us) AS v_us FROM e JOIN c USING (user_id)
-      |      WHERE event_type = 'view' AND us > c_us GROUP BY 1),
-      |p AS (SELECT e.user_id, min(us) AS p_us FROM e JOIN v USING (user_id)
-      |      WHERE event_type = 'purchase' AND us > v_us GROUP BY 1),
-      |st AS (SELECT 1 AS stage, 'click' AS stage_name, user_id FROM c
-      |       UNION ALL
-      |       SELECT 2, 'view_after_click', user_id FROM v
-      |       UNION ALL
-      |       SELECT 3, 'purchase_after_view', user_id FROM p)
-      |SELECT stage, stage_name, count(DISTINCT user_id) AS users
-      |FROM st GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
   /** TextRank oracle: segment/word triples via WITH ORDINALITY, the
     * identical overlap edges, 8 unrolled integer PageRank CTEs per doc,
@@ -5960,19 +5001,6 @@ object SparkEntry {
        |ORDER BY state""".stripMargin
   }
 
-  private def transitionsOracleSql: String =
-    """WITH sq AS (SELECT user_id, event_type,
-      |    lag(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_type
-      |  FROM events),
-      |c AS (SELECT prev_type, event_type AS next_type, count(*) AS n
-      |      FROM sq WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-      |SELECT prev_type, next_type, n,
-      |  round(CAST(n AS DOUBLE)
-      |    / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
-      |FROM c ORDER BY 1, 2""".stripMargin
-
-  private val bucket10m = "time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP))"
   private val bucket1h = "time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))"
   private val wide1h =
     s"""SELECT $bucket1h AS bucket,
@@ -5989,22 +5017,6 @@ object SparkEntry {
        |SELECT c.bucket AS bucket, round(cv, 6) AS click_v, round(vv, 6) AS view_v,
        |       round(abs(cv - vv), 6) AS diff_score
        |FROM c JOIN v ON c.bucket = v.bucket ORDER BY bucket""".stripMargin
-
-  /** Exact top-10 words per language — the oracle for BOTH Misra-Gries
-    * queries: at k = 40 > the 31-word fixture vocabulary the sketch
-    * provably never evicts, so its counters ARE the exact counts (see
-    * q_agg_heavyhitters). rnk is 0-based to match posexplode.
-    */
-  private def heavyHittersOracleSql: String =
-    """WITH w AS (SELECT lang,
-      |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS item
-      |  FROM documents),
-      |f AS (SELECT lang, item, count(*) AS est FROM w GROUP BY 1, 2),
-      |r AS (SELECT lang, item, est,
-      |        row_number() OVER (PARTITION BY lang ORDER BY est DESC, item) - 1 AS rnk
-      |      FROM f)
-      |SELECT lang, rnk, item, est FROM r WHERE rnk < 10
-      |ORDER BY lang, rnk""".stripMargin
 
   // ---------------------------------------------------------------------
   // The contract maps
@@ -6036,7 +5048,6 @@ object SparkEntry {
         |  TRUE AS parts_within_3rsd, TRUE AS supps_within_3rsd
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
     Query("agg_heavyhitters", q_agg_heavyhitters, Sql(heavyHittersOracleSql)),
-    Query("stream_heavyhitters", q_stream_heavyhitters, Sql(heavyHittersOracleSql)),
     // BPE reconstruction identity: the Spark side hashes the sorted
     // reconstructed words FROM THE EMITTED TOKEN LISTS; this side hashes
     // the raw words — equal only if the encoder round-trips every word
@@ -6378,47 +5389,12 @@ object SparkEntry {
         |  FROM w WHERE len(ws) >= 2)
         |SELECT doc_id, count(*) AS n_hits, CAST(min(pos) AS BIGINT) AS first_pos
         |FROM m GROUP BY 1 ORDER BY doc_id""".stripMargin)),
-    Query("stream_geo_fence", q_stream_geo_fence, Sql {
-      val (ula, ulo) = geoE4Sql("u", "user_id")
-      val cy = triE4Sql("tc", "s_suppkey", 1, 1000000L)
-      val cx = triE4Sql("tc", "s_suppkey", 17, 3400000L)
-      def vy(i: Int) = s"(($cy) + ${triE4Sql(s"tv$i", "s_suppkey", 1, 200000L)})"
-      def vx(i: Int) = s"(($cx) + ${triE4Sql(s"tv$i", "s_suppkey", 17, 200000L)})"
-      s"""WITH p AS (SELECT event_id, user_id, $ula AS py, $ulo AS px
-         |  FROM events WHERE event_type = 'purchase'),
-         |t AS (SELECT s_suppkey AS tri_id, ${vy(1)} AS y1, ${vx(1)} AS x1,
-         |    ${vy(2)} AS y2, ${vx(2)} AS x2, ${vy(3)} AS y3, ${vx(3)} AS x3
-         |  FROM supplier),
-         |d AS (SELECT event_id, user_id, tri_id,
-         |    (px-x1)*(y2-y1) - (py-y1)*(x2-x1) AS d1,
-         |    (px-x2)*(y3-y2) - (py-y2)*(x3-x2) AS d2,
-         |    (px-x3)*(y1-y3) - (py-y3)*(x1-x3) AS d3
-         |  FROM p, t)
-         |SELECT event_id, user_id, tri_id FROM d
-         |WHERE (d1 >= 0 AND d2 >= 0 AND d3 >= 0)
-         |   OR (d1 <= 0 AND d2 <= 0 AND d3 <= 0)
-         |ORDER BY event_id, tri_id""".stripMargin
-    }),
     Query("join_geo_polygon", q_join_geo_polygon, Sql {
       val (ula, ulo) = geoE4Sql("u", "user_id")
-      val cy = triE4Sql("tc", "s_suppkey", 1, 1000000L)
-      val cx = triE4Sql("tc", "s_suppkey", 17, 3400000L)
-      def vy(i: Int) = s"(($cy) + ${triE4Sql(s"tv$i", "s_suppkey", 1, 200000L)})"
-      def vx(i: Int) = s"(($cx) + ${triE4Sql(s"tv$i", "s_suppkey", 17, 200000L)})"
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |p AS (SELECT user_id, $ula AS py, $ulo AS px FROM u),
-         |t AS (SELECT s_suppkey AS tri_id, ${vy(1)} AS y1, ${vx(1)} AS x1,
-         |    ${vy(2)} AS y2, ${vx(2)} AS x2, ${vy(3)} AS y3, ${vx(3)} AS x3
-         |  FROM supplier),
-         |d AS (SELECT user_id, tri_id,
-         |    (px-x1)*(y2-y1) - (py-y1)*(x2-x1) AS d1,
-         |    (px-x2)*(y3-y2) - (py-y2)*(x3-x2) AS d2,
-         |    (px-x3)*(y1-y3) - (py-y3)*(x1-x3) AS d3
-         |  FROM p, t)
-         |SELECT user_id, tri_id FROM d
-         |WHERE (d1 >= 0 AND d2 >= 0 AND d3 >= 0)
-         |   OR (d1 <= 0 AND d2 <= 0 AND d3 <= 0)
-         |ORDER BY user_id, tri_id""".stripMargin
+      fenceHitsOracle(
+        s"""u AS (SELECT DISTINCT user_id FROM events),
+           |p AS (SELECT user_id, $ula AS py, $ulo AS px FROM u)""".stripMargin,
+        "user_id", "user_id, tri_id")
     }),
     Query("ml_ols_multi", q_ml_ols_multi, Sql {
       def det3Sql(a: String*): String =
@@ -6540,9 +5516,8 @@ object SparkEntry {
         |FROM sc GROUP BY bucket
         |ORDER BY ecod_score DESC, bucket LIMIT 20""".stripMargin)),
     Query("agg_mutual_info", q_agg_mutual_info, Sql(
-      """WITH b AS (SELECT event_type,
-        |    length(CAST((CAST(CAST(value AS DECIMAL(18,6)) * 1000000
-        |      AS BIGINT) // 10000) AS VARCHAR)) AS mag
+      s"""WITH b AS (SELECT event_type,
+        |    length(CAST(($valueCentsSql) AS VARCHAR)) AS mag
         |  FROM events WHERE value IS NOT NULL),
         |j AS (SELECT event_type, mag, count(*) AS nxy FROM b GROUP BY 1, 2),
         |nx AS (SELECT event_type, CAST(sum(nxy) AS BIGINT) AS nx
@@ -6565,10 +5540,10 @@ object SparkEntry {
         |  CAST(count(DISTINCT mag) AS BIGINT) AS k_magnitudes
         |FROM cells""".stripMargin)),
     Query("join_attribution", q_join_attribution, Sql(
-      """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS p_ts,
+      s"""WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS p_ts,
         |    event_id AS p_id,
         |    CASE WHEN value IS NOT NULL THEN
-        |      (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) // 10000)
+        |      ($valueCentsSql)
         |      ELSE 0 END AS c
         |  FROM events WHERE event_type = 'purchase'),
         |t AS (SELECT user_id AS t_user, event_type AS touch_type,
@@ -6669,9 +5644,8 @@ object SparkEntry {
          |FROM p ORDER BY event_type""".stripMargin
     }),
     Query("agg_kruskal", q_agg_kruskal, Sql(
-      """WITH b AS (SELECT event_type, user_id % 3 AS grp,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH b AS (SELECT event_type, user_id % 3 AS grp,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |v AS (SELECT event_type, c, count(*) AS cnt,
         |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
@@ -6728,9 +5702,8 @@ object SparkEntry {
         |    AS cramers_v
         |FROM cells""".stripMargin)),
     Query("agg_mannwhitney", q_agg_mannwhitney, Sql(
-      """WITH b AS (SELECT event_type, (user_id % 2 = 0) AS isa,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH b AS (SELECT event_type, (user_id % 2 = 0) AS isa,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |v AS (SELECT event_type, c, count(*) AS cnt,
         |    CAST(sum(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS cnta
@@ -6760,9 +5733,8 @@ object SparkEntry {
         |    AS z
         |FROM g ORDER BY event_type""".stripMargin)),
     Query("agg_anova", q_agg_anova, Sql(
-      """WITH b AS (SELECT event_type,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH b AS (SELECT event_type,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |g AS (SELECT event_type, count(*) AS n,
         |    CAST(sum(c) AS BIGINT) AS s1, CAST(sum(c * c) AS BIGINT) AS s2
@@ -6779,9 +5751,8 @@ object SparkEntry {
         |      - CAST(t1 AS DOUBLE) * CAST(t1 AS DOUBLE) / nn), 6) AS eta_sq
         |FROM t""".stripMargin)),
     Query("agg_bootstrap_ci", q_agg_bootstrap_ci, Sql(
-      """WITH b AS (SELECT event_type, event_id,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH b AS (SELECT event_type, event_id,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |r AS (SELECT unnest(range(0, 20)) AS rep),
         |hh AS (SELECT event_type, c,
@@ -6924,14 +5895,7 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderpriority = '1-URGENT')
         |ORDER BY c_custkey""".stripMargin)),
-    Query("join_asof", q_join_asof, Sql(
-      """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
-        |           FROM events WHERE event_type = 'click'),
-        |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.value, round(r.vv, 6) AS asof_view
-        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t >= r.t
-        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof", q_join_asof, Sql(asofOracleSql)),
     Query("join_asof_fwd", q_join_asof_fwd, Sql(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
         |           FROM events WHERE event_type = 'click'),
@@ -7087,44 +6051,8 @@ object SparkEntry {
     Query("sort_time", q_sort_time, Sql(
       """SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id, event_type, value
         |FROM events ORDER BY ts_us, event_id""".stripMargin)),
-    // the deduped at-least-once spool must reconstruct the base table
-    // exactly (retransmissions are exact copies of event_id % 13 == 3)
-    Query("stream_dedup", q_stream_dedup, Sql(
-      """SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |  event_type, value
-        |FROM events ORDER BY event_id""".stripMargin)),
-    // the prequential z at row k IS the windowed (avg, stddev_samp) over
-    // rows 1..k−1 in (ts, value) order — an exact twin of scoreOnline's
-    // Welford replay (agree to ~2e-14, far inside round-6); sd is NULL
-    // below 2 prior rows, so the CASE's ELSE mirrors the n>=2 gate
-    Query("stream_score", q_stream_score, Sql(
-      """WITH s AS (SELECT event_type AS tag,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value,
-        |    count(*) OVER w AS cnt, avg(value) OVER w AS mu,
-        |    stddev_samp(value) OVER w AS sd
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT tag, ts_us, value,
-        |  round(CASE WHEN cnt >= 2 AND sd > 0 THEN (value - mu) / sd
-        |    ELSE 0.0 END, 6) AS z,
-        |  (CASE WHEN cnt >= 2 AND sd > 0 THEN abs((value - mu) / sd)
-        |    ELSE 0.0 END) > 3.0 AS anomalous
-        |FROM s ORDER BY tag, ts_us, value""".stripMargin)),
     // generated per-cell banded-DP chain — see dtwOracleSql's scaladoc
     Query("agg_dtw_profiles", q_agg_dtw_profiles, Sql(dtwOracleSql)),
-    // replays ewmaOnline's αx + (1−α)s association exactly — including
-    // (1.0 - 0.2) in place of a 0.8 literal (a different double)
-    Query("stream_ewma", q_stream_ewma, Sql(
-      s"""WITH $hourlyCentsCte,
-        |l AS (SELECT event_type,
-        |    list_transform(list(c ORDER BY bucket),
-        |      x -> CAST(x AS DOUBLE)) AS xs
-        |  FROM h GROUP BY 1)
-        |SELECT event_type, len(xs) AS n,
-        |  round(list_reduce(xs, (acc, x) -> 0.2 * x + (1.0 - 0.2) * acc), 6)
-        |    AS ewma
-        |FROM l ORDER BY 1""".stripMargin)),
     Query("agg_retention", q_agg_retention, Sql(
       """WITH e AS (SELECT DISTINCT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d FROM events),
@@ -7146,24 +6074,10 @@ object SparkEntry {
         |  CAST(coalesce(sum(gap), 0) AS BIGINT) AS missing,
         |  CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap
         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
-    // one row per detected outage — the replay of gapsOnline's emission
-    Query("stream_gap_detect", q_stream_gap_detect, Sql(
-      """WITH hb AS (SELECT DISTINCT event_type AS tag,
-        |    CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))
-        |      AS BIGINT) // 3600 AS hb
-        |  FROM events),
-        |g AS (SELECT tag, hb,
-        |    lag(hb) OVER (PARTITION BY tag ORDER BY hb) AS p
-        |  FROM hb)
-        |SELECT tag, p + 1 AS gap_start_hb, hb - p - 1 AS missing
-        |FROM g WHERE p IS NOT NULL AND hb > p + 1
-        |ORDER BY tag, gap_start_hb""".stripMargin)),
     Query("agg_transitions", q_agg_transitions, Sql(transitionsOracleSql)),
     Query("agg_markov_stationary", q_agg_markov_stationary, Sql(markovStationaryOracle)),
     Query("agg_basket_lift", q_agg_basket_lift, Sql(basketLiftOracle)),
     Query("text_textrank", q_text_textrank, Sql(textrankOracle)),
-    // ordered replay of the stateful feed ≡ the batch lag window
-    Query("stream_transitions", q_stream_transitions, Sql(transitionsOracleSql)),
     Query("agg_streaks", q_agg_streaks, Sql(
       """WITH ud AS (SELECT DISTINCT user_id,
         |    date_diff('day', DATE '1970-01-01',
@@ -7191,10 +6105,9 @@ object SparkEntry {
     // integer-cents sufficient sums (exact BIGINTs << 2^53) + ONE
     // mirrored IEEE Welch combination — bit-exact before the round
     Query("agg_ab_ttest", q_agg_ab_ttest, Sql(
-      """WITH c AS (SELECT event_type,
+      s"""WITH c AS (SELECT event_type,
         |    user_id % 2 = 0 AS isa,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |g AS (SELECT event_type,
         |    sum(CASE WHEN isa THEN 1 ELSE 0 END) AS na,
@@ -7334,9 +6247,8 @@ object SparkEntry {
         |FROM ud JOIN c USING (user_id)
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
     Query("agg_pareto", q_agg_pareto, Sql(
-      """WITH u AS (SELECT event_type, user_id,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS BIGINT) AS uc
+      s"""WITH u AS (SELECT event_type, user_id,
+        |    CAST(sum($valueCentsSql) AS BIGINT) AS uc
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         |r AS (SELECT event_type, user_id, uc,
         |    row_number() OVER w AS rnk,
@@ -7352,8 +6264,6 @@ object SparkEntry {
         |WHERE rnk = CAST(ceil(nu / 5.0) AS BIGINT)
         |ORDER BY event_type""".stripMargin)),
     Query("agg_funnel", q_agg_funnel, Sql(funnelOracleSql)),
-    // ordered stateful replay ≡ the batch min-chaining funnel
-    Query("stream_funnel", q_stream_funnel, Sql(funnelOracleSql)),
     Query("agg_window_funnel", q_agg_window_funnel, Sql(
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
@@ -7373,10 +6283,9 @@ object SparkEntry {
         |SELECT depth, count(*) AS users FROM d
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
     Query("agg_cohort_value", q_agg_cohort_value, Sql(
-      """WITH e AS (SELECT user_id,
+      s"""WITH e AS (SELECT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |coh AS (SELECT user_id, min(d) AS cohort FROM e GROUP BY 1)
         |SELECT cohort, date_diff('day', cohort, d) AS day_offset,
@@ -7517,29 +6426,6 @@ object SparkEntry {
          |  md5(array_to_string(list_sort(list_distinct(
          |    string_split_regex(lower(trim(text)), '\\s+'))), ' ')) AS fingerprint
          |FROM documents ORDER BY doc_id""".stripMargin)),
-    Query("stream_resample", q_stream_resample, Sql(
-      s"""SELECT $bucket10m AS bucket, event_type,
-         |  round(avg(value), 6) AS avg_value, count(*) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    Query("stream_session", q_stream_session, Sql(
-      """WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) t FROM events),
-        |m AS (SELECT user_id, t,
-        |        -- session_window merges only when the next event is
-        |        -- STRICTLY inside [prev, prev+gap): new session at >= gap
-        |        CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |               >= INTERVAL 30 MINUTE OR
-        |             lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
-        |        THEN 1 ELSE 0 END AS new_s
-        |      FROM o),
-        |s AS (SELECT user_id, t,
-        |        sum(new_s) OVER (PARTITION BY user_id ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM m)
-        |SELECT min(t) AS session_start,
-        |  max(t) + INTERVAL 30 MINUTE AS session_end,
-        |  user_id, count(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin)),
     Query("text_langid_trained", q_text_langid_trained, Sql(
       s"""WITH $langidGramCtes,
          |-- CAST: sum(BIGINT) is HUGEINT → float64 in Python → driver hash
@@ -7705,66 +6591,6 @@ object SparkEntry {
          |      FROM cc c JOIN bs b USING (s) GROUP BY 1, 2)
          |SELECT doc_id, bench_id, CAST(shared AS BIGINT) AS shared
          |FROM m WHERE shared >= 3 ORDER BY doc_id, bench_id""".stripMargin)),
-    // Streaming CUSUM (batch replay): the same decimal-exact closed form,
-    // keyed by tag and ordered by (ts, value) — the processing order the
-    // stateful operator sorts each group by. Exact (tag, ts, value)
-    // duplicates yield the same output multiset under either order; BOTH
-    // cusum columns join the final sort (either side alone can stay
-    // clamped at 0 across a duplicate pair — not a total order).
-    Query("stream_cusum", q_stream_cusum, Sql(
-      """WITH e AS (SELECT event_type AS tag, CAST(ts AS TIMESTAMP) AS ts, value,
-        |    CAST(value AS DECIMAL(18,6)) - CAST(55.0 AS DECIMAL(18,6)) AS dev_up,
-        |    CAST(45.0 AS DECIMAL(18,6)) - CAST(value AS DECIMAL(18,6)) AS dev_dn
-        |  FROM events),
-        |c AS (SELECT tag, ts, value,
-        |    sum(dev_up) OVER w AS cu, sum(dev_dn) OVER w AS cd
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY tag ORDER BY ts, value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT tag, ts, value,
-        |    cu - least(CAST(0 AS DECIMAL(18,6)), min(cu) OVER w) AS up,
-        |    cd - least(CAST(0 AS DECIMAL(18,6)), min(cd) OVER w) AS dn
-        |  FROM c
-        |  WINDOW w AS (PARTITION BY tag ORDER BY ts, value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT tag, ts, value,
-        |  round(CAST(up AS DOUBLE), 6) AS cusum_up,
-        |  round(CAST(dn AS DOUBLE), 6) AS cusum_dn,
-        |  CAST(up > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_up,
-        |  CAST(dn > CAST(200.0 AS DECIMAL(18,6)) AS INT) AS alarm_dn
-        |FROM m ORDER BY tag, ts, value, cusum_up, cusum_dn""".stripMargin)),
-    // Streaming autocorrelation (batch replay): same integer stats keyed
-    // by tag and ordered by (ts, value) — the stateful operator's
-    // processing order. autocorr joins the sort key (NULLS FIRST on both
-    // engines) to pin exact-duplicate readings' outputs.
-    Query("stream_autocorr", q_stream_autocorr, Sql(
-      """WITH e AS (SELECT event_type AS tag, CAST(ts AS TIMESTAMP) AS ts, value,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS kx
-        |  FROM events),
-        |l AS (SELECT tag, ts, value, kx,
-        |    lag(kx) OVER (PARTITION BY tag ORDER BY ts, value) AS ky
-        |  FROM e),
-        |s AS (SELECT tag, ts, value,
-        |    CAST(count(ky) OVER w AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN ky IS NOT NULL THEN kx END) OVER w AS BIGINT) AS sx,
-        |    CAST(sum(ky) OVER w AS BIGINT) AS sy,
-        |    CAST(sum(kx * ky) OVER w AS BIGINT) AS sxy,
-        |    CAST(sum(CASE WHEN ky IS NOT NULL THEN kx * kx END) OVER w AS BIGINT) AS sxx,
-        |    CAST(sum(ky * ky) OVER w AS BIGINT) AS syy
-        |  FROM l
-        |  WINDOW w AS (PARTITION BY tag ORDER BY ts, value
-        |    ROWS BETWEEN 11 PRECEDING AND CURRENT ROW))
-        |SELECT tag, ts, value,
-        |  CASE WHEN n >= 2 THEN
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / sqrt(NULLIF(
-        |        (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0))
-        |  END AS autocorr
-        |FROM s ORDER BY tag, ts, value, autocorr NULLS FIRST""".stripMargin)),
     Query("agg_robust_zscore", q_agg_robust_zscore, Sql(
       """WITH o AS (SELECT event_id, event_type, value FROM events),
         |med AS (SELECT event_type, quantile_cont(value, 0.5) AS med
@@ -7795,10 +6621,9 @@ object SparkEntry {
         |  round(CAST(n_unique AS DOUBLE) / n_shingles, 6) AS novelty
         |FROM g ORDER BY doc_id""".stripMargin)),
     Query("agg_growth_rate", q_agg_growth_rate, Sql(
-      """WITH wk AS (SELECT event_type,
+      s"""WITH wk AS (SELECT event_type,
         |    date_trunc('week', CAST(ts AS TIMESTAMP)) AS week,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS BIGINT) AS total_cents,
+        |    CAST(sum($valueCentsSql) AS BIGINT) AS total_cents,
         |    count(*) AS n
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         |l AS (SELECT event_type, week, n, total_cents,
@@ -8055,21 +6880,7 @@ object SparkEntry {
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the merge algebra (anti-join ∪ updates) derived independently in
     // SQL; the Spark side aggregates the PERSISTED merged files
-    Query("sink_upsert", q_sink_upsert, Sql(
-      """WITH upd AS (
-        |  SELECT event_id, event_type, value + 1000 AS value
-        |  FROM events WHERE event_id % 7 = 0
-        |  UNION ALL
-        |  SELECT event_id + 1000000 AS event_id, 'backfill' AS event_type, value
-        |  FROM events WHERE event_id % 97 = 0),
-        |merged AS (
-        |  SELECT event_id, event_type, value FROM events
-        |  WHERE event_id NOT IN (SELECT event_id FROM upd)
-        |  UNION ALL SELECT event_id, event_type, value FROM upd)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("sink_upsert", q_sink_upsert, Sql(upsertOracleSql)),
     // fixed-point micro-unit mirror (see q_win_seasonal_decompose): every
     // output is one exact integer / the same exact small doubles
     Query("agg_session_stats", q_agg_session_stats, Sql(
@@ -8111,10 +6922,9 @@ object SparkEntry {
         |FROM pd LEFT JOIN nk ON nk.day = pd.day
         |ORDER BY pd.day""".stripMargin)),
     Query("agg_effect_size", q_agg_effect_size, Sql(
-      """WITH c AS (SELECT event_type,
+      s"""WITH c AS (SELECT event_type,
         |    user_id % 2 = 0 AS isa,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |g AS (SELECT event_type,
         |    CAST(sum(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS na,
@@ -8135,9 +6945,9 @@ object SparkEntry {
     // centi-unit BIGINTs (DECIMAL(18,2) HALF_UP), variances from
     // n·Σq² − (Σq)² (all products ≪ 2^53), one mirrored IEEE division
     Query("agg_seasonal_strength", q_agg_seasonal_strength, Sql(
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
+        |    $microSumSql AS s_micro,
         |    count(*) AS n
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
@@ -8214,34 +7024,17 @@ object SparkEntry {
         |    / NULLIF(CAST(n * sqq - sq * sq AS DOUBLE)
         |      * CAST(n * sff - sf * sf AS DOUBLE), 0), 6) AS r2
         |FROM g ORDER BY lang""".stripMargin)),
-    // each event contributes to its FOUR window starts — replicate-then-
-    // aggregate (the WAU trick in time-window form); v6 = exact integer
-    // micro mean, so the streamed sliding windows hash-match
-    Query("stream_sliding", q_stream_sliding, Sql(
-      """WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS t, value
-        |  FROM events WHERE value IS NOT NULL),
-        |ks AS (SELECT unnest(range(0, 4)) AS k),
-        |r AS (SELECT event_type, value,
-        |    time_bucket(INTERVAL '15 minutes', t)
-        |      - k * INTERVAL '15 minutes' AS wstart
-        |  FROM e CROSS JOIN ks)
-        |SELECT wstart, event_type,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |    // count(*) AS v6,
-        |  count(*) AS n
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     Query("agg_hod_profile", q_agg_hod_profile, Sql(
-      """SELECT event_type,
+      s"""SELECT event_type,
         |  dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS dow,
         |  hour(CAST(ts AS TIMESTAMP)) AS hod, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |  CAST($microSumSql
         |    // count(*) AS DOUBLE) / 1000000.0 AS mean_v
         |FROM events WHERE value IS NOT NULL
         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
     Query("agg_benford", q_agg_benford, Sql(
-      """WITH e AS (SELECT event_type,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH e AS (SELECT event_type,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |d AS (SELECT event_type,
         |    CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INT) AS digit
@@ -8254,11 +7047,10 @@ object SparkEntry {
         |FROM g JOIN n USING (event_type)
         |ORDER BY event_type, digit""".stripMargin)),
     Query("agg_rfm", q_agg_rfm, Sql(
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
         |    max(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |    count(*) AS freq,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS BIGINT) AS monetary
+        |    CAST(sum($valueCentsSql) AS BIGINT) AS monetary
         |  FROM events WHERE value IS NOT NULL GROUP BY 1),
         |t AS (SELECT
         |    quantile_cont(last_us, 0.2) AS r_20, quantile_cont(last_us, 0.4) AS r_40,
@@ -8302,12 +7094,11 @@ object SparkEntry {
         |    AS seasonal_vs_naive
         |FROM g ORDER BY event_type""".stripMargin)),
     Query("agg_interval_union", q_agg_interval_union, Sql(
-      """WITH iv AS (SELECT user_id,
+      s"""WITH iv AS (SELECT user_id,
         |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS st, event_id,
         |    epoch_us(CAST(ts AS TIMESTAMP))
-        |      + (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |        // 10000) * 10000 AS en
+        |      + ($valueCentsSql) * 10000 AS en
         |  FROM events WHERE value IS NOT NULL),
         |r AS (SELECT user_id, day, st, en, event_id,
         |    max(en) OVER (PARTITION BY user_id, day
@@ -8329,9 +7120,8 @@ object SparkEntry {
         |  CAST(sum(is_en - is_st) AS BIGINT) AS covered_us
         |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     Query("agg_value_histogram", q_agg_value_histogram, Sql(
-      """WITH e AS (SELECT event_type,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH e AS (SELECT event_type,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |ext AS (SELECT event_type, min(c) AS lo, max(c) AS hi,
         |    count(*) AS n FROM e GROUP BY 1),
@@ -8390,9 +7180,8 @@ object SparkEntry {
         |FROM r WHERE rn = 1
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
     Query("agg_gini", q_agg_gini, Sql(
-      """WITH e AS (SELECT event_type,
-        |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      // 10000) AS c
+      s"""WITH e AS (SELECT event_type,
+        |    ($valueCentsSql) AS c
         |  FROM events WHERE value IS NOT NULL),
         |r AS (SELECT event_type, c,
         |    row_number() OVER (PARTITION BY event_type ORDER BY c) AS i
@@ -8403,45 +7192,6 @@ object SparkEntry {
         |  round(CAST(2 * si - (n + 1) * sx AS DOUBLE)
         |    / NULLIF(CAST(n * sx AS DOUBLE), 0), 6) AS gini
         |FROM g ORDER BY event_type""".stripMargin)),
-    // frozen-covariance scoring of the streamed second half — the whole
-    // stream path (readStream → stateful agg → align → d²) hash-checked
-    Query("stream_mahalanobis", q_stream_mahalanobis, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    (CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*)) // 10000 AS c
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1, 2),
-        |wide AS (
-        |  SELECT bucket,
-        |    max(CASE WHEN event_type = 'click' THEN c END) AS x,
-        |    max(CASE WHEN event_type = 'view' THEN c END) AS y
-        |  FROM h GROUP BY 1
-        |  HAVING max(CASE WHEN event_type = 'click' THEN c END) IS NOT NULL
-        |     AND max(CASE WHEN event_type = 'view' THEN c END) IS NOT NULL),
-        |st AS (SELECT count(*) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(y * y) AS BIGINT) AS syy,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy
-        |  FROM wide WHERE bucket < TIMESTAMP '2024-01-16 00:00:00'),
-        |m AS (SELECT bucket, x, y, n,
-        |    CAST(n * x - sx AS DOUBLE) AS ax,
-        |    CAST(n * y - sy AS DOUBLE) AS ay,
-        |    CAST(n * sxx - sx * sx AS DOUBLE) AS vxx,
-        |    CAST(n * syy - sy * sy AS DOUBLE) AS vyy,
-        |    CAST(n * sxy - sx * sy AS DOUBLE) AS vxy
-        |  FROM wide CROSS JOIN st
-        |  WHERE bucket >= TIMESTAMP '2024-01-16 00:00:00'),
-        |d AS (SELECT bucket, x, y,
-        |    CAST(n - 1 AS DOUBLE)
-        |      * (ax * ax * vyy - ax * ay * vxy * 2.0 + ay * ay * vxx)
-        |      / NULLIF(CAST(n AS DOUBLE) * (vxx * vyy - vxy * vxy), 0) AS d2u
-        |  FROM m)
-        |SELECT bucket, x AS c_click, y AS c_view, round(d2u, 6) AS d2,
-        |  CASE WHEN d2u > 9.21 THEN 1 ELSE 0 END AS outlier
-        |FROM d ORDER BY bucket""".stripMargin)),
     // all integers until the final tau division — bit-exact, unrounded
     Query("agg_trend_mk", q_agg_trend_mk, Sql(
       s"""WITH $hourlyCentsCte,
@@ -8474,25 +7224,6 @@ object SparkEntry {
         |WHERE CAST(CAST(ts AS TIMESTAMP) AS DATE) >= DATE '2024-01-08'
         |  AND CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '2024-01-15'
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    // frozen hour-of-day profile from cohort A; live buckets scored
-    // against it — exact integer micro-units, unrounded outputs
-    Query("stream_seasonal", q_stream_seasonal, Sql(
-      """WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS t, value
-        |     FROM events WHERE value IS NOT NULL),
-        |p AS (SELECT event_type, hour(t) AS hod,
-        |        CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          // count(*) AS p6
-        |      FROM e WHERE t < TIMESTAMP '2024-01-16 00:00:00' GROUP BY 1, 2),
-        |l AS (SELECT event_type, date_trunc('hour', t) AS bucket,
-        |        CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          // count(*) AS v6
-        |      FROM e WHERE t >= TIMESTAMP '2024-01-16 00:00:00' GROUP BY 1, 2)
-        |SELECT l.event_type, bucket,
-        |  CAST(v6 AS DOUBLE) / 1000000.0 AS v,
-        |  CAST(p6 AS DOUBLE) / 1000000.0 AS expected,
-        |  CAST(v6 - p6 AS DOUBLE) / 1000000.0 AS resid
-        |FROM l JOIN p ON l.event_type = p.event_type AND hour(bucket) = p.hod
-        |ORDER BY 1, 2""".stripMargin)),
     // smooth idf (sklearn form); rank over (rounded score, term) — total
     Query("text_tfidf", q_text_tfidf, Sql(
       """WITH toks AS (
@@ -8510,17 +7241,7 @@ object SparkEntry {
         |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin)),
     // open/close picked through the total-order struct (t, id, v) — both
     // engines compare structs lexicographically, so ties resolve identically
-    Query("agg_resample_ohlc", q_agg_resample_ohlc, Sql(
-      """WITH e AS (SELECT event_type,
-        |       date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |       CAST(ts AS TIMESTAMP) AS t, event_id, value
-        |     FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, bucket,
-        |  min({'t': t, 'id': event_id, 'v': value}).v AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max({'t': t, 'id': event_id, 'v': value}).v AS close,
-        |  count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("agg_resample_ohlc", q_agg_resample_ohlc, Sql(ohlcOracleSql)),
     // integer counts into ln; PSI's portable-ln discipline, round(6)
     Query("agg_entropy", q_agg_entropy, Sql(
       """WITH u AS (SELECT event_type, user_id, count(*) AS nu
@@ -8625,85 +7346,15 @@ object SparkEntry {
         |SELECT event_type, round(quantile_cont(slope, 0.5), 6) AS sen_slope,
         |  count(*) AS n_pairs
         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin)),
-    // the streamed candles must equal the batch candles exactly
-    Query("stream_ohlc", q_stream_ohlc, Sql(
-      """WITH e AS (SELECT event_type,
-        |       date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |       CAST(ts AS TIMESTAMP) AS t, event_id, value
-        |     FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, bucket,
-        |  min({'t': t, 'id': event_id, 'v': value}).v AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max({'t': t, 'id': event_id, 'v': value}).v AS close,
-        |  count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    // p50_ok/p95_ok TRUE = the streamed t-digest estimates sit inside
-    // their order-statistic brackets (q_stream_tdigest scaladoc); n and
-    // the exact percentiles are SQL-recomputed, so a broken streaming
-    // agg or sketch hash-fails the row.
-    Query("stream_tdigest", q_stream_tdigest, Sql(
-      """SELECT event_type,
-        |  date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |  count(*) AS n,
-        |  round(quantile_cont(value, 0.5), 6) AS p50_exact,
-        |  round(quantile_cont(value, 0.95), 6) AS p95_exact,
-        |  TRUE AS p50_ok, TRUE AS p95_ok
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-    // rank_ok TRUE = the streamed t-digest p99's order-statistic bracket
-    // (q_stream_threshold scaladoc)
-    Query("stream_threshold", q_stream_threshold, Sql(
-      """SELECT event_type, count(*) AS n,
-        |  round(quantile_cont(value, 0.99), 6) AS thr_p99_exact,
-        |  TRUE AS rank_ok
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    // the streamed as-of must equal the batch as-of — join_asof's oracle
-    Query("stream_asof", q_stream_asof, Sql(
-      """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) t, value
-        |           FROM events WHERE event_type = 'click'),
-        |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) t, avg(value) AS vv
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.value, round(r.vv, 6) AS asof_view
-        |FROM l ASOF JOIN r ON l.user_id = r.user_id AND l.t >= r.t
-        |ORDER BY event_id""".stripMargin)),
-    // the FULL Kalman recursion replayed as a list_reduce fold — every
-    // float op mirrors Streams.kalmanOnline verbatim (association
-    // included); state = [level, P, K]; unrounded by construction
-    Query("stream_kalman", q_stream_kalman, Sql(
-      """WITH h AS (
-        |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      // count(*) AS v6
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |ser AS (SELECT event_type,
-        |    list(CAST(v6 AS DOUBLE) / 1000000.0 ORDER BY bucket) AS ys
-        |  FROM h GROUP BY 1),
-        |fin AS (SELECT event_type, len(ys) AS n,
-        |    list_reduce(
-        |      [[ys[1], 10.0, 0.0]] ||
-        |        list_transform(ys[2:CAST(len(ys) AS INTEGER)],
-        |          y -> [y, 0.0, 0.0]),
-        |      (acc, x) -> [
-        |        acc[1] + (acc[2] + 1.0) / (acc[2] + 1.0 + 10.0)
-        |          * (x[1] - acc[1]),
-        |        (1.0 - (acc[2] + 1.0) / (acc[2] + 1.0 + 10.0))
-        |          * (acc[2] + 1.0),
-        |        (acc[2] + 1.0) / (acc[2] + 1.0 + 10.0)
-        |      ]) AS st
-        |  FROM ser)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  st[1] AS level, st[2] AS p, st[3] AS k
-        |FROM fin ORDER BY event_type""".stripMargin)),
     // the FULL Holt-Winters recursion replayed as a list_reduce fold —
     // every float op mirrors HoltWinters.smooth verbatim (literals,
     // association, the (1 - 0.3)-is-not-0.7 trap), state = 27-double list
     // [t, level, trend, s0..s23]; input is the fixed-point hourly mean.
     // Unrounded output: the doubles are bit-identical by construction.
     Query("ml_holt_winters", q_ml_holt_winters, Sql(
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |    $microSumSql
         |      // count(*) AS v6
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         |ser AS (SELECT event_type,
@@ -8758,47 +7409,6 @@ object SparkEntry {
         |SELECT doc_id, CAST(sum_df AS DOUBLE) / n AS mean_df,
         |  CAST(n AS DOUBLE) / sum_df AS weight
         |FROM d ORDER BY doc_id""".stripMargin)),
-    // the streamed CDC apply must land on the SAME final state as the
-    // one-shot batch merge — sink_upsert's oracle, verbatim
-    Query("stream_upsert", q_stream_upsert, Sql(
-      """WITH upd AS (
-        |  SELECT event_id, event_type, value + 1000 AS value
-        |  FROM events WHERE event_id % 7 = 0
-        |  UNION ALL
-        |  SELECT event_id + 1000000 AS event_id, 'backfill' AS event_type, value
-        |  FROM events WHERE event_id % 97 = 0),
-        |merged AS (
-        |  SELECT event_id, event_type, value FROM events
-        |  WHERE event_id NOT IN (SELECT event_id FROM upd)
-        |  UNION ALL SELECT event_id, event_type, value FROM upd)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin)),
-    // frozen-reference-edge KS (bin ranges from cohort A only, live values
-    // clamped into the end bins) — the streaming monitor's exact semantic
-    Query("stream_drift", q_stream_drift, Sql(
-      """WITH e AS (SELECT event_type, value,
-        |       CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-16 00:00:00' AS is_a
-        |     FROM events WHERE value IS NOT NULL AND isfinite(value)),
-        |r AS (SELECT event_type, min(value) AS mn, max(value) AS mx
-        |      FROM e WHERE is_a GROUP BY 1),
-        |bb AS (SELECT e.event_type, is_a,
-        |         greatest(least(CAST(floor((value - mn) / ((mx - mn) / 100))
-        |           AS BIGINT), 99), 0) AS bin
-        |       FROM e JOIN r USING (event_type)),
-        |c AS (SELECT event_type, bin,
-        |        count(*) FILTER (WHERE is_a) AS na,
-        |        count(*) FILTER (WHERE NOT is_a) AS nb
-        |      FROM bb GROUP BY 1, 2),
-        |cum AS (SELECT event_type, bin,
-        |          CAST(sum(na) OVER pk AS DOUBLE) / sum(na) OVER pt AS fa,
-        |          CAST(sum(nb) OVER pk AS DOUBLE) / sum(nb) OVER pt AS fb
-        |        FROM c
-        |        WINDOW pk AS (PARTITION BY event_type ORDER BY bin),
-        |               pt AS (PARTITION BY event_type))
-        |SELECT event_type, round(max(abs(fa - fb)), 6) AS ks
-        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin)),
     // the run-time-published entries (fitted-params / persisted-artifact
     // oracles): each query builds its own SQL at execution time via
     // publishOracle — no shared mutable state, no run-order coupling
@@ -8818,7 +7428,8 @@ object SparkEntry {
 
   /** Every declared query: this file's table, then each family file's. */
   val declared: Seq[Query] =
-    entryQueries ++ SimilarityGraph.queries ++ Windows.queries ++ Deduplication.queries
+    entryQueries ++ SimilarityGraph.queries ++ Windows.queries ++ Deduplication.queries ++
+      Streaming.queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Query.builds(declared)
 

@@ -455,7 +455,7 @@ object Dedup {
     // contract (every consumer reads the cached blocks) but folds the
     // materialization into the FIRST consuming job instead of a dedicated
     // job + driver gap per frame — the step ran ~6 such launch-bound jobs
-    // at fixture scale (JobTrace).
+    // at fixture scale (`Probe trace`).
     val stats = mergeShingleStats(state.stats,
       shingleStats(newDocs, idCol, textCol, shingleN)).localCheckpoint(false)
     val hot = hotList(stats, maxDocFreq).localCheckpoint(false)

@@ -62,7 +62,7 @@ object Similarity {
     */
   def cosinePairs(vecs: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
     // Pin the streamed side's width BEFORE the non-equi join (round 15 —
-    // the fuzzyPairs/duplicatedSpans lesson, found by JobTrace: the
+    // the fuzzyPairs/duplicatedSpans lesson, found by `Probe trace`: the
     // whole O(n²/2) dot-product pass ran as ONE task because the join is
     // a BroadcastNestedLoop whose streamed side is a single-file scan).
     // One narrow exchange of n vector rows buys join-parallel compute;

@@ -478,9 +478,9 @@ object Windows {
       .orderBy("event_type", "bucket")
 
   private def seasonalDecomposeOracle: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
+      |    $microSumSql AS s_micro,
       |    count(*) AS n
       |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
       |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
@@ -524,9 +524,9 @@ object Windows {
   }
 
   private def seasonalOutliersOracle: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS s_micro,
+      |    $microSumSql AS s_micro,
       |    count(*) AS n
       |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
       |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
@@ -620,19 +620,16 @@ object Windows {
     * (rank−1)/(n−1) is one division — identical, but defensive.
     */
   private def q_win_percent_rank(s: SparkSession, dir: String): DataFrame = {
-    val cents = expr(
-      "cast(cast(value as decimal(18,6)) * 1000000 as bigint) div 10000")
     E(s, dir).filter(col("value").isNotNull)
-      .select(col("event_id"), col("event_type"), cents.as("c"))
+      .select(col("event_id"), col("event_type"), valueCents.as("c"))
       .withColumn("pr", round(percent_rank().over(
         Window.partitionBy("event_type").orderBy("c")), 6))
       .orderBy("event_id")
   }
 
   private def percentRankOracle: String =
-    """WITH e AS (SELECT event_id, event_type,
-      |    (CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-      |      // 10000) AS c
+    s"""WITH e AS (SELECT event_id, event_type,
+      |    ($valueCentsSql) AS c
       |  FROM events WHERE value IS NOT NULL)
       |SELECT event_id, event_type, c,
       |  round(percent_rank() OVER (PARTITION BY event_type ORDER BY c), 6)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 /** Streaming checkpoint manager for LOCAL file: paths backed by java.nio
   * directly — no Hadoop `LocalFileSystem` in the write path.
   *
-  * Why it exists (measured with the JobTrace stack sampler, round 12):
+  * Why it exists (measured with the `Probe trace` stack sampler, round 12):
   * this sandbox has no native Hadoop library, so every checkpoint file
   * the default manager creates — offsets, commits, and ONE STATE DELTA
   * PER STORE PER BATCH — goes through `RawLocalFileSystem.setPermission`,

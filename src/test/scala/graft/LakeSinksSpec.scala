@@ -11,7 +11,7 @@ class LakeSinksSpec extends SparkSpec {
 
   test("sink_compact lays out size-targeted files with disjoint ts ranges") {
     SparkEntry.queries("sink_compact")(spark, "/root/testdata/sf0.001").count()
-    val root = SparkEntry.compactRoot(spark, "/root/testdata/sf0.001")
+    val root = graft.queries.Common.compactRoot(spark, "/root/testdata/sf0.001")
     val perFile = spark.read.parquet(root)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
@@ -56,7 +56,7 @@ class LakeSinksSpec extends SparkSpec {
     // ...while the ts-sorted compaction of the SAME data leaves every
     // file spanning ~the whole user domain — the pruning z-order buys
     SparkEntry.queries("sink_compact")(spark, "/root/testdata/sf0.001").count()
-    val sorted = spans(SparkEntry.compactRoot(spark, "/root/testdata/sf0.001"))
+    val sorted = spans(graft.queries.Common.compactRoot(spark, "/root/testdata/sf0.001"))
     val avgSortedUid = sorted.map(_._2).sum / sorted.size
     assert(avgUid < 0.75 * avgSortedUid,
       s"z-order avg uid span ($avgUid) not clearly better than ts-sorted ($avgSortedUid)")

@@ -19,10 +19,10 @@ class RegistryFingerprintSpec extends SparkSpec {
           timestamp_micros(lit(1609459200000000L) + col("id") * 1000000L).as("ts"))
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
     gen(10)
-    val before = SparkEntry.compactRoot(spark, dir)
+    val before = graft.queries.Common.compactRoot(spark, dir)
     Thread.sleep(5) // mtime tick — regeneration is never same-millisecond
     gen(12)
-    val after = SparkEntry.compactRoot(spark, dir)
+    val after = graft.queries.Common.compactRoot(spark, dir)
     assert(before != after,
       "compact registry key ignored the fixture regeneration — stale artifact risk")
   }

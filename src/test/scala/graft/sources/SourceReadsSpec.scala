@@ -39,7 +39,6 @@ class SourceReadsSpec extends AnyFunSuite {
     "basePath" -> "incremental kNN state",
     "s\"$statePath/hashes\"" -> "incremental phash state",
     "s\"$statePath/pairs\"" -> "incremental phash state",
-    "updatesDir" -> "stream_upsert's CDC spool",
     "table" -> "stream_upsert's table, rewritten by every micro-batch")
 
   test("SparkEntry reads parquet sources only through the resolver") {
@@ -53,7 +52,7 @@ class SourceReadsSpec extends AnyFunSuite {
       "scan found no reads at all — regex drift?")
     val fixture = reads.map(_._1).filter(_.startsWith("s\"$dir/"))
     assert(fixture.isEmpty, s"fixture tables read around the resolver: $fixture")
-    val schemaOnly = reads.collect { case (arg, true) if arg != "updatesDir" => arg }
+    val schemaOnly = reads.collect { case (arg, true) => arg }
     assert(schemaOnly.isEmpty,
       s"read.parquet(…).schema infers a schema per call; resolve instead: $schemaOnly")
     val unnamed = reads.map(_._1).filterNot(exempt.contains)
