@@ -899,17 +899,20 @@ object Dedup {
       path: String): Boolean =
     graft.Artifacts.committed(spark, path, shingleIndexParts: _*)
 
+  /** The committed index at `path`, each part resolved through
+    * [[graft.sources.Tables.resolve]]: a second serve of the same index
+    * runs no schema-inference job.
+    */
   def loadShingleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): ShingleIndex = {
     // pairs are optional on disk (pre-v3 artifacts; indexes past the
     // pair-economics guard) — absence serves by the prefix filter, never
     // an error; meta/ is only the commit marker, never read here
+    def part(name: String) = graft.sources.Tables.resolve(spark, s"$path/$name")
     val ps =
-      if (graft.Artifacts.committed(spark, path, "pairs"))
-        Some(spark.read.parquet(s"$path/pairs"))
+      if (graft.Artifacts.committed(spark, path, "pairs")) Some(part("pairs"))
       else None
-    ShingleIndex(spark.read.parquet(s"$path/groups"),
-      spark.read.parquet(s"$path/docs"), ps)
+    ShingleIndex(part("groups"), part("docs"), ps)
   }
 
   /** O(delta + affected) index maintenance — the daily-crawl step. New

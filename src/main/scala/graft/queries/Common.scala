@@ -127,6 +127,21 @@ object Common {
     hourlyMicroMeans(events)
       .select(col("event_type"), col("bucket"), expr("(s_micro div n) div 10000").as("c"))
 
+  /** The oracle CTEs `h(event_type, bucket, v6)`, the hourly micro-mean
+    * of [[hourlyMicroMeans]], and `ser(event_type, ys)`, each stream's
+    * hourly means (v6 ÷ 10⁶) as one bucket-ordered DOUBLE list — the
+    * input of the list-fold oracles (Holt-Winters, Kalman).
+    */
+  private[graft] val hourlyMeanListCtes: String =
+    s"""h AS (
+      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
+      |    $microSumSql
+      |      // count(*) AS v6
+      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      |ser AS (SELECT event_type,
+      |    list(CAST(v6 AS DOUBLE) / 1000000.0 ORDER BY bucket) AS ys
+      |  FROM h GROUP BY 1)""".stripMargin
+
   /** The hourly integer-cents series `h(event_type, bucket, c)` as one
     * oracle CTE: the mean `value` per (event_type, hour), the micro-sum
     * `//` the row count `//` 10000. The SQL twin of [[hourlyCentsLong]],
@@ -157,6 +172,70 @@ object Common {
         corrTypes.tail.map(t =>
           max(when(col("event_type") === t, col("c"))).as(s"c_$t")): _*)
   }
+
+  /** Bivariate MAHALANOBIS anomaly score per hourly bucket over the
+    * aligned (click, view) cents-mean pair of [[hourlyCentsWide]]:
+    * `(bucket, c_click, c_view, d2, outlier)`, the `agg_mahalanobis`
+    * result and one leg of the model ensemble. The MULTIVARIATE upgrade
+    * of the per-stream z-score family: a bucket where both streams are
+    * individually in-range but their JOINT position violates the
+    * correlation structure scores high. Exactness: the 2×2 covariance
+    * has a closed-form inverse, so
+    * d² = (n−1)·(ax²·Vyy − 2·ax·ay·Vxy + ay²·Vxx) / (n·det V) with
+    * ax = n·x − Sx (n-scaled deviation) and V = n·S₂ − S₁² — every
+    * input an exact BIGINT (magnitudes ≤ ~1e14 ≪ 2⁵³), then ONE
+    * verbatim-mirrored IEEE combination; outlier flag compares the
+    * UNROUNDED d² against χ²₂(0.99) = 9.21. One resample shuffle + a
+    * broadcast 1-row stats frame; nothing scales past |buckets|.
+    */
+  private[graft] def mahalanobisD2(s: SparkSession, dir: String): DataFrame = {
+    val wide = hourlyCentsWide(s, dir)
+      .select(col("bucket"), col("c_click").as("x"), col("c_view").as("y"))
+      .filter(col("x").isNotNull && col("y").isNotNull)
+    val stats = wide.agg(count(lit(1)).as("n"),
+      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+      sum(col("x") * col("x")).as("sxx"),
+      sum(col("y") * col("y")).as("syy"),
+      sum(col("x") * col("y")).as("sxy"))
+    val j = wide.crossJoin(broadcast(stats))
+    val ax = (col("n") * col("x") - col("sx")).cast("double")
+    val ay = (col("n") * col("y") - col("sy")).cast("double")
+    val vxx = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
+    val vyy = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
+    val vxy = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+    val q = ax * ax * vyy - ax * ay * vxy * lit(2.0) + ay * ay * vxx
+    val d2u = (col("n") - 1).cast("double") * q /
+      nullif(col("n").cast("double") * (vxx * vyy - vxy * vxy), lit(0.0))
+    j.select(col("bucket"), col("x").as("c_click"), col("y").as("c_view"),
+        round(d2u, 6).as("d2"),
+        when(d2u > 9.21, 1).otherwise(0).as("outlier"))
+      .orderBy("bucket")
+  }
+
+  /** The three streams of the hourly wide frame, in column order. */
+  private[graft] val hourlyTags = Seq("click", "view", "purchase")
+
+  /** The hourly wide frame `(bucket, click, view, purchase)`: the mean
+    * `value` of each of [[hourlyTags]] per hour, buckets missing any of
+    * them dropped (the default of [[graft.ops.Timeseries.align]]). The
+    * Scala twin of [[wide1h]], which keeps those buckets for the oracle
+    * to filter.
+    */
+  private[graft] def hourlyWide(s: SparkSession, dir: String): DataFrame =
+    Timeseries.align(E(s, dir), "ts", "event_type", "value", hourlyTags, "1 hour")
+
+  /** The oracle's hour bucket of `ts`. */
+  private val bucket1h = "time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))"
+
+  /** The oracle form of [[hourlyWide]], incomplete buckets kept (a null
+    * mean): a SELECT to wrap as a CTE body.
+    */
+  private[graft] val wide1h =
+    s"""SELECT $bucket1h AS bucket,
+       |  avg(CASE WHEN event_type = 'click' THEN value END) AS click,
+       |  avg(CASE WHEN event_type = 'view' THEN value END) AS view,
+       |  avg(CASE WHEN event_type = 'purchase' THEN value END) AS purchase
+       |FROM events GROUP BY 1""".stripMargin
 
   /** 10-min resample in LONG format (bucket, event_type, v) — the keyed
     * layout gap filling needs to window per tag instead of globally.
@@ -189,6 +268,24 @@ object Common {
     t.withColumn("s_sum", sum(col("detr25")).over(pw))
       .withColumn("cnt", count(lit(1)).over(pw))
   }
+
+  /** The oracle twin of [[seasonalGrid]]: the CTE chain `h`, `v`, `t`,
+    * `f` ending in `g(event_type, bucket, v6, sum25, detr25, s_sum, cnt)`.
+    */
+  private[graft] val seasonalGridCtes: String =
+    s"""h AS (
+      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
+      |    $microSumSql AS s_micro,
+      |    count(*) AS n
+      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+      |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
+      |t AS (SELECT *, count(*) OVER w AS wn, sum(v6) OVER w AS sum25
+      |      FROM v WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+      |        ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+      |f AS (SELECT event_type, bucket, v6, sum25, v6 * 25 - sum25 AS detr25
+      |      FROM t WHERE wn = 25),
+      |g AS (SELECT *, sum(detr25) OVER pw AS s_sum, count(*) OVER pw AS cnt
+      |      FROM f WINDOW pw AS (PARTITION BY event_type, hour(bucket)))""".stripMargin
 
   /** Sequential double-fold list dot product — DuckDB's list_sum folds
     * left-to-right exactly like Spark's `aggregate`, so the doubles are
@@ -344,14 +441,35 @@ object Common {
         sum(col("n")).over(Window.partitionBy("prev_type")).cast("double"), 6))
       .orderBy("prev_type", "next_type")
 
-  /** The oracle twin of [[transitionMatrix]] over the batch lag pairs. */
-  private[graft] def transitionsOracleSql: String =
-    """WITH sq AS (SELECT user_id, event_type,
+  /** Each user's consecutive `(prev_type, next_type)` event pairs: a lag
+    * window over the user's events in (ts, event_id) order, the first
+    * event dropped. Shared by the transition matrix and the stationary
+    * distribution; the oracle form is [[transitionCountsCtes]].
+    */
+  private[graft] def transitionPairs(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    events
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      .filter(col("prev_type").isNotNull)
+      .select(col("prev_type"), col("event_type").as("next_type"))
+  }
+
+  /** The oracle CTEs `sq` (each event with its user's previous event
+    * type) and `c(prev_type, next_type, n)`, the count per
+    * [[transitionPairs]] pair.
+    */
+  private[graft] val transitionCountsCtes: String =
+    """sq AS (SELECT user_id, event_type,
       |    lag(event_type) OVER (PARTITION BY user_id
       |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_type
       |  FROM events),
       |c AS (SELECT prev_type, event_type AS next_type, count(*) AS n
-      |      FROM sq WHERE prev_type IS NOT NULL GROUP BY 1, 2)
+      |      FROM sq WHERE prev_type IS NOT NULL GROUP BY 1, 2)""".stripMargin
+
+  /** The oracle twin of [[transitionMatrix]] over the batch lag pairs. */
+  private[graft] def transitionsOracleSql: String =
+    s"""WITH $transitionCountsCtes
       |SELECT prev_type, next_type, n,
       |  round(CAST(n AS DOUBLE)
       |    / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
@@ -403,6 +521,15 @@ object Common {
     val h1 = conv(substring(hx, 1, 15), 16, 10).cast("long")
     val h2 = conv(substring(hx, 17, 15), 16, 10).cast("long")
     (h1 % 1200000L - 600000L, h2 % 3600000L - 1800000L)
+  }
+
+  /** Customer sites `(cust, lat_e4, lon_e4)` at their [[geoE4]]
+    * coordinates — shared by the geo joins and the density clustering.
+    */
+  private[graft] def custSites(s: SparkSession, dir: String): DataFrame = {
+    val (la, lo) = geoE4("c", col("c_custkey"))
+    T(s, dir, "customer").select(col("c_custkey").as("cust"),
+      la.as("lat_e4"), lo.as("lon_e4"))
   }
 
   /** Matching oracle-side SQL for [[geoE4]]. */

@@ -154,7 +154,7 @@ object SimilarityGraph {
 
   /** kNN-graph edge CTE chain (ends in `e(src, dst)`) — the exact
     * simsearch_knn_graph edge set, shared by the graph_cc /
-    * graph_degree oracles (pagerank/triangles inline the same text).
+    * graph_degree oracles (pagerank/triangles use [[knnRankCtes]]).
     */
   private def knnEdgeCtes(schedule: Seq[Int] = u8): String =
     s"""${lshBucketCtes(schedule, 64)},
@@ -177,6 +177,49 @@ object SimilarityGraph {
        |e AS (SELECT qid AS src, nid AS dst,
        |        1.0 - round(dot / sqrt(naa * nbb), 6) AS dist
        |      FROM rk0 WHERE rnk <= 3)""".stripMargin
+
+  /** The kNN-graph edges `e(src, dst)` — each vector's top 3 LSH
+    * candidates by cosine, ties by neighbor id — as the CTE chain shared
+    * by the pagerank and triangle oracles.
+    */
+  private def knnRankCtes(schedule: Seq[Int]): String =
+    s"""${lshBucketCtes(schedule, 64)},
+       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
+       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
+       |          AND a.vec_id <> b2.vec_id),
+       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
+       |sc AS (SELECT c.qid, c.nid,
+       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
+       |         na.nsq AS naa, nb.nsq AS nbb
+       |       FROM cand c
+       |       JOIN embeddings ea ON ea.vec_id = c.qid
+       |       JOIN embeddings eb ON eb.vec_id = c.nid
+       |       JOIN n0 na ON na.vec_id = c.qid
+       |       JOIN n0 nb ON nb.vec_id = c.nid),
+       |r AS (SELECT qid, nid,
+       |        row_number() OVER (PARTITION BY qid
+       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
+       |      FROM sc),
+       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3)""".stripMargin
+
+  /** The LSH candidate pairs `sc(vec_a, vec_b, dot, naa, nbb)` with
+    * their dot products and squared norms, as the CTE chain shared by
+    * the LSH and recall-audit oracles.
+    */
+  private def lshPairCtes(schedule: Seq[Int]): String =
+    s"""${lshBucketCtes(schedule, 64)},
+       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
+       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
+       |          AND a.vec_id < b2.vec_id),
+       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
+       |sc AS (SELECT c.vec_a, c.vec_b,
+       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
+       |         na.nsq AS naa, nb.nsq AS nbb
+       |       FROM cand c
+       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
+       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
+       |       JOIN n na ON na.vec_id = c.vec_a
+       |       JOIN n nb ON nb.vec_id = c.vec_b)""".stripMargin
 
   /** DuckDB DOUBLE[] literal that parses EXACTLY: a plain decimal
     * literal goes through DECIMAL(18,17) and the cast to DOUBLE can
@@ -286,19 +329,7 @@ object SimilarityGraph {
     * (one table per schedule entry, dim 64, threshold 0.3).
     */
   private def lshOracleSql(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id < b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.vec_a, c.vec_b,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
-       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
-       |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b)
+    s"""WITH ${lshPairCtes(schedule)}
        |SELECT vec_a, vec_b, round(dot / sqrt(naa * nbb), 6) AS cos_sim
        |FROM sc WHERE dot / sqrt(naa * nbb) >= 0.3
        |ORDER BY vec_a, vec_b""".stripMargin
@@ -332,19 +363,7 @@ object SimilarityGraph {
     * the same threshold; same subset argument, same count ratio.
     */
   private def recallAuditOracle(schedule: Seq[Int] = u8): String = {
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id < b2.vec_id),
-       |n AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.vec_a, c.vec_b,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.vec_a
-       |       JOIN embeddings eb ON eb.vec_id = c.vec_b
-       |       JOIN n na ON na.vec_id = c.vec_a
-       |       JOIN n nb ON nb.vec_id = c.vec_b),
+    s"""WITH ${lshPairCtes(schedule)},
        |lp AS (SELECT count(*) AS n_lsh FROM sc
        |       WHERE dot / sqrt(NULLIF(naa * nbb, 0)) >= 0.4),
        |ex AS (SELECT count(*) AS n_exact
@@ -795,24 +814,7 @@ object SimilarityGraph {
          |    FROM ed JOIN p${k - 1} ON p${k - 1}.vec_id = ed.src
          |    GROUP BY 1) f USING (vec_id))"""
     }.mkString(",\n|")
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
+    s"""WITH ${knnRankCtes(schedule)},
        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
        |ed AS (SELECT e.src, e.dst, d.deg FROM e JOIN d USING (src)),
        |p0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS pr FROM embeddings),
@@ -842,24 +844,7 @@ object SimilarityGraph {
     * ordered edges, the identical a<b<c enumeration and corner credits.
     */
   private def trianglesOracle(schedule: Seq[Int] = u8): String =
-    s"""WITH ${lshBucketCtes(schedule, 64)},
-       |cand AS (SELECT DISTINCT a.vec_id AS qid, b2.vec_id AS nid
-       |         FROM bl a JOIN bl b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-       |          AND a.vec_id <> b2.vec_id),
-       |n0 AS (SELECT vec_id, ${normSqSql("embedding")} AS nsq FROM embeddings),
-       |sc AS (SELECT c.qid, c.nid,
-       |         ${dotSql("ea.embedding", "eb.embedding")} AS dot,
-       |         na.nsq AS naa, nb.nsq AS nbb
-       |       FROM cand c
-       |       JOIN embeddings ea ON ea.vec_id = c.qid
-       |       JOIN embeddings eb ON eb.vec_id = c.nid
-       |       JOIN n0 na ON na.vec_id = c.qid
-       |       JOIN n0 nb ON nb.vec_id = c.nid),
-       |r AS (SELECT qid, nid,
-       |        row_number() OVER (PARTITION BY qid
-       |          ORDER BY dot / sqrt(naa * nbb) DESC, nid) AS rnk
-       |      FROM sc),
-       |e AS (SELECT qid AS src, nid AS dst FROM r WHERE rnk <= 3),
+    s"""WITH ${knnRankCtes(schedule)},
        |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
        |        FROM e),
        |deg AS (SELECT v, count(*) AS deg FROM (

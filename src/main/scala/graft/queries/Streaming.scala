@@ -371,14 +371,7 @@ object Streaming {
   // float op mirrors Streams.kalmanOnline verbatim (association
   // included); state = [level, P, K]; unrounded by construction
   private def kalmanOracle: String =
-    s"""WITH h AS (
-      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    $microSumSql
-      |      // count(*) AS v6
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-      |ser AS (SELECT event_type,
-      |    list(CAST(v6 AS DOUBLE) / 1000000.0 ORDER BY bucket) AS ys
-      |  FROM h GROUP BY 1),
+    s"""WITH $hourlyMeanListCtes,
       |fin AS (SELECT event_type, len(ys) AS n,
       |    list_reduce(
       |      [[ys[1], 10.0, 0.0]] ||
@@ -654,7 +647,7 @@ object Streaming {
     * readStream into a stateful per-(type, hour) sum+count aggregation
     * (mergeable, complete mode), aligns to (x, y) pairs post-stream, and
     * scores each live bucket against the frozen inverse. Arithmetic is
-    * q_agg_mahalanobis' exact-BIGINT + one-mirrored-IEEE-combination
+    * [[mahalanobisD2]]'s exact-BIGINT + one-mirrored-IEEE-combination
     * discipline, so the ENTIRE stream path is hash-checked by SQL.
     */
   private def q_stream_mahalanobis(s: SparkSession, dir: String): DataFrame = {

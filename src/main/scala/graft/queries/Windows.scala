@@ -478,19 +478,7 @@ object Windows {
       .orderBy("event_type", "bucket")
 
   private def seasonalDecomposeOracle: String =
-    s"""WITH h AS (
-      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    $microSumSql AS s_micro,
-      |    count(*) AS n
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-      |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
-      |t AS (SELECT *, count(*) OVER w AS wn, sum(v6) OVER w AS sum25
-      |      FROM v WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-      |        ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-      |f AS (SELECT event_type, bucket, v6, sum25, v6 * 25 - sum25 AS detr25
-      |      FROM t WHERE wn = 25),
-      |g AS (SELECT *, sum(detr25) OVER pw AS s_sum, count(*) OVER pw AS cnt
-      |      FROM f WINDOW pw AS (PARTITION BY event_type, hour(bucket)))
+    s"""WITH $seasonalGridCtes
       |SELECT event_type, bucket,
       |  CAST(v6 AS DOUBLE) / 1000000.0 AS v,
       |  CAST(sum25 AS DOUBLE) / 25.0 / 1000000.0 AS trend,
@@ -524,19 +512,7 @@ object Windows {
   }
 
   private def seasonalOutliersOracle: String =
-    s"""WITH h AS (
-      |  SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-      |    $microSumSql AS s_micro,
-      |    count(*) AS n
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-      |v AS (SELECT event_type, bucket, s_micro // n AS v6 FROM h),
-      |t AS (SELECT *, count(*) OVER w AS wn, sum(v6) OVER w AS sum25
-      |      FROM v WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-      |        ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-      |f AS (SELECT event_type, bucket, v6, sum25, v6 * 25 - sum25 AS detr25
-      |      FROM t WHERE wn = 25),
-      |g AS (SELECT *, sum(detr25) OVER pw AS s_sum, count(*) OVER pw AS cnt
-      |      FROM f WINDOW pw AS (PARTITION BY event_type, hour(bucket))),
+    s"""WITH $seasonalGridCtes,
       |q AS (SELECT event_type, bucket,
       |    (((cnt * detr25 - s_sum) + cnt * 2500000000000) * 2
       |       + 250000 * cnt) // (500000 * cnt) - 10000000 AS rq

@@ -6,9 +6,11 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Static scans over the main sources for rules the compiler does not
-  * check: each scaladoc describes the member beneath it, and each value
-  * quantization rule (per-row integer cents, the micro-sum under every
-  * micro-mean, the hourly-cents series) is written out once.
+  * check: each scaladoc describes the member beneath it and links only
+  * to members that exist, each value quantization rule (per-row integer
+  * cents, the micro-sum under every micro-mean, the hourly-cents series)
+  * and the hourly three-tag frame are written out once, and no aligned
+  * frame drops its incomplete buckets a second time.
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -34,6 +36,41 @@ class SourceScanSpec extends AnyFunSuite {
       m <- stacked.findAllMatchIn(src)
     } yield s"$path:${lineOf(src, m.start)}"
     assert(hits.isEmpty, s"stacked scaladocs: ${hits.mkString(", ")}")
+  }
+
+  test("every bare scaladoc link names a member defined in the main sources") {
+    val defined = mainSources.flatMap { case (_, src) =>
+      """\b(?:def|val|var|object|class|trait|type)\s+(\w+)""".r
+        .findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val links = for {
+      (path, src) <- mainSources
+      doc <- """/\*\*[\s\S]*?\*/""".r.findAllMatchIn(src)
+      link <- """\[\[(\w+)\]\]""".r.findAllMatchIn(doc.matched)
+    } yield (s"$path:${lineOf(src, doc.start + link.start)}", link.group(1))
+    assert(links.size > 100, s"${links.size} bare links found — regex drift?")
+    val dangling = links.filterNot { case (_, name) => defined(name) }
+    assert(dangling.isEmpty, s"links naming nothing: ${dangling.mkString(", ")}")
+  }
+
+  test("no aligned frame drops its incomplete buckets a second time") {
+    // the offset just past the `)` closing the call whose `(` is at `open`
+    def callEnd(src: String, open: Int): Int = {
+      var depth = 1
+      var i = open + 1
+      while (depth > 0 && i < src.length) {
+        if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+        i += 1
+      }
+      i
+    }
+    val hits = for {
+      (path, src) <- mainSources
+      m <- """\balign\(""".r.findAllMatchIn(src)
+      if src.substring(callEnd(src, m.end - 1)).trim.startsWith(""".na.drop("any"""")
+    } yield s"$path:${lineOf(src, m.start)}"
+    // Timeseries.align drops a bucket missing any tag unless asked not to
+    assert(hits.isEmpty, s"a second any-drop right after align: ${hits.mkString(", ")}")
   }
 
   // margins stripped and whitespace runs collapsed, so a copy matches in
@@ -84,5 +121,16 @@ class SourceScanSpec extends AnyFunSuite {
     onlyInCommon("micro-sum SQL", copiesOf(microSql))
     assert(centsSql.pattern.matcher(graft.queries.Common.valueCentsSql).matches())
     assert(microSql.pattern.matcher(graft.queries.Common.microSumSql).matches())
+  }
+
+  test("the hourly three-tag frame is spelled out once, in graft.queries.Common") {
+    val scala =
+      """align\(E\(\w+, \w+\), "ts", "event_type", "value", [^;]{0,60}?"1 hour"""".r
+    val sql = ("""avg\(CASE WHEN event_type = 'click' THEN value END\) AS click, """ +
+      """avg\(CASE WHEN event_type = 'view' THEN value END\) AS view, """ +
+      """avg\(CASE WHEN event_type = 'purchase' THEN value END\) AS purchase""").r
+    onlyInCommon("hourly wide Scala", copiesOf(scala))
+    onlyInCommon("hourly wide SQL", copiesOf(sql))
+    assert(sql.findFirstIn(norm(graft.queries.Common.wide1h)).isDefined)
   }
 }

@@ -7,6 +7,35 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs started while `body` runs, counted by a listener. A marker
+    * job after `body` flushes the (asynchronous) listener bus: once its
+    * start is seen, every job `body` started has been counted.
+    */
+  protected def jobsDuring(tag: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      body
+      sc.setJobDescription(s"$tag/end")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains(s"$tag/end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$tag/end"), "listener never saw the marker job")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray.count(_ == tag)
+  }
 }
 
 object SparkSpec {

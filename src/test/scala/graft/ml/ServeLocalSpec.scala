@@ -42,7 +42,7 @@ class ServeLocalSpec extends SparkSpec {
     * listener bus is ordered, so the jobs between two marker jobs are
     * exactly the body's.
     */
-  private def jobsDuring(f: => Unit): Int = {
+  private def jobsOnAnyThread(f: => Unit): Int = {
     val sc = spark.sparkContext
     val seen = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -89,7 +89,7 @@ class ServeLocalSpec extends SparkSpec {
 
   test("the job counter sees jobs: the parquet response leg still runs them") {
     val out = Serve.scoreRequest(spark, pca, oneRow, tagCols)
-    assert(jobsDuring(Serve.toParquetResponse(out)) > 0)
+    assert(jobsOnAnyThread(Serve.toParquetResponse(out)) > 0)
   }
 
   for ((kind, model) <- Seq("pca" -> (() => pca), "rfae" -> (() => rfae));
@@ -98,14 +98,14 @@ class ServeLocalSpec extends SparkSpec {
     test(s"a $size JSON request to the $kind scorer runs zero Spark jobs") {
       val m = model()
       var out = ""
-      assert(jobsDuring { out = body(m, json) } == 0)
+      assert(jobsOnAnyThread { out = body(m, json) } == 0)
       assert(out.startsWith("[{\"req_idx\":0"))
     }
 
   test("POST /prediction through PredictionServer runs zero Spark jobs") {
     withServer { server =>
       var answers = Seq.empty[(Int, String)]
-      val jobs = jobsDuring {
+      val jobs = jobsOnAnyThread {
         answers = Seq(oneRow, missingAndNaN).map(post(server.boundPort, _))
       }
       assert(answers.map(_._1) == Seq(200, 200), answers)

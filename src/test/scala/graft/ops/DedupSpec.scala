@@ -487,6 +487,19 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.shingleIndexExists(spark, dir))
   }
 
+  test("a second serve of the same index launches no schema-inference job") {
+    val dir = java.nio.file.Files.createTempDirectory("shidx").toString
+    val built = Dedup.buildAndSaveShingleIndex(docs, "doc_id", "text", dir)
+    assert(built.pairs.nonEmpty, "the toy index should carry pair state")
+    Dedup.loadShingleIndex(spark, dir)
+    // groups, docs and pairs each resolve to the relation the first
+    // serve inferred: no job until a serve runs an action
+    assert(jobsDuring("shidx-reserve")(Dedup.loadShingleIndex(spark, dir)) == 0)
+    val again = Dedup.loadShingleIndex(spark, dir)
+    assert(Dedup.containmentPairsFromIndex(again, 0.7).collect().toSet ==
+      Dedup.containmentPairsFromIndex(built, 0.7).collect().toSet)
+  }
+
   test("mentions/prefix crossover guard flips on a hot capped shingle; plans row-identical either side") {
     // One boilerplate bigram shared by every doc, everything else df = 1.
     // With df_hot docs, the df ≥ 2 capped stats are mentions = C(df_hot, 2)

@@ -1,12 +1,8 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -21,35 +17,6 @@ class TablesSpec extends SparkSpec {
 
   private def write(path: String, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(path)
-
-  /** Spark jobs started while `body` runs, counted by a listener. A marker
-    * job after `body` flushes the (asynchronous) listener bus: once its
-    * start is seen, every job `body` started has been counted.
-    */
-  private def jobsDuring(tag: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(tag)
-      body
-      sc.setJobDescription(s"$tag/end")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains(s"$tag/end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag/end"), "listener never saw the marker job")
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.count(_ == tag)
-  }
 
   private def relationOf(df: DataFrame): HadoopFsRelation =
     df.queryExecution.analyzed.collectFirst {
